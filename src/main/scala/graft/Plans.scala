@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit diagnostic: prints `explain("formatted")` for the named queries
   * (default: a representative set) so scan pruning (`ReadSchema`,
   * `PushedFilters`), join strategies (broadcast vs sort-merge), and
@@ -16,15 +14,7 @@ object Plans {
       "q1_pricing_summary", "q_revenue_by_nation", "q_candles_daily",
       "q_ngram_jaccard_pairs", "q_minhash_pairs", "q_simhash_fingerprints",
       "q_embed_dedup_lsh", "q_ann_topk", "q_asof_join", "q_token_counts")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(4)
     names.foreach { name =>
       SparkEntry.queries.get(name) match {
         case Some(fn) =>

@@ -1,59 +1,92 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import java.nio.file.{Files, LinkOption, Path, Paths}
 
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions.{col, lit}
 
-import graft.operators.{Dedup, Similarity}
-
-/** Scale-up probe: replicates the sf0.1 corpus k× (re-keyed ids) and runs the
-  * dedup/similarity family on it. Replication is the ADVERSARIAL case for
-  * LSH — every document gains k-1 exact duplicates, so every band bucket is
-  * populated and candidate fan-out is maximal. A design whose cost explodes
-  * here (all-pairs anywhere, unbounded buckets) fails; linear-ish growth in
-  * (rows × duplication) is the pass signal the 100 TB claim rests on.
+/** Scale lane over the registered queries: replicate an sf dir k× (re-keyed
+  * ids) and time the named `SparkEntry.queries` entries on the replica.
+  * Replication is the ADVERSARIAL case for the dedup/similarity family —
+  * every document and vector gains k-1 exact duplicates, so every LSH band
+  * bucket is populated and candidate fan-out is maximal. A design whose cost
+  * explodes here (all-pairs anywhere, unbounded buckets) fails; linear-ish
+  * growth in (rows × duplication) is the pass signal.
   *
-  * Usage: `sbt "runMain graft.ScaleProbe [k] [sfDir]"`.
+  * The lane runs the same query functions the oracle checks, so what it
+  * measures is what the gate proves. Each query's full result is written to
+  * the `noop` sink: `count()` would let Catalyst prune away the columns (and
+  * the work behind them) that the query exists to compute.
+  *
+  * Usage: `sbt "runMain graft.ScaleProbe <k> <sfDir> <query> [query ...]"`;
+  * `SPARK_GRAFT_CPUS` sets the local core count (default 32). Prints one
+  * line per query: wall seconds and the shuffle bytes its stages wrote.
   */
 object ScaleProbe {
-  /** Same ts normalization as SparkEntry's events(): the generator has shipped
-    * both TIMESTAMP(NANOS) (long under `nanosAsLong`) and µs-NTZ encodings.
+
+  /** Tables that replicate, with the id column each copy re-keys. */
+  private val replicated = Map("documents" -> "doc_id", "embeddings" -> "vec_id")
+
+  /** Id offset between consecutive copies; sf ids stay below it. */
+  val IdStride = 1000000L
+
+  /** Write a k× replica of the sf dir `sfDir` into `outDir` (created if
+    * absent; must not already hold the tables): `documents` as k copies
+    * with `doc_id + i·IdStride` and `embeddings` as k copies with
+    * `vec_id + i·IdStride` (i in 0 until k, every other column kept, id type
+    * unchanged); every other table is linked — or copied where links are
+    * unsupported — unchanged.
     */
-  private def normalizeTs(df: DataFrame): DataFrame = df.schema("ts").dataType match {
-    case LongType => df.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-    case TimestampNTZType => df.withColumn("ts", col("ts").cast(TimestampType))
-    case _ => df
+  def replicate(spark: SparkSession, sfDir: String, k: Int, outDir: String): Unit = {
+    require(k >= 1, s"replication factor must be >= 1, got $k")
+    val out = Files.createDirectories(Paths.get(outDir))
+    val tables = Option(new java.io.File(sfDir).listFiles()).getOrElse(Array.empty)
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+    require(tables.nonEmpty, s"no parquet tables in $sfDir")
+    tables.foreach { src =>
+      val dest = out.resolve(src.getName)
+      require(Files.notExists(dest, LinkOption.NOFOLLOW_LINKS), s"$dest already exists")
+      replicated.get(src.getName.stripSuffix(".parquet")) match {
+        case Some(idCol) =>
+          val base = spark.read.parquet(src.getPath)
+          val idType = base.schema(idCol).dataType
+          (0 until k).map(i =>
+              base.withColumn(idCol, (col(idCol) + lit(i * IdStride)).cast(idType)))
+            .reduce(_ unionByName _)
+            .write.parquet(dest.toString)
+        case None => linkOrCopy(src.toPath.toAbsolutePath, dest)
+      }
+    }
   }
 
-  def main(args: Array[String]): Unit = {
-    val k = args.headOption.map(_.toInt).getOrElse(10)
-    val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.icu.caseMappings.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+  private def linkOrCopy(src: Path, dest: Path): Unit =
+    try { Files.createSymbolicLink(dest, src); () }
+    catch {
+      case _: UnsupportedOperationException | _: java.io.IOException =>
+        if (Files.isDirectory(src)) FileUtils.copyDirectory(src.toFile, dest.toFile)
+        else FileUtils.copyFile(src.toFile, dest.toFile)
+    }
 
-    val base = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "text")
-    val n = base.count()
-    val docs = (0 until k).map(i =>
-      base.select((col("doc_id") + lit(i * 1000000L)).as("doc_id"), col("text")))
-      .reduce(_ unionAll _)
-    val embBase = spark.read.parquet(s"$sfDir/embeddings.parquet").select("vec_id", "embedding")
-    val embs = (0 until k).map(i =>
-      embBase.select((col("vec_id") + lit(i * 1000000L)).as("vec_id"), col("embedding")))
-      .reduce(_ unionAll _)
+  def main(args: Array[String]): Unit = {
+    require(args.length >= 3,
+      "usage: ScaleProbe <k> <sfDir> <query> [query ...]")
+    val k = args(0).toInt
+    val sfDir = args(1)
+    val names = args.drop(2).toSeq
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(", ")}")
+    val spark = GraftSession.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
+
+    // the replica lives for this JVM only: the tmp-dir lease deletes it at exit
+    val outDir = SessionCache.registerTmpIndexDir(
+      Files.createTempDirectory("graft_scale_").toString)
+    replicate(spark, sfDir, k, outDir)
 
     // shuffle-byte accounting: seconds alone can hide a quadratic shuffle
     // behind fast local disks — the BYTES written to shuffle are the direct
     // witness of what a real cluster would move over its network. One
-    // listener accumulates stage-level shuffle writes; each probe reports
+    // listener accumulates stage-level shuffle writes; each query reports
     // the delta it caused.
     val shuffleBytes = new java.util.concurrent.atomic.AtomicLong(0L)
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
@@ -63,7 +96,7 @@ object ScaleProbe {
     })
 
     // listener events are async (no public bus-drain API): poll the counter
-    // until it stabilizes so a probe's stages are not billed to the next one
+    // until it stabilizes so a query's stages are not billed to the next one
     def settledBytes(): Long = {
       var prev = -1L; var cur = shuffleBytes.get(); var waited = 0
       while (cur != prev && waited < 2000) {
@@ -72,1505 +105,14 @@ object ScaleProbe {
       cur
     }
 
-    // optional comma-separated probe allowlist for deep-k runs of a subset
-    val only = sys.env.get("GRAFT_PROBE_ONLY").map(_.split(",").toSet)
-    def time(name: String)(f: => Long): Unit = if (only.forall(_.contains(name))) {
+    println(s"[scale] ${k}x replica of $sfDir")
+    names.foreach { name =>
       val b0 = settledBytes()
       val t0 = System.nanoTime()
-      val rows = f
+      SparkEntry.queries(name)(spark, outDir).write.format("noop").mode("overwrite").save()
       val secs = (System.nanoTime() - t0) / 1e9
-      val mb = (settledBytes() - b0) / 1048576.0
-      println(f"[scale] $name%-28s $secs%8.1f s  ($rows rows, shuffle $mb%.1f MiB)")
-    }
-
-    println(s"[scale] corpus: ${n * k} docs (${k}x sf0.1), ${embs.count()} vectors")
-    time("simhash_fingerprints") {
-      Dedup.simhashFingerprints(docs, "text", "doc_id", "simhash", 5).count()
-    }
-    time("minhash_pairs") {
-      Dedup.minhashPairs(docs, "text", "doc_id", shingleN = 5, k = 64, bands = 32,
-        threshold = 0.5).count()
-    }
-    time("ngram_jaccard_pairs") {
-      Dedup.ngramJaccardPairs(docs, "text", "doc_id", n = 5, threshold = 0.3,
-        maxDocFreq = 100L * k).count()
-    }
-    time("minhash_deduped") {
-      // r14: the composition on the banded-LSH family — no cap to mislead
-      // here, but the direct run enumerates every replica pair PHYSICALLY
-      // (100×: 364 s / 9.9 GiB for 27.3 M verified pairs); composed, the
-      // replica mass is C(sz,2) arithmetic and Σ n_pairs must equal the
-      // direct run's count at every k
-      Dedup.minhashPairsDeduped(docs, "text", "doc_id", shingleN = 5, k = 64,
-          bands = 32, threshold = 0.5)
-        .agg(coalesce(sum(col("n_pairs")), lit(0L))).head().getLong(0)
-    }
-    time("ngram_jaccard_unscaled_cap") {
-      // the SEMANTIC cap (100, NOT scaled by k — the scaled cap above is a
-      // probe workaround, production can't know per-shingle replication):
-      // replication inflates every shingle's docFreq k×, so shingles whose
-      // distinct-content frequency exceeds 100/k prune and the pair report
-      // under-counts — the r13 winnow failure shape in the jaccard family
-      Dedup.ngramJaccardPairs(docs, "text", "doc_id", n = 5, threshold = 0.3,
-        maxDocFreq = 100L).count()
-    }
-    time("ngram_jaccard_deduped") {
-      // r14: the dedup-first composition at the SAME semantic cap — docFreq
-      // counts distinct contents, replication never reaches the posting
-      // join, and the reported logical multiset (Σ n_pairs) must equal
-      // base_pairs·k² + n_docs·C(k,2) at every k
-      Dedup.ngramJaccardPairsDeduped(docs, "text", "doc_id", n = 5,
-          threshold = 0.3, maxDocFreq = 100L)
-        .agg(coalesce(sum(col("n_pairs")), lit(0L))).head().getLong(0)
-    }
-    // r15 (verdict ask #1): the DECISION consumers under replication. Two
-    // leakage metrics against the same ground truth (the composed miner's
-    // keeper pairs — correct by construction at every k):
-    //   groups — content groups (exact replicas, identifiable by id
-    //     re-keying) whose members land in DIFFERENT splits: the scatter
-    //     shape when even replica self-pairs cap out (content-df-1 shingles
-    //     prune once k > cap);
-    //   pairs — TRUE near-dup keeper pairs whose two sides land in
-    //     different splits: the leakage shape when cross-content pairs
-    //     prune (content-df·k > cap) while replicas still self-pair — a
-    //     test doc with a train near-dup IS evaluation leakage.
-    // The direct clustering must show nonzero leakage where the cap binds;
-    // the composed labeling must show ZERO on both metrics at every k.
-    // the ground-truth keeper pairs (the composed miner — correct by
-    // construction at every k), built ONCE and checkpointed: both probes
-    // score against it (r15 self-review: rebuilding it per call tripled the
-    // pair-mining work and inflated the probe seconds)
-    lazy val decisionTruth = Dedup.ngramJaccardPairsDeduped(docs, "text", "doc_id",
-        n = 5, threshold = 0.3, maxDocFreq = 100L)
-      .filter(col("id_a") =!= col("id_b")).select("id_a", "id_b")
-      .localCheckpoint(true)
-    def leakReport(tag: String, labels: DataFrame): Long = {
-      val sp = graft.operators.Sampling.withSplit(labels, "cluster_id")
-        .localCheckpoint(true)
-      val leakedGroups = sp
-        .withColumn("grp", col("doc_id") % 1000000L)
-        .groupBy("grp").agg(countDistinct(col("split")).as("ns"))
-        .filter(col("ns") > 1).count()
-      val leakedPairs = decisionTruth
-        .join(sp.select(col("doc_id").as("id_a"), col("split").as("__sa")), Seq("id_a"))
-        .join(sp.select(col("doc_id").as("id_b"), col("split").as("__sb")), Seq("id_b"))
-        .filter(col("__sa") =!= col("__sb")).count()
-      println(s"[scale-decisions] $tag index: $leakedGroups content groups, " +
-        s"$leakedPairs true near-dup keeper pairs leaked across splits")
-      sp.unpersist(blocking = false)
-      leakedGroups + leakedPairs
-    }
-    // force the shared truth OUTSIDE any timed window (r15 review: the lazy
-    // val's first access was inside split_decisions_direct's time() block,
-    // so the direct probe was billed for the composed miner's build)
-    if (only.forall(s => s.contains("split_decisions_direct") ||
-        s.contains("split_decisions_composed")))
-      decisionTruth.count()
-    time("split_decisions_direct") {
-      val pairs = Dedup.ngramJaccardPairs(docs, "text", "doc_id", n = 5,
-        threshold = 0.3, maxDocFreq = 100L)
-      val labels = Dedup.connectedComponents(docs.select(col("doc_id").as("id")), pairs)
-      leakReport("direct", labels.select(col("id").as("doc_id"), col("cluster_id")))
-    }
-    time("split_decisions_composed") {
-      // the composed labeling consumes the SAME checkpointed truth frame —
-      // exactly the landed-artifact contract the gated consumers use
-      val lbl = Dedup.composedClusterIndex(docs, "text", "doc_id", decisionTruth)
-      leakReport("composed", lbl.select(col("id").as("doc_id"), col("cluster_id")))
-    }
-    time("containment_pairs") {
-      // same inverted-index shape as jaccard, but no size-ratio prefilter
-      // (asymmetric sizes are the point) — the docFreq cap alone must hold
-      // the candidate fan-out under maximal replication
-      Dedup.containmentPairs(docs, "text", "doc_id", n = 5, threshold = 0.6,
-        maxDocFreq = 100L * k).count()
-    }
-    time("temperature_resample") {
-      // strata-count agg + broadcast join: cost must stay ∝ corpus scan
-      val langed = spark.read.parquet(s"$sfDir/documents.parquet").select("doc_id", "lang")
-      val rep = (0 until k).map(i =>
-        langed.select((col("doc_id") + lit(i * 1000000L)).as("doc_id"), col("lang")))
-        .reduce(_ unionAll _)
-      graft.operators.Sampling.temperatureResample(rep, "lang", "doc_id", tau = 0.5).count()
-    }
-    time("exact_dedup") {
-      Dedup.exact(docs, "text", "doc_id").count()
-    }
-    time("embed_pairs_lsh") {
-      Dedup.embeddingPairs(embs, "embedding", "vec_id", threshold = 0.2,
-        dim = 64, planes = 16, bands = 4).count()
-    }
-    time("embed_pairs_slim") {
-      // PB-scale join-back shape: the band exchange carries 12-byte rows
-      // instead of the 256-byte vector payload; identical output multiset
-      Dedup.embeddingPairsSlim(embs, "embedding", "vec_id", threshold = 0.2,
-        dim = 64, planes = 16, bands = 4).count()
-    }
-    time("embed_pairs_slim_fine") {
-      // deep-k config (r13, the 100× decade): planes raised 16→28 — the
-      // documented LSH scale knob (finer buckets as the corpus grows, the
-      // k ≈ √N rule). At k=100 the 16-plane config's 16-bucket bands hold
-      // ~12.5k vectors each, so candidate volume is ~4×10⁸ REGARDLESS of
-      // threshold — the quantizer is exhausted, not the exchange; 28 planes
-      // (128 buckets/band) keeps candidates output-bound. Run next to
-      // embed_pairs_lsh_fine below: same candidates, the slim form's band
-      // exchange carries 12-byte rows vs the carried form's vector payload.
-      Dedup.embeddingPairsSlim(embs, "embedding", "vec_id", threshold = 0.2,
-        dim = 64, planes = 28, bands = 4).count()
-    }
-    time("embed_pairs_lsh_fine") {
-      Dedup.embeddingPairs(embs, "embedding", "vec_id", threshold = 0.2,
-        dim = 64, planes = 28, bands = 4).count()
-    }
-    time("embed_dedup_then_pairs") {
-      // THE 100× lesson (r13): under heavy exact replication, LSH candidate
-      // volume grows as replication² × base-collision-rate — at k=100 every
-      // colliding BASE pair is a 100×100 candidate block, and even 28-plane
-      // signatures leave ~10⁸-10⁹ candidates (the direct probe fills local
-      // disk; an int signature cannot buy buckets fine enough). The engine
-      // answer is COMPOSITIONAL: exact-dedup first (one vector-keyed hash
-      // agg — replicas are byte-identical), LSH over the survivors at the
-      // ORIGINAL config, then recover the logical pair count by expanding
-      // cluster sizes over the survivor pairs. The logical multiset is
-      // identical to the direct run's (verified: at 10× this reports
-      // exactly the 4,230,700 pairs the direct probe materializes) and
-      // nothing replication-quadratic ever hits an exchange.
-      val clusters = embs.groupBy(col("embedding"))
-        .agg(min(col("vec_id")).as("vec_id"), count(lit(1)).as("csz"))
-        .localCheckpoint()
-      val surv = clusters.select(col("vec_id"), col("embedding"))
-      val intra = clusters
-        .agg(sum((col("csz") * (col("csz") - 1) / 2).cast("long")).as("n"))
-        .collect()(0).getLong(0)
-      val sa = clusters.select(col("vec_id").as("id_a"), col("csz").as("ca"))
-      val sb = clusters.select(col("vec_id").as("id_b"), col("csz").as("cb"))
-      val cross = Dedup.embeddingPairsSlim(surv, "embedding", "vec_id",
-          threshold = 0.2, dim = 64, planes = 16, bands = 4)
-        .join(sa, "id_a").join(sb, "id_b")
-        .agg(sum((col("ca") * col("cb")).cast("long")).as("n"))
-        .collect()(0).getLong(0)
-      intra + cross
-    }
-    time("kmeans") {
-      // k× duplicated vectors leave the centroids mathematically unchanged;
-      // the probe isolates the per-iteration corpus passes (assignment
-      // broadcast + (cell,dim) partial agg), which must scale linearly
-      Similarity.kmeans(embs, "embedding", "vec_id", k = 8, iterations = 2).count()
-    }
-    time("pca_power") {
-      Similarity.pcaTopComponent(embs, "embedding", iterations = 3).count()
-    }
-    time("pca_power_gram") {
-      // the r14 A/B: one n·d² Gram pass + driver matvecs vs one n·d scan
-      // per round — which wins flips on d vs iterations vs job latency
-      Similarity.pcaTopComponentGram(embs, "embedding", iterations = 3).count()
-    }
-    time("ann_brute_topk") {
-      Similarity.bruteForceTopK(embs, embs.filter(col("vec_id") < 10), "embedding", "vec_id", 10).count()
-    }
-    time("pack_sequences") {
-      graft.operators.Packing.packSequences(
-        docs.select(col("doc_id"),
-          graft.operators.TextAnalysis.bpeTokens(col("text")).cast("long").as("n_tokens")),
-        "n_tokens", "doc_id", budget = 2048L, groupSize = 4096L).count()
-    }
-    time("tfidf_top_terms") {
-      graft.operators.TextAnalysis.tfidfTopTerms(docs, "text", "doc_id", k = 3,
-        corpusN = Some(n * k)).count()
-    }
-    time("embed_centroids") {
-      // re-keyed label: vec_id % 16 keeps 16 groups at any replication
-      Similarity.meanPooledCentroids(
-        embs.withColumn("label", col("vec_id") % 16), "embedding", "label").count()
-    }
-    time("incremental_dedup") {
-      Dedup.incremental(docs.filter(col("doc_id") % 3 =!= 0),
-        Dedup.contentIndex(docs.filter(col("doc_id") % 3 === 0), "text"),
-        "text", "doc_id").count()
-    }
-    time("minhash_pairs_incremental") {
-      // ADVERSARIAL for the incremental path: the delta's docs each collide
-      // with every replica of their base copy in all 32 bands, so candidate
-      // volume is the maximal delta×occupancy product. Cost must track that
-      // candidate volume; the base side is banded ONCE here (in a real run
-      // it is read from the persisted index, not re-banded at all).
-      Dedup.minhashPairsIncremental(docs.filter(col("doc_id") % 3 =!= 0),
-        Dedup.bandBuckets(docs.filter(col("doc_id") % 3 === 0), "text", "doc_id", 5, 64, 32),
-        Dedup.shingleSets(docs.filter(col("doc_id") % 3 === 0), "text", "doc_id", 5),
-        "text", "doc_id", shingleN = 5, k = 64, bands = 32, threshold = 0.5).count()
-    }
-    time("minhash_pairs_persisted") {
-      // the landed-signature path (r11): ONE tokenize+hash pass writes the
-      // bands+sets artifacts; the band self-join and exact verify read the
-      // stored parquet on both sides. Compare against `minhash_pairs` in the
-      // same run — identical output, but the text projection runs once
-      // instead of twice (the write cost buys every subsequent pair report
-      // and incremental probe for free).
-      val idxDir = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_probe_sigidx_p${ProcessHandle.current().pid()}").toString
-      Dedup.writeSignatureIndex(docs, "text", "doc_id", idxDir, 5, 64, 32)
-      val (bands, sets) = Dedup.readSignatureIndex(spark, idxDir)
-      val c = Dedup.minhashPairsFromIndex(bands, sets, threshold = 0.5).count()
-      val p = new org.apache.hadoop.fs.Path(idxDir)
-      p.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(p, true)
-      c
-    }
-    time("semdedup_degenerate_capped") {
-      // pathological quantizer: ONE centroid puts the whole corpus in one
-      // cell — uncapped, the within-cell pair stage is C(|corpus|, 2)
-      // (2·10⁸ pairs at 10×). maxCellSize=512 sub-splits by id hash; cost
-      // must track Σ subcell², ~cap × corpus — linear-ish in rows.
-      import spark.implicits._
-      val oneCent = Seq((0L, Seq.fill(64)(1.0))).toDF("cell_id", "centroid")
-      Similarity.semDedup(embs, oneCent, "embedding", "vec_id",
-        threshold = 0.95, maxCellSize = Some(512L)).count()
-    }
-    time("boilerplate") {
-      // replication multiplies each gram's df AND n_docs by k — shares are
-      // invariant, so the phrase set is identical at any k while the df
-      // aggregation input grows linearly (all absorbed map-side; the
-      // broadcast phrase frame never grows)
-      val sdocs = docs.withColumn("source", concat(lit("s"), pmod(col("doc_id"), lit(20L))))
-      graft.operators.TextAnalysis.boilerplate(sdocs, "text", "doc_id", "source").count()
-    }
-    time("top_bigrams") {
-      graft.operators.TextAnalysis.topBigrams(docs, "text", "doc_id", 50).count()
-    }
-    time("doc_rarity") {
-      // replication multiplies every freq by k but the two-level vocabulary
-      // rank must stay task-bounded: the freq=1 class vanishes, the (freq,
-      // prefix) groups grow in COUNT not size
-      graft.operators.TextAnalysis.docRarity(docs, "text", "doc_id").count()
-    }
-    time("duplicated_spans") {
-      // replication makes EVERY shingle cross-doc duplicated — maximum hit
-      // density, so every doc collapses to one whole-doc island: stresses the
-      // gaps-and-islands merge at its worst case (|hits| = all positions)
-      Dedup.duplicatedSpans(docs, "text", "doc_id", n = 8, minDocFreq = 2).count()
-    }
-    if (k > 1) time("connected_components") {
-      // chain pairs linking each replica to the base copy: |pairs| = n·(k−1),
-      // every component has diameter ≤ 2. The iterated frame must be
-      // proportional to |pairs| (pair-touched ids), NOT the k·n corpus — the
-      // corpus only enters once, in the final singleton anti-join.
-      val pairs = (1 until k).map(i => base.select(col("doc_id").as("id_a"),
-          (col("doc_id") + lit(i * 1000000L)).as("id_b")))
-        .reduce(_ unionAll _)
-      Dedup.connectedComponents(docs.select(col("doc_id").as("id")), pairs).count()
-    }
-    if (k > 1) time("triangles") {
-      // k-clique pairs per base doc (all replica pairs of each original):
-      // |edges| = n·C(k,2) and |triangles| = n·C(k,3) — cubic-in-k OUTPUT by
-      // construction, the densest case the near-dup graph can produce. Pass
-      // signal: runtime tracks the triangle count (output-bounded wedge
-      // fan-out under degree orientation), not |V|² or worse.
-      // single-scan narrow construction (a C(k,2)-branch unionAll re-reads
-      // the parquet through every reuse of the edge frame and the probe ends
-      // up timing its own input, not the operator)
-      val cliquePairs = base.select(col("doc_id"))
-        .select(col("doc_id"), explode(sequence(lit(0), lit(k - 1))).as("i"))
-        .select(col("doc_id"), col("i"),
-          explode(sequence(lit(0), lit(k - 1))).as("j"))
-        .filter(col("i") < col("j"))
-        .select((col("doc_id") + col("i") * lit(1000000L)).as("id_a"),
-          (col("doc_id") + col("j") * lit(1000000L)).as("id_b"))
-      graft.operators.Graph.triangles(cliquePairs, "id_a", "id_b")
-        .agg(sum(col("triangles"))).collect().head.getLong(0)
-    }
-    locally {
-      // data layout at k× the sf0.1 events table: the clustered write is ONE
-      // range exchange (cost ∝ rows), the manifest ONE partial-aggregable
-      // shuffle, and the pruned read's cost must track the SELECTED range,
-      // not the corpus — the property that makes a manifest worth keeping at
-      // 10⁶ files.
-      val evBase = spark.read.parquet(s"$sfDir/events.parquet")
-        .select(col("event_id"), col("user_id"), col("value"))
-      val evMax = evBase.agg(max("event_id")).head().getLong(0) + 1L
-      val ev = (0 until k).map(i =>
-        evBase.select((col("event_id") + lit(i * evMax)).as("event_id"),
-          col("user_id"), col("value")))
-        .reduce(_ unionAll _)
-      val zPath = new java.io.File(sys.props("java.io.tmpdir"), "graft_scale_zorder").toString
-      time("zorder_write") {
-        graft.operators.Layout.zorderWrite(ev, Seq("user_id", "event_id"), zPath, 64)
-        spark.read.parquet(zPath).count()
-      }
-      val mPath = new java.io.File(sys.props("java.io.tmpdir"), "graft_scale_manifest").toString
-      time("manifest_write_stats") {
-        graft.sources.Manifest.writeChunked(ev, "event_id", 64, mPath)
-        graft.sources.Manifest.stats(spark, mPath, "__chunk", Seq("event_id")).count()
-      }
-      time("manifest_pruned_read") {
-        val man = graft.sources.Manifest.stats(spark, mPath, "__chunk", Seq("event_id"))
-        graft.sources.Manifest.prunedRead(spark, mPath, man, "event_id", 101L, 450L).count()
-      }
-    }
-    locally {
-      // correlation matrix at 10× the query suite's key count (50 series vs
-      // q_corr_matrix's 5): the join formulation materializes T·k² rows, the
-      // pivot+power-sums variant one T·k shuffle — both exact, same output.
-      val kSeries = 50
-      val keys = (0 until kSeries).map(i => f"s$i%03d")
-      val tall = spark.range(730L * kSeries).select(
-        format_string("s%03d", col("id") % kSeries).as("series"),
-        expr(s"id div $kSeries").as("t"),
-        sin(col("id").cast("double")).as("v"))
-      time(s"corr_matrix_join_${kSeries}k") {
-        graft.operators.Queries.correlationMatrix(tall, "series", "t", "v").count()
-      }
-      time(s"corr_matrix_wide_${kSeries}k") {
-        graft.operators.Queries.correlationMatrixWide(tall, "series", "t", "v", keys).count()
-      }
-    }
-    locally {
-      // band self-join under replication — the ADVERSARIAL case: every event
-      // gains k−1 copies at the IDENTICAL timestamp, so every (type, bucket)
-      // population multiplies by k and candidate volume by k². The probe
-      // verifies cost tracks candidate volume (output-bounded, like LSH),
-      // not a per-key quadratic over the whole corpus.
-      val evBase = spark.read.parquet(s"$sfDir/events.parquet")
-        .select(col("event_id"), col("event_type"), col("ts"))
-      val evMax = 10000000L
-      val ev = (0 until k).map(i =>
-        evBase.select((col("event_id") + lit(i * evMax)).as("event_id"),
-          col("event_type"), col("ts")))
-        .reduce(_ unionAll _)
-      time("band_join_neighbors") {
-        graft.operators.BandJoin.neighborCounts(
-          normalizeTs(ev),
-          Seq("event_type"), "ts", "event_id", 1800L).count()
-      }
-    }
-    locally {
-      // CDC merge at k× the orders snapshot: one hash-aggregable exchange
-      // over base+changes — cost must stay linear in change+base volume.
-      val oBase = spark.read.parquet(s"$sfDir/orders.parquet")
-        .select(col("o_orderkey"), col("o_totalprice"))
-      val oMax = 100000000L
-      val ords = (0 until k).map(i =>
-        oBase.select((col("o_orderkey") + lit(i * oMax)).as("o_orderkey"),
-          col("o_totalprice")))
-        .reduce(_ unionAll _)
-      val changes = ords.select(col("o_orderkey"),
-        (col("o_totalprice") * 2).as("o_totalprice"),
-        when(col("o_orderkey") % 10 === 0, "D").otherwise("U").as("op"),
-        lit(1L).as("seq"))
-      time("cdc_merge") {
-        graft.operators.Changelog.merge(ords, changes, "o_orderkey").count()
-      }
-    }
-    locally {
-      // grouped top-k A/B at k× the orders volume: the window formulation
-      // sorts EVERY row inside its key partition; the bounded aggregator
-      // keeps k-element state per map task. Same output rows (verified by
-      // the oracle gate); this probe records the cost gap at volume.
-      val oBase = spark.read.parquet(s"$sfDir/orders.parquet")
-        .select(col("o_custkey"), col("o_orderkey"), col("o_totalprice"))
-      val oMax = 100000000L
-      val ords = (0 until k).map(i =>
-        oBase.select(col("o_custkey"), // SAME keys: per-key volume grows k×
-          (col("o_orderkey") + lit(i * oMax)).as("o_orderkey"), col("o_totalprice")))
-        .reduce(_ unionAll _)
-      time("grouped_topk_agg") {
-        graft.operators.Queries.groupedTopKAgg(ords, "o_custkey", "o_totalprice",
-          "o_orderkey", 3).count()
-      }
-      time("grouped_topk_window") {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("o_custkey").orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        ords.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= 3).count()
-      }
-      // the SKEW case: every row under ONE key. The window formulation
-      // collapses to a single-task sort of the whole corpus; the aggregator
-      // keeps parallel k-element map state and merges once.
-      val hot = ords.withColumn("o_custkey", lit(1L))
-      time("grouped_topk_skew_agg") {
-        graft.operators.Queries.groupedTopKAgg(hot, "o_custkey", "o_totalprice",
-          "o_orderkey", 3).count()
-      }
-      time("grouped_topk_skew_window") {
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy("o_custkey").orderBy(col("o_totalprice").desc, col("o_orderkey"))
-        hot.withColumn("rnk", row_number().over(w)).filter(col("rnk") <= 3).count()
-      }
-    }
-    locally {
-      // IVM candle merge at k× the tick volume: per-slice partials are
-      // partial-aggregable (both groupBys combine map-side), so cost is one
-      // linear pass per slice + a merge over |buckets| rows — bucket count
-      // is FIXED (30 days) regardless of k, which is the whole point.
-      val evBase = normalizeTs(spark.read.parquet(s"$sfDir/events.parquet")
-        .select(col("ts"), col("value")))
-      val ticks = (0 until k).map(_ => evBase).reduce(_ unionAll _)
-        .select(col("ts").as("timestamp"), col("value").as("open"),
-          col("value").as("high"), col("value").as("low"),
-          col("value").as("close"), col("value").as("volume"))
-      val cutoff = lit("2024-01-25 12:00:00").cast(TimestampType)
-      time("ivm_candles_merge") {
-        graft.operators.Transforms.mergeCandlePartials(
-          graft.operators.Transforms.candlePartials(
-            ticks.filter(col("timestamp") < cutoff), "D")
-            .unionByName(graft.operators.Transforms.candlePartials(
-              ticks.filter(col("timestamp") >= cutoff), "D"))).count()
-      }
-    }
-    time("ngram_novelty") {
-      // replication is the degenerate-novelty case: every shingle's docFreq
-      // multiplies by k, so novelty is zero everywhere — the probe stresses
-      // the docFreq aggregate with maximal duplicate mass (all of it must be
-      // absorbed map-side; there is no shingle-keyed join to skew)
-      graft.operators.TextAnalysis.ngramNovelty(docs, "text", "doc_id").count()
-    }
-    time("bigram_lift") {
-      // counts scale by k, the vocabulary does not: the two vocab equi-joins
-      // stay vocabulary-sized and the totals broadcast stays 1 row
-      graft.operators.TextAnalysis.bigramLift(docs, "text").count()
-    }
-    locally {
-      // concurrency sweep at k× the sessionized sf0.1 events: re-keyed users
-      // make k× sessions over the SAME time span, so the boundary stream and
-      // local windows grow k× while the carry table stays span/bucket rows —
-      // the two-level split's whole point.
-      val evBase = spark.read.parquet(s"$sfDir/events.parquet")
-        .select(col("user_id"), col("ts"), col("event_type"), col("event_id"))
-      val ev = (0 until k).map(i =>
-        evBase.select((col("user_id") + lit(i * 10000000L)).as("user_id"), col("ts"),
-          col("event_type"), (col("event_id") + lit(i * 10000000L)).as("event_id")))
-        .reduce(_ unionAll _)
-        .transform(normalizeTs)
-      time("interval_concurrency") {
-        val sess = graft.operators.Sessionize.sessions(
-          ev, Seq("user_id"), "ts", "INTERVAL 1 HOUR")
-        graft.operators.Intervals.concurrency(sess, "session_start", "session_end").count()
-      }
-      time("event_transitions") {
-        // k× users, same per-user stream length: the user-keyed window
-        // parallelizes across the new users; the (src, dst) count frame is
-        // #types² regardless of k
-        graft.operators.Funnel.transitions(
-          ev, "user_id", "event_type", "ts", "event_id").count()
-      }
-    }
-    locally {
-      // market baskets at k×: re-keyed ORDERS keep basket sizes constant
-      // (≤ 7 items in TPC-H), so pair fan-out grows exactly k× — the
-      // basket-size-bounded property the no-self-join shape rests on
-      val liBase = spark.read.parquet(s"$sfDir/lineitem.parquet")
-        .select(col("l_orderkey"), col("l_partkey"))
-      val li = (0 until k).map(i =>
-        liBase.select((col("l_orderkey") + lit(i * 100000000L)).as("l_orderkey"),
-          col("l_partkey")))
-        .reduce(_ unionAll _)
-      time("copurchase_pairs") {
-        graft.operators.Queries.coPurchasePairs(li, "l_orderkey", "l_partkey", 50).count()
-      }
-      time("copurchase_pairs_join") {
-        graft.operators.Queries.coPurchasePairsJoin(li, "l_orderkey", "l_partkey", 50).count()
-      }
-      time("item_sim_skewed_capped") {
-        // a MEGA-BASKET injected on top of the k× fact table: one synthetic
-        // order holding 20,000 distinct items — uncapped that single basket
-        // fans out C(20000, 2) ≈ 2·10⁸ pairs, dwarfing the real corpus.
-        // maxBasket=128 bounds it at C(128, 2) = 8,128: cost must stay at
-        // the normal-corpus level, the skew guard absorbing the outlier.
-        val mega = spark.range(20000).select(lit(999999999L).as("l_orderkey"),
-          (col("id") + 10000000L).as("l_partkey"))
-        graft.operators.Queries.itemSimilarity(li.unionByName(mega),
-          "l_orderkey", "l_partkey", minCo = 2L, maxBasket = Some(128)).count()
-      }
-    }
-    time("source_divergence") {
-      // replication multiplies every (source, token) count by k but the
-      // vocabulary and #sources do not grow: the token self-join stays
-      // #groups²-bounded per token and the probs frame stays vocab-sized —
-      // cost must track the corpus scan, not the pair count
-      graft.operators.TextAnalysis.groupDivergence(
-        spark.read.parquet(s"$sfDir/documents.parquet")
-          .select(col("doc_id"), col("text"), col("source"))
-          .transform(d => (0 until k).map(i =>
-            d.select((col("doc_id") + lit(i * 1000000L)).as("doc_id"),
-              col("text"), col("source"))).reduce(_ unionAll _)),
-        "text", "source").count()
-    }
-    time("token_budget_sample") {
-      // one per-stratum running-sum window; k× docs per stratum → k× window
-      // rows, linear
-      graft.operators.Sampling.tokenBudgetSample(
-        docs.withColumn("source", concat(lit("s"), col("doc_id") % 20))
-          .withColumn("n_tokens",
-            graft.operators.TextAnalysis.wsTokens(col("text")).cast("long")),
-        "doc_id", "source", "n_tokens", budget = 50000L).count()
-    }
-    if (k > 1) time("neighborhood_jaccard") {
-      // same k-clique graph as the triangles probe: |edges| = n·C(k,2), and
-      // every edge's common-neighbor count is k−2 — wedge fan-out per edge
-      // is deg = k−1, so total work is n·C(k,2)·(k−1): cubic-in-k OUTPUT
-      // VOLUME by construction. Pass signal: runtime tracks that volume,
-      // not |V|² (the distinction between an edge-seeded wedge join and an
-      // all-pairs similarity).
-      val cliquePairs = base.select(col("doc_id"))
-        .select(col("doc_id"), explode(sequence(lit(0), lit(k - 1))).as("i"))
-        .select(col("doc_id"), col("i"),
-          explode(sequence(lit(0), lit(k - 1))).as("j"))
-        .filter(col("i") < col("j"))
-        .select((col("doc_id") + col("i") * lit(1000000L)).as("id_a"),
-          (col("doc_id") + col("j") * lit(1000000L)).as("id_b"))
-      graft.operators.Graph.neighborhoodJaccard(cliquePairs, "id_a", "id_b").count()
-    }
-    locally {
-      // KMV sketch at k× the events table: re-keyed event ids make the true
-      // cardinality grow k× while the sketch state stays EXACTLY k longs per
-      // group — the shuffle is (#groups × k_sketch) regardless of input
-      // size, which is the entire point of the operator.
-      val evBase = spark.read.parquet(s"$sfDir/events.parquet")
-        .select(col("event_type"), col("event_id"))
-      val ev = (0 until k).map(i =>
-        evBase.select(col("event_type"),
-          (col("event_id") + lit(i * 10000000L)).as("event_id")))
-        .reduce(_ unionAll _)
-      time("kmv_distinct") {
-        graft.operators.Sketches.kmvDistinct(ev, Seq("event_type"), "event_id",
-          k = 256).count()
-      }
-      // The variant above times the sketch PLUS its exact countDistinct
-      // self-check, whose distinct-aggregate shuffle grows with true
-      // cardinality (k× under re-keying) — it does NOT isolate the
-      // bounded-state property. This one does: sketch-only, shuffle =
-      // (#groups × 256) longs at any input size.
-      time("kmv_sketch_only") {
-        graft.operators.Sketches.kmvEstimate(ev, Seq("event_type"), "event_id",
-          k = 256).count()
-      }
-    }
-    locally {
-      // round-10 wave 3: the KS distinct-value window and the as-of
-      // attribution carry. Events replicate with SHIFTED users (user count
-      // grows k×, per-user volume constant) but UNCHANGED values — so the
-      // KS probe's distinct-value frame stays FIXED while input grows k×,
-      // which is exactly the bounded-window claim under test.
-      val evB = normalizeTs(spark.read.parquet(s"$sfDir/events.parquet"))
-        .select(col("event_id"), col("ts"), col("user_id"), col("event_type"), col("value"))
-      val ev = (0 until k).map(i => evB.select(
-          (col("event_id") + lit(i * 100000000L)).as("event_id"), col("ts"),
-          (col("user_id") + lit(i * 1000000L)).as("user_id"),
-          col("event_type"), col("value")))
-        .reduce(_ unionAll _)
-      time("ks_test") {
-        import org.apache.spark.sql.expressions.Window
-        val a = ev.filter(col("event_type") === "click")
-          .select(col("value").as("v"), lit(1L).as("__a"), lit(0L).as("__b"))
-        val b = ev.filter(col("event_type") === "purchase")
-          .select(col("value").as("v"), lit(0L).as("__a"), lit(1L).as("__b"))
-        val byV = a.unionAll(b).groupBy("v").agg(sum("__a").as("da"), sum("__b").as("db"))
-        val w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        byV.withColumn("ca", sum(col("da")).over(w))
-          .withColumn("cb", sum(col("db")).over(w)).count()
-      }
-      time("attribution_asof") {
-        val purchases = ev.filter(col("event_type") === "purchase")
-          .select(col("user_id"), col("ts"), col("event_id"), col("value"))
-        val touches = ev.filter(col("event_type").isin("click", "view"))
-          .groupBy(col("user_id"), col("ts"))
-          .agg(max_by(col("event_type"), col("event_id")).as("touch_type"))
-          .select(col("user_id"), col("ts").as("touch_ts"), col("touch_type"))
-        graft.operators.AsofJoin.asof(purchases, touches, Seq("user_id"), "ts",
-            "touch_ts", payload = Seq("touch_type"), tolerance = Some("INTERVAL 7 DAYS"))
-          .groupBy(coalesce(col("touch_type"), lit("unattributed")).as("touch_type"))
-          .agg(count(lit(1)).as("n")).count()
-      }
-    }
-    time("bm25_scores") {
-      // posting-list BM25 over the k×-replicated corpus: only the three
-      // searched terms' postings shuffle — cost must track corpus scan +
-      // matched-posting volume, both linear in k
-      import graft.operators.TextAnalysis
-      val terms = Seq("spark", "join", "stream")
-      val dl = docs.select(col("doc_id"), TextAnalysis.wsTokens(col("text")).as("dl"))
-      val g = dl.agg(count(lit(1)).as("__n"),
-        (sum(col("dl")).cast("double") / count(lit(1)).cast("double")).as("__avgdl"))
-      val tf = docs.select(col("doc_id"),
-          explode(split(lower(col("text")), "\\s+")).as("tok"))
-        .filter(col("tok").isin(terms: _*))
-        .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
-      val dfq = tf.groupBy("tok").agg(count(lit(1)).as("df"))
-      tf.join(broadcast(dfq), Seq("tok")).join(dl, Seq("doc_id"))
-        .crossJoin(broadcast(g)).count()
-    }
-    time("winnow_matches") {
-      // replication multiplies every fingerprint's docFreq by k, so template
-      // hashes cross the cap and DROP — pair volume must stay bounded by
-      // cap² per surviving hash, not grow k²× with the corpus
-      Dedup.winnowMatchesFrom(
-        Dedup.winnowFingerprints(docs, "text", "doc_id", k = 4, w = 5),
-        "doc_id", docFreqCap = 50).count()
-    }
-    time("winnow_after_dedup") {
-      // r14 (verdict ask #1): the dedup-first composition under the SAME
-      // replication that drives the direct probe above to zero pairs once
-      // the docFreq cap binds on replicas. Here the cap counts distinct
-      // CONTENTS (exact-dedup first), so this must report nonzero LOGICAL
-      // pairs at every k while the pair join stays bounded by
-      // distinct-content docFreq — replication never reaches an exchange.
-      // Reported rows = Σ n_pairs (the logical pair count the direct run
-      // would enumerate physically).
-      Dedup.winnowMatchesDeduped(docs, "text", "doc_id", k = 4, w = 5,
-        docFreqCap = 50)
-        .agg(coalesce(sum(col("n_pairs")), lit(0L))).head().getLong(0)
-    }
-    time("semdedup_fixed_cells") {
-      // deliberately ADVERSARIAL: cell count held at 16 while the corpus
-      // grows k× ⇒ in-cell pair volume grows k²× — this measures the cost
-      // of violating the operator's contract (k_cells ~ sqrt(N), see
-      // Similarity.semDedup doc). The paper-correct configuration is the
-      // next probe; both are reported so the k² cliff is visible.
-      import spark.implicits._
-      val cents = Dedup.hyperplanes(16, 64, seed = 7L).zipWithIndex
-        .map { case (v, i) => (i.toLong, v) }.toDF("cell_id", "centroid")
-      Similarity.semDedup(embs, cents, "embedding", "vec_id", 0.3)
-        .filter(col("dropped")).count()
-    }
-    time("semdedup_scaled_cells") {
-      // contract-respecting run: cells scale with the corpus (16k planes ≈
-      // 16·k cells for k× vectors), keeping per-cell population — and hence
-      // pair volume PER CELL — constant; total cost should grow ~linearly
-      import spark.implicits._
-      val cents = Dedup.hyperplanes(16 * k, 64, seed = 7L).zipWithIndex
-        .map { case (v, i) => (i.toLong, v) }.toDF("cell_id", "centroid")
-      Similarity.semDedup(embs, cents, "embedding", "vec_id", 0.3)
-        .filter(col("dropped")).count()
-    }
-    time("chi2_terms") {
-      // synthetic 7-way label (cost is driven by distinct (doc, token)
-      // volume, not label cardinality): one distinct + two counts + top-k
-      import graft.operators.TextAnalysis
-      TextAnalysis.chi2Terms(
-        docs.withColumn("label", (col("doc_id") % 7).cast("string")),
-        "text", "doc_id", "label", minDf = 5, topK = 10).count()
-    }
-    locally {
-      // round-12: the retrieval/selection wave probed (r11 verdict ask #2 —
-      // SCALE.md r11 called this wave's scale argument "structural rather
-      // than probed"; these rows make it measured)
-      val docsLang = {
-        val b = spark.read.parquet(s"$sfDir/documents.parquet")
-          .select("doc_id", "text", "lang")
-        (0 until k).map(i => b.select((col("doc_id") + lit(i * 1000000L)).as("doc_id"),
-          col("text"), col("lang"))).reduce(_ unionAll _)
-      }
-      time("dsir_weights") {
-        // two corpus-scan hash passes + a FIXED 64-bucket count frame
-        // broadcast back: cost must track the scans, k× linear
-        graft.operators.TextAnalysis.dsirWeights(
-          docsLang.filter(col("lang") =!= "en"), docsLang.filter(col("lang") === "en"),
-          "text", "doc_id", dim = 64).count()
-      }
-      time("kcenters") {
-        // 8 greedy steps = 8 corpus scans + one TakeOrdered(1) each; the
-        // selected set is 8×64 doubles on the driver at ANY corpus size
-        Similarity.kCenters(embs, "embedding", "vec_id", k = 8).count()
-      }
-      time("mmr_rerank") {
-        // the linear part is candidate generation (brute top-20, 3 queries);
-        // the greedy itself is ONE bounded (query)-keyed aggregator shuffle
-        // of Q×kCand rows — invariant in corpus size (r12 rewrite)
-        Similarity.mmrRerank(embs, embs.filter(col("vec_id") < 3), "embedding",
-          "vec_id", kCand = 20, kOut = 5).count()
-      }
-      time("hybrid_rrf") {
-        // both rankings are broadcast-query scans into bounded TopKAgg
-        // partial top-50s; the fusion join touches Q×50 rows only
-        import org.apache.spark.sql.Encoders
-        val topk = udaf(new Similarity.TopKAgg(50), Encoders.product[Similarity.ScoredId])
-        val sets = Dedup.shingleSets(docs, "text", "doc_id", 5)
-        val qsets = sets.filter(col("id") < 3)
-          .select(col("id").as("query_id"), col("sh").as("qsh"))
-        val inter = size(array_intersect(col("sh"), col("qsh"))).cast("double")
-        val lex = sets.crossJoin(broadcast(qsets)).filter(col("id") =!= col("query_id"))
-          .select(col("query_id"), col("id"),
-            (inter / (size(col("sh")) + size(col("qsh")) - inter)).as("score"))
-          .groupBy("query_id").agg(topk(col("score"), col("id")).as("t"))
-          .select(col("query_id"), posexplode(col("t")).as(Seq("r", "sx")))
-          .select(col("query_id"), col("sx.id").as("id"),
-            (col("r") + 1).cast("long").as("lex_rank"))
-        val vec = Similarity.bruteForceTopKAgg(embs, embs.filter(col("vec_id") < 3),
-            "embedding", "vec_id", 50)
-          .select(col("query_id"), col("neighbor_id").as("id"), col("rank").as("vec_rank"))
-        lex.join(vec, Seq("query_id", "id"), "full_outer").count()
-      }
-      time("pq_adc_topk") {
-        // encode = one narrow pass over the float corpus; serve = broadcast
-        // LUTs scanning the CODE table (m ints/vector) into partial top-k
-        val books = Similarity.pqCodebooks(m = 8, subDim = 8, ksub = 16, seed = 11L)
-        Similarity.pqAdcTopK(Similarity.pqEncode(embs, "embedding", "vec_id", books),
-          embs.filter(col("vec_id") < 3), "embedding", "vec_id", books, k = 10).count()
-      }
-      time("bq_hamming_topk") {
-        // encode = 64 fused sign tests per vector, one narrow pass; serve =
-        // 8-byte codes × broadcast query codes → bit_count(xor) → partial
-        // top-k. The float corpus is scanned once (encode), never at serve
-        Similarity.bqHammingTopK(
-          Similarity.binaryQuantize(embs, "embedding", "vec_id"),
-          embs.filter(col("vec_id") < 3), "embedding", "vec_id", k = 10).count()
-      }
-      time("ivfpq_probe") {
-        // composed compressed serve: coarse assign (one corpus pass vs 16
-        // literal centroids) + PQ encode (one narrow pass) + nprobe-bounded
-        // cell join scored by ADC — candidates ∝ probed-cell occupancy,
-        // which replication grows linearly
-        import spark.implicits._
-        val cents = Dedup.hyperplanes(16, 64, seed = 7L).zipWithIndex
-          .map { case (v, i) => (i.toLong, v) }.toDF("cell_id", "centroid")
-        val books = Similarity.pqCodebooks(m = 8, subDim = 8, ksub = 16, seed = 11L)
-        Similarity.ivfPqProbe(
-          Similarity.ivfAssign(embs, cents, "embedding", "vec_id"),
-          Similarity.pqEncode(embs, "embedding", "vec_id", books),
-          embs.filter(col("vec_id") < 3), cents, "embedding", "vec_id",
-          books, k = 10, nprobe = 4).count()
-      }
-      time("audio_fp_dedup") {
-        // k×64 synthetic WAVs: RIFF chunk-walk parse + frame energies +
-        // delta-sign fingerprint in one narrow mapPartitions → 8-byte-key
-        // hash agg — the audio twin of the image probe below
-        val ids = docs.select(col("doc_id")).filter(col("doc_id") % 1000000L < 64)
-        graft.operators.Multimodal.audioFingerprint(
-            graft.operators.Multimodal.withWavPayload(ids, "doc_id"),
-            "payload", "media_id")
-          .groupBy("afp")
-          .agg(count(lit(1)).as("n"), min(col("media_id")).as("keeper"))
-          .count()
-      }
-      time("image_dhash_dedup") {
-        // k×64 synthetic rasters: per-partition decode → narrow dHash →
-        // 8-byte-key hash agg; the probe pins decode+fingerprint+dedup as
-        // scan-speed linear in image count
-        val ids = docs.select(col("doc_id")).filter(col("doc_id") % 1000000L < 64)
-        graft.operators.Multimodal.dHash(
-            graft.operators.Multimodal.withBmpPayload(ids, "doc_id"),
-            "payload", "media_id")
-          .groupBy("dhash")
-          .agg(count(lit(1)).as("n"), min(col("media_id")).as("keeper"))
-          .count()
-      }
-      time("subword_encode") {
-        // tokenizer APPLY at k×: vocab learn (ONE VocabGramEntries kernel
-        // pass + count shuffle + per-kind WindowGroupLimit, 300 strings to
-        // the driver) + ONE narrow codegen'd greedy-match pass over the
-        // whole corpus — the encode itself must ride scan speed with zero
-        // shuffle beyond the tiny per-source rollup
-        import graft.operators.TextAnalysis
-        val src = docs.withColumn("source", (col("doc_id") % 4).cast("string"))
-        val vocab = TextAnalysis.subwordVocab(src, "text", topWords = 100, topGrams = 100)
-        TextAnalysis.subwordEncodeReport(src, "text", "source", vocab).count()
-      }
-      time("bpe_merge_rounds") {
-        // BPE merge-loop growth (r13): 8 rounds of the q_bpe_train shape at
-        // k× — each round is one pair-count shuffle + a 1-row argmax collect
-        // + a narrow replace. Per-round cost must grow linearly in corpus
-        // bytes (the count shuffle carries distinct grams × partial counts,
-        // replication leaves distinct grams invariant so the exchange is
-        // k-invariant — only the scan side grows). Reported rows = rounds.
-        var cur = docs.select(
-          concat(lit("  "),
-            array_join(array_remove(split(lower(col("text")), "\\s+"), ""), "  "),
-            lit("  ")).as("t"))
-          .repartition(8).localCheckpoint(false)
-        (1 to 8).foreach { _ =>
-          val top = cur.select(explode(graft.expressions.GraftFunctions.ngramStrings(
-              split(trim(col("t")), "  "), 2)).as("gram"))
-            .groupBy("gram").agg(count(lit(1)).as("c"))
-            .orderBy(col("c").desc, col("gram").asc).limit(1).collect()(0)
-          cur = cur.select(replace(col("t"),
-            lit(" " + top.getString(0).replace(" ", "  ") + " "),
-            lit(" " + top.getString(0).replace(" ", "_") + " ")).as("t"))
-            .localCheckpoint(false)
-        }
-        8L
-      }
-      time("token_shards") {
-        // distributed global rank at k×: per-token-count row_number (bounded
-        // groups) + broadcast cumulative-offset join — the only wide stage is
-        // the (toks) exchange; the offset window runs over the DISTINCT token
-        // counts, which replication leaves invariant. Same code path as the
-        // gated query (TextAnalysis.tokenShardReport).
-        graft.operators.TextAnalysis
-          .tokenShardReport(docs, "text", "doc_id", nShards = 8).count()
-      }
-      time("bpe_merge_rounds_deep") {
-        // r14 (verdict ask #8) — BPE at production merge counts: the same
-        // driver-loop shape driven to GRAFT_BPE_ROUNDS merges (default 256;
-        // run 1024 for the far point). The SCALE.md law says cost = rounds ×
-        // one linear corpus scan; this probe measures the per-round wall
-        // directly, in 64-round bands (per-round cost can only FALL as
-        // merges shrink the token stream), locating where the driver-loop
-        // wall-clock stops being practical — the design boundary of this
-        // shape (past it: batch several merges per scan, accepting
-        // approximate counts, or move the loop off the driver).
-        val rounds = sys.env.getOrElse("GRAFT_BPE_ROUNDS", "256").toInt
-        var cur = docs.select(
-          concat(lit("  "),
-            array_join(array_remove(split(lower(col("text")), "\\s+"), ""), "  "),
-            lit("  ")).as("t"))
-          .repartition(8).localCheckpoint(false)
-        val bandWall = new scala.collection.mutable.ArrayBuffer[Double]()
-        var bandStart = System.nanoTime()
-        var done = 0
-        var exhausted = false
-        (1 to rounds).foreach { i =>
-          if (!exhausted) {
-            val top = cur.select(explode(graft.expressions.GraftFunctions.ngramStrings(
-                split(trim(col("t")), "  "), 2)).as("gram"))
-              .groupBy("gram").agg(count(lit(1)).as("c"))
-              .orderBy(col("c").desc, col("gram").asc).limit(1).collect()
-            if (top.isEmpty) exhausted = true
-            else {
-              cur = cur.select(replace(col("t"),
-                lit(" " + top(0).getString(0).replace(" ", "  ") + " "),
-                lit(" " + top(0).getString(0).replace(" ", "\u0001") + " ")).as("t"))
-                .localCheckpoint(false)
-              done = i
-            }
-          }
-          if (i % 64 == 0) {
-            bandWall += (System.nanoTime() - bandStart) / 1e9
-            bandStart = System.nanoTime()
-          }
-        }
-        bandWall.zipWithIndex.foreach { case (s, b) =>
-          println(f"[scale-bpe] rounds ${b * 64 + 1}%4d-${(b + 1) * 64}%4d: " +
-            f"$s%7.1f s  (${s / 64}%.2f s/round)")
-        }
-        done.toLong
-      }
-      time("bpe_batched_deep") {
-        // r14: the batched trainer at the same merge count as
-        // bpe_merge_rounds_deep — GRAFT_BPE_ROUNDS total merges in
-        // rounds/8 scans of 8 symbol-disjoint picks. The sequential loop's
-        // floor is one driver round-trip per MERGE; this shape pays one per
-        // SCAN, so wall should approach 1/8 of the sequential run at equal
-        // merges — the design boundary's answer, measured.
-        // r14 self-review: call the SHARED trainer core (the exact code the
-        // gated q_bpe_train_batched runs) instead of a probe-local copy - a
-        // selection-rule change must be what this probe measures
-        val rounds = sys.env.getOrElse("GRAFT_BPE_ROUNDS", "256").toInt
-        val m = sys.env.getOrElse("GRAFT_BPE_M", "8").toInt
-        val t0 = System.nanoTime()
-        val picks = graft.SparkEntry.bpeBatchedTrain(docs, rounds / m, m,
-          partitions = 8, onScan = (sc, done) =>
-            if (sc % 8 == 0) println(f"[scale-bpe-batched] merges ${done}%5d " +
-              f"wall ${(System.nanoTime() - t0) / 1e9}%7.1f s"))
-        picks.length.toLong
-      }
-      time("http_body_decode") {
-        // r17 — the HTTP entity decode (gzip/deflate/chunked∘gzip arms) at
-        // replication: encode every page under its arm, decode back. Both
-        // stages are narrow byte codecs; the pass signal is wall ∝ bytes
-        // with ZERO shuffle — the binary never moves. This is the step a
-        // real CC read runs on ~every response payload.
-        val W = graft.operators.Web
-        val w = W.withEncodedHttp(W.withHtml(W.withUrls(docs)))
-        W.decodeHttpBody(w, "doc_id", "body",
-            "transfer_encoding", "content_encoding")
-          .agg(sum(when(col("ok"), octet_length(col("decoded"))).otherwise(0L)))
-          .head().getLong(0) / 1048576
-      }
-      time("charset_decode") {
-        // r17 — charset resolution (header param / meta prescan / default)
-        // + strict decode at replication: narrow mapPartitions, zero
-        // shuffle, wall ∝ bytes. The prescan is bounded (1 KiB) so cost is
-        // O(1) per doc regardless of payload size.
-        val W = graft.operators.Web
-        val w = W.withCharsetHttp(docs)
-        W.decodeCharset(w, "doc_id", "body", "content_type")
-          .groupBy("charset", "charset_src").agg(count(lit(1)))
-          .count()
-      }
-      time("wat_write_roundtrip") {
-        // r17 — the WAT metadata lane at replication: parse the crawl,
-        // build per-response metadata (title regex + resolved links), WAT
-        // JSON serialize, parse back. Narrow end to end except the output
-        // agg; wall ∝ bytes.
-        val W = graft.operators.Web
-        val w = W.withWarc(W.withHtml(W.withUrls(docs)))
-        val recs = W.warcRecords(w.select(col("doc_id"), col("warc")), "warc")
-          .filter(col("rec_type") === "response" && col("http_status") === 200)
-        val meta = recs.select(col("doc_id"), col("target_uri").as("url"),
-            col("warc_date"), col("http_status"), col("mime"), col("payload"))
-          .withColumn("title",
-            regexp_extract(col("payload"), "<title>(.*?)</title>", 1))
-          .withColumn("links", transform(W.extractLinks(col("payload")),
-            l => W.resolveUrl(col("url"), l)))
-        val wat = W.toWat(meta, "doc_id", "url", "warc_date", "http_status",
-          "mime", "title", "links")
-        W.warcRecords(wat.select(col("doc_id"), col("wat")), "wat")
-          .agg(sum(col("block_octets"))).head().getLong(0) / 1048576
-      }
-      time("domain_rank") {
-        // r17 — PageRank over the registrable-domain link graph at
-        // replication: replication is the DEGENERATE case that proves the
-        // design — every clone links to the same domains, so the DISTINCT
-        // edge set (and therefore every iterated join) stays CONSTANT-size
-        // while the page-scale extraction grows linearly. The iterated
-        // frame must never be page-granularity.
-        val W = graft.operators.Web
-        val h = W.withHtml(W.withUrls(docs))
-        val links = h.select(col("doc_id"), col("url").as("page_url"),
-          explode(W.extractLinks(col("html"))).as("href"))
-        val resolved = links.select(col("doc_id"),
-          W.resolveUrl(col("page_url"), col("href")).as("url"))
-        val dstD = W.canonicalize(resolved, "url")
-          .select(col("doc_id"), col("domain").as("dst")).localCheckpoint(false)
-        val srcD = W.canonicalize(h.select(col("doc_id"), col("url")), "url")
-          .select(col("doc_id"), col("domain").as("src")).localCheckpoint(false)
-        val edges = srcD.join(dstD, Seq("doc_id"))
-          .filter(col("src").isNotNull && col("dst").isNotNull &&
-            col("src") =!= col("dst"))
-          .select("src", "dst").distinct().localCheckpoint(false)
-        val nEdges = edges.count()
-        val ranked = graft.operators.Graph.pageRank(edges, "src", "dst", 3).count()
-        println(s"[scale-domain-rank] $nEdges distinct domain edges, $ranked ranked domains")
-        ranked
-      }
-      time("warc_pipeline_encoded") {
-        // r17 — the BINARY container pipeline at replication: wire-coded
-        // entity bodies (gzip / chunked∘gzip / deflate arms) → length-
-        // framed binary parse → header-keyed decode → strip chain →
-        // canonicalize. The decode adds codec wall but NO exchange: the
-        // pass signal is the same zero-shuffle law as warc_front_door.
-        val W = graft.operators.Web
-        val base = W.withHtml(W.withUrls(docs))
-        val wb = W.withWarcBin(base)
-        val recs = W.warcRecordsBin(wb, "doc_id", "warc_bin")
-          .filter(col("rec_type") === "response" && col("http_status") === 200)
-          .select(col("doc_id"), col("target_uri"), col("payload_bin"),
-            col("transfer_encoding"), col("content_encoding"))
-          .localCheckpoint(false)
-        val dec = W.decodeHttpBody(recs, "doc_id", "payload_bin",
-            "transfer_encoding", "content_encoding")
-          .filter(col("ok"))
-        val ext = recs.select(col("doc_id"), col("target_uri").as("url"))
-          .join(dec, Seq("doc_id"))
-          .withColumn("tc", W.htmlToText(col("decoded")))
-        W.canonicalize(ext, "url")
-          .agg(count(lit(1)), sum(octet_length(col("tc"))))
-          .head().getLong(0)
-      }
-      time("recrawl_304") {
-        // r17 — the conditional-GET loop at replication: parse two crawls,
-        // join 304 rows to the prior capture by target URI. The join is
-        // the only exchange and carries (url, 16-byte md5) pairs — never
-        // payloads; law: shuffle ∝ pages, wall ∝ bytes parsed.
-        val W = graft.operators.Web
-        val base = W.withHtml(W.withUrls(docs))
-        // unique-per-URL latest-capture index (the production contract):
-        // without it, replicated URL collisions fan the join out k² —
-        // 3.3M joined rows at 10×, 29.5M at 30× — the quadratic this probe
-        // exists to catch
-        val prior = W.warcRecords(
-            W.withWarc(base).select(col("doc_id"), col("warc")), "warc")
-          .filter(col("rec_type") === "response" && col("http_status") === 200)
-          .groupBy(col("target_uri").as("url"))
-          .agg(max(struct(col("warc_date"), md5(col("payload"))))
-            .getField("col2").as("prior_md5"))
-        val recs2 = W.warcRecords(
-            W.withWarcConditional(base, 900000000L), "warc")
-          .filter(col("rec_type") === "response")
-          .select(col("doc_id"), col("target_uri").as("url"),
-            col("http_status"), md5(col("payload")).as("own_md5"))
-        recs2.join(prior, Seq("url"), "left")
-          .agg(count(lit(1)),
-            sum(when(col("http_status") === 304, 1L).otherwise(0L)))
-          .head().getLong(0)
-      }
-      time("warc_front_door") {
-        // r15 — the WARC container front door at replication: serialize
-        // every doc as a three-record WARC/1.0 segment, parse records, keep
-        // 200-responses, strip HTML, canonicalize the target URI. The whole
-        // chain is narrow (explode + codegen'd string ops): the pass signal
-        // is wall ∝ bytes parsed with the shuffle delta at ~0 MiB — any
-        // nonzero shuffle here means the front door stopped being a
-        // scan-speed map and would bottleneck a 100 TB crawl read.
-        val W = graft.operators.Web
-        val w = W.withWarc(W.withHtml(W.withUrls(docs)))
-        val segMiB = w.agg(sum(octet_length(col("warc")))).head().getLong(0) / 1048576.0
-        val recs = W.warcRecords(w.select(col("doc_id"), col("warc")), "warc")
-          .filter(col("rec_type") === "response" && col("http_status") === 200)
-        val curated = W.canonicalize(
-          recs.select(col("doc_id"), col("target_uri").as("url"),
-            W.htmlToText(col("payload")).as("tc")), "url")
-        val r = curated.agg(count(lit(1)).as("n"),
-          sum(length(col("tc"))), sum(length(col("surt")))).head()
-        println(f"[scale-warc] segments=$segMiB%.1f MiB serialized+parsed")
-        r.getLong(0)
-      }
-      time("crawl_funnel") {
-        // r15 — the SIX-STAGE curation funnel at replication: WARC
-        // serialize+parse → 200-filter → robots decisions (cached-rule
-        // broadcast) → strip chain → canonicalize → SURT-survivor window →
-        // per-domain agg. The only corpus-keyed exchange is the SURT
-        // window + the final agg; everything upstream is the narrow
-        // front door, so wall must track bytes and shuffle must track
-        // ROWS (the window), not the fan-out of any join.
-        val W = graft.operators.Web
-        val u = W.withUrls(docs)
-        val w = W.withWarc(W.withHtml(u))
-        val recs = W.warcRecords(w.select(col("doc_id"), col("warc")), "warc")
-          .filter(col("rec_type") === "response")
-          .select(col("doc_id"), col("target_uri").as("url"), col("payload"),
-            col("http_status"))
-        val pages = u.select(col("doc_id"), W.hostOf(col("url")).as("host"),
-          W.pathOf(col("url")).as("path"))
-        val hosts = pages.select("host").distinct()
-        val rules = W.robotsRules(
-          hosts.withColumn("robots", W.robotsTxt(col("host"))), "host", "robots")
-          .localCheckpoint(true)
-        val dec = W.robotsDecisionsFor(pages, rules, Seq("graftbot"))
-          .select(col("doc_id"), col("allowed"))
-        val staged = W.canonicalize(recs, "url")
-          .join(dec, Seq("doc_id"))
-          .withColumn("is200", col("http_status") === 200)
-          .withColumn("tc", W.htmlToText(col("payload")))
-          .withColumn("toks", graft.operators.TextAnalysis.wsTokens(col("tc"))
-            .cast(LongType))
-          .withColumn("elig", col("is200") && col("allowed") && col("toks") >= 50)
-          .withColumn("surv", col("elig") && col("doc_id") ===
-            min(when(col("elig"), col("doc_id")))
-              .over(org.apache.spark.sql.expressions.Window.partitionBy("surt")))
-        staged.groupBy("domain").agg(
-            count(lit(1)).as("n"), sum(col("surv").cast(LongType)).as("u"),
-            sum(when(col("surv"), col("toks")).otherwise(lit(0L))).as("t"))
-          .agg(sum(col("n")) + sum(col("u")) + sum(col("t"))).head().getLong(0)
-      }
-      time("warc_gz_roundtrip") {
-        // r15 — the .warc.gz path at replication: member-per-record gzip
-        // encode + multi-member decode + record parse. Gzip codec cost is
-        // the real Common Crawl read bottleneck; the law under test is
-        // wall ∝ bytes with ZERO shuffle (both stages are narrow
-        // mapPartitions; the binary never moves).
-        val W = graft.operators.Web
-        val w = W.withWarc(W.withHtml(W.withUrls(docs)))
-        val gz = W.withWarcGz(w.select(col("doc_id"), col("warc")), "doc_id", "warc")
-        val recs = W.warcRecords(
-          W.gunzipWarc(gz, "doc_id", "warc_gz"), "warc")
-        recs.agg(count(lit(1)), sum(col("block_octets"))).head().getLong(0)
-      }
-      time("warc_gz_member_memory") {
-        // r17 (verdict ask #4) — the MEMORY law at real file granularity:
-        // one `.warc.gz` FILE is thousands of concatenated members (~1 GiB
-        // at CC scale), and the whole-payload reader (gunzipWarc)
-        // materializes the ENTIRE decoded file per row, while the member
-        // walk (gzipMemberIterator) holds ONE member at a time. The
-        // payload here is a single file-granularity row ≥1000× the gated
-        // fixture's segment size; the law under test: member-walk peak
-        // allocation = max member (constant in file size), whole-decode
-        // peak = total (linear in file size) — wall comparable (same codec
-        // work either way).
-        val W = graft.operators.Web
-        val w = W.withWarc(W.withHtml(W.withUrls(docs)))
-        val gzRows = W.gzipWarcRecords(
-            w.select(col("doc_id"), col("warc")), "doc_id", "warc")
-          .select("warc_gz").collect().map(_.getAs[Array[Byte]](0))
-        val file = {
-          val bos = new java.io.ByteArrayOutputStream()
-          gzRows.foreach(bos.write)
-          bos.toByteArray
-        }
-        val t1 = System.nanoTime()
-        val whole = {
-          val out = new java.io.ByteArrayOutputStream()
-          val in = new java.util.zip.GZIPInputStream(
-            new java.io.ByteArrayInputStream(file), 65536)
-          val buf = new Array[Byte](65536)
-          var nn = in.read(buf)
-          while (nn >= 0) { out.write(buf, 0, nn); nn = in.read(buf) }
-          out.toByteArray.length
-        }
-        val wholeS = (System.nanoTime() - t1) / 1e9
-        val t2 = System.nanoTime()
-        var members = 0L
-        var maxMember = 0
-        var total = 0L
-        W.gzipMemberIterator(file).foreach { m =>
-          members += 1; maxMember = math.max(maxMember, m.length)
-          total += m.length
-        }
-        val memberS = (System.nanoTime() - t2) / 1e9
-        println(f"[scale-warc-mem] file=${file.length / 1048576.0}%.1f MiB gz, " +
-          f"whole-decode peak=${whole / 1048576.0}%.1f MiB in $wholeS%.1f s; " +
-          f"member-walk peak=${maxMember / 1024.0}%.1f KiB " +
-          f"($members members, total ${total / 1048576.0}%.1f MiB) in $memberS%.1f s")
-        members
-      }
-      time("sft_prep") {
-        // r15 — the SFT family at replication: transcript synthesis →
-        // turn parse → pair mining with the cross-corpus response-hash
-        // window → packed mask spans. Replication is adversarial for the
-        // response-dedup window (every response gains k-1 identical
-        // copies → maximal hash-partition populations); the law under
-        // test is shuffle ∝ rows through the hash/window exchanges with
-        // no corpus² stage anywhere.
-        val S = graft.operators.Sft
-        val t = S.parseTurns(S.withTranscript(docs), "doc_id", "transcript")
-          .withColumn("toks", graft.operators.TextAnalysis.wsTokens(col("content"))
-            .cast(LongType))
-        val pairs = S.minePairs(t, "doc_id")
-        val conv = t.groupBy("doc_id").agg(sum(col("toks")).as("n_tokens"))
-        val packed = graft.operators.Packing.packSequences(conv, "n_tokens",
-          "doc_id", budget = 2048L)
-        val spans = S.maskSpans(t, "doc_id", col("toks"))
-          .join(packed.select("doc_id", "seq_start"), Seq("doc_id"))
-        val r = pairs.agg(count(lit(1)), sum(col("n_same_response"))).head()
-        val m = spans.agg(count(lit(1))).head()
-        r.getLong(0) + m.getLong(0)
-      }
-      time("robots_decisions") {
-        // r15 — robots at HOST scale: 50k distinct hosts' rule tables
-        // (~600k rule rows after stacked-UA fan-out) against the k×
-        // page corpus. The claims under test: the rule table stays
-        // broadcast-sized at large host counts, decisions stay one
-        // broadcast join + a (doc_id, agent)-keyed window whose per-page
-        // fan-out is bounded by the page's own host's rules — shuffle
-        // must track PAGES (the window), never pages × total rules.
-        val W = graft.operators.Web
-        val hostOf50k = (id: org.apache.spark.sql.Column) =>
-          concat(lit("h"), (id % 50000).cast(org.apache.spark.sql.types.StringType),
-            lit(".example-"), ((id % 50000) % 97).cast(org.apache.spark.sql.types.StringType),
-            lit(".com"))
-        val hosts = spark.range(50000).select(hostOf50k(col("id")).as("host"))
-        val rules = W.robotsRules(
-          hosts.withColumn("robots", W.robotsTxt(col("host"))), "host", "robots")
-          .localCheckpoint(true)
-        println(s"[scale-robots] rule rows=${rules.count()} over 50k hosts")
-        val pages = docs.select(col("doc_id"), hostOf50k(col("doc_id")).as("host"),
-          concat(lit("/articles/"),
-            (col("doc_id") % 100).cast(org.apache.spark.sql.types.StringType)).as("path"))
-        W.robotsDecisionsFor(pages, rules, Seq("graftbot"))
-          .agg(sum(col("allowed").cast(LongType))).head().getLong(0)
-      }
-      if (only.forall(_.contains("robots_shuffled_500k"))) locally {
-        // r16 (verdict ask #6) — the SHUFFLE-JOIN decision strategy at the
-        // scale that motivates it: 500k distinct hosts' rule tables (~6M
-        // rule rows after stacked-UA fan-out — past robotsBroadcastMaxRules,
-        // so robotsDecisionsForAuto provably dispatches to the shuffled
-        // arm) against the k× page corpus. Claims: decisions stay
-        // host-keyed (shuffle ∝ pages + rules, never pages × rules), and
-        // the strategy is OUTPUT-IDENTICAL to broadcast — checked here by
-        // count + allowed-count + row-hash checksum over both arms (the
-        // fixture-scale oracle gate is q_robots_join_parity).
-        val W = graft.operators.Web
-        val hostOf500k = (id: org.apache.spark.sql.Column) =>
-          concat(lit("h"), (id % 500000).cast(org.apache.spark.sql.types.StringType),
-            lit(".example-"), ((id % 500000) % 97).cast(org.apache.spark.sql.types.StringType),
-            lit(".com"))
-        val hosts = spark.range(500000).select(hostOf500k(col("id")).as("host"))
-        val rules = W.robotsRules(
-          hosts.withColumn("robots", W.robotsTxt(col("host"))), "host", "robots")
-          .localCheckpoint(true)
-        val nRules = rules.count()
-        println(s"[scale-robots500k] rule rows=$nRules over 500k hosts " +
-          s"(broadcastMax=${W.robotsBroadcastMaxRules} -> " +
-          s"${if (nRules >= W.robotsBroadcastMaxRules) "SHUFFLE" else "BROADCAST"})")
-        val pages = docs.select(col("doc_id"), hostOf500k(col("doc_id")).as("host"),
-          concat(lit("/articles/"),
-            (col("doc_id") % 100).cast(org.apache.spark.sql.types.StringType)).as("path"))
-        def checksum(d: org.apache.spark.sql.DataFrame): (Long, Long, Long) = {
-          // bit_xor, not sum: order-independent AND overflow-free under
-          // ANSI (sum of 4.5M xxhash64 values overflows Long)
-          val r = d.withColumn("__h", xxhash64(col("doc_id"), col("agent"),
-              col("matched_prefix"), col("matched_directive"), col("allowed")))
-            .agg(count(lit(1)), sum(col("allowed").cast(LongType)),
-              expr("bit_xor(__h)")).head()
-          (r.getLong(0), r.getLong(1), r.getLong(2))
-        }
-        var shuffled: (Long, Long, Long) = null
-        time("robots_shuffled_500k") {
-          shuffled = checksum(W.robotsDecisionsForAuto(pages, rules,
-            Seq("graftbot"), None, ruleCount = nRules))
-          shuffled._1
-        }
-        time("robots_broadcast_500k") {
-          val b = checksum(W.robotsDecisionsFor(pages, rules, Seq("graftbot")))
-          require(b == shuffled, s"strategy outputs diverge: $b vs $shuffled")
-          b._1
-        }
-      }
-      time("wet_write_gz") {
-        // r16 — the WRITE side of the container loop at replication: curated
-        // text → WET conversion records → member-per-record gzip →
-        // multi-member decode → parse. Same law as the read side
-        // (warc_gz_roundtrip): wall ∝ bytes through the codec, ZERO shuffle
-        // — landing curated text in the Common Crawl layout rides the
-        // curation scan.
-        val W = graft.operators.Web
-        val w = W.withWarc(W.withHtml(W.withUrls(docs)))
-        val recs = W.warcRecords(w.select(col("doc_id"), col("warc")), "warc")
-          .filter(col("rec_type") === "response" && col("http_status") === 200)
-        val curated = recs.select(col("doc_id"), col("target_uri").as("url"),
-          col("warc_date"), W.htmlToText(col("payload")).as("text"))
-        val wet = W.toWet(curated, "doc_id", "url", "warc_date", "text")
-        val gz = W.gzipWarcRecords(wet.select(col("doc_id"), col("wet")),
-          "doc_id", "wet")
-        W.warcRecords(W.gunzipWarc(gz, "doc_id", "warc_gz"), "warc")
-          .agg(count(lit(1)), sum(col("block_octets"))).head().getLong(0)
-      }
-      time("http_dechunk") {
-        // r16 — chunked-transfer decode at replication: three-chunk bodies
-        // + the 1-in-13 malformed arm. Narrow byte-walk: wall ∝ bytes,
-        // zero shuffle, quarantine count exactly corpus/13.
-        val W = graft.operators.Web
-        val w = W.withChunkedHttp(W.withHtml(W.withUrls(docs)))
-        val d = W.dechunk(w.select(col("doc_id"), col("chunked")), "doc_id", "chunked")
-        val r = d.agg(sum(col("ok").cast(LongType)),
-          count(lit(1)), sum(length(col("decoded")))).head()
-        println(s"[scale-dechunk] ok=${r.getLong(0)} of ${r.getLong(1)}")
-        r.getLong(0)
-      }
-      time("redirect_chains") {
-        // r16 — bounded-iteration chain resolution at replication: the 301
-        // arm contributes edges ∝ docs/11, but CANONICAL endpoints fold
-        // replicas (the +i·10⁶ id offsets preserve (c, v, host)), so the
-        // functional edge set is replication-INVARIANT — extraction scans
-        // ∝ k while the 5 hop joins run over the folded set. Law: wall
-        // tracks the scan, shuffle tracks edges (the functional agg), and
-        // nothing is corpus².
-        val W = graft.operators.Web
-        val w = W.withWarc(W.withHtml(W.withUrls(docs)))
-        val recs = W.warcRecords(w.select(col("doc_id"), col("warc")), "warc")
-        val edges = recs.filter(col("http_status") === 301 &&
-            col("http_location").isNotNull)
-          .select(W.urlCanonOf(col("target_uri")).as("src"),
-            W.urlCanonOf(col("http_location")).as("dst"))
-        val r = W.resolveRedirectChains(edges, 5)
-          .groupBy("status").agg(count(lit(1)).as("n"))
-          .collect().map(x => s"${x.getString(0)}=${x.getLong(1)}").sorted
-        println(s"[scale-redirects] ${r.mkString(" ")}")
-        r.length.toLong
-      }
-      if (only.forall(s => s.contains("frontier_bloom") ||
-          s.contains("frontier_exact") || s.contains("frontier_bloom_sketch"))) locally {
-        // r16 (verdict ask #5) — bloom-guarded frontier novelty at ledger
-        // scale: a k×100k-URL crawled ledger vs a k×50k-URL sitemap wave
-        // that is 90% novel (the production shape — most of a sitemap wave
-        // is new). The unguarded anti-join moves BOTH sides into the
-        // exchange; the guarded path resolves the novel 90% at scan speed
-        // against the broadcast bit set and sends only the ~10% suspects
-        // (plus the fp rate's worth of noise) into the exact join. Novel
-        // counts must agree exactly — fp's cost is wasted work, never a
-        // wrong answer.
-        val W = graft.operators.Web
-        val ledger = spark.range(k * 100000L).select(
-          concat(lit("h"), (col("id") % 50000).cast(org.apache.spark.sql.types.StringType),
-            lit("|/p/"), col("id").cast(org.apache.spark.sql.types.StringType)).as("key"))
-          .localCheckpoint(true)
-        // 10% of candidates hit the ledger (id kept), 90% step past it
-        val cands = spark.range(k * 50000L).select(
-          when(col("id") % 10 === 0, col("id"))
-            .otherwise(col("id") + lit(k * 100000L)).as("cid"))
-          .select(concat(lit("h"), (col("cid") % 50000).cast(org.apache.spark.sql.types.StringType),
-            lit("|/p/"), col("cid").cast(org.apache.spark.sql.types.StringType)).as("key"))
-          .localCheckpoint(true)
-        var exactNovel = -1L
-        time("frontier_exact") {
-          exactNovel = cands.join(ledger, Seq("key"), "left_anti").count()
-          exactNovel
-        }
-        // the bits frame is the amortized per-wave artifact — built (and
-        // billed) once, outside the probed wave
-        val mBits = 1 << 24
-        val bits = W.bloomBits(ledger, "key", mBits, 3).localCheckpoint(true)
-        println(s"[scale-bloom] bits rows=${bits.count()} of $mBits")
-        time("frontier_bloom") {
-          val g = W.bloomNoveltyWith(cands, "key", ledger, "key", bits,
-            m = mBits, k = 3)
-          val r = g.agg(sum(col("is_new").cast(LongType)),
-            sum((col("bloom_pass") && col("is_new")).cast(LongType)),
-            count(lit(1))).head()
-          println(f"[scale-bloom] novel=${r.getLong(0)} fp=${r.getLong(1)} " +
-            f"cands=${r.getLong(2)} (exact novel=$exactNovel)")
-          require(r.getLong(0) == exactNovel,
-            s"guarded novelty ${r.getLong(0)} != exact $exactNovel")
-          r.getLong(0)
-        }
-        // the sketch too is a per-ledger-update artifact: built (and
-        // billed) outside the probed wave, like `bits` above
-        val sketch = W.bloomSketchOf(ledger, "key", k * 100000L, 0.01)
-        println(s"[scale-bloom-sketch] filter bits=${sketch.bitSize()} " +
-          f"(~${sketch.bitSize() / 8 / 1048576.0}%.1f MiB vs the row-set's " +
-          f"${6966510L * 8 / 1048576.0}%.1f MiB)")
-        time("frontier_bloom_sketch") {
-          // the BITSET scale path: treeAggregate'd BloomFilter (1 bit per
-          // position — megabytes where the row-set form is gigabytes)
-          // probed by the codegen'd expression; same guarantees, same
-          // exact-novel answer, suspect-bounded exchange only
-          val g = W.bloomNoveltySketchWith(cands, "key", ledger, "key", sketch)
-          val r = g.agg(sum(col("is_new").cast(LongType)),
-            sum((col("bloom_pass") && col("is_new")).cast(LongType)),
-            count(lit(1))).head()
-          println(f"[scale-bloom-sketch] novel=${r.getLong(0)} fp=${r.getLong(1)} " +
-            f"cands=${r.getLong(2)} (exact novel=$exactNovel)")
-          require(r.getLong(0) == exactNovel,
-            s"sketch novelty ${r.getLong(0)} != exact $exactNovel")
-          r.getLong(0)
-        }
-      }
-      // gated on the allowlist BEFORE the landing (r15 review: the
-      // global-sort ntile + 8 coalesced parquet writes ran even when
-      // neither stream-minhash probe was selected, taxing unrelated
-      // GRAFT_PROBE_ONLY deep-k runs with minutes of landing I/O)
-      if (only.forall(s => s.contains("stream_minhash_direct") ||
-          s.contains("stream_minhash_composed"))) locally {
-        // r15 (verdict ask #6) — streaming DEDUP-FIRST composition vs the
-        // direct band probe under REPLICATED ARRIVALS: the k×-replicated
-        // corpus lands as 8 id-ordered tiers and drains through both
-        // operators. The direct form bands every arriving replica and
-        // enumerates replica pairs physically per batch (candidates ∝
-        // arrival replication²); the composed form folds replicas into
-        // cluster weights via the per-batch content-key anti-join and bands
-        // only novel contents — per-batch work must track DISTINCT novel
-        // content, not arrivals. Logical output (Σ n_pairs vs physical pair
-        // count) must agree — the batch composition's invariant, streamed.
-        import org.apache.spark.sql.expressions.Window
-        val landDir = new java.io.File(SessionCache.registerTmpIndexDir(
-          new java.io.File(sys.props("java.io.tmpdir"),
-            s"graft_scale_streammhdd_${ProcessHandle.current().pid()}").toString))
-        val tiered = docs.withColumn("__tier",
-          ntile(8).over(Window.orderBy(col("doc_id"))))
-        graft.streaming.Streaming.landOrdered(landDir,
-          (1 to 8).map(t => tiered.filter(col("__tier") === t).select("doc_id", "text")))
-        var directPairs = -1L // -1 = direct probe not selected this run
-        time("stream_minhash_direct") {
-          // empty base index: the stream IS the corpus (day-0 ingest
-          // shape); schemas come from Streaming's own constructors so the
-          // probe can't drift from the operator's index layout (r15 review)
-          directPairs = graft.streaming.Streaming.incrementalLshApply(
-            docs.sparkSession, landDir.toString, "*.parquet", lit(true),
-            graft.streaming.Streaming.emptyBandIndex(docs.sparkSession),
-            graft.streaming.Streaming.emptyShingleSetIndex(docs.sparkSession),
-            "text", "doc_id",
-            shingleN = 5, k = 64, bands = 32, threshold = 0.5).count()
-          directPairs
-        }
-        time("stream_minhash_composed") {
-          val logical = graft.streaming.Streaming.incrementalLshDedupedApply(
-              docs.sparkSession, landDir.toString, "text", "doc_id",
-              shingleN = 5, k = 64, bands = 32, threshold = 0.5)
-            .agg(coalesce(sum(col("n_pairs")), lit(0L))).head().getLong(0)
-          if (directPairs >= 0)
-            println(s"[scale-stream-mhdd] direct physical pairs=$directPairs " +
-              s"composed logical pairs=$logical " +
-              s"(must be equal — the composition invariant under streaming)")
-          else
-            println(s"[scale-stream-mhdd] composed logical pairs=$logical " +
-              s"(direct arm not selected — no equality check this run)")
-          logical
-        }
-      }
-      time("stream_dedup_state") {
-        // r14 (verdict ask #6) — STREAMING-STATE probe: the batch decades
-        // measure dataflow; this measures the state-store law of the
-        // stateful streaming family instead of asserting it from watermark
-        // bounds. dedupStream (dropDuplicatesWithinWatermark, 8-byte hash
-        // keys) drains a k× duplicate-heavy event log (k byte-identical
-        // copies of every event — SAME dedup key) landed as 8 event-time-
-        // ordered files, one file per micro-batch. The law that makes
-        // streaming dedup viable on an unbounded feed, now measured per
-        // batch: INPUT rows are k×, STATE rows track distinct in-watermark
-        // keys (k-invariant — the k copies are one key; old keys evict as
-        // the watermark passes), and batch wall follows batch input, not
-        // accumulated history.
-        import org.apache.spark.sql.streaming.Trigger
-        val ev = normalizeTs(spark.read.parquet(s"$sfDir/events.parquet"))
-          .select(xxhash64(col("event_id")).as("key"), col("ts"))
-        val dup = (0 until k).map(_ => ev).reduce(_ unionAll _)
-        val tiered = dup.withColumn("__tier",
-          ntile(8).over(org.apache.spark.sql.expressions.Window.orderBy(col("ts"), col("key"))))
-        // landing + checkpoint dirs registered with the JVM-exit cleanup
-        // hook (r15 advisor: the pid suffix that isolates concurrent runs
-        // guaranteed each run LEAKED its parquet tiers + state-store data
-        // in java.io.tmpdir — one probe per JVM, so end-of-JVM is
-        // end-of-probe and the lease pattern from the session indexes fits)
-        val landDir = new java.io.File(SessionCache.registerTmpIndexDir(
-          new java.io.File(sys.props("java.io.tmpdir"),
-            s"graft_scale_streamdedup_${ProcessHandle.current().pid()}").toString))
-        graft.streaming.Streaming.landOrdered(landDir,
-          (1 to 8).map(t => tiered.filter(col("__tier") === t).select("key", "ts")))
-        val ckpt = new java.io.File(SessionCache.registerTmpIndexDir(
-          new java.io.File(sys.props("java.io.tmpdir"),
-            s"graft_scale_streamdedup_ckpt_${ProcessHandle.current().pid()}").toString))
-        val sch = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("key", LongType),
-          org.apache.spark.sql.types.StructField("ts", TimestampType)))
-        val ticks = graft.streaming.Streaming.tickStream(spark, landDir.toString, sch,
-          maxFilesPerTrigger = 1)
-        val deduped = graft.streaming.Streaming.dedupStream(ticks, Seq("key"), "ts", "1 hour")
-        var out = 0L
-        val q = deduped.writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt.toString)
-          .foreachBatch((b: org.apache.spark.sql.DataFrame, _: Long) =>
-            { out += b.count(); () })
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        q.recentProgress.filter(_.numInputRows > 0).foreach { p =>
-          val st = p.stateOperators.headOption
-          println(f"[scale-stream] dedup batch=${p.batchId}%2d " +
-            f"input=${p.numInputRows}%9d state=${st.map(_.numRowsTotal).getOrElse(-1L)}%8d " +
-            f"evicted=${st.map(_.numRowsRemoved).getOrElse(-1L)}%8d " +
-            f"ms=${p.durationMs.get("triggerExecution")}%6d")
-        }
-        out
-      }
-      time("stream_sessions_state") {
-        // r14 companion to stream_dedup_state: the CUSTOM-state shape
-        // (flatMapGroupsWithState sessionization, event-time timeout)
-        // instead of the built-in dedup operator. k× re-keyed users over
-        // the same time span → k× concurrent sessions; the law under test
-        // is state = ONE fixed-size record per ACTIVE user — proportional
-        // to in-window users, never to accumulated event history — with
-        // idle users reclaimed by the watermark timeout, and batch wall
-        // following batch input.
-        import org.apache.spark.sql.streaming.Trigger
-        val evB = normalizeTs(spark.read.parquet(s"$sfDir/events.parquet"))
-          .select(col("user_id"), col("ts"), col("value"))
-        val ev = (0 until k).map(i =>
-          evB.select((col("user_id") + lit(i * 10000000L)).as("user_id"),
-            col("ts"), col("value"))).reduce(_ unionAll _)
-        val tiered = ev.withColumn("__tier",
-          ntile(8).over(org.apache.spark.sql.expressions.Window
-            .orderBy(col("ts"), col("user_id"))))
-        // same JVM-exit lease as the dedup probe's dirs (r15 advisor)
-        val landDir = new java.io.File(SessionCache.registerTmpIndexDir(
-          new java.io.File(sys.props("java.io.tmpdir"),
-            s"graft_scale_streamsess_${ProcessHandle.current().pid()}").toString))
-        graft.streaming.Streaming.landOrdered(landDir,
-          (1 to 8).map(t => tiered.filter(col("__tier") === t)
-            .select("user_id", "ts", "value")))
-        val ckpt = new java.io.File(SessionCache.registerTmpIndexDir(
-          new java.io.File(sys.props("java.io.tmpdir"),
-            s"graft_scale_streamsess_ckpt_${ProcessHandle.current().pid()}").toString))
-        val sch = org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("user_id", LongType),
-          org.apache.spark.sql.types.StructField("ts", TimestampType),
-          org.apache.spark.sql.types.StructField("value",
-            org.apache.spark.sql.types.DoubleType)))
-        val ticks = graft.streaming.Streaming.tickStream(spark, landDir.toString, sch,
-          maxFilesPerTrigger = 1)
-        val sessions = graft.streaming.Streaming.sessionizeStream(
-          ticks, "user_id", "ts", "value", gap = "30 minutes", watermark = "30 minutes")
-        var out = 0L
-        val q = sessions.toDF().writeStream.outputMode("append")
-          .option("checkpointLocation", ckpt.toString)
-          .foreachBatch((b: org.apache.spark.sql.DataFrame, _: Long) =>
-            { out += b.count(); () })
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
-        q.recentProgress.filter(_.numInputRows > 0).foreach { p =>
-          val st = p.stateOperators.headOption
-          println(f"[scale-stream] sessions batch=${p.batchId}%2d " +
-            f"input=${p.numInputRows}%9d state=${st.map(_.numRowsTotal).getOrElse(-1L)}%8d " +
-            f"evicted=${st.map(_.numRowsRemoved).getOrElse(-1L)}%8d " +
-            f"ms=${p.durationMs.get("triggerExecution")}%6d")
-        }
-        out
-      }
+      val mib = (settledBytes() - b0) / 1048576.0
+      println(f"[scale] $name%-32s $secs%8.1f s  shuffle $mib%.1f MiB")
     }
     spark.stop()
   }

@@ -99,13 +99,13 @@ object SessionCache {
   // (graft_sigidx_* / graft_postidx_* / graft_ivfidx_*): registered here and
   // deleted by ONE JVM shutdown hook, so repeated Bench/Verify JVMs on the
   // same machine don't accumulate orphaned index dirs in java.io.tmpdir
-  // (ADVICE r11; ScaleProbe already cleaned up after itself). The pid-keyed
+  // (ADVICE r11; ScaleProbe's replica dirs ride the same lease). The pid-keyed
   // names stay — two concurrent JVMs must never share a landing dir — the
   // hook just ends each pid's lease.
   private val tmpDirs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
   private lazy val cleanupHook: Unit =
     Runtime.getRuntime.addShutdownHook(new Thread(() => {
-      tmpDirs.forEach(p => deleteRecursively(new java.io.File(p)))
+      tmpDirs.forEach(p => org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(p)))
     }, "graft-tmpindex-cleanup"))
 
   /** Register a tmp index dir for deletion at JVM exit; returns the path. */
@@ -113,12 +113,5 @@ object SessionCache {
     cleanupHook
     tmpDirs.add(path)
     path
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val children = f.listFiles()
-    if (children != null) children.foreach(deleteRecursively)
-    f.delete()
-    ()
   }
 }

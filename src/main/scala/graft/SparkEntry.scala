@@ -264,7 +264,7 @@ object SparkEntry {
     val W = graft.operators.Web
     // r19: typed synthesis kernel (warc-free variant) — the html/url
     // synthesis tree no longer re-optimizes under the resolved/canon
-    // checkpoints (ScratchR19 law), and the unused WARC segment is not built
+    // checkpoints (OPTIMIZATION_r19.md), and the unused WARC segment is not built
     val h = W.synthPages(documents(s, dir))
     val links = h.select(col("doc_id"), col("url").as("page_url"),
       explode(W.extractLinks(col("html"))).as("href"))
@@ -554,31 +554,22 @@ object SparkEntry {
     *    dedup whose delay covers the data span) pays a full extra
     *    planning+state-commit round (~0.25-0.7 s here) for nothing. Queries
     *    that EMIT on timeout (sessionization) must keep it on;
-    *  - `GRAFT_STATE_PROVIDER` (env) swaps the state-store provider for A/B
-    *    runs. Measured: RocksDB is ~5-10% SLOWER than the default
-    *    HDFS-backed store on this suite — per-batch state here is a few
-    *    hundred KB, under the default store's in-memory map sweet spot;
-    *    RocksDB wins only when state outgrows executor heap.
+    *  - the default HDFS-backed state store: RocksDB measured ~5-10% SLOWER
+    *    on this suite (BASELINE.md) — per-batch state here is a few hundred
+    *    KB, under the default store's in-memory map sweet spot; RocksDB wins
+    *    only when state outgrows executor heap.
     */
   private def withStreamConf[T](s: SparkSession, noDataBatch: Boolean = true)(body: => T): T = {
     val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
     val prevNoData = s.conf.get("spark.sql.streaming.noDataMicroBatches.enabled")
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = s.conf.getOption(providerKey)
-    // default 4; GRAFT_STREAM_SHUFFLE overrides for A/B runs (state-store
-    // count is pinned at plan time — fewer stores = fewer per-batch commits,
-    // but also less parallelism; 4 measured best on this suite, see BASELINE)
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("GRAFT_STREAM_SHUFFLE", "4"))
+    // state-store count is pinned at plan time — fewer stores = fewer
+    // per-batch commits, but also less parallelism; of {1, 2, 4, 8}, 1 is
+    // clearly slower and the rest sit within noise (BASELINE.md)
+    s.conf.set("spark.sql.shuffle.partitions", "4")
     s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", noDataBatch.toString)
-    sys.env.get("GRAFT_STATE_PROVIDER").foreach(v => s.conf.set(providerKey, v))
     try body finally {
       s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
       s.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", prevNoData)
-      prevProvider match {
-        case Some(v) => s.conf.set(providerKey, v)
-        case None => s.conf.unset(providerKey)
-      }
     }
   }
 
@@ -814,16 +805,13 @@ object SparkEntry {
   private val bpeBatchScans = 8
   private val bpeBatchM = 8
 
-  /** The batched-trainer CORE, shared by the gated query and ScaleProbe's
-    * deep probe (r14 self-review: a selection-rule fix must reach both -
-    * the probe must measure the algorithm the gate proves). `corpus` needs
-    * a `text` column; returns (scan, pick, gram, count) in selection order;
-    * `onScan` fires after each scan with the cumulative pick count (probe
-    * progress bands).
+  /** The batched-trainer core behind the gated query; a scale run measures
+    * it through that query (`ScaleProbe <k> <sfDir> q_bpe_train_batched`).
+    * `corpus` needs a `text` column; returns (scan, pick, gram, count) in
+    * selection order.
     */
-  def bpeBatchedTrain(corpus: DataFrame, scans: Int, m: Int,
-      partitions: Int = 4,
-      onScan: (Int, Long) => Unit = (_, _) => ()): Seq[(Long, Long, String, Long)] = {
+  private def bpeBatchedTrain(corpus: DataFrame, scans: Int, m: Int,
+      partitions: Int = 4): Seq[(Long, Long, String, Long)] = {
     var cur = corpus.select(
       concat(lit("  "),
         array_join(array_remove(split(lower(col("text")), "\\s+"), ""), "  "),
@@ -866,7 +854,6 @@ object SparkEntry {
         }
         cur = cur.select(applied.as("t")).localCheckpoint(false)
       }
-      onScan(sc, picks.length.toLong)
     }
     picks.toSeq
   }
@@ -2666,7 +2653,7 @@ object SparkEntry {
     // covariance-free PCA: top principal direction by 3 power iterations
     // (centering + projections + decimal accumulations, Similarity doc).
     // r14 closed the perf-weak carryover by MEASUREMENT, not swap: the
-    // Gram-fused alternative (pcaTopComponentGram) was implemented and
+    // Gram-fused alternative (SimilaritySpec's pcaTopComponentGram) was implemented and
     // A/B'd at bench scale — 12.1 s vs 1.4 s — because the cross-engine
     // exactness discipline prices every scalar at a double→decimal cast
     // and Gram casts n·d² of them vs n·d·iterations here (PLANS.md
@@ -4712,10 +4699,10 @@ object SparkEntry {
     // column — column-pruned scans, each partial-aggregable — unioned into
     // the stats table. ndv here is the EXACT distinct (the corpus is small
     // and the gate wants a hashable number); the production path at 100 TB is
-    // the KMV sketch (`Sketches.kmvEstimate`, gated by q_kmv_distinct), which
-    // bounds the shuffle at k longs per column. Numeric min/max surface as
-    // DOUBLE, string min/max as VARCHAR — never string-formatted doubles
-    // (engine formatting differs).
+    // the KMV sketch (`Sketches.kmvDistinct` without its exact self-check
+    // column, gated by q_kmv_distinct), which bounds the shuffle at k longs
+    // per column. Numeric min/max surface as DOUBLE, string min/max as
+    // VARCHAR — never string-formatted doubles (engine formatting differs).
     "q_analyze_table" -> ((s, dir) => {
       val o = orders(s, dir)
       def statsOf(c: String, numeric: Boolean): DataFrame = {

@@ -540,11 +540,6 @@ object Dedup {
   def simhash(text: Column, shingleN: Int = 2): Column =
     G.simhash64(tokens(text), shingleN)
 
-  /** (id, fingerprint LONG) per document — a pure narrow projection. */
-  def simhashFingerprints(df: DataFrame, textCol: String, idCol: String,
-      outCol: String, shingleN: Int): DataFrame =
-    df.select(col(idCol).as("id"), simhash(col(textCol), shingleN).as(outCol))
-
   /** SimHash attached to the full input frame — narrow `withColumn`, the
     * payload never moves.
     */
@@ -660,7 +655,7 @@ object Dedup {
     * REPLICAS: under heavy exact replication every shingle crosses the cap,
     * classifies as boilerplate, and the posting join reports (near) zero
     * pairs — the same failure shape the 100× probes exposed for winnowing.
-    * (The ScaleProbe workaround of scaling the cap with k is a knob, not
+    * (The scale probes' workaround of scaling the cap with k is a knob, not
     * semantics — production replication factors are unknown per shingle.)
     *
     * Composed: (1) cluster byte-identical texts (128-bit content key, min-id

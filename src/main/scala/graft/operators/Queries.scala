@@ -773,7 +773,7 @@ object Queries {
     * pair agg vs basket agg + pair agg), but all three stages stay in
     * whole-stage codegen where the array variant's `collect_set` runs as a
     * non-codegen ObjectHashAggregate. Which wins is a measured question —
-    * see the copurchase A/B in ScaleProbe / BASELINE — and the answer flips
+    * see the copurchase A/B in SCALE.md / BASELINE — and the answer flips
     * with basket-size distribution: the join's per-basket fan-out is the
     * same C(size,2), but its shuffle carries every wedge row while the array
     * variant's carries one row per basket.

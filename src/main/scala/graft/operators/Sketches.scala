@@ -82,26 +82,6 @@ object Sketches {
       .drop("__sk")
   }
 
-  /** Sketch-ONLY KMV rollup — [[kmvDistinct]] without the exact
-    * `countDistinct` self-check column. This is the production shape: the
-    * exact column's distinct-aggregate shuffle grows with TRUE cardinality,
-    * while this plan's shuffle is bounded at (#groups × k) longs regardless
-    * of input size — the KMV state contract in isolation, which is what
-    * ScaleProbe's `kmv_sketch_only` times.
-    */
-  def kmvEstimate(df: DataFrame, groupCols: Seq[String], valueCol: String,
-      k: Int = 256): DataFrame = {
-    val bottomK = udaf(new BottomKAgg(k), org.apache.spark.sql.Encoders.scalaLong)
-    df.select(groupCols.map(col) :+ h60(col(valueCol)).as("__h"): _*)
-      .groupBy(groupCols.map(col): _*)
-      .agg(bottomK(col("__h")).as("__sk"))
-      .withColumn("est_distinct",
-        when(size(col("__sk")) < k, size(col("__sk")).cast(DoubleType))
-          .otherwise(lit((k - 1).toDouble) * lit(TwoPow60) /
-            element_at(col("__sk"), k).cast(DoubleType)))
-      .drop("__sk")
-  }
-
   // ---------------------------------------------------------------------------
   // Count-min sketch (frequency estimation)
   // ---------------------------------------------------------------------------

@@ -826,7 +826,7 @@ object Web {
     * redirect targets), and `octet_length(block)` duplicates each record's
     * whole block subtree — several thousand expression nodes that Catalyst
     * re-analyzes on every query build and re-OPTIMIZES under every
-    * `localCheckpoint` (ScratchR19: checkpointing the parse over the
+    * `localCheckpoint` (OPTIMIZATION_r19.md: checkpointing the parse over the
     * declarative synthesis costs 0.555 s/build vs 0.124 s over a landed
     * frame; the plain toRdd of the synthesis projection alone is 0.28 s).
     * Fourteen crawl-family queries pay that per invocation. The typed walk
@@ -1670,23 +1670,14 @@ object Web {
     "" // unreachable
   }
 
-  /** Member slices for `.warc.gz` serialization: the segment cut at TRUE
-    * (length-framed) record boundaries, concatenation-exact — any junk
-    * prefix before the first record rides as its own slice, a segment with
-    * no records at all is one slice. Replaces the r15 marker split, which
-    * would cut a member INSIDE a payload that quotes the marker bytes.
-    */
-  private[graft] def warcMemberSlices(seg: String): Seq[String] = {
-    val bytes = seg.getBytes("UTF-8")
-    warcMemberBounds(bytes).map { case (a, b) =>
-      new String(bytes, a, b - a, "UTF-8")
-    }
-  }
-
-  /** [[warcMemberSlices]] as byte bounds (r19 optimization): the gzip
-    * writers compress straight from the segment's UTF-8 octets, skipping
-    * the per-member String decode + re-encode round trip the String form
-    * pays (two full passes over every member's bytes).
+  /** Member byte bounds for `.warc.gz` serialization: the segment's UTF-8
+    * octets cut at TRUE (length-framed) record boundaries,
+    * concatenation-exact — any junk prefix before the first record rides as
+    * its own member, a segment with no records at all is one member.
+    * Replaces the r15 marker split, which would cut a member INSIDE a
+    * payload that quotes the marker bytes. Bounds, not String slices (r19
+    * optimization): the gzip writers compress straight from the octets,
+    * skipping a per-member String decode + re-encode round trip.
     */
   private[graft] def warcMemberBounds(bytes: Array[Byte]): Seq[(Int, Int)] = {
     val starts = warcCutsB(bytes).map(_.start)
@@ -1745,7 +1736,7 @@ object Web {
     * gzips as its OWN member and members concatenate, the Common Crawl
     * layout (member-per-record is what makes range reads into a petabyte
     * dump possible). Member boundaries come from the LENGTH-FRAMED walk
-    * ([[warcMemberSlices]]), so a payload quoting the marker bytes still
+    * ([[warcMemberBounds]]), so a payload quoting the marker bytes still
     * serializes as one member. Corruption arms: a segment carrying no
     * record (the `corrupt-member:` fixture docs) emits a single member
     * with a FLIPPED gzip magic (undecodable from byte 0); `doc_id % 89 ==
@@ -2873,7 +2864,7 @@ object Web {
     * candidate row against the (reused) bits broadcast, zero shuffle on
     * the candidate side (the first formulation's explode + groupBy +
     * join-back shuffled the full candidate set three times and measured
-    * SLOWER than the unguarded join — ScaleProbe r16). At crawl scale
+    * SLOWER than the unguarded join — SCALE.md r16). At crawl scale
     * (~10¹¹ ledger URLs) the row-set bits frame gives way to a real
     * bitset sketch with the same hash family; this form keeps the flag —
     * and therefore the false-positive count — oracle-checkable, and the

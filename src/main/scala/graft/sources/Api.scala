@@ -227,13 +227,7 @@ final class Api(spark: SparkSession, lake: Lake, ingest: Ingest,
       ex.getResponseHeaders.add("Content-Disposition", s"attachment; filename=$name.csv")
       respondRaw(ex, 200, "text/csv",
         new String(java.nio.file.Files.readAllBytes(part.toPath), StandardCharsets.UTF_8))
-    } finally {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(tmp)
-      try walk.iterator().asScala.toSeq.reverse.foreach(p =>
-        java.nio.file.Files.deleteIfExists(p))
-      finally walk.close()
-    }
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
   }
 
   // --- DELETE /datasets/{name} (routes.py:261-267) -------------------------

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery, Trigger}
@@ -303,12 +304,8 @@ object Streaming {
     */
   def landOrdered(dir: java.io.File, tiers: Seq[DataFrame]): Unit = {
     import java.nio.file.{Files, StandardCopyOption}
-    if (dir.isDirectory) { // stale landings from a prior session must not replay
-      val walk = Files.walk(dir.toPath)
-      val paths = try { import scala.jdk.CollectionConverters._
-        walk.iterator().asScala.toSeq.reverse } finally walk.close()
-      paths.foreach(p => Files.deleteIfExists(p))
-    }
+    // stale landings from a prior session must not replay: a failed delete throws
+    FileUtils.deleteDirectory(dir)
     dir.mkdirs()
     tiers.zipWithIndex.foreach { case (df, i) =>
       val staging = Files.createTempDirectory("graft_land")
@@ -320,21 +317,10 @@ object Streaming {
       Files.move(part.toPath, dest, StandardCopyOption.REPLACE_EXISTING)
       Files.setLastModifiedTime(dest,
         java.nio.file.attribute.FileTime.fromMillis(1000000000L + i * 60000L))
-      staging.toFile.listFiles().foreach(f => Files.deleteIfExists(f.toPath))
-      Files.deleteIfExists(staging)
+      FileUtils.deleteDirectory(staging.toFile)
     }
   }
 
-  /** Streaming CDC materialization: replay a changelog file stream one file
-    * per micro-batch, folding each batch into the snapshot with
-    * [[graft.operators.Changelog.merge]] and materializing the merged result
-    * (`localCheckpoint` stands in for the per-batch table rewrite a lake
-    * upsert sink performs). Returns the final snapshot.
-    *
-    * Batches must arrive in per-key seq order (see [[landOrdered]]): the
-    * snapshot keeps no seq metadata between batches, exactly like a lake
-    * table — ordering is the transport's job, as in every CDC pipeline.
-    */
   /** Streaming incremental view maintenance of the candle aggregate: replay
     * a tick file stream one file per micro-batch, folding each batch's
     * [[graft.operators.Transforms.candlePartials]] into the running partial
@@ -350,11 +336,7 @@ object Streaming {
     var state = baseState.localCheckpoint()
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(tickDir)
-    val ckptBase = java.nio.file.Paths.get(
-      if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm"))) "/dev/shm"
-      else sys.props("java.io.tmpdir"))
-    val ckpt = java.nio.file.Files.createTempDirectory(ckptBase, "graft_ckpt_ivm")
-    try {
+    withRunCkpt("graft_ckpt_ivm") { ckpt =>
       val q = stream.writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           state = graft.operators.Transforms.combineCandlePartials(
@@ -362,11 +344,11 @@ object Streaming {
             .localCheckpoint()
           ()
         }
-        .option("checkpointLocation", ckpt.toString)
+        .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
       graft.operators.Transforms.mergeCandlePartials(state)
-    } finally deleteStreamCkpt(ckpt)
+    }
   }
 
   /** Streaming ingestion dedup against a LANDED content index — the day-N
@@ -394,11 +376,7 @@ object Streaming {
           org.apache.spark.sql.types.BinaryType))))
     val stream = spark.readStream.schema(schema)
       .option("pathGlobFilter", glob).option("maxFilesPerTrigger", 1).parquet(docDir)
-    val ckptBase = java.nio.file.Paths.get(
-      if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm"))) "/dev/shm"
-      else sys.props("java.io.tmpdir"))
-    val ckpt = java.nio.file.Files.createTempDirectory(ckptBase, "graft_ckpt_incdedup")
-    try {
+    withRunCkpt("graft_ckpt_incdedup") { ckpt =>
       val q = stream.writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           val fresh = batch.filter(rowFilter)
@@ -409,11 +387,11 @@ object Streaming {
           seen = seen.unionByName(fresh).localCheckpoint()
           ()
         }
-        .option("checkpointLocation", ckpt.toString)
+        .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
       out
-    } finally deleteStreamCkpt(ckpt)
+    }
   }
 
   /** Streaming NEAR-dup detection against a landed LSH band index — the
@@ -441,10 +419,6 @@ object Streaming {
         org.apache.spark.sql.types.StructField("jaccard", org.apache.spark.sql.types.DoubleType))))
     val stream = spark.readStream.schema(schema)
       .option("pathGlobFilter", glob).option("maxFilesPerTrigger", 1).parquet(docDir)
-    val ckptBase = java.nio.file.Paths.get(
-      if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm"))) "/dev/shm"
-      else sys.props("java.io.tmpdir"))
-    val ckpt = java.nio.file.Files.createTempDirectory(ckptBase, "graft_ckpt_inclsh")
     // batchId idempotence (ADVICE r11): Structured Streaming re-runs a
     // micro-batch after a transient failure with the SAME batchId; this
     // accumulator is NOT naturally idempotent (the exact-dedup sibling is) —
@@ -452,7 +426,7 @@ object Streaming {
     // so re-mining would re-emit the batch's pairs into `out` as duplicates.
     // Skip batchIds already folded in, the standard foreachBatch contract.
     var lastBatchId = -1L
-    try {
+    withRunCkpt("graft_ckpt_inclsh") { ckpt =>
       val q = stream.writeStream
         .foreachBatch { (batch0: DataFrame, batchId: Long) =>
           if (batchId > lastBatchId) {
@@ -474,12 +448,37 @@ object Streaming {
           }
           ()
         }
-        .option("checkpointLocation", ckpt.toString)
+        .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
       out
-    } finally deleteStreamCkpt(ckpt)
+    }
   }
+
+  private def emptyDf(spark: SparkSession,
+      fields: (String, org.apache.spark.sql.types.DataType)*): DataFrame =
+    spark.createDataFrame(
+      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      org.apache.spark.sql.types.StructType(fields.map { case (n, t) =>
+        org.apache.spark.sql.types.StructField(n, t) }))
+
+  /** Empty band index in [[incrementalLshApply]]'s expected schema — the
+    * day-0 bootstrap input (the stream IS the corpus). The schema lives
+    * HERE so call sites (first-run pipelines) can't drift from the
+    * operator's union when the index layout changes.
+    */
+  def emptyBandIndex(spark: SparkSession): DataFrame =
+    emptyDf(spark, "id" -> org.apache.spark.sql.types.LongType,
+      "band" -> org.apache.spark.sql.types.IntegerType,
+      "bucket" -> org.apache.spark.sql.types.IntegerType)
+
+  /** Empty shingle-set index matching [[incrementalLshApply]] — see
+    * [[emptyBandIndex]].
+    */
+  def emptyShingleSetIndex(spark: SparkSession): DataFrame =
+    emptyDf(spark, "id" -> org.apache.spark.sql.types.LongType,
+      "sh" -> org.apache.spark.sql.types.ArrayType(
+        org.apache.spark.sql.types.LongType, containsNull = false))
 
   /** Streaming twin of the DEDUP-FIRST composition (r15, verdict ask #6):
     * [[incrementalLshApply]] probes every arriving doc against the band
@@ -509,31 +508,6 @@ object Streaming {
     * batch composition's law, now holding per micro-batch on an unbounded
     * feed.
     */
-  private def emptyDf(spark: SparkSession,
-      fields: (String, org.apache.spark.sql.types.DataType)*): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(fields.map { case (n, t) =>
-        org.apache.spark.sql.types.StructField(n, t) }))
-
-  /** Empty band index in [[incrementalLshApply]]'s expected schema — the
-    * day-0 bootstrap input (the stream IS the corpus). The schema lives
-    * HERE so call sites (probes, first-run pipelines) can't drift from the
-    * operator's union when the index layout changes.
-    */
-  def emptyBandIndex(spark: SparkSession): DataFrame =
-    emptyDf(spark, "id" -> org.apache.spark.sql.types.LongType,
-      "band" -> org.apache.spark.sql.types.IntegerType,
-      "bucket" -> org.apache.spark.sql.types.IntegerType)
-
-  /** Empty shingle-set index matching [[incrementalLshApply]] — see
-    * [[emptyBandIndex]].
-    */
-  def emptyShingleSetIndex(spark: SparkSession): DataFrame =
-    emptyDf(spark, "id" -> org.apache.spark.sql.types.LongType,
-      "sh" -> org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.LongType, containsNull = false))
-
   def incrementalLshDedupedApply(spark: SparkSession, docDir: String,
       textCol: String, idCol: String,
       shingleN: Int, k: Int, bands: Int, threshold: Double): DataFrame = {
@@ -546,12 +520,8 @@ object Streaming {
     var pairs = emptyDf(spark, "id_a" -> LongType, "id_b" -> LongType, "jaccard" -> DoubleType)
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(docDir)
-    val ckptBase = java.nio.file.Paths.get(
-      if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm"))) "/dev/shm"
-      else sys.props("java.io.tmpdir"))
-    val ckpt = java.nio.file.Files.createTempDirectory(ckptBase, "graft_ckpt_inclshdd")
     var lastBatchId = -1L
-    try {
+    withRunCkpt("graft_ckpt_inclshdd") { ckpt =>
       val q = stream.writeStream
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           if (batchId > lastBatchId) {
@@ -602,50 +572,64 @@ object Streaming {
           }
           ()
         }
-        .option("checkpointLocation", ckpt.toString)
+        .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
       // weight expansion — the SHARED step 3 of the composition (one law
       // for batch and stream) over the final streamed state
       Dedup.expandMinhashWeights(pairs, contentIdx.select("kid", "csz"), threshold)
-    } finally deleteStreamCkpt(ckpt)
+    }
   }
 
-  /** Recursively delete a streaming checkpoint dir (shared by the
-    * incremental-apply family's cleanup paths).
+  /** Checkpoint lifecycle of the AvailableNow drains: run `body` with a
+    * fresh per-run checkpoint dir (offset reuse would mark the source as
+    * already processed), then delete it. The dir sits on tmpfs when the host
+    * has one: a checkpoint is many small fsync'd files (offset log, commit
+    * log, state deltas), and on a disk-backed /tmp those fsyncs are the
+    * dominant fixed cost of a small AvailableNow run. Harness-only choice —
+    * a production stream needs its checkpoint durable (see [[toLake]], which
+    * takes an explicit checkpointDir).
+    *
+    * Cleanup is best-effort: the state-store maintenance thread can still be
+    * writing into the checkpoint as the query winds down, so deletion must
+    * never throw over a successful result (or mask the real failure).
     */
-  private def deleteStreamCkpt(ckpt: java.nio.file.Path): Unit = {
-    try {
-      import scala.jdk.CollectionConverters._
-      val walk = java.nio.file.Files.walk(ckpt)
-      val paths = try walk.iterator().asScala.toSeq.reverse finally walk.close()
-      paths.foreach(p =>
-        try java.nio.file.Files.deleteIfExists(p) catch { case _: java.io.IOException => () })
-    } catch { case _: java.io.IOException => () }
+  private def withRunCkpt[T](prefix: String)(body: String => T): T = {
+    import java.nio.file.{Files, Paths}
+    val shm = Paths.get("/dev/shm")
+    val base = if (Files.isDirectory(shm)) shm else Paths.get(sys.props("java.io.tmpdir"))
+    val ckpt = Files.createTempDirectory(base, prefix).toFile
+    try body(ckpt.toString) finally FileUtils.deleteQuietly(ckpt)
   }
 
+  /** Streaming CDC materialization: replay a changelog file stream one file
+    * per micro-batch, folding each batch into the snapshot with
+    * [[graft.operators.Changelog.merge]] and materializing the merged result
+    * (`localCheckpoint` stands in for the per-batch table rewrite a lake
+    * upsert sink performs). Returns the final snapshot.
+    *
+    * Batches must arrive in per-key seq order (see [[landOrdered]]): the
+    * snapshot keeps no seq metadata between batches, exactly like a lake
+    * table — ordering is the transport's job, as in every CDC pipeline.
+    */
   def cdcApply(spark: SparkSession, changeDir: String, base: DataFrame,
       keyCol: String): DataFrame = {
     val schema = spark.read.parquet(changeDir).schema
     var snapshot = base.localCheckpoint()
     val stream = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", 1).parquet(changeDir)
-    val ckptBase = java.nio.file.Paths.get(
-      if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm"))) "/dev/shm"
-      else sys.props("java.io.tmpdir"))
-    val ckpt = java.nio.file.Files.createTempDirectory(ckptBase, "graft_ckpt_cdc")
-    try {
+    withRunCkpt("graft_ckpt_cdc") { ckpt =>
       val q = stream.writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           snapshot = graft.operators.Changelog.merge(snapshot, batch, keyCol)
             .localCheckpoint()
           ()
         }
-        .option("checkpointLocation", ckpt.toString)
+        .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
       snapshot
-    } finally deleteStreamCkpt(ckpt)
+    }
   }
 
   /** Run a stream to a named in-memory sink and return the materialized result
@@ -654,31 +638,12 @@ object Streaming {
     */
   def runToMemory(spark: SparkSession, df: DataFrame, name: String, mode: OutputMode = OutputMode.Complete()): DataFrame = {
     spark.catalog.dropTempView(name) // re-runnable in a shared session (bench warmup)
-    // Fresh checkpoint per run (offset reuse would mark the source as already
-    // processed and leave the re-created memory sink empty), on tmpfs when the
-    // host has one: the checkpoint is many small fsync'd files (offset log,
-    // commit log, state deltas) and on a disk-backed /tmp those fsyncs are the
-    // dominant fixed cost of a small AvailableNow run. Harness-only choice —
-    // a production stream needs its checkpoint durable (see [[toLake]], which
-    // takes an explicit checkpointDir).
-    val ckptBase = java.nio.file.Paths.get(
-      if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm"))) "/dev/shm"
-      else sys.props("java.io.tmpdir"))
-    val ckpt = java.nio.file.Files.createTempDirectory(ckptBase, s"graft_ckpt_$name")
-    try {
+    withRunCkpt(s"graft_ckpt_$name") { ckpt =>
       val q = df.writeStream.outputMode(mode).format("memory")
-        .option("checkpointLocation", ckpt.toString)
+        .option("checkpointLocation", ckpt)
         .queryName(name).trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
-      if (sys.env.contains("GRAFT_STREAM_DEBUG"))
-        q.recentProgress.foreach(p => System.err.println(
-          s"[stream] $name batch=${p.batchId} rows=${p.numInputRows} durationMs=${p.durationMs}"))
       spark.table(name)
-    } finally {
-      // best-effort cleanup: the state-store maintenance thread can still be
-      // writing into the checkpoint as the query winds down, so deletion must
-      // never throw over a successful result (or mask the real failure)
-      deleteStreamCkpt(ckpt)
     }
   }
 }

@@ -53,7 +53,7 @@ class QueriesSpec extends SparkSpec {
     val out = rows(Queries.coPurchasePairs(df, "b", "i", k = 10))
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     out shouldBe Seq((10L, 20L, 2L), (10L, 30L, 1L), (20L, 30L, 1L))
-    // the self-join formulation is output-identical (A/B'd in ScaleProbe)
+    // the self-join formulation is output-identical (A/B'd at scale, SCALE.md)
     rows(Queries.coPurchasePairsJoin(df, "b", "i", k = 10))
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))) shouldBe out
   }

@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType, LongType}
 import graft.operators.Similarity
 
 class SimilaritySpec extends SparkSpec {
@@ -131,9 +133,91 @@ class SimilaritySpec extends SparkSpec {
     got(0) shouldBe 1.0 / math.sqrt(2.0) +- 1e-9
   }
 
+  /** [[Similarity.pcaTopComponent]] fused through one Gram pass — the
+    * unregistered alternative, kept beside its spec. Implemented for the
+    * r14 A/B that closed the perf-weak carryover, MEASURED, AND REJECTED
+    * for registration: for moderate d the d×d Gram matrix `G = Σ xc·xcᵀ`
+    * is CATALOG-scale state (d=64 → 4,096 doubles), so ONE corpus pass
+    * computes it and every power iteration after that is a driver-side
+    * matvec — zero distributed jobs per round, vs one scan per round in the
+    * covariance-free form. The iterate is mathematically
+    * `w ← normalize(G·w)`, the same fixpoint, but the ACCUMULATION
+    * GROUPING differs from the per-round form (Σ_k G_jk·w_k vs
+    * Σ_rows xc_j·(xc·w)) — each form rounds DIFFERENT per-row quantities
+    * to DECIMAL(30,6), so loadings diverge at the quantization level
+    * (~1e-8); an oracle dual for this formulation exists in git history
+    * (r14 `pcaGramSql`).
+    *
+    * The measured verdict (sf0.1 bench, PLANS.md non-optimality #4): the
+    * cross-engine exactness discipline prices every accumulated scalar at
+    * one double→DECIMAL(30,6) cast (~0.6 µs — `BigDecimal.valueOf` is a
+    * `Double.toString` on JDK 17), and this form casts n·d² of them vs the
+    * per-round form's n·d·iterations — d/its ≈ 21× more at d=64/its=3.
+    * 12.1 s vs 1.4 s end-to-end; the same agg with plain double sums runs
+    * 0.9 s, so the job-count saving is real but the decimal volume buys it
+    * back 14× over. Fewer-jobs-per-iteration only wins when the per-scan
+    * work is cheap — kept as the measured counterexample and for the
+    * d-vs-iterations regime where it would flip (its ≫ d).
+    */
+  private def pcaTopComponentGram(corpus: DataFrame, vecCol: String,
+      iterations: Int = 3): DataFrame = {
+    val dec = DecimalType(30, 6)
+    val vecs = corpus.select(col(vecCol).cast(ArrayType(DoubleType)).as("v"))
+    val muFlat = vecs.select(posexplode(col("v")).as(Seq("dim", "x")))
+      .groupBy("dim")
+      .agg((sum(col("x").cast(dec)).cast(DoubleType) /
+        count(lit(1)).cast(DoubleType)).as("m"))
+    val muArr = muFlat
+      .agg(array_sort(collect_list(struct(col("dim"), col("m"))))
+        .getField("m").as("muv"))
+    // materialize xc BEFORE the double explode: the zip_with lambda runs
+    // interpreted and CollapseProject would re-inline it into both Generate
+    // operators — re-evaluated per exploded LANE, an n·d² interpreted-lambda
+    // blowup (measured 10.9 s vs 0.9 s at sf0.1 bench scale)
+    val xc = vecs.crossJoin(broadcast(muArr))
+      .select(zip_with(col("v"), col("muv"), (a, b) => a - b).as("xc"))
+      .localCheckpoint(false)
+    val d = vecs.limit(1).select(org.apache.spark.sql.functions.size(col("v"))).head().getInt(0)
+    // the Gram pass: n·d² narrow rows → (j,k)-keyed exact-decimal partial
+    // agg → d² rows collected. One job; j,k are 0-based positions.
+    val gRows = xc
+      .select(col("xc").as("v2"), posexplode(col("xc")).as(Seq("j", "xj")))
+      .select(col("j"), col("xj"), posexplode(col("v2")).as(Seq("k", "xk")))
+      .groupBy("j", "k")
+      .agg(sum((col("xj") * col("xk")).cast(dec)).cast(DoubleType).as("g"))
+      .collect()
+    val gm = Array.ofDim[Double](d, d)
+    gRows.foreach(r => gm(r.getInt(0))(r.getInt(1)) = r.getDouble(2))
+    var wv: Array[Double] = Array.fill(d)(1.0 / math.sqrt(d.toDouble))
+    (1 to iterations).foreach { _ =>
+      // sequential-double matvec + norm: bit-equal to list_inner_product
+      // over the k-ascending Gram row / the j-ascending t vector
+      val t = Array.tabulate(d) { j =>
+        var s = 0.0; var k = 0
+        while (k < d) { s += gm(j)(k) * wv(k); k += 1 }
+        s
+      }
+      var nsq = 0.0
+      t.foreach(x => nsq += x * x)
+      val norm = math.sqrt(nsq)
+      wv = t.map(_ / norm)
+    }
+    val spark = corpus.sparkSession
+    val wFlat = spark.createDataFrame(
+      spark.sparkContext.parallelize(wv.toIndexedSeq.zipWithIndex.map { case (l, i) =>
+        org.apache.spark.sql.Row(i, l)
+      }, 1),
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("dim", org.apache.spark.sql.types.IntegerType),
+        org.apache.spark.sql.types.StructField("loading", DoubleType))))
+    muFlat.join(wFlat, Seq("dim"))
+      .select(col("dim").cast(LongType).as("dim"), col("m").as("mean"),
+        col("loading"))
+  }
+
   test("pcaTopComponentGram: same unit-axis fixpoints as the per-round form") {
     val pts = Seq((1L, Seq(0f, 0f)), (2L, Seq(4f, 0f))).toDF("vec_id", "embedding")
-    val got = rows(Similarity.pcaTopComponentGram(pts, "embedding", iterations = 3)
+    val got = rows(pcaTopComponentGram(pts, "embedding", iterations = 3)
       .orderBy("dim"))
       .map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
     got.map(_._2) shouldBe Seq(2.0, 0.0)
@@ -154,7 +238,7 @@ class SimilaritySpec extends SparkSpec {
       .toDF("vec_id", "embedding")
     val a = rows(Similarity.pcaTopComponent(pts, "embedding", iterations = 3)
       .orderBy("dim")).map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
-    val b = rows(Similarity.pcaTopComponentGram(pts, "embedding", iterations = 3)
+    val b = rows(pcaTopComponentGram(pts, "embedding", iterations = 3)
       .orderBy("dim")).map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
     a.map(_._1) shouldBe b.map(_._1)
     a.map(_._2) shouldBe b.map(_._2)
