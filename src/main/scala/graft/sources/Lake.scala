@@ -1,7 +1,10 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -41,12 +44,37 @@ final case class Lake(spark: SparkSession, root: String) {
     s"${source}_${dataType}_${date.format(DateTimeFormatter.BASIC_ISO_DATE)}.parquet"
 
   /** S1 Parquet scan (reference helpers.py:49-63): missing path → empty frame
-    * rather than an error.
+    * rather than an error. Planning the read launches no Spark job: the
+    * schema comes from one parquet footer read on the driver.
     */
   def read(layer: String, dataset: String): DataFrame = {
     val p = new Path(layerDir(layer), withExt(dataset))
-    if (fs.exists(p)) spark.read.parquet(p.toString)
+    if (fs.exists(p)) open(p)
     else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], new StructType())
+  }
+
+  /** Opens a dataset with its schema resolved on the driver. Spark's own
+    * inference for a one-file dataset is a Spark job that reads the footer of
+    * the path-sorted first data file and converts it with
+    * `ParquetFileFormat.readSchemaFromFooter` under the session conf; this
+    * reads that same footer here and runs that same conversion, so the schema
+    * (Spark's stored row schema included, when the file carries one) is the
+    * one inference would return. Names starting with `_` or `.` are skipped,
+    * as Spark's file index skips them. A directory with no data file directly
+    * under it (a partitioned layout) is left to Spark's inference.
+    */
+  private def open(p: Path): DataFrame = {
+    val dataFile = fs.listStatus(p).iterator
+      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
+      .minByOption(_.getPath.toString)
+    dataFile match {
+      case Some(st) =>
+        val footer = ParquetFileReader.readFooter(spark.sessionState.newHadoopConf(), st, SKIP_ROW_GROUPS)
+        val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(st.getPath, footer),
+          new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+        spark.read.schema(schema).parquet(p.toString)
+      case None => spark.read.parquet(p.toString)
+    }
   }
 
   /** S2 Parquet sink (reference helpers.py:31-46): one dataset = one parquet
@@ -124,24 +152,23 @@ final case class Lake(spark: SparkSession, root: String) {
     * date column + distinct symbols capped at 50 with an `'...'` sentinel,
     * plus `source`/`data_type` parsed from the underscore-delimited dataset
     * name (helpers.py:96-98; `unknown` when a token is absent).
-    * The count and min/max are satisfied from parquet metadata / a pruned
-    * single-column scan by Catalyst — the reference does both of those
-    * optimizations by hand (helpers.py:102-106, 131).
+    * The row count and the min/max come from one aggregate over a pruned
+    * single-column scan — the reference reads the count and the date column
+    * separately by hand (helpers.py:102-106, 131).
     */
   def info(layer: String, dataset: String): Map[String, Any] = {
     val df = read(layer, dataset)
     if (df.schema.isEmpty) return Map("name" -> dataset, "exists" -> false)
     val nameParts = dataset.stripSuffix(".parquet").split('_')
+    val dateCol = df.columns.find(c => Seq("timestamp", "date", "time", "datetime").contains(c.toLowerCase))
+    val r = df.agg(count(lit(1)), dateCol.toSeq.flatMap(dc => Seq(min(col(dc)), max(col(dc)))): _*).head()
     val base = Map[String, Any](
       "name" -> dataset, "exists" -> true,
       "source" -> nameParts.headOption.getOrElse("unknown"),
       "data_type" -> (if (nameParts.length > 1) nameParts(1) else "unknown"),
-      "num_rows" -> df.count(), "columns" -> df.columns.toSeq)
-    val dateCol = df.columns.find(c => Seq("timestamp", "date", "time", "datetime").contains(c.toLowerCase))
-    val dates = dateCol.map { dc =>
-      val r = df.agg(min(col(dc)).as("mn"), max(col(dc)).as("mx")).head()
-      Map("start_date" -> r.get(0), "end_date" -> r.get(1))
-    }.getOrElse(Map.empty[String, Any])
+      "num_rows" -> r.getLong(0), "columns" -> df.columns.toSeq)
+    val dates = if (dateCol.isEmpty) Map.empty[String, Any]
+      else Map("start_date" -> r.get(1), "end_date" -> r.get(2))
     val symbols = if (df.columns.contains("symbol")) {
       val syms = df.select("symbol").distinct().orderBy("symbol").limit(51)
         .collect().map(_.getString(0)).toSeq
@@ -169,7 +196,7 @@ final case class Lake(spark: SparkSession, root: String) {
     val staging = new Path(layerDir(layer),
       s".staging_${withExt(dataset)}_p${ProcessHandle.current().pid()}")
     df.coalesce(1).write.mode("overwrite").parquet(staging.toString)
-    val staged = spark.read.parquet(staging.toString)
+    val staged = open(staging)
     // eager materialization: the report is #checks rows; localCheckpoint
     // avoids both a cache-lifecycle leak and a re-scan when the caller
     // consumes the report after the staging dir is gone

@@ -159,6 +159,33 @@ class ApiSpec extends SparkSpec {
     dl.body should include("NEW,2.0")
   }
 
+  test("an existing dataset with no rows: GET /data/{layer}/{name} and /data/latest/... still answer 404") {
+    import spark.implicits._
+    lake.write(Seq.empty[(String, Double)].toDF("symbol", "price"), "bronze", "hollow_vacant_20240101")
+    val data = get("/data/bronze/hollow_vacant_20240101")
+    data.statusCode() shouldBe 404
+    json(data)("detail") shouldBe "Dataset 'hollow_vacant_20240101' not found or empty in layer 'bronze'."
+    val latest = get("/data/latest/vacant/hollow")
+    latest.statusCode() shouldBe 404
+    json(latest)("detail") shouldBe "No data found for the specified type and source."
+  }
+
+  test("a dataset GET runs one Spark job; GET /datasets/{name} runs at most 4") {
+    import spark.implicits._
+    lake.write(Seq(("AAPL", tsLit("2024-01-02"), 1.0), ("MSFT", tsLit("2024-01-03"), 2.0))
+      .toDF("symbol", "timestamp", "close"), "bronze", "jobs_count_20240101")
+    val (data, dataJobs) = withJobCount(get("/data/bronze/jobs_count_20240101"))
+    data.statusCode() shouldBe 200
+    dataJobs shouldBe 1
+    val (latest, latestJobs) = withJobCount(get("/data/latest/count/jobs"))
+    latest.statusCode() shouldBe 200
+    latestJobs shouldBe 1
+    val (info, infoJobs) = withJobCount(get("/datasets/jobs_count_20240101"))
+    info.statusCode() shouldBe 200
+    json(info)("num_rows").toString.toLong shouldBe 2L
+    infoJobs should be <= 4
+  }
+
   test("POST /transform runs the gated pipeline and lands silver (routes.py:135-144)") {
     import spark.implicits._
     lake.write(Seq((1L, tsLit("2024-01-01"), 2L, "click", 1.5, "p"),

@@ -125,6 +125,24 @@ class SourcesSpec extends SparkSpec {
     lake.info("bronze", "solo")("data_type") shouldBe "unknown"
   }
 
+  test("Lake.info: no date column gives num_rows and no date keys; an empty dataset gives 0 rows and null dates") {
+    val lake = Lake(spark, java.nio.file.Files.createTempDirectory("lake").toString)
+    lake.write(Seq(("AAPL", 1.0), ("MSFT", 2.0), ("AAPL", 3.0)).toDF("symbol", "close"),
+      "bronze", "nodate_stock_20240101")
+    val plain = lake.info("bronze", "nodate_stock_20240101")
+    plain("num_rows") shouldBe 3L
+    plain.keySet should contain noneOf ("start_date", "end_date")
+    plain("symbols") shouldBe Seq("AAPL", "MSFT")
+    lake.write(Seq.empty[(String, java.sql.Timestamp)].toDF("symbol", "timestamp"),
+      "bronze", "hollow_stock_20240101")
+    val empty = lake.info("bronze", "hollow_stock_20240101")
+    empty("exists") shouldBe true
+    empty("num_rows") shouldBe 0L
+    empty.get("start_date") shouldBe Some(null)
+    empty.get("end_date") shouldBe Some(null)
+    empty("symbols") shouldBe Seq.empty
+  }
+
   test("generateFilename follows {source}_{type}_{YYYYMMDD} (helpers.py:23-28)") {
     val lake = Lake(spark, "/tmp/x")
     lake.generateFilename("alphavantage", "stock", java.time.LocalDate.of(2024, 1, 2)) shouldBe
