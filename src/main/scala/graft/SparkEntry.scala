@@ -7360,7 +7360,7 @@ object SparkEntry {
       | FROM s ORDER BY a, b""".stripMargin.replace("\n", "")
 
   /** The [[graft.operators.Queries.ema]] oracle, generated to mirror the Spark
-    * lag-chain term for term: α = 1/2 weights are exact binary fractions
+    * fold term for term: α = 1/2 weights are exact binary fractions
     * (BigDecimal pow is exact), additions appear in the same k-order, so the
     * division's operands are bit-identical in both engines.
     */

@@ -82,6 +82,10 @@ object JsonEscapeKernel {
   /** array_join(transform(arr, l -> '"' || jsonEsc(l) || '"'), ','):
     * NULL elements are skipped without a separator (concat-of-NULL yields a
     * NULL element, which array_join skips — the exact builtin semantics).
+    *
+    * Memory: every element's bytes are kept from the sizing pass to the
+    * write pass, so peak heap is about input + output at once (near the
+    * 2 GiB guard, twice the result) — size task memory for both.
     */
   def escapeQuoteJoin(arr: ArrayData): UTF8String = {
     val n = arr.numElements()

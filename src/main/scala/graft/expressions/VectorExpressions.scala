@@ -162,6 +162,13 @@ object GraftFunctions {
     case other => throw new IllegalArgumentException(
       s"$fn: argument $pos must be a boolean literal, got $other")
   }
+  /** Plan-time double array from a constant SQL argument, e.g. `array(1.0D, 0.5D)`. */
+  private def litDoubles(e: Expression, fn: String, pos: Int): Seq[Double] = e.dataType match {
+    case ArrayType(DoubleType, false) if e.foldable =>
+      e.eval().asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData].toDoubleArray().toSeq
+    case _ => throw new IllegalArgumentException(
+      s"$fn: argument $pos must be a constant ARRAY<DOUBLE> without NULLs, got $e")
+  }
 
   val descriptors: Seq[Descriptor] = Seq(
     (new FunctionIdentifier("vector_dot"),
@@ -197,7 +204,12 @@ object GraftFunctions {
       (args: Seq[Expression]) => CharEntropy(args(0))),
     (new FunctionIdentifier("nfc_normalize"),
       new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
-      (args: Seq[Expression]) => NfcNormalize(args(0))))
+      (args: Seq[Expression]) => NfcNormalize(args(0))),
+    // `SELECT ewm_fold(collect_list(struct(x)) OVER (... ROWS BETWEEN 2 PRECEDING
+    // AND CURRENT ROW), array(1.0D, 0.5D, 0.25D))`
+    (new FunctionIdentifier("ewm_fold"),
+      new ExpressionInfo(classOf[EwmFold].getName, "ewm_fold"),
+      (args: Seq[Expression]) => EwmFold(args(0), litDoubles(args(1), "ewm_fold", 2))))
 
   /** Idempotently register the graft functions on an existing session. */
   def register(spark: SparkSession): Unit = descriptors.foreach { case (id, info, builder) =>
@@ -210,6 +222,12 @@ object GraftFunctions {
 
   def vectorMaxAbs(a: Column): Column =
     GraftColumnBridge.column(VectorMaxAbs(GraftColumnBridge.expression(a)))
+
+  /** Truncated adjusted EWM of a `collect_list(struct(x))` window frame
+    * ([[EwmFold]]); `weights(k)` weighs the k-th lag.
+    */
+  def ewmFold(frame: Column, weights: Seq[Double]): Column =
+    GraftColumnBridge.column(EwmFold(GraftColumnBridge.expression(frame), weights))
 
   // Text-hash kernels (TextHashExpressions.scala). Parameters beyond the token
   // array are plan-time constants, so these are Column-API only.

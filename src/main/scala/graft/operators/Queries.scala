@@ -5,6 +5,8 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.expressions.GraftFunctions
+
 /** The reference's declared-but-unimplemented query surface
   * (reference schema.py:73-76: `timeseries`, `correlation`, `moving_average`)
   * implemented as first-class operators, plus the relational extensions the
@@ -414,27 +416,18 @@ object Queries {
     * additions emitted in the same k-order in both engines the result is
     * bit-identical — no tolerance needed for an oracle on an inherently
     * recursive statistic. Truncation error vs the untruncated EWM is ≤2^(−terms).
+    * It is [[ewma]] with decay 1/2: iterated halving is exact, so its
+    * weights are the same doubles as `0.5^k`.
     *
-    * Scale: `terms` lags over one shared window spec → a single Window node
-    * with O(terms) state per key; one key shuffle, fully codegen'd — the
-    * linear-recurrence alternative (segmented affine scan) is not needed at
-    * this weight decay because the tail vanishes below double precision by
-    * k = 53.
+    * Scale: one `collect_list` frame of `terms` rows per row and one
+    * codegen'd [[graft.expressions.EwmFold]] over it — a single Window node
+    * and one key shuffle, O(terms) work and state per row. The weight tail
+    * vanishes below double precision by k = 53, so no segmented scan is
+    * needed.
     */
   def ema(df: DataFrame, orderCol: String, valueCol: String, terms: Int = 24,
-      partitionCols: Seq[String] = Seq.empty, outCol: String = "ema"): DataFrame = {
-    val base = Window.partitionBy(partitionCols.map(col): _*).orderBy(col(orderCol))
-    val x = col(valueCol).cast(DoubleType)
-    val lags = (0 until terms).map { k =>
-      val xk = if (k == 0) x else lag(x, k).over(base)
-      val wk = lit(math.pow(0.5, k))
-      (when(xk.isNotNull, xk * wk).otherwise(lit(0.0)),
-       when(xk.isNotNull, wk).otherwise(lit(0.0)))
-    }
-    val num = lags.map(_._1).reduceLeft(_ + _)
-    val den = lags.map(_._2).reduceLeft(_ + _)
-    df.withColumn(outCol, num / den)
-  }
+      partitionCols: Seq[String] = Seq.empty, outCol: String = "ema"): DataFrame =
+    ewma(df, orderCol, valueCol, 0.5, terms, partitionCols, outCol)
 
   /** Weight ladder for a truncated adjusted EWM with decay `w` (= 1 − α):
     * w^0, w^1, …, w^(terms−1), computed by iterated double multiplication.
@@ -446,49 +439,55 @@ object Queries {
   def ewmWeights(w: Double, terms: Int): IndexedSeq[Double] =
     (1 until terms).scanLeft(1.0)((acc, _) => acc * w).toIndexedSeq
 
+  /** Per-row EWM frame: `x` at this row and its `terms − 1` predecessors in
+    * `orderCol` order, as `struct(x)` so NULL values keep their slots.
+    */
+  private def ewmFrame(x: Column, orderCol: String, terms: Int,
+      partitionCols: Seq[String]): Column = {
+    require(terms >= 1, s"an EWM needs at least one term, got $terms")
+    collect_list(struct(x.cast(DoubleType))).over(
+      Window.partitionBy(partitionCols.map(col): _*).orderBy(col(orderCol))
+        .rowsBetween(1 - terms, 0))
+  }
+
   /** Truncated adjusted EWM with arbitrary decay:
     * `ewm_t = Σ_{k<terms} w^k·x_(t−k) / Σ_{k<terms} w^k`, missing lags (the
-    * start of a key) dropping out of numerator AND denominator — the pandas
-    * `ewm(adjust=True)` convention, same machinery as [[ema]] but with a
-    * caller-chosen α. With `terms` ≥ the series length the truncation is
-    * exact. Additions are emitted in ascending-k order; an oracle repeating
-    * that order with [[ewmWeights]] literals is bit-identical.
+    * start of a key) and NULL values dropping out of numerator AND
+    * denominator — the pandas `ewm(adjust=True)` convention, same machinery
+    * as [[ema]] but with a caller-chosen α. With `terms` ≥ the series length
+    * the truncation is exact. Additions are made in ascending-k order; an
+    * oracle repeating that order with [[ewmWeights]] literals is
+    * bit-identical. A row whose frame holds no value is NULL.
     *
-    * Scale: all lags share one window spec → a single Window node, one key
-    * shuffle, O(terms) state per key, fully codegen'd.
+    * Scale: one Window node gathers each row's `terms`-row frame, and
+    * [[graft.expressions.EwmFold]] folds it in one codegen'd loop — one key
+    * shuffle, O(terms) work and state per row, and one generated class
+    * whatever `terms` is.
     */
   def ewma(df: DataFrame, orderCol: String, valueCol: String, w: Double,
       terms: Int, partitionCols: Seq[String] = Seq.empty,
-      outCol: String = "ewma"): DataFrame = {
-    val base = Window.partitionBy(partitionCols.map(col): _*).orderBy(col(orderCol))
-    val x = col(valueCol).cast(DoubleType)
-    val ws = ewmWeights(w, terms)
-    val lags = (0 until terms).map { k =>
-      val xk = if (k == 0) x else lag(x, k).over(base)
-      val wk = lit(ws(k))
-      (when(xk.isNotNull, xk * wk).otherwise(lit(0.0)),
-       when(xk.isNotNull, wk).otherwise(lit(0.0)))
-    }
-    df.withColumn(outCol, lags.map(_._1).reduceLeft(_ + _) / lags.map(_._2).reduceLeft(_ + _))
-  }
+      outCol: String = "ewma"): DataFrame =
+    df.withColumn(outCol, GraftFunctions.ewmFold(
+      ewmFrame(col(valueCol), orderCol, terms, partitionCols), ewmWeights(w, terms)))
 
   /** MACD(fast, slow, signal): `macd = EWM_fast(x) − EWM_slow(x)`,
     * `signal = EWM_signal(macd)`, `histogram = macd − signal`, each EWM the
     * adjusted truncated form of [[ewma]] with the classic α = 2/(n+1) ⇒
     * decay w = (n−1)/(n+1).
     *
-    * Plan shape: the two price EWMs share one Window spec; the signal EWM is
-    * a second Window over the derived `macd` column — same partitioning, so
-    * Catalyst plans one exchange feeding both window nodes.
+    * Scale: two window passes over one exchange. The fast and slow EWMs
+    * fold the same price frame; the signal EWM folds a second frame over
+    * the derived `macd` column with the same partitioning and order.
     */
   def macd(df: DataFrame, orderCol: String, valueCol: String, terms: Int,
       partitionCols: Seq[String] = Seq.empty,
       fast: Int = 12, slow: Int = 26, signal: Int = 9): DataFrame = {
     def decay(n: Int): Double = (n - 1.0) / (n + 1.0)
-    val withMacd = ewma(df, orderCol, valueCol, decay(fast), terms, partitionCols, "__f")
-    val both = ewma(withMacd, orderCol, valueCol, decay(slow), terms, partitionCols, "__s")
-      .withColumn("macd", col("__f") - col("__s")).drop("__f", "__s")
-    ewma(both, orderCol, "macd", decay(signal), terms, partitionCols, "signal")
+    def fold(n: Int): Column = GraftFunctions.ewmFold(col("__px"), ewmWeights(decay(n), terms))
+    val withMacd = df
+      .withColumn("__px", ewmFrame(col(valueCol), orderCol, terms, partitionCols))
+      .withColumn("macd", fold(fast) - fold(slow)).drop("__px")
+    ewma(withMacd, orderCol, "macd", decay(signal), terms, partitionCols, "signal")
       .withColumn("histogram", col("macd") - col("signal"))
   }
 

@@ -1705,7 +1705,9 @@ object Web {
     d.finish()
     val bos = new java.io.ByteArrayOutputStream(64 + (until - from) / 2)
     // header matches GZIPOutputStream byte-for-byte: magic, CM=8, FLG=0,
-    // MTIME=0, XFL=0, OS=0xff ("unknown" — the JDK's value, NOT 0)
+    // MTIME=0, XFL=0, OS=0xff ("unknown" — the JDK's value since JDK 16,
+    // JDK-8244706; older JDKs write 0, so the byte parity with
+    // GZIPOutputStream holds on JDK ≥ 16 only — readers ignore the OS byte)
     bos.write(Array[Byte](0x1f, 0x8b.toByte, 8, 0, 0, 0, 0, 0, 0, 0xff.toByte), 0, 10)
     while (!d.finished()) {
       val n = d.deflate(buf)
@@ -1719,6 +1721,16 @@ object Web {
       (isize & 0xff).toByte, ((isize >> 8) & 0xff).toByte,
       ((isize >> 16) & 0xff).toByte, ((isize >> 24) & 0xff).toByte), 0, 8)
     bos.toByteArray
+  }
+
+  /** The task's one raw Deflater, `end()`ed when the task completes so its
+    * zlib native state is freed then, not whenever the GC's cleaner runs.
+    */
+  private def taskDeflater(): java.util.zip.Deflater = {
+    val d = new java.util.zip.Deflater(java.util.zip.Deflater.DEFAULT_COMPRESSION, true)
+    Option(org.apache.spark.TaskContext.get())
+      .foreach(_.addTaskCompletionListener[Unit](_ => d.end()))
+    d
   }
 
   /** Shared writer core for [[withWarcGz]] / [[gzipWarcRecords]]: segment →
@@ -1750,8 +1762,7 @@ object Web {
       .as[(Long, String)]
       .mapPartitions { it =>
         // one Deflater per task, not per member (see gzipMemberRange)
-        val d = new java.util.zip.Deflater(
-          java.util.zip.Deflater.DEFAULT_COMPRESSION, true)
+        val d = taskDeflater()
         val crc = new java.util.zip.CRC32
         val buf = new Array[Byte](65536)
         it.map { case (id, warc) =>
@@ -1776,8 +1787,7 @@ object Web {
       .as[(Long, String)]
       .mapPartitions { it =>
         // one Deflater per task, not per member (see gzipMemberRange)
-        val d = new java.util.zip.Deflater(
-          java.util.zip.Deflater.DEFAULT_COMPRESSION, true)
+        val d = taskDeflater()
         val crc = new java.util.zip.CRC32
         val buf = new Array[Byte](65536)
         it.map { case (id, warc) => (id, gzipMembersOf(warc, d, crc, buf).flatten) }
@@ -1860,7 +1870,9 @@ object Web {
       private def advance(): Unit = {
         if (finished || nextText != null) return
         val dataStart = parseHeader(off)
-        if (dataStart < 0) { finished = true; return }
+        // the stream ended (last member read, garbled header or corrupt
+        // member): free zlib's native state now rather than at GC
+        if (dataStart < 0) { finished = true; inf.end(); return }
         inf.reset(); crc.reset()
         inf.setInput(bytes, dataStart, bytes.length - dataStart)
         val out = new java.io.ByteArrayOutputStream()

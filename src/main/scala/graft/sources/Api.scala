@@ -215,22 +215,27 @@ final class Api(spark: SparkSession, lake: Lake, ingest: Ingest,
 
   // --- GET /data/{layer}/{name}/download (routes.py:238-259) ---------------
 
+  /** One Spark job: the CSV write itself counts its rows through an
+    * `Observation`, and an empty dataset answers 404 from that count.
+    */
   private def downloadRoute(ex: HttpExchange, layer: String, name: String): Unit = {
     val df = lake.read(layer, name)
-    if (df.schema.isEmpty || df.isEmpty) {
-      respondJson(ex, 404,
-        Map("detail" -> s"Dataset '$name' not found or empty in layer '$layer'."))
-      return
-    }
+    val notFound = Map("detail" -> s"Dataset '$name' not found or empty in layer '$layer'.")
+    if (df.schema.isEmpty) { respondJson(ex, 404, notFound); return }
     val tmp = java.nio.file.Files.createTempDirectory("graft_api_csv")
     try {
-      Serving.csvDownload(df, tmp.toString)
-      val part = tmp.toFile.listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".csv"))
-        .getOrElse(sys.error("csv sink produced no part file"))
-      ex.getResponseHeaders.add("Content-Disposition", s"attachment; filename=$name.csv")
-      respondRaw(ex, 200, "text/csv",
-        new String(java.nio.file.Files.readAllBytes(part.toPath), StandardCharsets.UTF_8))
+      import org.apache.spark.sql.functions.{count, lit}
+      val written = new org.apache.spark.sql.Observation()
+      Serving.csvDownload(df.observe(written, count(lit(1)).as("rows")), tmp.toString)
+      if (written.get("rows") == 0L) respondJson(ex, 404, notFound)
+      else {
+        val part = tmp.toFile.listFiles()
+          .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".csv"))
+          .getOrElse(sys.error("csv sink produced no part file"))
+        ex.getResponseHeaders.add("Content-Disposition", s"attachment; filename=$name.csv")
+        respondRaw(ex, 200, "text/csv",
+          new String(java.nio.file.Files.readAllBytes(part.toPath), StandardCharsets.UTF_8))
+      }
     } finally org.apache.commons.io.FileUtils.deleteDirectory(tmp.toFile)
   }
 

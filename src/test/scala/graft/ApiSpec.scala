@@ -170,6 +170,27 @@ class ApiSpec extends SparkSpec {
     json(latest)("detail") shouldBe "No data found for the specified type and source."
   }
 
+  test("download of an existing empty dataset: 404 with today's message, no temp dir left; " +
+       "a download runs one Spark job") {
+    import spark.implicits._
+    lake.write(Seq.empty[(String, Double)].toDF("symbol", "price"), "bronze", "hollow_dl_20240101")
+    val tmpRoot = new java.io.File(System.getProperty("java.io.tmpdir"))
+    def csvTmps = tmpRoot.listFiles().map(_.getName).filter(_.startsWith("graft_api_csv")).toSet
+    val before = csvTmps
+    val empty = get("/data/bronze/hollow_dl_20240101/download")
+    empty.statusCode() shouldBe 404
+    json(empty)("detail") shouldBe "Dataset 'hollow_dl_20240101' not found or empty in layer 'bronze'."
+    get("/data/bronze/absent_dl/download").statusCode() shouldBe 404
+    lake.write(Seq(("AAPL", 1.0), ("MSFT", 2.0)).toDF("symbol", "price"), "bronze", "dl_jobs_20240101")
+    val (dl, jobs) = withJobCount(get("/data/bronze/dl_jobs_20240101/download"))
+    dl.statusCode() shouldBe 200
+    val lines = dl.body.linesIterator.toSeq
+    lines.head shouldBe "symbol,price"
+    lines.tail.sorted shouldBe Seq("AAPL,1.0", "MSFT,2.0")
+    jobs shouldBe 1
+    csvTmps shouldBe before
+  }
+
   test("a dataset GET runs one Spark job; GET /datasets/{name} runs at most 4") {
     import spark.implicits._
     lake.write(Seq(("AAPL", tsLit("2024-01-02"), 1.0), ("MSFT", tsLit("2024-01-03"), 2.0))

@@ -40,6 +40,18 @@ class PlanGuardSpec extends SparkSpec {
     plan should not include "Deduplicate"
   }
 
+  test("Queries.macd plans no lag and at most two Window nodes (one frame per EWM input)") {
+    import org.apache.spark.sql.catalyst.expressions.Lag
+    import org.apache.spark.sql.catalyst.plans.logical.Window
+    import org.apache.spark.sql.functions._
+    val df = spark.range(0, 60).select((col("id") % 3).as("k"), col("id").as("t"),
+      (col("id") * 1.5).as("x"))
+    val plan = graft.operators.Queries.macd(df, "t", "x", terms = 40, partitionCols = Seq("k"))
+      .queryExecution.optimizedPlan
+    plan.collect { case w: Window => w }.size should be <= 2
+    plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[Lag]))) shouldBe false
+  }
+
   test("topBigrams plans no window (kernel pairing, count aggregate only)") {
     import spark.implicits._
     val docs = Seq((1L, "a b c")).toDF("doc_id", "text")

@@ -1221,10 +1221,12 @@ class WebSpec extends SparkSpec {
     "embedded marker, NULL text)") {
     // ids 0..620 sweep v(=id/100%5) 0..4, m(=id%11) all, k(=id/11%6) all,
     // hosts 0..6, the %101==100 corrupt docs, and %13==5 marker docs;
-    // id 57 gets NULL text (57%11=2: the 200 arm, where NULL must propagate)
+    // NULL text on every arm where it must propagate: id 57 (57%11=2, the
+    // 200 arm), 0 (m=0), 1 (m=1), 100 (the %101==100 corrupt member) and
+    // 187 (187%13==5, the embedded-marker arm)
     val docs = spark.range(0, 621).toDF("doc_id")
       .withColumn("text",
-        when(col("doc_id") === 57, lit(null).cast("string"))
+        when(col("doc_id").isin(0, 1, 57, 100, 187), lit(null).cast("string"))
           .otherwise(concat(lit("body text "), col("doc_id"))))
     for (marker <- Seq(false, true)) {
       val dec = Web.withWarc(Web.withHtml(Web.withUrls(docs)), marker)
