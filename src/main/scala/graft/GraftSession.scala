@@ -8,7 +8,8 @@ import org.apache.spark.sql.SparkSession
   *  - UTC session zone (the oracle's zone);
   *  - ICU case mappings off — ICU `lower()` static init burns minutes of CPU;
   *  - `nanosAsLong`, so TIMESTAMP(NANOS) parquet reads as a long that
-  *    `SparkEntry.events()` normalizes;
+  *    `SparkEntry.events(s, dir)`, the events reader of every query family,
+  *    normalizes;
   *  - UI off, log level WARN.
   */
 object GraftSession {

@@ -107,7 +107,7 @@ object Fns {
     * (DuckDB) will generally disagree in the last ulp. Casting each value to a
     * fixed-point decimal first makes the sum exact and order-independent, so
     * both engines produce the identical double. Used by every oracle-checked
-    * aggregate in SparkEntry.
+    * aggregate of the query families in `graft.suite`.
     */
   def exactSum(c: Column, scale: Int = 6): Column =
     sum(c.cast(DecimalType(30, scale))).cast(DoubleType)

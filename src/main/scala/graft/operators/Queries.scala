@@ -577,7 +577,7 @@ object Queries {
     */
   /** (basket, sorted distinct item array) frame — the shared first stage of
     * [[coPurchasePairs]] and [[itemSimilarity]]. One basket shuffle; callers
-    * that run several basket analyses cache THIS (SparkEntry's basketIndex),
+    * that run several basket analyses cache THIS (TpchQueries.basketIndex),
     * the single-JVM analogue of persisting the basket rollup next to the
     * fact table.
     */

@@ -324,8 +324,7 @@ object Api {
       |</div>
       |<div class="card"><h2>transform</h2>
       | dataset <select id="tds"></select>
-      | op <select id="top"><option>aggregate</option><option>filter</option><option>normalize</option></select>
-      | freq <select id="tfreq"><option>D</option><option>W</option><option>M</option></select>
+      | op <select id="top"><option>clean</option><option>normalize</option><option>aggregate</option></select>
       | <button onclick="transform()">run</button> <span id="tmsg"></span>
       |</div>
       |<script>
@@ -359,7 +358,7 @@ object Api {
       |  if(!name) return;
       |  const info=await (await fetch(`/api/datasets/${encodeURIComponent(name)}?layer=${encodeURIComponent(layer)}`)).json();
       |  $('info').textContent=`type=${info.data_type??'N/A'} source=${info.source??'N/A'} `+
-      |    `rows=${info.record_count??'N/A'} range=${info.first_date??'N/A'}..${info.last_date??'N/A'}`;
+      |    `rows=${info.num_rows??'N/A'} range=${info.start_date??'N/A'}..${info.end_date??'N/A'}`;
       |  $('syms').innerHTML=Array.isArray(info.symbols)
       |    ? info.symbols.map(sx=>`<span class="badge">${esc(sx)}</span>`).join('') : '';
       |  $('dl').href=`/api/data/${encodeURIComponent(layer)}/${encodeURIComponent(name)}/download`;
@@ -397,8 +396,7 @@ object Api {
       |  const [srcLayer,...rest]=$('tds').value.split(':');
       |  const dest=srcLayer==='silver'?'gold':'silver';
       |  const body={source_layer:srcLayer,source_path:rest.join(':'),
-      |    transformation_type:$('top').value,destination_layer:dest,
-      |    params:{freq:$('tfreq').value}};
+      |    transformation_type:$('top').value,destination_layer:dest};
       |  const r=await (await fetch('/api/transform',{method:'POST',
       |    headers:{'Content-Type':'application/json'},body:JSON.stringify(body)})).json();
       |  $('tmsg').textContent=`${r.status??''}: ${r.message??''}`;

@@ -332,23 +332,13 @@ object Streaming {
     */
   def ivmApply(spark: SparkSession, tickDir: String, baseState: DataFrame,
       freq: String = "D"): DataFrame = {
-    val schema = spark.read.parquet(tickDir).schema
     var state = baseState.localCheckpoint()
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(tickDir)
-    withRunCkpt("graft_ckpt_ivm") { ckpt =>
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          state = graft.operators.Transforms.combineCandlePartials(
-            state.unionByName(graft.operators.Transforms.candlePartials(batch, freq)))
-            .localCheckpoint()
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      graft.operators.Transforms.mergeCandlePartials(state)
+    drainFiles(spark, tickDir, "graft_ckpt_ivm") { (batch, _) =>
+      state = graft.operators.Transforms.combineCandlePartials(
+        state.unionByName(graft.operators.Transforms.candlePartials(batch, freq)))
+        .localCheckpoint()
     }
+    graft.operators.Transforms.mergeCandlePartials(state)
   }
 
   /** Streaming ingestion dedup against a LANDED content index — the day-N
@@ -367,31 +357,17 @@ object Streaming {
       rowFilter: org.apache.spark.sql.Column, landedIndex: DataFrame,
       textCol: String): DataFrame = {
     import org.apache.spark.sql.functions.{col, md5, unhex}
-    val schema = spark.read.option("pathGlobFilter", glob).parquet(docDir).schema
     var seen = landedIndex.localCheckpoint()
-    var out = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("h",
-          org.apache.spark.sql.types.BinaryType))))
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", glob).option("maxFilesPerTrigger", 1).parquet(docDir)
-    withRunCkpt("graft_ckpt_incdedup") { ckpt =>
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          val fresh = batch.filter(rowFilter)
-            .select(unhex(md5(col(textCol).cast("binary"))).as("h")).distinct()
-            .join(seen, Seq("h"), "left_anti")
-            .localCheckpoint()
-          out = out.unionByName(fresh).localCheckpoint()
-          seen = seen.unionByName(fresh).localCheckpoint()
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      out
+    var out = emptyDf(spark, "h" -> org.apache.spark.sql.types.BinaryType)
+    drainFiles(spark, docDir, "graft_ckpt_incdedup", Some(glob)) { (batch, _) =>
+      val fresh = batch.filter(rowFilter)
+        .select(unhex(md5(col(textCol).cast("binary"))).as("h")).distinct()
+        .join(seen, Seq("h"), "left_anti")
+        .localCheckpoint()
+      out = out.unionByName(fresh).localCheckpoint()
+      seen = seen.unionByName(fresh).localCheckpoint()
     }
+    out
   }
 
   /** Streaming NEAR-dup detection against a landed LSH band index — the
@@ -408,17 +384,10 @@ object Streaming {
       baseSets: DataFrame, textCol: String, idCol: String,
       shingleN: Int, k: Int, bands: Int, threshold: Double): DataFrame = {
     import graft.operators.Dedup
-    val schema = spark.read.option("pathGlobFilter", glob).parquet(docDir).schema
+    import org.apache.spark.sql.types.{DoubleType, LongType}
     var bb = baseBands.localCheckpoint()
     var ss = baseSets.localCheckpoint()
-    var out = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("id_a", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("id_b", org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("jaccard", org.apache.spark.sql.types.DoubleType))))
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", glob).option("maxFilesPerTrigger", 1).parquet(docDir)
+    var out = emptyDf(spark, "id_a" -> LongType, "id_b" -> LongType, "jaccard" -> DoubleType)
     // batchId idempotence (ADVICE r11): Structured Streaming re-runs a
     // micro-batch after a transient failure with the SAME batchId; this
     // accumulator is NOT naturally idempotent (the exact-dedup sibling is) —
@@ -426,33 +395,26 @@ object Streaming {
     // so re-mining would re-emit the batch's pairs into `out` as duplicates.
     // Skip batchIds already folded in, the standard foreachBatch contract.
     var lastBatchId = -1L
-    withRunCkpt("graft_ckpt_inclsh") { ckpt =>
-      val q = stream.writeStream
-        .foreachBatch { (batch0: DataFrame, batchId: Long) =>
-          if (batchId > lastBatchId) {
-            // all-or-nothing vs retries: MATERIALIZE every successor frame
-            // BEFORE touching any accumulator var — localCheckpoint is the
-            // throwing step, and a partial mutation followed by a retried
-            // batchId would re-append the already-landed pairs (the exact
-            // failure the guard exists to stop). Plain assignments below
-            // cannot throw, so a batch either folds in fully or not at all.
-            val batch = batch0.filter(rowFilter)
-            val pairs = Dedup.minhashPairsIncremental(batch, bb, ss, textCol, idCol,
-              shingleN, k, bands, threshold).localCheckpoint()
-            val outN = out.unionByName(pairs).localCheckpoint()
-            val bbN = bb.unionByName(Dedup.bandBuckets(batch, textCol, idCol, shingleN, k, bands))
-              .localCheckpoint()
-            val ssN = ss.unionByName(Dedup.shingleSets(batch, textCol, idCol, shingleN))
-              .localCheckpoint()
-            out = outN; bb = bbN; ss = ssN; lastBatchId = batchId
-          }
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      out
+    drainFiles(spark, docDir, "graft_ckpt_inclsh", Some(glob)) { (batch0, batchId) =>
+      if (batchId > lastBatchId) {
+        // all-or-nothing vs retries: MATERIALIZE every successor frame
+        // BEFORE touching any accumulator var — localCheckpoint is the
+        // throwing step, and a partial mutation followed by a retried
+        // batchId would re-append the already-landed pairs (the exact
+        // failure the guard exists to stop). Plain assignments below
+        // cannot throw, so a batch either folds in fully or not at all.
+        val batch = batch0.filter(rowFilter)
+        val pairs = Dedup.minhashPairsIncremental(batch, bb, ss, textCol, idCol,
+          shingleN, k, bands, threshold).localCheckpoint()
+        val outN = out.unionByName(pairs).localCheckpoint()
+        val bbN = bb.unionByName(Dedup.bandBuckets(batch, textCol, idCol, shingleN, k, bands))
+          .localCheckpoint()
+        val ssN = ss.unionByName(Dedup.shingleSets(batch, textCol, idCol, shingleN))
+          .localCheckpoint()
+        out = outN; bb = bbN; ss = ssN; lastBatchId = batchId
+      }
     }
+    out
   }
 
   private def emptyDf(spark: SparkSession,
@@ -512,72 +474,82 @@ object Streaming {
       textCol: String, idCol: String,
       shingleN: Int, k: Int, bands: Int, threshold: Double): DataFrame = {
     import graft.operators.Dedup
-    val schema = spark.read.parquet(docDir).schema
     import org.apache.spark.sql.types.{BinaryType, DoubleType, LongType}
     var contentIdx = emptyDf(spark, "h" -> BinaryType, "kid" -> LongType, "csz" -> LongType)
     var bb = emptyBandIndex(spark)
     var ss = emptyShingleSetIndex(spark)
     var pairs = emptyDf(spark, "id_a" -> LongType, "id_b" -> LongType, "jaccard" -> DoubleType)
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(docDir)
     var lastBatchId = -1L
-    withRunCkpt("graft_ckpt_inclshdd") { ckpt =>
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          if (batchId > lastBatchId) {
-            // within-batch exact groups: (content key, min id, count)
-            val grouped = batch
-              .select(col(idCol).cast(LongType).as("id"),
-                unhex(md5(col(textCol).cast("binary"))).as("h"))
-              .groupBy(col("h")).agg(min(col("id")).as("bid"), count(lit(1)).as("bcnt"))
-              .localCheckpoint()
-            // replicas of landed contents: pure weight bumps
-            val updated = contentIdx
-              .join(grouped.select(col("h"), col("bcnt")), Seq("h"), "left")
-              .select(col("h"), col("kid"),
-                (col("csz") + coalesce(col("bcnt"), lit(0L))).as("csz"))
-            // novel contents: their min-id doc becomes the keeper
-            val novel = grouped.join(contentIdx.select("h"), Seq("h"), "left_anti")
-            val novelDocs = batch.select(col(idCol).cast(LongType).as(idCol),
-                col(textCol))
-              .join(novel.select(col("bid").as(idCol)), Seq(idCol), "left_semi")
-            // only novel keepers band + probe the keeper-only index
-            val newPairs = Dedup.minhashPairsIncremental(novelDocs, bb, ss,
-              textCol, idCol, shingleN, k, bands, threshold).localCheckpoint()
-            // materialize-before-mutate: every successor frame checkpoints
-            // before any accumulator assignment (the LSH sibling's retry
-            // discipline — a thrown localCheckpoint must leave state whole)
-            val contentIdxN = updated.unionByName(
-              novel.select(col("h"), col("bid").as("kid"), col("bcnt").as("csz")))
-              .localCheckpoint()
-            val bbN = bb.unionByName(
-              Dedup.bandBuckets(novelDocs, textCol, idCol, shingleN, k, bands))
-              .localCheckpoint()
-            val ssN = ss.unionByName(
-              Dedup.shingleSets(novelDocs, textCol, idCol, shingleN))
-              .localCheckpoint()
-            val pairsN = pairs.unionByName(newPairs).localCheckpoint()
-            // superseded checkpoints unpersist once their successors are
-            // materialized (r15 self-review — the connectedComponents
-            // discipline): without this, every micro-batch pins one more
-            // generation of state blocks in the block manager, unbounded
-            // growth on exactly the unbounded feed this operator targets.
-            // grouped/newPairs are consumed by the successors above and
-            // drop with them; the batch's own frames (the final state)
-            // stay persisted — the returned expansion reads them lazily.
-            Seq(contentIdx, bb, ss, pairs, grouped, newPairs)
-              .foreach(_.unpersist(blocking = false))
-            contentIdx = contentIdxN; bb = bbN; ss = ssN; pairs = pairsN
-            lastBatchId = batchId
-          }
-          ()
-        }
+    drainFiles(spark, docDir, "graft_ckpt_inclshdd") { (batch, batchId) =>
+      if (batchId > lastBatchId) {
+        // within-batch exact groups: (content key, min id, count)
+        val grouped = batch
+          .select(col(idCol).cast(LongType).as("id"),
+            unhex(md5(col(textCol).cast("binary"))).as("h"))
+          .groupBy(col("h")).agg(min(col("id")).as("bid"), count(lit(1)).as("bcnt"))
+          .localCheckpoint()
+        // replicas of landed contents: pure weight bumps
+        val updated = contentIdx
+          .join(grouped.select(col("h"), col("bcnt")), Seq("h"), "left")
+          .select(col("h"), col("kid"),
+            (col("csz") + coalesce(col("bcnt"), lit(0L))).as("csz"))
+        // novel contents: their min-id doc becomes the keeper
+        val novel = grouped.join(contentIdx.select("h"), Seq("h"), "left_anti")
+        val novelDocs = batch.select(col(idCol).cast(LongType).as(idCol),
+            col(textCol))
+          .join(novel.select(col("bid").as(idCol)), Seq(idCol), "left_semi")
+        // only novel keepers band + probe the keeper-only index
+        val newPairs = Dedup.minhashPairsIncremental(novelDocs, bb, ss,
+          textCol, idCol, shingleN, k, bands, threshold).localCheckpoint()
+        // materialize-before-mutate: every successor frame checkpoints
+        // before any accumulator assignment (the LSH sibling's retry
+        // discipline — a thrown localCheckpoint must leave state whole)
+        val contentIdxN = updated.unionByName(
+          novel.select(col("h"), col("bid").as("kid"), col("bcnt").as("csz")))
+          .localCheckpoint()
+        val bbN = bb.unionByName(
+          Dedup.bandBuckets(novelDocs, textCol, idCol, shingleN, k, bands))
+          .localCheckpoint()
+        val ssN = ss.unionByName(
+          Dedup.shingleSets(novelDocs, textCol, idCol, shingleN))
+          .localCheckpoint()
+        val pairsN = pairs.unionByName(newPairs).localCheckpoint()
+        // superseded checkpoints unpersist once their successors are
+        // materialized (r15 — the connectedComponents
+        // discipline): without this, every micro-batch pins one more
+        // generation of state blocks in the block manager, unbounded
+        // growth on exactly the unbounded feed this operator targets.
+        // grouped/newPairs are consumed by the successors above and
+        // drop with them; the batch's own frames (the final state)
+        // stay persisted — the returned expansion reads them lazily.
+        Seq(contentIdx, bb, ss, pairs, grouped, newPairs)
+          .foreach(_.unpersist(blocking = false))
+        contentIdx = contentIdxN; bb = bbN; ss = ssN; pairs = pairsN
+        lastBatchId = batchId
+      }
+    }
+    // weight expansion — the SHARED step 3 of the composition (one law
+    // for batch and stream) over the final streamed state
+    Dedup.expandMinhashWeights(pairs, contentIdx.select("kid", "csz"), threshold)
+  }
+
+  /** The file-replay drain behind the incremental operators: stream the
+    * parquet files under `dir` (only those matching `glob`, when given) one
+    * file per micro-batch through `step` under an AvailableNow trigger, and
+    * return once the backlog is drained. The stream's schema comes from a
+    * batch read of the same files, since file streams cannot infer one.
+    */
+  private def drainFiles(spark: SparkSession, dir: String, ckptPrefix: String,
+      glob: Option[String] = None)(step: (DataFrame, Long) => Unit): Unit = {
+    val schema = glob.fold(spark.read)(g => spark.read.option("pathGlobFilter", g))
+      .parquet(dir).schema
+    val stream = glob.fold(spark.readStream)(g => spark.readStream.option("pathGlobFilter", g))
+      .schema(schema).option("maxFilesPerTrigger", 1).parquet(dir)
+    withRunCkpt(ckptPrefix) { ckpt =>
+      stream.writeStream.foreachBatch(step)
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      // weight expansion — the SHARED step 3 of the composition (one law
-      // for batch and stream) over the final streamed state
-      Dedup.expandMinhashWeights(pairs, contentIdx.select("kid", "csz"), threshold)
+        .awaitTermination()
     }
   }
 
@@ -614,22 +586,12 @@ object Streaming {
     */
   def cdcApply(spark: SparkSession, changeDir: String, base: DataFrame,
       keyCol: String): DataFrame = {
-    val schema = spark.read.parquet(changeDir).schema
     var snapshot = base.localCheckpoint()
-    val stream = spark.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(changeDir)
-    withRunCkpt("graft_ckpt_cdc") { ckpt =>
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
-          snapshot = graft.operators.Changelog.merge(snapshot, batch, keyCol)
-            .localCheckpoint()
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      snapshot
+    drainFiles(spark, changeDir, "graft_ckpt_cdc") { (batch, _) =>
+      snapshot = graft.operators.Changelog.merge(snapshot, batch, keyCol)
+        .localCheckpoint()
     }
+    snapshot
   }
 
   /** Run a stream to a named in-memory sink and return the materialized result

@@ -60,6 +60,14 @@ class ApiSpec extends SparkSpec {
     page.body should include("const esc=")
     page.body should not include "${n}</option>"   // unescaped interpolations are gone
     page.body should not include "${r[c]??''}</td>"
+    // the info line reads the keys GET /datasets/{name} returns, and the
+    // transform form offers exactly the operations POST /transform accepts
+    // (its request carries no parameters, so no freq select)
+    Seq("info.num_rows", "info.start_date", "info.end_date").foreach(page.body should include(_))
+    Seq("record_count", "first_date", "last_date").foreach(page.body should not include _)
+    val ops = "<select id=\"top\">(.*?)</select>".r.findFirstMatchIn(page.body).map(_.group(1))
+    ops shouldBe Some("<option>clean</option><option>normalize</option><option>aggregate</option>")
+    page.body should not include "tfreq"
     // same handler through the /api prefix the reference mounts (main.py:20)
     val bare = get("/datasets?layer=bronze")
     val prefixed = get("/api/datasets?layer=bronze")
