@@ -1,58 +1,13 @@
 package graft
 
-import org.apache.spark.sql.types._
-
-/** Canonical entity schemas of the reference engine, re-expressed as Spark
-  * `StructType` constants.
+/** Canonical entity columns of the reference engine.
   *
-  * The reference declares these as pydantic models (reference schema.py:13-46)
-  * but never enforces them on data; here they serve as validation targets for
-  * `Transforms.normalize` (reference transformers.py:71-90) and as the schema
-  * contracts for the Structured Streaming sources (§2.9 of SURVEY.md).
+  * The reference declares its entities as pydantic models (reference
+  * schema.py:13-46) but never enforces them on data; here only their
+  * required-column lists survive, as the targets of `Transforms.normalize`'s
+  * warn-only validation (reference transformers.py:71-90).
   */
 object Schemas {
-
-  /** reference schema.py:13-21 */
-  val stockPrice: StructType = StructType(Seq(
-    StructField("symbol", StringType),
-    StructField("timestamp", TimestampType),
-    StructField("open", DoubleType),
-    StructField("high", DoubleType),
-    StructField("low", DoubleType),
-    StructField("close", DoubleType),
-    StructField("volume", LongType),
-    StructField("source", StringType)
-  ))
-
-  /** reference schema.py:24-29 (+ mid_rate from transformers.py:81-82) */
-  val forexRate: StructType = StructType(Seq(
-    StructField("from_currency", StringType),
-    StructField("to_currency", StringType),
-    StructField("timestamp", TimestampType),
-    StructField("rate", DoubleType),
-    StructField("source", StringType)
-  ))
-
-  /** reference schema.py:32-38 */
-  val cryptoPrice: StructType = StructType(Seq(
-    StructField("symbol", StringType),
-    StructField("timestamp", TimestampType),
-    StructField("price", DoubleType),
-    StructField("market_cap", DoubleType),
-    StructField("volume_24h", DoubleType),
-    StructField("source", StringType),
-    StructField("base_symbol", StringType),
-    StructField("data_type", StringType)
-  ))
-
-  /** reference schema.py:41-46 */
-  val economicIndicator: StructType = StructType(Seq(
-    StructField("indicator", StringType),
-    StructField("timestamp", TimestampType),
-    StructField("value", DoubleType),
-    StructField("country", StringType),
-    StructField("source", StringType)
-  ))
 
   /** Required-column lists used by the normalize step's warn-only validation
     * (reference transformers.py:71-90). Keys are the `data_type` tags the

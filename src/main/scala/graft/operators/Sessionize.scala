@@ -1,9 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Sessionization: group a user's events into sessions; a new session starts
   * when an event arrives STRICTLY more than `gap` after its predecessor

@@ -300,7 +300,9 @@ object Transforms {
     * transformation, land the result in the destination layer under
     * [[destinationName]]. Both the read and the write resolve through the one
     * lake root — deliberately fixing the reference's `data/`-prefix read vs
-    * CWD-relative write inconsistency (SURVEY.md §3.2).
+    * CWD-relative write inconsistency (SURVEY.md §3.2). The row count comes
+    * from the landing write; an empty result lands nothing and leaves an
+    * earlier dataset of the destination name as it was.
     */
   def transformAndStore(
       lake: graft.sources.Lake, sourceLayer: String, dataset: String,
@@ -309,16 +311,10 @@ object Transforms {
     val df = lake.read(sourceLayer, dataset)
     if (df.schema.isEmpty) return Map("status" -> "error",
       "message" -> s"dataset $dataset not found in $sourceLayer", "records_count" -> 0L)
-    val out = apply(df, transformation, params).persist()
-    try {
-      val n = out.count()
-      if (n == 0) Map("status" -> "error",
-        "message" -> "Transformation resulted in empty dataframe.", "records_count" -> 0L)
-      else {
-        val dest = destinationName(dataset, transformation)
-        val path = lake.write(out, destLayer, dest)
-        Map("status" -> "success", "records_count" -> n, "file_path" -> path)
-      }
-    } finally out.unpersist()
+    val (path, n) = lake.writeCounted(apply(df, transformation, params), destLayer,
+      destinationName(dataset, transformation), keep = _ > 0)
+    if (n == 0) Map("status" -> "error",
+      "message" -> "Transformation resulted in empty dataframe.", "records_count" -> 0L)
+    else Map("status" -> "success", "records_count" -> n, "file_path" -> path)
   }
 }

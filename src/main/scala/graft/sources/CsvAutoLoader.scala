@@ -106,7 +106,8 @@ object CsvAutoLoader {
   }
 
   /** S6 CSV ingest driver (reference csv_loader.py:180-222): dispatch loader,
-    * land in bronze under the filename convention, return a status envelope.
+    * land in bronze under the filename convention, return a status envelope
+    * whose `records_count` the landing write counted.
     */
   def loadAndStore(
       spark: SparkSession, lake: Lake, path: String, dataType: String,
@@ -118,15 +119,9 @@ object CsvAutoLoader {
     }
     loaded match {
       case None => Map("status" -> "error", "message" -> s"could not detect schema in $path")
-      case Some(df0) =>
-        // cache once: the count serves the envelope and the write re-reads the
-        // cached blocks instead of re-parsing the CSV
-        val df = df0.persist()
-        try {
-          val name = lake.generateFilename("csv_import", dataType)
-          val out = lake.write(df, "bronze", name)
-          Map("status" -> "success", "records_count" -> df.count(), "file_path" -> out)
-        } finally df.unpersist()
+      case Some(df) =>
+        val (out, n) = lake.writeCounted(df, "bronze", lake.generateFilename("csv_import", dataType))
+        Map("status" -> "success", "records_count" -> n, "file_path" -> out)
     }
   }
 }

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Ingestion orchestration (reference alphavantage.py:247-277,
   * yahoo_finance.py:192-250 — S13/S14): fetch a payload, parse it with the
@@ -24,13 +24,9 @@ final class Ingest(
   /** S14 Alpha Vantage daily-stock ingest (reference alphavantage.py:247-277). */
   def fetchAndStoreStock(symbol: String, apiKey: String = "demo",
       outputSize: String = "full"): Map[String, Any] =
-    fetch(avBase, Map("function" -> "TIME_SERIES_DAILY", "symbol" -> symbol,
-      "outputsize" -> outputSize, "apikey" -> apiKey)) match {
-      case None => Map("status" -> "error", "message" -> s"fetch failed for $symbol")
-      case Some(payload) =>
-        landInBronze(JsonPayloads.parseAlphaVantageStock(spark, Seq(payload), symbol),
-          "alphavantage", s"stock_$symbol", s"no data for $symbol")
-    }
+    fetchAndLand(avBase, Map("function" -> "TIME_SERIES_DAILY", "symbol" -> symbol,
+      "outputsize" -> outputSize, "apikey" -> apiKey), symbol, "alphavantage", s"stock_$symbol")(
+      p => JsonPayloads.parseAlphaVantageStock(spark, Seq(p), symbol))
 
   /** S14 Yahoo chart ingest (reference yahoo_finance.py:192-221).
     *
@@ -42,14 +38,10 @@ final class Ingest(
     val now = System.currentTimeMillis() / 1000L
     val p1 = period1.getOrElse(now - 730L * 86400L)
     val p2 = period2.getOrElse(now)
-    fetch(yahooBase + symbol, Map(
+    fetchAndLand(yahooBase + symbol, Map(
       "period1" -> p1.toString, "period2" -> p2.toString, "interval" -> interval,
-      "includePrePost" -> "false", "events" -> "div,split")) match {
-      case None => Map("status" -> "error", "message" -> s"fetch failed for $symbol")
-      case Some(payload) =>
-        landInBronze(JsonPayloads.parseYahooChart(spark, Seq(payload), symbol),
-          "yahoo_finance", s"stock_$symbol", s"no data for $symbol")
-    }
+      "includePrePost" -> "false", "events" -> "div,split"), symbol, "yahoo_finance", s"stock_$symbol")(
+      p => JsonPayloads.parseYahooChart(spark, Seq(p), symbol))
   }
 
   /** Forex pair ingest (reference routes.py:46-61): `"USD_EUR"`-style pair →
@@ -59,13 +51,9 @@ final class Ingest(
   def fetchAndStoreForex(pair: String, apiKey: String = "demo"): Map[String, Any] =
     pair.split('_') match {
       case Array(from, to) =>
-        fetch(avBase, Map("function" -> "FX_DAILY", "from_symbol" -> from,
-          "to_symbol" -> to, "apikey" -> apiKey)) match {
-          case None => Map("status" -> "error", "message" -> s"fetch failed for $pair")
-          case Some(payload) =>
-            landInBronze(JsonPayloads.parseAlphaVantageForex(spark, Seq(payload), from, to),
-              "alphavantage", s"forex_$pair", s"no data for $pair")
-        }
+        fetchAndLand(avBase, Map("function" -> "FX_DAILY", "from_symbol" -> from,
+          "to_symbol" -> to, "apikey" -> apiKey), pair, "alphavantage", s"forex_$pair")(
+          p => JsonPayloads.parseAlphaVantageForex(spark, Seq(p), from, to))
       case _ => Map("status" -> "error",
         "message" -> s"Invalid forex pair format: $pair. Use format 'FROM_TO'")
     }
@@ -77,43 +65,35 @@ final class Ingest(
     JsonPayloads.economicIndicators.get(indicator.toUpperCase) match {
       case None => Map("status" -> "error", "message" -> s"unsupported indicator '$indicator'")
       case Some(fn) =>
-        fetch(avBase, Map("function" -> fn, "apikey" -> apiKey)) match {
-          case None => Map("status" -> "error", "message" -> s"fetch failed for $indicator")
-          case Some(payload) =>
-            landInBronze(JsonPayloads.parseAlphaVantageEconomic(spark, Seq(payload), indicator),
-              "alphavantage", s"economic_$indicator", s"no data for $indicator")
-        }
+        fetchAndLand(avBase, Map("function" -> fn, "apikey" -> apiKey), indicator,
+          "alphavantage", s"economic_$indicator")(
+          p => JsonPayloads.parseAlphaVantageEconomic(spark, Seq(p), indicator))
     }
 
   /** Crypto ingest (reference routes.py:86-94): Yahoo chart fetch of the
     * `-USD`-suffixed symbol through the crypto parser.
     */
-  def fetchAndStoreCrypto(symbol: String): Map[String, Any] = {
-    val full = JsonPayloads.cryptoPairSymbol(symbol)
-    fetch(yahooBase + full, Map("interval" -> "1d")) match {
-      case None => Map("status" -> "error", "message" -> s"fetch failed for $symbol")
-      case Some(payload) =>
-        landInBronze(JsonPayloads.parseYahooCrypto(spark, Seq(payload), symbol),
-          "yahoo_finance", s"crypto_$symbol", s"no data for $symbol")
-    }
-  }
+  def fetchAndStoreCrypto(symbol: String): Map[String, Any] =
+    fetchAndLand(yahooBase + JsonPayloads.cryptoPairSymbol(symbol), Map("interval" -> "1d"),
+      symbol, "yahoo_finance", s"crypto_$symbol")(
+      p => JsonPayloads.parseYahooCrypto(spark, Seq(p), symbol))
 
-  /** Shared landing envelope: parse once, cache, count once — the count serves
-    * both the empty-guard and `records_count`, so the payload is parsed a
-    * single time instead of three (isEmpty + write + count).
+  /** Shared fetch-and-land envelope: fetch one payload, parse it, and land
+    * the rows in bronze as `{source}_{dataType}_{date}`. The row count comes
+    * from the landing write itself, so the payload is parsed once; an empty
+    * parse lands nothing and leaves an earlier dataset of the name as it was.
+    * `what` names the request in the error messages.
     */
-  private def landInBronze(parsed: org.apache.spark.sql.DataFrame, source: String,
-      dataType: String, emptyMsg: String): Map[String, Any] = {
-    val df = parsed.persist()
-    try {
-      val n = df.count()
-      if (n == 0) Map("status" -> "error", "message" -> emptyMsg)
-      else {
-        val path = lake.write(df, "bronze", lake.generateFilename(source, dataType))
-        Map("status" -> "success", "records_count" -> n, "file_path" -> path)
-      }
-    } finally df.unpersist()
-  }
+  private def fetchAndLand(url: String, params: Map[String, String], what: String,
+      source: String, dataType: String)(parse: String => DataFrame): Map[String, Any] =
+    fetch(url, params) match {
+      case None => Map("status" -> "error", "message" -> s"fetch failed for $what")
+      case Some(payload) =>
+        val (path, n) = lake.writeCounted(parse(payload), "bronze",
+          lake.generateFilename(source, dataType), keep = _ > 0)
+        if (n == 0) Map("status" -> "error", "message" -> s"no data for $what")
+        else Map("status" -> "success", "records_count" -> n, "file_path" -> path)
+    }
 
   /** S13 batch multi-symbol fetch (reference yahoo_finance.py:224-250):
     * sequential per-symbol fetch+store with an inter-symbol delay, per-symbol

@@ -3,13 +3,15 @@ package graft.sources
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+import java.io.IOException
 import java.time.LocalDate
 import java.time.format.DateTimeFormatter
+import java.util.UUID
 
 /** The medallion lake: bronze (raw) / silver (clean+normalized) / gold
   * (aggregated) layers plus the filename-convention catalog
@@ -80,12 +82,21 @@ final case class Lake(spark: SparkSession, root: String) {
   /** S2 Parquet sink (reference helpers.py:31-46): one dataset = one parquet
     * directory under the layer. `coalesce(1)` honors the reference's
     * one-file-per-dataset contract — correct at serving scale, deliberately NOT
-    * used by [[writePartitioned]].
+    * used by [[writePartitioned]]. Always publishes, so an empty frame lands
+    * as an empty dataset.
     */
-  def write(df: DataFrame, layer: String, dataset: String): String = {
-    val p = new Path(layerDir(layer), withExt(dataset)).toString
-    df.coalesce(1).write.mode("overwrite").parquet(p)
-    p
+  def write(df: DataFrame, layer: String, dataset: String): String =
+    writeCounted(df, layer, dataset)._1
+
+  /** [[write]] returning (dataset path, row count), the count taken from the
+    * write itself. The dataset is published only when `keep` accepts the
+    * count; a rejected frame lands nothing and leaves an earlier dataset of
+    * the same name as it was.
+    */
+  def writeCounted(df: DataFrame, layer: String, dataset: String,
+      keep: Long => Boolean = _ => true): (String, Long) = {
+    val (path, rows, _) = land(df, layer, dataset)((_, n) => keep(n))
+    (path, rows)
   }
 
   /** The 100 TB-scale sink: hive-style partition layout replacing the filename
@@ -181,8 +192,8 @@ final case class Lake(spark: SparkSession, root: String) {
     * frame lands in a STAGING directory, the audit checks run against the
     * staged files (validating exactly the bytes readers would see, not the
     * upstream plan), and only an all-green report publishes the staging dir
-    * into the dataset path via an atomic rename — a failed audit leaves the
-    * previous published version untouched and removes the staging dir.
+    * onto the dataset path ([[land]]) — a failed audit leaves the previous
+    * published version untouched and removes the staging dir.
     *
     * Returns (report, published): the per-check report frame plus whether
     * the swap happened. At scale the audit costs one aggregate pass over
@@ -190,25 +201,47 @@ final case class Lake(spark: SparkSession, root: String) {
     * insurance every promotion pipeline buys before making bad data
     * readable.
     */
-  def writeAudited(df: org.apache.spark.sql.DataFrame, layer: String, dataset: String,
+  def writeAudited(df: DataFrame, layer: String, dataset: String,
       checks: Seq[graft.operators.Checks.Check]): (DataFrame, Boolean) = {
-    val dest = new Path(layerDir(layer), withExt(dataset))
-    val staging = new Path(layerDir(layer),
-      s".staging_${withExt(dataset)}_p${ProcessHandle.current().pid()}")
-    df.coalesce(1).write.mode("overwrite").parquet(staging.toString)
-    val staged = open(staging)
-    // eager materialization: the report is #checks rows; localCheckpoint
-    // avoids both a cache-lifecycle leak and a re-scan when the caller
-    // consumes the report after the staging dir is gone
-    val report = graft.operators.Checks.validate(staged, checks).localCheckpoint(true)
-    val allPass = report.filter(!col("passed")).isEmpty
-    if (allPass) {
-      if (fs.exists(dest)) fs.delete(dest, true)
-      fs.rename(staging, dest)
-    } else {
-      fs.delete(staging, true)
+    var report: DataFrame = null
+    val (_, _, published) = land(df, layer, dataset) { (staging, _) =>
+      // eager materialization: the report is #checks rows; localCheckpoint
+      // avoids both a cache-lifecycle leak and a re-scan when the caller
+      // consumes the report after the staging dir is gone
+      report = graft.operators.Checks.validate(open(staging), checks).localCheckpoint(true)
+      report.filter(!col("passed")).isEmpty
     }
-    (report, allPass)
+    (report, published)
+  }
+
+  /** The one landing protocol behind [[write]], [[writeCounted]] and
+    * [[writeAudited]]: `df` is written as one parquet file into a
+    * `.staging_*` directory beside the dataset, its rows counted during that
+    * same write by an `Observation` (no second Spark job). `publish` then
+    * sees the staged directory and the count: yes replaces the dataset with
+    * the staging directory by a delete-and-rename, no deletes the staging
+    * directory, and so does a failed write. Readers therefore never see a
+    * half-written dataset, and a rejected or failed landing leaves the
+    * previous version in place. Publishes hold one JVM-wide lock, so two
+    * landings of one name cannot nest one staging directory inside the
+    * other's dataset. Returns (dataset path, rows, published).
+    */
+  private def land(df: DataFrame, layer: String, dataset: String)(
+      publish: (Path, Long) => Boolean): (String, Long, Boolean) = {
+    val dest = new Path(layerDir(layer), withExt(dataset))
+    val staging = new Path(layerDir(layer), s".staging_${withExt(dataset)}_${UUID.randomUUID()}")
+    try {
+      val written = new Observation()
+      df.observe(written, count(lit(1)).as("rows"))
+        .coalesce(1).write.mode("overwrite").parquet(staging.toString)
+      val rows = written.get("rows").asInstanceOf[Long]
+      val ok = publish(staging, rows)
+      if (ok) Lake.synchronized {
+        if (fs.exists(dest)) fs.delete(dest, true)
+        if (!fs.rename(staging, dest)) throw new IOException(s"could not publish $staging as $dest")
+      }
+      (dest.toString, rows, ok)
+    } finally if (fs.exists(staging)) fs.delete(staging, true)
   }
 
   private def withExt(dataset: String): String =

@@ -199,6 +199,30 @@ object DedupQueries {
         col("cluster_size"), col("weight"), col("kept"))
       .orderBy("doc_id")
 
+  /** The erasure audits' multiset equality (`q_erasure_apply`,
+    * `q_vector_erasure`) in ONE aggregate. Each arm is (artifact, hash
+    * columns, applied frame, rebuilt frame): both sides are row-hashed,
+    * tagged and counted per (artifact, hash), and any count mismatch flips
+    * `matches_rebuild`. An arm without a rebuilt frame is a rebuild by
+    * definition, so its rows emit once with both tags (wa = wb = 1).
+    */
+  private def rebuildAudit(arms: Seq[(String, Seq[String], DataFrame, Option[DataFrame])]): DataFrame = {
+    def tagged(df: DataFrame, name: String, cs: Seq[String], wa: Long, wb: Long): DataFrame =
+      df.select(lit(name).as("artifact"), xxhash64(cs.map(col): _*).as("rh"),
+        lit(wa).as("wa"), lit(wb).as("wb"))
+    arms.map {
+      case (name, cs, applied, None) => tagged(applied, name, cs, 1L, 1L)
+      case (name, cs, applied, Some(rebuilt)) =>
+        tagged(applied, name, cs, 1L, 0L).unionByName(tagged(rebuilt, name, cs, 0L, 1L))
+    }.reduce(_ unionByName _)
+      .groupBy("artifact", "rh")
+      .agg(sum("wa").as("na"), sum("wb").as("nb"))
+      .groupBy("artifact")
+      .agg(sum("na").cast(LongType).as("n_rows"),
+        (sum(when(col("na") =!= col("nb"), 1L).otherwise(0L)) === 0L).as("matches_rebuild"))
+      .orderBy("artifact")
+  }
+
   val queries: Seq[Query] = Seq(
     // --- dedup suite (north star) ----------------------------------------
     Query("q_dedup_exact", (s, dir) =>
@@ -594,33 +618,16 @@ object DedupQueries {
         "near_dup_pairs" -> Dedup.minhashPairsFromIndex(bandsR, setsR, threshold = 0.5),
         "content_index" -> Dedup.contentIndex(ret, "text"),
         "pruned_postings" -> Dedup.prunedPostings(ret, "text", "doc_id", n = 5, maxDocFreq = 100L))
-      // multiset equality per artifact in ONE aggregate: row-hash both sides
-      // (columns in the rebuilt frame's order), tag, count per (artifact,
-      // hash) — any count mismatch flips matches_rebuild. The REBUILD-arm
-      // artifacts (content index, pruned postings) are rebuilds BY
-      // DEFINITION — applied and reference are the same computation — so
-      // their rows emit once with both tags (wa = wb = 1) instead of
-      // scanning the corpus twice; the substantive two-sided comparisons
-      // are the FILTER arms, where erase-by-anti-join must equal re-mining.
+      // every arm hashes in the rebuilt frame's column order. The REBUILD-arm
+      // artifacts (content index, pruned postings) are rebuilds BY DEFINITION —
+      // applied and reference are the same computation — so they skip the
+      // second corpus scan; the substantive two-sided comparisons are the
+      // FILTER arms, where erase-by-anti-join must equal re-mining.
       val rebuildByDef = Set("content_index", "pruned_postings")
-      val tagged = applied.keys.toSeq.sorted.map { name =>
-        val cs = rebuilt(name).columns.toSeq
-        if (rebuildByDef(name))
-          applied(name).select(lit(name).as("artifact"),
-            xxhash64(cs.map(col): _*).as("rh"), lit(1L).as("wa"), lit(1L).as("wb"))
-        else
-          applied(name).select(lit(name).as("artifact"),
-              xxhash64(cs.map(col): _*).as("rh"), lit(1L).as("wa"), lit(0L).as("wb"))
-            .unionByName(rebuilt(name).select(lit(name).as("artifact"),
-              xxhash64(cs.map(col): _*).as("rh"), lit(0L).as("wa"), lit(1L).as("wb")))
-      }.reduce(_ unionByName _)
-      tagged.groupBy("artifact", "rh")
-        .agg(sum("wa").as("na"), sum("wb").as("nb"))
-        .groupBy("artifact")
-        .agg(sum("na").cast(LongType).as("n_rows"),
-          (sum(when(col("na") =!= col("nb"), 1L).otherwise(0L)) === 0L).as("matches_rebuild"))
-        .orderBy("artifact")
-        .localCheckpoint(true)
+      rebuildAudit(applied.keys.toSeq.sorted.map { name =>
+        (name, rebuilt(name).columns.toSeq, applied(name),
+          if (rebuildByDef(name)) None else Some(rebuilt(name)))
+      }).localCheckpoint(true)
     },
       // erasure APPLY: expected retained-corpus sizes per artifact, and the
       // apply==rebuild equivalence flags pinned TRUE (the engine computes the
@@ -664,22 +671,12 @@ object DedupQueries {
         "ivf_index" -> Similarity.ivfAssign(retained, cents, "embedding", "vec_id"),
         "pq_codes" -> Similarity.pqEncode(retained, "embedding", "vec_id", pqBooks),
         "bq_codes" -> Similarity.binaryQuantize(retained, "embedding", "vec_id"))
-      val tagged = landed.keys.toSeq.sorted.map { name =>
+      rebuildAudit(landed.keys.toSeq.sorted.map { name =>
         val (frame, idc) = landed(name)
-        val cs = rebuilt(name).columns.toSeq
         val applied = frame.join(broadcast(del.select(col("vec_id").as(idc))),
           Seq(idc), "left_anti")
-        applied.select(lit(name).as("artifact"),
-            xxhash64(cs.map(col): _*).as("rh"), lit(1L).as("wa"), lit(0L).as("wb"))
-          .unionByName(rebuilt(name).select(lit(name).as("artifact"),
-            xxhash64(cs.map(col): _*).as("rh"), lit(0L).as("wa"), lit(1L).as("wb")))
-      }.reduce(_ unionByName _)
-      tagged.groupBy("artifact", "rh")
-        .agg(sum("wa").as("na"), sum("wb").as("nb"))
-        .groupBy("artifact")
-        .agg(sum("na").cast(LongType).as("n_rows"),
-          (sum(when(col("na") =!= col("nb"), 1L).otherwise(0L)) === 0L).as("matches_rebuild"))
-        .orderBy("artifact")
+        (name, rebuilt(name).columns.toSeq, applied, Some(rebuilt(name)))
+      })
     },
       // frozen quantizers ⇒ per-row assignment ⇒ filter == rebuild is the
       // SEMANTIC claim; the dual restates the retained cardinality (one index

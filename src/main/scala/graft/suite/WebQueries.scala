@@ -2009,6 +2009,28 @@ object WebQueries {
       |  FROM wbod)""".stripMargin.replace("\n", "")
   }
 
+  /** The URL split shared by [[canonKeySql]] and [[canonChainSql]]: the
+    * `scheme`, `hostport`, `rawpath` and `rawq` columns of a `nofrag` column.
+    */
+  private lazy val urlPartsSql: String =
+    s"""   lower(regexp_extract(nofrag, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
+       |   regexp_replace(lower(regexp_extract(nofrag, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)', 1)), '^.*@', '') AS hostport,
+       |   regexp_extract(nofrag, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]+([^?#]*)', 1) AS rawpath,
+       |   regexp_extract(nofrag, '\\?([^#]*)', 1) AS rawq""".stripMargin.replace("\n", "")
+
+  /** The normalized URL parts shared by [[canonKeySql]] and
+    * [[canonChainSql]]: `host` (no port, no `www.`), `prt`, `pth` (no
+    * trailing slashes, `/` when empty) and `qs` (tracking parameters
+    * dropped, the rest sorted) from the [[urlPartsSql]] columns.
+    */
+  private lazy val urlNormSql: String =
+    s"""   regexp_replace(regexp_replace(hostport, ':[0-9]+$$', ''), '^www\\.', '') AS host,
+       |   regexp_extract(hostport, ':([0-9]+)$$', 1) AS prt,
+       |   CASE WHEN regexp_replace(rawpath, '/+$$', '') = '' THEN '/'
+       |     ELSE regexp_replace(rawpath, '/+$$', '') END AS pth,
+       |   array_to_string(list_sort(list_filter(string_split(rawq, '&'),
+       |     q -> len(q) > 0 AND NOT regexp_matches(q, '^(utm_[A-Za-z0-9_]*|gclid|fbclid|msclkid)='))), '&') AS qs""".stripMargin.replace("\n", "")
+
   /** Canonical-key CTE chain over an arbitrary source CTE carrying a `url`
     * column plus `cols` passthroughs, with suffixed CTE names so it can
     * coexist with [[canonChainSql]] (and with a second instance of itself)
@@ -2017,18 +2039,8 @@ object WebQueries {
     */
   private def canonKeySql(src: String, sfx: String, cols: String): String =
     s""" ka$sfx AS (SELECT $cols, regexp_replace(url, '#.*', '') AS nofrag FROM $src),
-       | kb$sfx AS (SELECT $cols,
-       |   lower(regexp_extract(nofrag, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-       |   regexp_replace(lower(regexp_extract(nofrag, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)', 1)), '^.*@', '') AS hostport,
-       |   regexp_extract(nofrag, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]+([^?#]*)', 1) AS rawpath,
-       |   regexp_extract(nofrag, '\\?([^#]*)', 1) AS rawq FROM ka$sfx),
-       | kc$sfx AS (SELECT $cols, scheme,
-       |   regexp_replace(regexp_replace(hostport, ':[0-9]+$$', ''), '^www\\.', '') AS host,
-       |   regexp_extract(hostport, ':([0-9]+)$$', 1) AS prt,
-       |   CASE WHEN regexp_replace(rawpath, '/+$$', '') = '' THEN '/'
-       |     ELSE regexp_replace(rawpath, '/+$$', '') END AS pth,
-       |   array_to_string(list_sort(list_filter(string_split(rawq, '&'),
-       |     q -> len(q) > 0 AND NOT regexp_matches(q, '^(utm_[A-Za-z0-9_]*|gclid|fbclid|msclkid)='))), '&') AS qs
+       | kb$sfx AS (SELECT $cols,$urlPartsSql FROM ka$sfx),
+       | kc$sfx AS (SELECT $cols, scheme,$urlNormSql
        |  FROM kb$sfx),
        | ck$sfx AS MATERIALIZED (SELECT $cols,
        |   CASE WHEN scheme = '' OR host = '' THEN NULL
@@ -2328,18 +2340,8 @@ object WebQueries {
     */
   private def canonChainSql(src: String, extra: String = ""): String =
     s""" pr AS (SELECT doc_id, text$extra, url, regexp_replace(url, '#.*', '') AS nofrag FROM $src),
-      | p2 AS (SELECT doc_id, text$extra, url,
-      |   lower(regexp_extract(nofrag, '^([A-Za-z][A-Za-z0-9+.-]*)://', 1)) AS scheme,
-      |   regexp_replace(lower(regexp_extract(nofrag, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)', 1)), '^.*@', '') AS hostport,
-      |   regexp_extract(nofrag, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]+([^?#]*)', 1) AS rawpath,
-      |   regexp_extract(nofrag, '\\?([^#]*)', 1) AS rawq FROM pr),
-      | p3 AS (SELECT doc_id, text$extra, url, scheme,
-      |   regexp_replace(regexp_replace(hostport, ':[0-9]+$$', ''), '^www\\.', '') AS host,
-      |   regexp_extract(hostport, ':([0-9]+)$$', 1) AS prt,
-      |   CASE WHEN regexp_replace(rawpath, '/+$$', '') = '' THEN '/'
-      |     ELSE regexp_replace(rawpath, '/+$$', '') END AS pth,
-      |   array_to_string(list_sort(list_filter(string_split(rawq, '&'),
-      |     q -> len(q) > 0 AND NOT regexp_matches(q, '^(utm_[A-Za-z0-9_]*|gclid|fbclid|msclkid)='))), '&') AS qs
+      | p2 AS (SELECT doc_id, text$extra, url,$urlPartsSql FROM pr),
+      | p3 AS (SELECT doc_id, text$extra, url, scheme,$urlNormSql
       |  FROM p2),
       | p4 AS (SELECT doc_id, text$extra, url, scheme, host, pth, qs,
       |   CASE WHEN prt <> '' AND NOT ((scheme = 'http' AND prt = '80') OR (scheme = 'https' AND prt = '443'))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.sources.Lake
 
 /** Co-located joins via bucketing: the pre-shuffled layout must let Catalyst

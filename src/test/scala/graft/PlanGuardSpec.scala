@@ -29,7 +29,6 @@ class PlanGuardSpec extends SparkSpec {
   // guards fail if a refactor reintroduces the shuffle the rewrite deleted.
 
   test("embeddingPairs plans no aggregate and no dropDuplicates (first-band dedup is per-row)") {
-    import org.apache.spark.sql.functions.col
     import spark.implicits._
     val vecs = Seq((1L, Array(1.0f, 0.5f)), (2L, Array(0.9f, 0.4f)))
       .toDF("vec_id", "embedding")
@@ -269,7 +268,6 @@ class PlanGuardSpec extends SparkSpec {
   }
 
   test("winnowMatchesFrom: docFreq cap rides the h-keyed window (no semi-join back), pair join equi-keyed on h") {
-    import org.apache.spark.sql.functions.col
     import spark.implicits._
     val fp = Seq((1L, 0L, 10L), (2L, 0L, 10L), (1L, 1L, 20L), (2L, 1L, 20L))
       .toDF("doc_id", "pos", "h")
@@ -363,7 +361,6 @@ class PlanGuardSpec extends SparkSpec {
 
   test("AQE splits the hot partition of a skewed sort-merge join at runtime") {
     import org.apache.spark.sql.functions.{col, lit}
-    import spark.implicits._
     val keep = Seq(
       "spark.sql.adaptive.enabled", "spark.sql.adaptive.skewJoin.enabled",
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor",

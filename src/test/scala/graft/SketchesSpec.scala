@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import graft.operators.Sketches
 
 class SketchesSpec extends SparkSpec {
@@ -72,7 +71,6 @@ class SketchesSpec extends SparkSpec {
   test("histogramQuantiles: estimates land within one bin width of the exact " +
        "nearest-rank percentile; constant groups estimate the constant") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
     val vals = (1 to 1000).map(i => ("a", i.toDouble)) ++
       (1 to 50).map(_ => ("const", 7.5))
     val df = vals.toDF("k", "v")

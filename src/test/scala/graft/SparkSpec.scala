@@ -9,7 +9,6 @@ import org.scalatest.matchers.should.Matchers
   */
 trait SparkSpec extends AnyFunSuite with Matchers {
   lazy val spark: SparkSession = SparkSpec.session
-  import spark.implicits._
 
   def rows(df: DataFrame): Seq[Row] = df.collect().toIndexedSeq
 

@@ -366,7 +366,6 @@ class StreamingSpec extends SparkSpec {
   test("incrementalLshDedupedApply: replicated arrivals across batches fold into weights " +
        "and the final multiset equals the batch composed run") {
     import spark.implicits._
-    import org.apache.spark.sql.functions.{col, sum => fsum}
     val dir = new java.io.File(sys.props("java.io.tmpdir"),
       s"graft_inclshdd_spec_p${ProcessHandle.current().pid()}")
     val t1 = "the quick brown fox jumps over the lazy dog again and again today"

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.functions.Fns
 import graft.operators.Transforms
 
 class TransformsSpec extends SparkSpec {

@@ -1,7 +1,6 @@
 package graft
 
 import java.util.concurrent.{CountDownLatch, CyclicBarrier, Executors, TimeUnit}
-import org.apache.spark.sql.functions._
 import graft.sources.TxTable
 
 class TxTableSpec extends SparkSpec {

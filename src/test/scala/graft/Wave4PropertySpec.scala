@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.scalacheck.{Gen, rng}
 
 import graft.operators.{Dedup, Queries, Similarity, TextAnalysis}
