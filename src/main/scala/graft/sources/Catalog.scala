@@ -1,8 +1,12 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.module.scala.DefaultScalaModule
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructField, StructType}
+
+import scala.jdk.CollectionConverters._
 
 /** Metadata-table catalog — parity for the reference's declared metadata DB
   * (reference config.py:26-27 `DB_URL = sqlite:///./financial_metadata.db`,
@@ -11,185 +15,130 @@ import org.apache.spark.sql.functions._
   * dataset metadata survives beyond what a directory listing can answer
   * (row counts, column counts, ingest dates) without touching the data files.
   *
-  * Design — a miniature transaction log, not a database server:
-  *
-  *   root/_catalog/v00000001/   parquet snapshot of the whole catalog table
-  *   root/_catalog/v00000002/
-  *   root/_catalog/_CURRENT     one-line pointer file naming the live version
-  *
-  * Every mutation (register / unregister) reads the current snapshot, applies
-  * the delta as a DataFrame op, writes a NEW versioned snapshot, then
-  * atomically swaps the `_CURRENT` pointer (create-temp + rename). Readers
-  * resolve the pointer once and only ever read an immutable snapshot — no
-  * overwrite-while-read window, unlike mutating a single parquet dir in
-  * place. This is the Delta-log/Iceberg-pointer pattern scaled down to the
-  * one table it has to manage.
+  * Design — a driver-side table over a [[VersionLog]] in `root/_catalog`,
+  * the commit log [[TxTable]] uses: each version is one text file holding
+  * the whole catalog, one JSON object per row. Every mutation (register /
+  * unregister) reads the live version's rows, applies the edit on the
+  * driver, claims and lands the next version, then moves the pointer
+  * forward by one atomic rename. Readers resolve the pointer once
+  * and only ever read an immutable version: no overwrite-while-read window
+  * and no moment without a pointer.
   *
   * Scale: the catalog holds ONE ROW PER DATASET — catalog-scale by
-  * construction (thousands of rows at 100 TB of data, not billions), so the
-  * read-modify-write snapshot is O(catalog), never O(data). `coalesce(1)`
-  * keeps each snapshot a single file; stale snapshots are pruned to a bounded
-  * history window at each commit.
+  * construction (thousands of rows at 100 TB of data, not billions), so
+  * each commit rewrites O(catalog) rows on the driver, never O(data), and
+  * launches no Spark job. Versions past a bounded history window are pruned
+  * at each commit.
   */
 final case class Catalog(spark: SparkSession, root: String) {
+  import Catalog.{Entry, mapper}
 
-  private val dir = s"$root/_catalog"
-  private val currentPtr = new Path(dir, "_CURRENT")
-
-  private def fs: FileSystem =
-    new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+  private val log = new VersionLog(new Path(root, "_catalog"), spark.sparkContext.hadoopConfiguration)
 
   /** Catalog row contract (the reference's dataset-metadata dict,
     * storage.py:51-89 / helpers.py:84-177, as a fixed relational schema).
     */
-  val schema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("name", org.apache.spark.sql.types.StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("layer", org.apache.spark.sql.types.StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("source", org.apache.spark.sql.types.StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("data_type", org.apache.spark.sql.types.StringType, nullable = false),
-      org.apache.spark.sql.types.StructField("ingest_date", org.apache.spark.sql.types.StringType, nullable = true),
-      org.apache.spark.sql.types.StructField("num_rows", org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("num_cols", org.apache.spark.sql.types.IntegerType, nullable = false),
-      org.apache.spark.sql.types.StructField("version", org.apache.spark.sql.types.LongType, nullable = false)))
-
-  private def versionPath(v: Long): Path = new Path(dir, f"v$v%08d")
+  val schema: StructType = StructType(Seq(
+    StructField("name", StringType, nullable = false),
+    StructField("layer", StringType, nullable = false),
+    StructField("source", StringType, nullable = false),
+    StructField("data_type", StringType, nullable = false),
+    StructField("ingest_date", StringType, nullable = true),
+    StructField("num_rows", LongType, nullable = false),
+    StructField("num_cols", IntegerType, nullable = false),
+    StructField("version", LongType, nullable = false)))
 
   /** The live version number, 0 if the catalog has never committed. */
-  def currentVersion: Long =
-    if (!fs.exists(currentPtr)) 0L
-    else {
-      val in = fs.open(currentPtr)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.stripPrefix("v").toLong
-      finally in.close()
-    }
+  def currentVersion: Long = log.currentVersion
 
   /** The catalog table at the live version (empty frame with the full schema
     * when no commit exists yet — mirrors Lake.read's missing-path contract).
     */
-  def entries: DataFrame = {
-    val v = currentVersion
-    if (v == 0L)
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.schema(schema).parquet(versionPath(v).toString)
-  }
+  def entries: DataFrame = frame(rows(currentVersion))
 
-  /** Time travel: the catalog table as of snapshot `v` (1-based commit
-    * numbers; throws if the snapshot has been pruned past [[historyWindow]]
-    * or never existed). Snapshots are immutable — this is a plain read.
+  /** Time travel: the catalog table as of version `v` (1-based commit
+    * numbers; throws if the version has been pruned past [[historyWindow]]
+    * or never existed). Versions are immutable — this is a plain read.
     */
   def entriesAt(v: Long): DataFrame = {
-    val p = versionPath(v)
-    require(fs.exists(p), s"catalog snapshot v$v does not exist (pruned or never committed)")
-    spark.read.schema(schema).parquet(p.toString)
+    require(log.exists(log.versionPath(v)),
+      s"catalog snapshot v$v does not exist (pruned or never committed)")
+    frame(rows(v))
   }
 
   /** Upsert one dataset's metadata row; key is (layer, name). `df` supplies
     * num_rows/num_cols; `ingestDate` defaults to the trailing `_YYYYMMDD`
     * filename token when present (helpers.py:96-98 convention), else null.
+    * Counting `df` is the one Spark job, run before the commit lock: its
+    * partitions' row counts summed on the driver. `Dataset.count()` plans a
+    * global aggregate, which adaptive execution runs as two jobs (the
+    * partial-count shuffle stage, then the final one).
     */
   def register(layer: String, name: String, df: DataFrame,
       ingestDate: Option[String] = None): Long = {
-    val stem = name.stripSuffix(".parquet")
-    val parts = stem.split('_')
-    val date = ingestDate.orElse(
-      parts.lastOption.filter(t => t.length == 8 && t.forall(_.isDigit)))
+    val n = Lake.DatasetName(name)
+    val numRows = df.select().rdd.count()
     commit { (cur, next) =>
-      val kept = cur.filter(!(col("layer") === layer && col("name") === stem))
-      val row = spark.createDataFrame(
-        java.util.Collections.singletonList(org.apache.spark.sql.Row(
-          stem, layer,
-          parts.headOption.getOrElse("unknown"),
-          if (parts.length > 1) parts(1) else "unknown",
-          date.orNull, df.count(), df.columns.length,
-          next)), schema)
-      kept.unionByName(row)
+      cur.filterNot(e => e.layer == layer && e.name == n.stem) :+ Entry(n.stem, layer,
+        n.source, n.dataType, ingestDate.orElse(n.date), numRows, df.columns.length, next)
     }
   }
 
   /** Drop a dataset's metadata row; returns the new version (an unchanged
-    * table still commits a new snapshot — the version is the edit count, as
+    * table still commits a new version — the version is the edit count, as
     * in a log).
     */
-  def unregister(layer: String, name: String): Long =
-    commit((cur, _) =>
-      cur.filter(!(col("layer") === layer && col("name") === name.stripSuffix(".parquet"))))
+  def unregister(layer: String, name: String): Long = {
+    val stem = Lake.DatasetName(name).stem
+    commit((cur, _) => cur.filterNot(e => e.layer == layer && e.name == stem))
+  }
 
   /** Latest dataset name for (source, data_type) in a layer by ingest_date —
     * the metadata-table answer to Lake.latest's filename scan
     * (storage.py:158-170).
     */
-  def latestName(layer: String, source: String, dataType: String): Option[String] = {
-    val r = entries
-      .filter(col("layer") === layer && col("source") === source &&
-        col("data_type") === dataType && col("ingest_date").isNotNull)
-      .orderBy(col("ingest_date").desc, col("name").desc)
-      .select("name").limit(1).collect()
-    r.headOption.map(_.getString(0))
-  }
+  def latestName(layer: String, source: String, dataType: String): Option[String] =
+    rows(currentVersion).collect {
+      case Entry(name, `layer`, `source`, `dataType`, Some(date), _, _, _) => (date, name)
+    }.maxOption.map(_._2)
 
-  /** How many stale snapshots are kept after each commit (time travel /
+  /** How many stale versions are kept after each commit (time travel /
     * concurrent-reader grace window).
     */
   val historyWindow = 8
 
-  private def commit(edit: (DataFrame, Long) => DataFrame): Long =
-    Catalog.rootLock(dir).synchronized {
-    val v = currentVersion
-    val next = v + 1
-    // untouched rows keep the version that registered them (provenance);
-    // `edit` stamps only its new rows with `next`. The snapshot lands in a
-    // writer-private staging dir first — version dirs are only ever created
-    // by a writer that holds the commit claim below.
-    val staging = new Path(dir,
-      f".staging_v$next%08d_p${ProcessHandle.current().pid()}")
-    edit(entries, next)
-      .coalesce(1).write.mode("overwrite").parquet(staging.toString)
-    // optimistic concurrency (the Delta-log protocol in miniature):
-    // create-exclusive of the per-version claim file IS the compare-and-swap
-    // — of two writers racing to commit the same next version, exactly one
-    // create succeeds; the loser aborts with its staging cleaned up and the
-    // table untouched, and retries from the new current version if it wants.
-    val claim = new Path(dir, f"_claim_v$next%08d")
-    val claimed =
-      try { fs.create(claim, false).close(); true }
-      catch { case _: java.io.IOException => false }
-    if (!claimed) {
-      fs.delete(staging, true)
+  private def rows(v: Long): Seq[Entry] =
+    if (v == 0L) Seq.empty
+    else log.lines(log.versionPath(v)).map(mapper.readValue(_, classOf[Entry]))
+
+  private def frame(rows: Seq[Entry]): DataFrame =
+    spark.createDataFrame(rows.map(_.row).asJava, schema)
+
+  /** Untouched rows keep the version that registered them (provenance);
+    * `edit` stamps only its new rows with the committing version. A lost
+    * claim aborts the commit, table untouched; the caller may retry.
+    */
+  private def commit(edit: (Seq[Entry], Long) => Seq[Entry]): Long = log.lock.synchronized {
+    val next = currentVersion + 1
+    val body = edit(rows(next - 1), next).map(mapper.writeValueAsString)
+    if (!log.claim(next) || !log.land(next, body))
       throw new java.util.ConcurrentModificationException(
         s"catalog commit conflict: version $next already claimed by another writer")
+    log.publishPointer(next, "tmp")
+    log.versions.filter(_ < next - historyWindow).foreach { v =>
+      log.delete(log.versionPath(v)); log.delete(log.claimPath(v))
     }
-    fs.rename(staging, versionPath(next))
-    // pointer swap: write-temp + rename is the atomic primitive every
-    // HDFS-like FS guarantees for same-directory renames
-    val tmp = new Path(dir, s"_CURRENT.tmp.${ProcessHandle.current().pid()}")
-    val out = fs.create(tmp, true)
-    try out.write(f"v$next%08d".getBytes("UTF-8")) finally out.close()
-    if (fs.exists(currentPtr)) fs.delete(currentPtr, false)
-    fs.rename(tmp, currentPtr)
-    // bounded history: prune snapshots (and their claims) past the window
-    val floor = next - historyWindow
-    if (floor > 0 && fs.exists(new Path(dir)))
-      fs.listStatus(new Path(dir)).foreach { st =>
-        val n = st.getPath.getName
-        val ver =
-          if (n.startsWith("v") && n.drop(1).forall(_.isDigit)) Some(n.drop(1).toLong)
-          else if (n.startsWith("_claim_v")) Some(n.stripPrefix("_claim_v").toLong)
-          else None
-        if (ver.exists(_ < floor)) fs.delete(st.getPath, true)
-      }
     next
   }
 }
 
 object Catalog {
-  // One commit monitor per catalog root WITHIN this JVM (r11): `synchronized`
-  // on the instance only serializes one Catalog object, but nothing stops two
-  // instances over the same root in one driver — and on LocalFileSystem the
-  // claim create-exclusive is exists-check+create, not atomic, so same-JVM
-  // racers could both pass it. Cross-PROCESS safety remains the claim file's
-  // job (create-exclusive IS atomic on HDFS-like stores, the cluster target).
-  private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def rootLock(dir: String): Object =
-    locks.computeIfAbsent(dir, _ => new Object)
+  /** One catalog row as it is stored: one JSON object per line. */
+  private final case class Entry(name: String, layer: String, source: String,
+      data_type: String, ingest_date: Option[String], num_rows: Long, num_cols: Int,
+      version: Long) {
+    def row: Row = Row(name, layer, source, data_type, ingest_date.orNull, num_rows, num_cols, version)
+  }
+
+  private val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
 }

@@ -2,9 +2,10 @@ package graft.sources
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS
-import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.Footer
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -41,7 +42,9 @@ final case class Lake(spark: SparkSession, root: String) {
     case other => throw new IllegalArgumentException(s"unknown layer '$other'")
   }
 
-  /** `generate_filename` (reference helpers.py:23-28). */
+  /** `generate_filename` (reference helpers.py:23-28); [[Lake.DatasetName]]
+    * reads the convention back.
+    */
   def generateFilename(source: String, dataType: String, date: LocalDate = LocalDate.now()): String =
     s"${source}_${dataType}_${date.format(DateTimeFormatter.BASIC_ISO_DATE)}.parquet"
 
@@ -71,7 +74,8 @@ final case class Lake(spark: SparkSession, root: String) {
       .minByOption(_.getPath.toString)
     dataFile match {
       case Some(st) =>
-        val footer = ParquetFileReader.readFooter(spark.sessionState.newHadoopConf(), st, SKIP_ROW_GROUPS)
+        val footer = ParquetFooterReader.readFooter(
+          HadoopInputFile.fromStatus(st, spark.sessionState.newHadoopConf()), SKIP_ROW_GROUPS)
         val schema = ParquetFileFormat.readSchemaFromFooter(new Footer(st.getPath, footer),
           new ParquetToSparkSchemaConverter(spark.sessionState.conf))
         spark.read.schema(schema).parquet(p.toString)
@@ -150,7 +154,7 @@ final case class Lake(spark: SparkSession, root: String) {
   def latest(layer: String, source: String, dataType: String): Option[DataFrame] = {
     val names = find(layer, source, dataType)
     if (names.isEmpty) None
-    else Some(read(layer, names.maxBy(_.split('_').last)))
+    else Some(read(layer, names.maxBy(Lake.DatasetName(_).lastToken)))
   }
 
   /** S17 dataset delete (reference storage.py:172-196). */
@@ -170,13 +174,12 @@ final case class Lake(spark: SparkSession, root: String) {
   def info(layer: String, dataset: String): Map[String, Any] = {
     val df = read(layer, dataset)
     if (df.schema.isEmpty) return Map("name" -> dataset, "exists" -> false)
-    val nameParts = dataset.stripSuffix(".parquet").split('_')
+    val name = Lake.DatasetName(dataset)
     val dateCol = df.columns.find(c => Seq("timestamp", "date", "time", "datetime").contains(c.toLowerCase))
     val r = df.agg(count(lit(1)), dateCol.toSeq.flatMap(dc => Seq(min(col(dc)), max(col(dc)))): _*).head()
     val base = Map[String, Any](
       "name" -> dataset, "exists" -> true,
-      "source" -> nameParts.headOption.getOrElse("unknown"),
-      "data_type" -> (if (nameParts.length > 1) nameParts(1) else "unknown"),
+      "source" -> name.source, "data_type" -> name.dataType,
       "num_rows" -> r.getLong(0), "columns" -> df.columns.toSeq)
     val dates = if (dateCol.isEmpty) Map.empty[String, Any]
       else Map("start_date" -> r.get(1), "end_date" -> r.get(2))
@@ -246,4 +249,21 @@ final case class Lake(spark: SparkSession, root: String) {
 
   private def withExt(dataset: String): String =
     if (dataset.endsWith(".parquet")) dataset else s"$dataset.parquet"
+}
+
+object Lake {
+
+  /** A dataset name read by the [[Lake#generateFilename]] convention
+    * `{source}_{data_type}_…_{YYYYMMDD}` (reference helpers.py:23-28,
+    * 96-98): `source` and `dataType` are the first two `_` tokens (`unknown`
+    * when absent), `date` the trailing token when it is eight digits.
+    */
+  final case class DatasetName(dataset: String) {
+    val stem: String = dataset.stripSuffix(".parquet")
+    private val tokens = stem.split('_')
+    def source: String = tokens.headOption.getOrElse("unknown")
+    def dataType: String = if (tokens.length > 1) tokens(1) else "unknown"
+    def lastToken: String = tokens.lastOption.getOrElse("")
+    def date: Option[String] = Some(lastToken).filter(t => t.length == 8 && t.forall(_.isDigit))
+  }
 }

@@ -4,16 +4,14 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Multi-writer DATA-table commits (r13 — the Delta/Iceberg commit protocol
-  * in miniature, composing the two single-sided pieces the lake already had:
-  * [[Catalog]]'s pointer-CAS transaction log for *metadata* and Lake's WAP
-  * for single-writer *data* promotion).
+  * in miniature: Lake's staged landing for the data, a [[VersionLog]] for
+  * the commits, the same log [[Catalog]] commits through).
   *
   * Layout:
   * {{{
   *   root/<table>/data/<uuid>/        immutable parquet batch dirs
-  *   root/<table>/_log/v00000001      commit manifest (text, one per version)
-  *   root/<table>/_log/_claim_vN      create-exclusive commit claim (the CAS)
-  *   root/<table>/_log/_CURRENT       live-version pointer
+  *   root/<table>/_log/               the table's VersionLog: one manifest
+  *                                    per version, claims, the live pointer
   * }}}
   *
   * A manifest records the commit's action, the batch dirs it added/removed,
@@ -25,26 +23,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * Commit protocol (optimistic concurrency):
   *   1. stage data OUTSIDE the lock (parquet write of the new batch);
   *   2. read the current version's file set, apply the edit;
-  *   3. create-exclusive `_claim_v{N+1}` — the compare-and-swap. Exactly one
-  *      of two racing writers creates it; the loser re-reads the winner's
+  *   3. claim version N+1 in the log — the compare-and-swap. Exactly one
+  *      of two racing writers wins it; the loser re-reads the winner's
   *      manifest and checks FILE-SET OVERLAP: if the loser's removed dirs
   *      are untouched by the winner (e.g. two appends, or compactions of
   *      disjoint regions), it REBASES onto the new current and retries; if
   *      they overlap (both rewrote the same batch), it aborts with
   *      `ConcurrentModificationException` — the caller must re-plan against
   *      the new table state, exactly Delta's conflict rule;
-  *   4. manifest lands via write-temp + same-dir rename, then the `_CURRENT`
-  *      pointer swaps the same way (the atomic primitive every HDFS-like
-  *      store guarantees).
+  *   4. the manifest lands (a no-overwrite rename), then the pointer moves
+  *      forward (a one-step replacing rename).
   *
   * Scale: the log is O(commits) tiny text files and each manifest is
   * O(live batch dirs) — metadata-scale, never O(data). Appends stage their
   * parquet fully parallel and only serialize on the (driver-side, O(files))
   * claim/rename section, so N concurrent appenders cost N staging writes +
-  * N tiny rebase loops, not N table rewrites. Same-JVM racers additionally
-  * serialize on a per-root monitor ([[Catalog]]'s r11 lesson: local-FS
-  * create-exclusive is exists+create, not atomic; on HDFS/object stores the
-  * claim file alone carries cross-process safety).
+  * N tiny rebase loops, not N table rewrites.
   *
   * CROSS-PROCESS CONTRACT (r16, stated explicitly): manifests and data dirs
   * are immutable once landed and the pointer only ever moves forward
@@ -67,69 +61,41 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     below the checkpoint (the Delta checkpoint + log-retention move).
   *     [[history]], [[committedTxns]] and [[vacuum]]'s protected set all
   *     become O(tail), invariant in table age.
-  *   - STALE-CLAIM RECONCILIATION: a writer that crashes between creating
-  *     `_claim_v{N+1}` and landing the manifest no longer wedges the table —
-  *     a claim with no manifest after `staleClaimMs` is provably dead and
-  *     any contending writer deletes it and retries (advisor finding; the
-  *     claim-create catch is correspondingly narrowed so only
-  *     already-exists reads as contention — disk-full/permission errors
-  *     surface immediately).
+  *   - STALE-CLAIM RECONCILIATION: a writer that crashes between claiming
+  *     version N+1 and landing its manifest no longer wedges the table — a
+  *     claim with no manifest after `staleClaimMs` is provably dead and any
+  *     contending writer deletes it and retries.
   */
 final case class TxTable(spark: SparkSession, root: String, name: String,
     checkpointInterval: Int = 10, staleClaimMs: Long = 30000L) {
   import TxTable.{Checkpoint, Manifest}
 
   private val dir = s"$root/$name"
-  private val logDir = new Path(dir, "_log")
   private val dataDir = new Path(dir, "data")
-  private val currentPtr = new Path(logDir, "_CURRENT")
+  private val log = new VersionLog(new Path(dir, "_log"), spark.sparkContext.hadoopConfiguration)
 
   private def fs: FileSystem =
     new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  /** FileContext for the ATOMIC overwrite rename (`Options.Rename.OVERWRITE`)
-    * — the old FileSystem.rename path needed delete-then-rename for the
-    * pointer swap, opening a window where readers saw no `_CURRENT` at all
-    * (r13 review finding). FileContext's overwrite rename is the real
-    * same-directory atomic primitive on HDFS-like stores AND local FS.
-    */
-  private def fc: org.apache.hadoop.fs.FileContext =
-    org.apache.hadoop.fs.FileContext.getFileContext(
-      new Path(dir).toUri, spark.sparkContext.hadoopConfiguration)
+  def currentVersion: Long = log.currentVersion
 
-  def currentVersion: Long =
-    if (!fs.exists(currentPtr)) 0L
-    else {
-      val in = fs.open(currentPtr)
-      try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.stripPrefix("v").toLong
-      finally in.close()
-    }
-
-  private def manifestPath(v: Long): Path = new Path(logDir, f"v$v%08d")
-  private def checkpointPath(v: Long): Path = new Path(logDir, f"_ckpt_v$v%08d")
+  private def checkpointPath(v: Long): Path = new Path(log.dir, f"_ckpt_v$v%08d")
 
   /** Versions whose manifest is still on disk, ascending. After
     * [[expireManifests]] this is a contiguous tail ending at
     * [[currentVersion]] (expiry only ever removes below a checkpoint).
     */
-  private def manifestVersions: Seq[Long] =
-    if (!fs.exists(logDir)) Seq.empty
-    else fs.listStatus(logDir).map(_.getPath.getName)
-      .filter(_.matches("v\\d{8}")).map(_.drop(1).toLong).sorted.toSeq
+  private def manifestVersions: Seq[Long] = log.versions
 
   /** The newest checkpoint at or below the current version, if any. One
     * log-dir listing + one small file read — metadata scale.
     */
   def latestCheckpoint: Option[Checkpoint] = {
-    if (!fs.exists(logDir)) return None
-    val vs = fs.listStatus(logDir).map(_.getPath.getName)
+    val vs = log.names
       .filter(_.matches("_ckpt_v\\d{8}")).map(_.stripPrefix("_ckpt_v").toLong)
     val cur = currentVersion
     vs.filter(_ <= cur).sorted.lastOption.map { v =>
-      val in = fs.open(checkpointPath(v))
-      val lines =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-        finally in.close()
+      val lines = log.lines(checkpointPath(v))
       Checkpoint(v,
         lines.filter(_.startsWith("F ")).map(_.drop(2)),
         lines.filter(_.startsWith("T ")).map(_.drop(2)).toSet)
@@ -142,22 +108,19 @@ final case class TxTable(spark: SparkSession, root: String, name: String,
     * (exactly Delta's log-retention + VACUUM contract). The checkpoint
     * carries everything readers of live state need.
     */
-  def expireManifests(): Seq[String] = TxTable.rootLock(dir).synchronized {
+  def expireManifests(): Seq[String] = log.lock.synchronized {
     latestCheckpoint match {
       case None => Seq.empty
       case Some(c) => manifestVersions.filter(_ < c.version).map { v =>
-        val p = manifestPath(v); fs.delete(p, false); p.toString
+        val p = log.versionPath(v); log.delete(p); p.toString
       }
     }
   }
 
   def manifest(v: Long): Manifest = {
-    val p = manifestPath(v)
-    require(fs.exists(p), s"table $name has no manifest v$v")
-    val in = fs.open(p)
-    val lines =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
+    val p = log.versionPath(v)
+    require(log.exists(p), s"table $name has no manifest v$v")
+    val lines = log.lines(p)
     def section(tag: String): Seq[String] =
       lines.filter(_.startsWith(tag + " ")).map(_.drop(tag.length + 1))
     Manifest(v, lines.head.stripPrefix("action="),
@@ -214,7 +177,7 @@ final case class TxTable(spark: SparkSession, root: String, name: String,
     * inside-the-lock token check is O(new commits), not O(all history) per
     * attempt (r13 review finding).
     */
-  def committedTxns: Set[String] = TxTable.rootLock(dir).synchronized {
+  def committedTxns: Set[String] = log.lock.synchronized {
     val v = currentVersion
     val (cachedV, cachedSet) = txnCache
     if (v == cachedV) cachedSet
@@ -276,48 +239,11 @@ final case class TxTable(spark: SparkSession, root: String, name: String,
     staged.toString
   }
 
-  /** MONOTONIC pointer publication (r15 advisor, the medium finding): every
-    * `_CURRENT` swap — main commit path and orphan adoption alike — goes
-    * through here. Without the guard, a writer that paused between its
-    * manifest rename and its pointer swap could resume AFTER a contender has
-    * adopted its manifest and committed further versions, and its
-    * unconditional Rename.OVERWRITE would move the pointer BACKWARD —
-    * readers would see stale versions until a later contender happened to
-    * walk the pointer forward, each walk burning one of the 16 retry
-    * attempts. Two defenses, both metadata-scale:
-    *   1. skip-if-current: re-read the pointer immediately before the
-    *      rename and skip when it already names a version >= `next` (the
-    *      common case after an adoption race — zero extra renames);
-    *   2. post-verify + forward repair: the check-then-rename window is
-    *      still a window, so after OUR rename re-read the pointer against
-    *      the max LANDED manifest (a manifest's rename IS the durable
-    *      commit; the pointer is only publication) and re-publish forward
-    *      if a higher committed version got regressed. The walk terminates
-    *      because versions are finite and each round only ever moves the
-    *      pointer up.
+  /** The log's monotonic pointer publication ([[VersionLog.publishPointer]]),
+    * which the commit path and orphan adoption both go through.
     */
-  private[graft] def publishPointer(next: Long, tag: String): Unit = {
-    var target = next
-    var rounds = 0
-    while (rounds < 64) {
-      rounds += 1
-      if (currentVersion >= target) return
-      val ptrTmp = new Path(logDir, s"_CURRENT.$tag.${ProcessHandle.current().pid()}")
-      val pout = fs.create(ptrTmp, true)
-      try pout.write(f"v$target%08d".getBytes("UTF-8")) finally pout.close()
-      fc.rename(ptrTmp, currentPtr, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-      val maxLanded = manifestVersions.lastOption.getOrElse(target)
-      if (maxLanded <= target || currentVersion >= maxLanded) return
-      target = maxLanded // our overwrite regressed a later commit: repair forward
-    }
-    // 64 lost races in a row means a sustained cross-process commit stream
-    // kept outrunning the repair — the pointer may briefly trail the max
-    // landed manifest until the NEXT commit's publish walks it forward
-    // (every commit path runs this repair). Observable, never silent
-    // (r15 self-review): readers of live state deserve the breadcrumb.
-    System.err.println(s"[txtable] $name: pointer repair gave up after 64 " +
-      s"rounds at v$target — a later commit's publish will complete the walk")
-  }
+  private[graft] def publishPointer(next: Long, tag: String): Unit =
+    log.publishPointer(next, tag)
 
   /** Returns Some(version) on commit, or None when `txn` is set and its
     * token already rides a retained manifest (the idempotent-skip). The
@@ -332,7 +258,7 @@ final case class TxTable(spark: SparkSession, root: String, name: String,
       // contended on so the reconciliation below can inspect ITS claim);
       // Right(None) = txn already committed (idempotent skip);
       // Right(Some(v)) = committed as v
-      val committed: Either[Long, Option[Long]] = TxTable.rootLock(dir).synchronized {
+      val committed: Either[Long, Option[Long]] = log.lock.synchronized {
         val v = currentVersion
         if (txn.exists(t => committedTxns.contains(t))) Right(None)
         else {
@@ -343,58 +269,13 @@ final case class TxTable(spark: SparkSession, root: String, name: String,
               s"table $name commit conflict: batch(es) ${missing.mkString(", ")} " +
                 "no longer live (rewritten or removed by a concurrent commit)")
           val next = v + 1
-          val claim = new Path(logDir, f"_claim_v$next%08d")
-          if (!fs.exists(logDir)) fs.mkdirs(logDir)
-          // r14 advisor: the claim catch is NARROW — only already-exists
-          // reads as CAS-lost. Any other IOException (disk full, permission
-          // denied) is a real failure and must surface, not spin 16 retries
-          // as phantom contention.
-          val claimed =
-            try { fs.create(claim, false).close(); true }
-            catch {
-              case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
-              case _: java.nio.file.FileAlreadyExistsException => false
-              case e: java.io.IOException =>
-                if (fs.exists(claim)) false else throw e
-            }
-          if (claimed) {
-            val files = base.filterNot(remove.toSet) ++ add
-            val body = (s"action=$action" +: (add.map("A " + _) ++
-              remove.map("R " + _) ++ files.map("F " + _) ++
-              txn.map("T " + _).toSeq)).mkString("\n")
-            val tmp = new Path(logDir, s".v$next.tmp.${ProcessHandle.current().pid()}")
-            val out = fs.create(tmp, true)
-            try out.write(body.getBytes("UTF-8")) finally out.close()
-            // paused-writer guard (r14 self-review): if OUR claim vanished
-            // between claim-create and here, a reconciler declared this
-            // writer dead (a GC/IO pause outlasted staleClaimMs) and the
-            // version may already belong to someone else — renaming over
-            // their manifest would be a silent lost update. Treat as
-            // CAS-lost and retry at the next version.
-            if (!fs.exists(claim)) {
-              fs.delete(tmp, false)
-              Left(next)
-            } else {
-            // NO-OVERWRITE rename (r14 self-review): Rename.NONE refuses an
-            // existing destination, so even the residual race (claim
-            // reconciled AND a new winner committed between the exists
-            // check above and this rename) cannot clobber a committed
-            // manifest — the resumed writer fails here and retries. POSIX
-            // rename(2) overwrites; FileContext's NONE option adds the
-            // destination check, shrinking the unsafe window from an
-            // unbounded pause to Hadoop's internal check-then-rename.
-            val renamed =
-              try { fc.rename(tmp, manifestPath(next),
-                org.apache.hadoop.fs.Options.Rename.NONE); true }
-              catch {
-                case _: org.apache.hadoop.fs.FileAlreadyExistsException
-                     | _: java.nio.file.FileAlreadyExistsException =>
-                  fs.delete(tmp, false); false
-              }
-            if (!renamed) Left(next)
-            else {
-            // ATOMIC overwrite rename via the monotonic publisher: readers
-            // either see the old pointer or the new one, never a
+          val files = base.filterNot(remove.toSet) ++ add
+          val body = s"action=$action" +: (add.map("A " + _) ++
+            remove.map("R " + _) ++ files.map("F " + _) ++ txn.map("T " + _).toSeq)
+          // claim (the CAS) then land the manifest; either lost = retry
+          if (!log.claim(next) || !log.land(next, body)) Left(next)
+          else {
+            // readers either see the old pointer or the new one, never a
             // missing-pointer window — and never a BACKWARD move (a paused
             // writer resuming after its manifest was adopted skips the swap)
             publishPointer(next, "tmp")
@@ -409,24 +290,16 @@ final case class TxTable(spark: SparkSession, root: String, name: String,
             // (the caller would retry a committed append and double-write);
             // the next interval simply re-attempts.
             if (checkpointInterval > 0 && next % checkpointInterval == 0) {
-              try {
-                val body = (f"ckpt=v$next%08d" +: (files.map("F " + _) ++
-                  committedTxns.toSeq.sorted.map("T " + _))).mkString("\n")
-                val ctmp = new Path(logDir, s"._ckpt.tmp.${ProcessHandle.current().pid()}")
-                val cout = fs.create(ctmp, true)
-                try cout.write(body.getBytes("UTF-8")) finally cout.close()
-                if (!fs.rename(ctmp, checkpointPath(next)))
-                  throw new java.io.IOException("checkpoint rename failed")
-              } catch {
+              try log.put(checkpointPath(next), f"ckpt=v$next%08d" +: (files.map("F " + _) ++
+                committedTxns.toSeq.sorted.map("T " + _)))
+              catch {
                 case scala.util.control.NonFatal(e) =>
                   System.err.println(
                     s"[txtable] $name: best-effort checkpoint v$next skipped: $e")
               }
             }
             Right(Some(next))
-            }
-            }
-          } else Left(next)
+          }
         }
       }
       committed match {
@@ -440,37 +313,33 @@ final case class TxTable(spark: SparkSession, root: String, name: String,
           if (attempt > 16)
             throw new java.util.ConcurrentModificationException(
               s"table $name commit conflict: claim contention persisted for " +
-                f"$attempt attempts (an orphaned _claim_v$next%08d from a " +
+                s"$attempt attempts (an orphaned ${log.claimPath(next).getName} from a " +
                 "crashed writer reconciles after the stale-claim window)")
           // stale-claim reconciliation (r14 advisor, the medium finding): a
           // writer that died BETWEEN claim-create and manifest-rename leaves
-          // `_claim_v{next}` with no manifest and the pointer parked — every
-          // future commit would contend on next forever, wedging the table
+          // the claim on `next` with no manifest and the pointer parked —
+          // every future commit would contend on next forever, wedging the table
           // with no recovery path. A claim whose manifest never landed
           // within `staleClaimMs` is provably dead (a live winner writes the
           // manifest milliseconds after claiming), so the loser deletes it
           // and retries the CAS. A healthy winner is unaffected: its
           // manifest exists by the time anyone's clock window expires.
-          val staleClaim = new Path(logDir, f"_claim_v$next%08d")
-          val stale = try {
-            fs.exists(staleClaim) && !fs.exists(manifestPath(next)) &&
-              System.currentTimeMillis() -
-                fs.getFileStatus(staleClaim).getModificationTime > staleClaimMs
-          } catch { case _: java.io.FileNotFoundException => false }
-          if (stale) fs.delete(staleClaim, false)
+          val staleClaim = log.claimPath(next)
+          if (!log.exists(log.versionPath(next)) && log.ageMs(staleClaim).exists(_ > staleClaimMs))
+            log.delete(staleClaim)
           // ORPHANED-MANIFEST ADOPTION (r14 self-review, the no-overwrite
           // rename's twin): a writer that crashed between manifest rename
           // and pointer swap leaves a COMPLETE manifest (tmp-then-rename —
-          // the name never maps to a partial file) that Rename.NONE would
-          // now block on forever. The manifest IS the commit's content; any
-          // contender publishes the pointer itself and retries on top. The
-          // swap is idempotent-by-value, so the original writer resuming
-          // and re-swapping (or two adopters racing) is harmless.
-          if (fs.exists(manifestPath(next)) && currentVersion < next) {
-            TxTable.rootLock(dir).synchronized {
+          // the name never maps to a partial file) that the no-overwrite
+          // landing would block on forever. The manifest IS the commit's
+          // content; any contender publishes the pointer itself and retries
+          // on top. The swap is idempotent-by-value, so the original writer
+          // resuming and re-swapping (or two adopters racing) is harmless.
+          if (log.exists(log.versionPath(next)) && currentVersion < next) {
+            log.lock.synchronized {
               // publishPointer re-checks >= next right before the rename and
               // forward-repairs after it, so a cross-process contender racing
-              // this adoption can no longer be regressed (rootLock is
+              // this adoption can no longer be regressed (the lock is
               // JVM-local and cannot fence another process)
               publishPointer(next, "adopt")
             }
@@ -501,9 +370,4 @@ object TxTable {
     * log (the Delta checkpoint move, r14 verdict ask #3).
     */
   final case class Checkpoint(version: Long, files: Seq[String], txns: Set[String])
-
-  // one commit monitor per table dir within this JVM (see Catalog.rootLock)
-  private val locks = new java.util.concurrent.ConcurrentHashMap[String, Object]()
-  private def rootLock(dir: String): Object =
-    locks.computeIfAbsent(dir, _ => new Object)
 }

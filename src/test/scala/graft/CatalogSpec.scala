@@ -1,7 +1,10 @@
 package graft
 
-import graft.sources.Catalog
+import graft.sources.{Catalog, Lake}
 import org.apache.spark.sql.functions._
+
+import java.util.concurrent.atomic.AtomicBoolean
+import scala.jdk.CollectionConverters._
 
 class CatalogSpec extends SparkSpec {
   import spark.implicits._
@@ -145,5 +148,62 @@ class CatalogSpec extends SparkSpec {
     versions.length should be <= cat.historyWindow + 1
     versions.last shouldBe f"v${cat.currentVersion}%08d"
     cat.entries.count() shouldBe (cat.historyWindow + 3).toLong
+  }
+
+  test("commits launch no Spark job: register runs only its frame's count; " +
+       "unregister, entries, entriesAt and latestName run none") {
+    val cat = freshCatalog("jobs")
+    val lake = Lake(spark, cat.root)
+    lake.write(df3, "gold", "av_stock_20240102")
+    val gold = lake.read("gold", "av_stock_20240102") // parquet-backed, as an ingest batch registers
+    withJobCount(cat.register("gold", "av_stock_20240102", gold)) shouldBe ((1L, 1))
+    cat.register("gold", "av_stock_20240103", gold)
+    withJobCount(cat.unregister("gold", "av_stock_20240103")) shouldBe ((3L, 0))
+    withJobCount(cat.entries.collect().length) shouldBe ((1, 0))
+    withJobCount(cat.entriesAt(2L).collect().length) shouldBe ((2, 0))
+    withJobCount(cat.latestName("gold", "av", "stock")) shouldBe
+      ((Some("av_stock_20240102"), 0))
+  }
+
+  test("a register whose frame fails at execution commits nothing and leaves no claim, " +
+       "tmp or staging file") {
+    val cat = freshCatalog("failing")
+    cat.register("silver", "a_x_20240101", df3)
+    val failing = spark.range(10).toDF().filter(
+      when(col("id") === 6L, raise_error(lit("bad row"))).otherwise(lit(true)))
+    an[Exception] should be thrownBy cat.register("silver", "b_x_20240102", failing)
+    cat.currentVersion shouldBe 1L
+    val names = new java.io.File(cat.root, "_catalog").list().toSeq
+    names should not contain "_claim_v00000002"
+    names.filter(n => n.contains("tmp") || n.startsWith(".staging")) shouldBe empty
+    cat.register("silver", "b_x_20240102", df3) shouldBe 2L
+  }
+
+  test("pointer window: a reader polling while 40 registers commit never sees the " +
+       "version go back, nor version 0 or an empty catalog after the first commit") {
+    val cat = freshCatalog("window")
+    val committed = new AtomicBoolean(false)
+    val done = new AtomicBoolean(false)
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val reader = new Thread {
+      override def run(): Unit = {
+        var last = 0L
+        while (!done.get) {
+          val afterFirst = committed.get
+          val v = cat.currentVersion
+          val n = cat.entries.count()
+          if (v < last) seen.add(s"version $v after $last")
+          if (afterFirst && (v == 0L || n == 0L)) seen.add(s"version $v with $n rows")
+          last = v
+        }
+      }
+    }
+    reader.start()
+    try (1 to 40).foreach { i =>
+      Catalog(spark, cat.root).register("bronze", f"d_x_2024$i%04d", df3)
+      committed.set(true)
+    } finally { done.set(true); reader.join(120000) }
+    seen.asScala.toSeq shouldBe empty
+    cat.currentVersion shouldBe 40L
   }
 }

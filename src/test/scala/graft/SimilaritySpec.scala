@@ -160,7 +160,7 @@ class SimilaritySpec extends SparkSpec {
     * d-vs-iterations regime where it would flip (its ≫ d).
     */
   private def pcaTopComponentGram(corpus: DataFrame, vecCol: String,
-      iterations: Int = 3): DataFrame = {
+      iterations: Int): DataFrame = {
     val dec = DecimalType(30, 6)
     val vecs = corpus.select(col(vecCol).cast(ArrayType(DoubleType)).as("v"))
     val muFlat = vecs.select(posexplode(col("v")).as(Seq("dim", "x")))

@@ -526,7 +526,7 @@ class WebSpec extends SparkSpec {
     // chunk boundaries at CHAR positions (a String column cannot carry a
     // mid-codepoint split), sizes declared in OCTETS — multibyte chunks
     // declare more octets than chars, which is what the decoder must count
-    def enc(s: String, pieces: Int = 2): String = {
+    def enc(s: String, pieces: Int): String = {
       val step = math.max(1, s.length / pieces)
       s.grouped(step).map(g =>
         f"${g.getBytes("UTF-8").length}%x" + "\r\n" + g + "\r\n").mkString +
