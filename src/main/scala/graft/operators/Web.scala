@@ -1114,47 +1114,34 @@ object Web {
   // HTTP entity decoding (r17, verdict ask #1)
   // ------------------------------------------------------------------
 
-  /** Whole-stream gzip decode for an HTTP entity body: every member must
-    * decode completely or the body quarantines to None — unlike
-    * [[gunzipWarc]]'s prefix-keeping container read, an entity body is one
-    * document and a partial decode is garbage text, not salvage. Trailing
-    * junk after the final valid member is TOLERATED (the JDK treats a
-    * garbled next-member header as end-of-stream — the lenient behavior
-    * browsers and curl ship for real servers' sloppy tails); corruption
-    * inside a member's DEFLATE data quarantines.
+  /** Whole-stream gzip decode for an HTTP entity body: every member's
+    * octets ([[GzipWalk]]), but only when at least one member decoded and
+    * none was cut short — an entity body is one document, and a partial
+    * decode is garbage text, not salvage ([[gunzipWarc]] keeps prefixes).
+    * A non-gzip tail after a complete member is TOLERATED (browsers and curl
+    * ship that leniency for real servers' sloppy tails).
     */
-  private[graft] def gunzipStrict(bytes: Array[Byte]): Option[Array[Byte]] =
-    try {
-      val in = new java.util.zip.GZIPInputStream(
-        new java.io.ByteArrayInputStream(bytes), 65536)
-      val out = new java.io.ByteArrayOutputStream()
-      val buf = new Array[Byte](65536)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-      Some(out.toByteArray)
-    } catch { case _: java.io.IOException => None }
+  private[graft] def gunzipStrict(bytes: Array[Byte]): Option[Array[Byte]] = {
+    val (octets, whole) = gunzipAll(bytes)
+    if (whole) Some(octets) else None
+  }
 
   /** STRICT deflate decode: zlib-wrapped per RFC 9110 §8.4.1.3, with the
     * raw-DEFLATE fallback every browser ships (a long tail of servers
     * sends `Content-Encoding: deflate` without the zlib wrapper). None on
-    * corruption or trailing junk.
+    * corruption, trailing junk or more than [[MaxInflatedOctets]].
     */
   private[graft] def inflateStrict(bytes: Array[Byte]): Option[Array[Byte]] = {
-    def run(nowrap: Boolean): Option[Array[Byte]] =
+    def run(nowrap: Boolean): Option[Array[Byte]] = {
+      val inf = new java.util.zip.Inflater(nowrap)
       try {
-        val inf = new java.util.zip.Inflater(nowrap)
         inf.setInput(bytes)
         val out = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](65536)
-        while (!inf.finished()) {
-          val n = inf.inflate(buf)
-          if (n == 0 && !inf.finished()) { inf.end(); return None } // needs more input: truncated
-          out.write(buf, 0, n)
-        }
-        val clean = inf.getRemaining == 0
-        inf.end()
-        if (clean) Some(out.toByteArray) else None
-      } catch { case _: java.util.zip.DataFormatException => None }
+        if (inflateInto(inf, new Array[Byte](65536), out, null) && inf.getRemaining == 0)
+          Some(out.toByteArray)
+        else None
+      } finally inf.end()
+    }
     run(false).orElse(run(true))
   }
 
@@ -1536,13 +1523,6 @@ object Web {
       }).toDF("doc_id", "body", "transfer_encoding", "content_encoding", "enc")
   }
 
-  /** One gzip member for a UTF-8 string (fixture builder). */
-  private def gzipMember(s: String): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    val gz = new java.util.zip.GZIPOutputStream(bos)
-    gz.write(s.getBytes("UTF-8")); gz.close(); bos.toByteArray
-  }
-
   /** One length-framed record cut: the record's byte offset in the segment
     * (marker start), its WARC header text, and its content block text —
     * the block cut at EXACTLY `Content-Length` octets, never by marker
@@ -1794,16 +1774,14 @@ object Web {
       }.toDF(idCol, "warc_gz")
   }
 
-  /** Decode a multi-member gzip payload to text — the `.warc.gz` reader.
-    * JDK `GZIPInputStream` reads concatenated members transparently and
-    * treats a garbled next-member HEADER as end-of-stream; a member whose
-    * DEFLATE data is corrupted MID-STREAM throws instead, and the catch
-    * returns the prefix decoded so far (r16 advisor fix — previously the
-    * whole payload was discarded, contradicting the quarantine contract).
-    * Either way a corrupted tail member loses exactly the records behind
-    * it; a payload garbled from byte 0 decodes to the empty string (zero
-    * records). Narrow mapPartitions at scan speed — pair with
-    * [[warcRecords]].
+  /** Decode a multi-member gzip payload to text — the `.warc.gz` reader,
+    * [[gunzipLenient]] per row: a garbled next-member header ends the walk,
+    * and a member whose DEFLATE data corrupts MID-STREAM keeps the prefix
+    * decoded so far (r16 advisor fix — previously the whole payload was
+    * discarded, contradicting the quarantine contract). Either way a
+    * corrupted tail member loses exactly the records behind it; a payload
+    * garbled from byte 0 decodes to the empty string (zero records).
+    * Narrow mapPartitions at scan speed — pair with [[warcRecords]].
     */
   def gunzipWarc(df: DataFrame, idCol: String, gzCol: String): DataFrame = {
     import df.sparkSession.implicits._
@@ -1813,117 +1791,153 @@ object Web {
       .toDF(idCol, "warc")
   }
 
-  /** Lazy iterator over the MEMBERS of a concatenated-gzip payload (r17,
-    * verdict ask #4): parses each member's own header (magic/CM/FLG +
-    * optional FEXTRA/FNAME/FCOMMENT/FHCRC fields), inflates it with a raw
-    * `Inflater`, steps over the 8-byte trailer, and yields that member's
-    * decoded text — peak memory is ONE member, not one file. At real
-    * Common Crawl granularity a `.warc.gz` row is ~1 GiB whose whole-file
-    * decode ([[gunzipWarc]]) materializes gigabytes per task; member-per-
-    * record layout means this walk holds ~one record instead.
-    *
-    * Corruption semantics mirror [[gunzipWarc]] exactly (spec-pinned): a
-    * garbled member HEADER ends the stream (the JDK's treatment of a
-    * non-gzip tail); DEFLATE corruption or truncation mid-member yields
-    * the decoded prefix of THAT member, then ends the stream.
+  /** Most octets one decode inflates: per member in [[gzipMemberOctets]],
+    * per payload in the whole-payload readers, per body in [[inflateStrict]].
+    * 64 MiB clears the largest single document these lanes are specified to
+    * carry (sitemaps.org caps an uncompressed sitemap at 50 MB), while a
+    * decompression bomb (DEFLATE reaches ~1032:1: 64 KiB of zeros claims the
+    * whole cap) stops here instead of growing a task's heap without bound.
     */
-  private[graft] def gzipMemberIterator(bytes: Array[Byte]): Iterator[String] =
-    if (bytes == null) Iterator.empty // NULL payload = zero members
-    else new scala.collection.AbstractIterator[String] {
-      private var off = 0
-      private var nextText: String = null
-      private var finished = false
-      // r19 optimization: one Inflater/CRC32/buffer per PAYLOAD, reset per
-      // member — the old per-member `new Inflater` paid zlib's native init
-      // (plus a fresh 64 KiB buffer) once per RECORD under the
-      // member-per-record layout. reset() restores the exact initial state.
-      private val inf = new java.util.zip.Inflater(true)
-      private val crc = new java.util.zip.CRC32()
-      private val buf = new Array[Byte](65536)
+  private[graft] final val MaxInflatedOctets: Int = 64 << 20
 
-      /** Header walk: returns the DEFLATE data offset, or -1 on a garbled
-        * header (which ends the stream).
-        */
-      private def parseHeader(o: Int): Int = {
-        if (o + 10 > bytes.length) return -1
-        if (bytes(o) != 0x1f.toByte || bytes(o + 1) != 0x8b.toByte ||
-          bytes(o + 2) != 8.toByte) return -1
-        val flg = bytes(o + 3) & 0xff
-        var p = o + 10
-        if ((flg & 4) != 0) { // FEXTRA
-          if (p + 2 > bytes.length) return -1
-          val xlen = (bytes(p) & 0xff) | ((bytes(p + 1) & 0xff) << 8)
-          p += 2 + xlen
-        }
-        if ((flg & 8) != 0) { // FNAME, zero-terminated
-          while (p < bytes.length && bytes(p) != 0) p += 1
-          p += 1
-        }
-        if ((flg & 16) != 0) { // FCOMMENT
-          while (p < bytes.length && bytes(p) != 0) p += 1
-          p += 1
-        }
-        if ((flg & 2) != 0) p += 2 // FHCRC
-        if (p > bytes.length) -1 else p
+  /** The one inflate loop behind every gzip and deflate reader: inflates
+    * `inf`'s input into `out` (and `crc`, when given) until the DEFLATE
+    * stream ends. False when cut short: corrupt data, input that ran out, or
+    * `out` passing [[MaxInflatedOctets]] (the cut keeps exactly the cap).
+    */
+  private def inflateInto(inf: java.util.zip.Inflater, buf: Array[Byte],
+      out: java.io.ByteArrayOutputStream, crc: java.util.zip.CRC32): Boolean =
+    try {
+      while (!inf.finished()) {
+        val room = MaxInflatedOctets - out.size
+        // one octet past the room tells "over the cap" from "ends at it"
+        val n = inf.inflate(buf, 0, math.min(buf.length, room + 1))
+        if (n == 0 && !inf.finished()) return false // input ran out: truncated
+        out.write(buf, 0, math.min(n, room))
+        if (crc != null) crc.update(buf, 0, math.min(n, room))
+        if (n > room) return false
       }
+      true
+    } catch { case _: java.util.zip.DataFormatException => false }
 
-      private def advance(): Unit = {
-        if (finished || nextText != null) return
-        val dataStart = parseHeader(off)
-        // the stream ended (last member read, garbled header or corrupt
-        // member): free zlib's native state now rather than at GC
-        if (dataStart < 0) { finished = true; inf.end(); return }
-        inf.reset(); crc.reset()
-        inf.setInput(bytes, dataStart, bytes.length - dataStart)
-        val out = new java.io.ByteArrayOutputStream()
-        var corrupt = false
-        try {
-          while (!inf.finished() && !corrupt) {
-            val n = inf.inflate(buf)
-            if (n > 0) { out.write(buf, 0, n); crc.update(buf, 0, n) }
-            else if (!inf.finished()) corrupt = true // truncated input
-          }
-        } catch { case _: java.util.zip.DataFormatException => corrupt = true }
-        val consumed = inf.getBytesRead.toInt
-        // trailer CRC32 check — GZIPInputStream parity: a member whose
-        // DEFLATE data is intact but whose checksum lies still poisons
-        // the stream behind it (the member's own bytes are kept, exactly
-        // as the whole-file reader emits them before the throw)
-        val tOff = dataStart + consumed
-        if (!corrupt) {
-          if (tOff + 8 > bytes.length) corrupt = true
-          else {
-            val stored = (bytes(tOff) & 0xffL) | ((bytes(tOff + 1) & 0xffL) << 8) |
-              ((bytes(tOff + 2) & 0xffL) << 16) | ((bytes(tOff + 3) & 0xffL) << 24)
-            if (stored != crc.getValue) corrupt = true
-            // ISIZE trailer check too (r18 advisor fix): GZIPInputStream
-            // verifies BOTH trailer words — a member with a correct CRC but
-            // lying ISIZE ends the whole-file stream, so the member walk
-            // must stop there as well or the two readers diverge on such
-            // input (both keep this member's own decoded bytes)
-            val isize = (bytes(tOff + 4) & 0xffL) | ((bytes(tOff + 5) & 0xffL) << 8) |
-              ((bytes(tOff + 6) & 0xffL) << 16) | ((bytes(tOff + 7) & 0xffL) << 24)
-            if (isize != (out.size.toLong & 0xffffffffL)) corrupt = true
-          }
-        }
-        nextText = new String(out.toByteArray, "UTF-8")
-        if (corrupt) off = bytes.length // prefix kept, stream ends
-        else off = tOff + 8 // skip CRC32 + ISIZE trailer
-      }
+  /** The one gzip decoder: a walk over the members of a concatenated-gzip
+    * payload, one member per `next` (r17, verdict ask #4): the header (magic,
+    * CM = 8, optional FEXTRA/FNAME/FCOMMENT, FHCRC checked against the
+    * header's CRC32), the raw DEFLATE data through [[inflateInto]], then the
+    * CRC32 + ISIZE trailer. The walk ends when:
+    *   - a header is garbled or truncated (before the first member, that is
+    *     zero members; after one, a junk tail);
+    *   - 18 octets or fewer follow a complete member: no member fits in
+    *     fewer than 20, so the tail is junk, left unread as the JDK does;
+    *   - a member is cut short (corrupt or truncated DEFLATE data, a lying
+    *     trailer, or `out` reaching [[MaxInflatedOctets]]): it keeps the
+    *     octets it decoded, and the members behind it are lost.
+    * One `Inflater`, CRC32 and buffer per walk, reset per member (r19); the
+    * `Inflater` is `end()`ed as the walk ends, an exception included.
+    */
+  private final class GzipWalk(bytes: Array[Byte]) {
+    private var off = 0
+    private var ended = bytes == null // NULL payload = zero members
+    private var members = 0
+    private var cutShort = false
+    private var inf: java.util.zip.Inflater = null
+    private val crc = new java.util.zip.CRC32()
+    private val buf = new Array[Byte](65536)
 
-      override def hasNext: Boolean = { advance(); nextText != null }
-      override def next(): String = {
-        advance()
-        if (nextText == null) throw new NoSuchElementException
-        val t = nextText; nextText = null; t
-      }
+    /** True when at least one member decoded and none was cut short. */
+    def whole: Boolean = members > 0 && !cutShort
+
+    /** Inflates the next member into `out`; false once the walk has ended. */
+    def next(out: java.io.ByteArrayOutputStream): Boolean = {
+      var read = false
+      try read = !ended && member(out)
+      finally if (ended || !read) { ended = true; if (inf != null) inf.end() }
+      read
     }
+
+    private def member(out: java.io.ByteArrayOutputStream): Boolean = {
+      val data = if (members > 0 && bytes.length - off <= 18) -1 else header(off)
+      if (data < 0) { ended = true; return false }
+      if (inf == null) inf = new java.util.zip.Inflater(true) else inf.reset()
+      crc.reset()
+      inf.setInput(bytes, data, bytes.length - data)
+      val start = out.size
+      val inflated = inflateInto(inf, buf, out, crc)
+      val t = data + inf.getBytesRead.toInt // the 8-octet trailer
+      members += 1
+      cutShort = !(inflated && t + 8 <= bytes.length &&
+        le32(t) == crc.getValue && le32(t + 4) == out.size - start)
+      ended = cutShort
+      off = t + 8
+      true
+    }
+
+    /** Offset of the member's DEFLATE data; -1 for a garbled or truncated header. */
+    private def header(o: Int): Int = {
+      val n = bytes.length
+      if (o + 10 > n || bytes(o) != 0x1f.toByte || bytes(o + 1) != 0x8b.toByte ||
+        bytes(o + 2) != 8.toByte) return -1
+      val flg = bytes(o + 3) & 0xff
+      var p = o + 10
+      if ((flg & 4) != 0) { // FEXTRA: a 2-octet length, then that many octets
+        if (p + 2 > n) return -1
+        p += 2 + le16(p)
+      }
+      for (f <- Seq(8, 16) if (flg & f) != 0) { // FNAME, FCOMMENT: zero-terminated
+        while (p < n && bytes(p) != 0) p += 1
+        p += 1
+      }
+      if ((flg & 2) != 0) { // FHCRC
+        if (p + 2 > n) return -1
+        crc.reset(); crc.update(bytes, o, p - o)
+        if ((crc.getValue & 0xffff) != le16(p)) return -1
+        p += 2
+      }
+      if (p > n) -1 else p
+    }
+
+    private def le16(p: Int): Int = (bytes(p) & 0xff) | (bytes(p + 1) & 0xff) << 8
+    private def le32(p: Int): Long = le16(p) | le16(p + 2).toLong << 16
+  }
+
+  /** Every member's octets, concatenated (at most [[MaxInflatedOctets]] in
+    * all: the walk fills one `out`), and whether at least one member decoded
+    * and none was cut short.
+    */
+  private[graft] def gunzipAll(bytes: Array[Byte]): (Array[Byte], Boolean) = {
+    val out = new java.io.ByteArrayOutputStream()
+    val walk = new GzipWalk(bytes)
+    while (walk.next(out)) ()
+    (out.toByteArray, walk.whole)
+  }
+
+  /** The lenient decode both text readers share: every member's octets,
+    * decoded as UTF-8 once; a cut-short member keeps its decoded prefix.
+    */
+  private[graft] def gunzipLenient(bytes: Array[Byte]): String =
+    new String(gunzipAll(bytes)._1, "UTF-8")
+
+  /** Each member's decoded octets, lazily ([[GzipWalk]]): peak memory is one
+    * member of at most [[MaxInflatedOctets]]; a cut-short member is yielded
+    * with the octets it decoded, and ends the walk.
+    */
+  private[graft] def gzipMemberOctets(bytes: Array[Byte]): Iterator[Array[Byte]] = {
+    val walk = new GzipWalk(bytes)
+    Iterator.continually(new java.io.ByteArrayOutputStream())
+      .takeWhile(walk.next).map(_.toByteArray)
+  }
+
+  /** [[gzipMemberOctets]] as text, each member decoded as UTF-8. */
+  private[graft] def gzipMemberIterator(bytes: Array[Byte]): Iterator[String] =
+    gzipMemberOctets(bytes).map(new String(_, "UTF-8"))
 
   /** The BOUNDED-MEMORY `.warc.gz` reader (r17, verdict ask #4): one row
     * per decoded MEMBER (1-based `member_idx`, member text) from the lazy
     * per-member walk — peak task memory is one member (one record, under
     * the member-per-record layout [[gzipWarcRecords]] writes) instead of
-    * one file. Record-parse parity with the whole-payload path is gated:
+    * one file: a Common Crawl `.warc.gz` row is ~1 GiB whose whole-payload
+    * decode ([[gunzipWarc]]) materializes gigabytes per task.
+    * Record-parse parity with the whole-payload path is gated:
     * q_warc_gz_members shares q_warc_gz_parse's oracle. Narrow
     * flatMap-of-iterator over mapPartitions — the laziness survives into
     * the task, no per-row materialization of the full file.
@@ -2728,23 +2742,6 @@ object Web {
       .toDF(keyCol, outCol)
   }
 
-  /** The lenient multi-member decode both gunzip readers share: garbled
-    * next-member header = end-of-stream, mid-stream DEFLATE corruption
-    * keeps the decoded prefix.
-    */
-  private def gunzipLenient(bytes: Array[Byte]): String = {
-    if (bytes == null) return "" // NULL payload = zero records (quarantine)
-    val out = new java.io.ByteArrayOutputStream()
-    try {
-      val in = new java.util.zip.GZIPInputStream(
-        new java.io.ByteArrayInputStream(bytes), 65536)
-      val buf = new Array[Byte](65536)
-      var n = in.read(buf)
-      while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-    } catch { case _: java.io.IOException => () /* keep decoded prefix */ }
-    new String(out.toByteArray, "UTF-8")
-  }
-
   /** Serialize each host's sitemap XML as a real `.xml.gz` payload — the
     * form sitemaps.org sites actually publish (the 50 MB/50k-URL limits
     * apply to the UNCOMPRESSED file, so virtually every large site gzips).
@@ -2755,7 +2752,7 @@ object Web {
     import hostsWithXml.sparkSession.implicits._
     hostsWithXml.select(col(hostCol).cast(StringType), col(xmlCol))
       .as[(String, String)]
-      .mapPartitions(_.map { case (h, xml) => (h, gzipMember(xml)) })
+      .mapPartitions(_.map { case (h, xml) => (h, gzipBytes(xml.getBytes("UTF-8"))) })
       .toDF(hostCol, "xml_gz")
   }
 

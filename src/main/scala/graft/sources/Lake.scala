@@ -167,25 +167,32 @@ final case class Lake(spark: SparkSession, root: String) {
     * date column + distinct symbols capped at 50 with an `'...'` sentinel,
     * plus `source`/`data_type` parsed from the underscore-delimited dataset
     * name (helpers.py:96-98; `unknown` when a token is absent).
-    * The row count and the min/max come from one aggregate over a pruned
-    * single-column scan — the reference reads the count and the date column
-    * separately by hand (helpers.py:102-106, 131).
+    * The row count, the min/max and the symbol listing come from one global
+    * aggregate over a pruned scan — the reference reads the count and the
+    * date column separately by hand (helpers.py:102-106, 131). The listing
+    * keeps `distinct().orderBy("symbol")`'s order: a NULL symbol first, then
+    * the distinct set sorted by Spark; the set is collected whole, so its
+    * size is the dataset's symbol universe.
     */
   def info(layer: String, dataset: String): Map[String, Any] = {
     val df = read(layer, dataset)
     if (df.schema.isEmpty) return Map("name" -> dataset, "exists" -> false)
     val name = Lake.DatasetName(dataset)
     val dateCol = df.columns.find(c => Seq("timestamp", "date", "time", "datetime").contains(c.toLowerCase))
-    val r = df.agg(count(lit(1)), dateCol.toSeq.flatMap(dc => Seq(min(col(dc)), max(col(dc)))): _*).head()
+    val hasSymbol = df.columns.contains("symbol")
+    val rest = dateCol.toSeq.flatMap(dc => Seq(min(col(dc)), max(col(dc)))) ++
+      (if (hasSymbol) Seq(slice(array_sort(collect_set(col("symbol"))), 1, 51),
+        count(when(col("symbol").isNull, 1)) > 0) else Nil)
+    val r = df.agg(count(lit(1)), rest: _*).head()
     val base = Map[String, Any](
       "name" -> dataset, "exists" -> true,
       "source" -> name.source, "data_type" -> name.dataType,
       "num_rows" -> r.getLong(0), "columns" -> df.columns.toSeq)
     val dates = if (dateCol.isEmpty) Map.empty[String, Any]
       else Map("start_date" -> r.get(1), "end_date" -> r.get(2))
-    val symbols = if (df.columns.contains("symbol")) {
-      val syms = df.select("symbol").distinct().orderBy("symbol").limit(51)
-        .collect().map(_.getString(0)).toSeq
+    val symbols = if (hasSymbol) {
+      val at = 1 + 2 * dateCol.size
+      val syms = (if (r.getBoolean(at + 1)) Seq(null) else Nil) ++ r.getSeq[String](at)
       Map("symbols" -> (if (syms.length > 50) syms.take(50) :+ "..." else syms))
     } else Map.empty[String, Any]
     base ++ dates ++ symbols

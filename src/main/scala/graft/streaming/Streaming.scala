@@ -277,19 +277,23 @@ object Streaming {
       .join(right.withWatermark(rightTime, watermark), expr(condition))
 
   /** Bronze-landing sink (reference helpers.py:31-46 contract): every
-    * micro-batch appends to the lake path. `AvailableNow` processes the
-    * current backlog then stops — deterministic for tests, incremental in
-    * production.
+    * micro-batch lands as parquet under the lake path through Spark's own
+    * file sink. The sink's `_spark_metadata` log records each batch's files
+    * once, so a batch replayed after a crash between its write and its
+    * commit-log entry is a no-op: candles land exactly once (the idempotent
+    * sink of the Structured Streaming paper's exactly-once argument), and
+    * `spark.read.parquet(outDir)` reads the logged files only. `AvailableNow`
+    * processes the current backlog then stops — deterministic for tests,
+    * incremental in production.
     */
   def toLake(
       candles: DataFrame, outDir: String, checkpointDir: String,
       availableNow: Boolean = true): StreamingQuery = {
     val w = candles.writeStream
+      .format("parquet")
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(outDir)
-      }
+      .option("path", outDir)
     (if (availableNow) w.trigger(Trigger.AvailableNow()) else w.trigger(Trigger.ProcessingTime("10 seconds")))
       .start()
   }

@@ -1301,7 +1301,7 @@ object WebQueries {
         .replace("\n", ""))),
     // REAL .warc.gz round trip (r15): segments serialize as member-per-
     // record multi-member gzip (the Common Crawl layout), decode through
-    // JDK GZIPInputStream's concatenated-member reader, and parse back.
+    // the gzip member walk (`Web.gunzipWarc`), and parse back.
     // TWO corruption arms: a payload garbled from byte 0 yields zero
     // records; a garbled THIRD member (doc_id % 89 == 88) loses ONLY the
     // response record behind it — the truncated-dump behavior a real

@@ -143,6 +143,23 @@ class SourcesSpec extends SparkSpec {
     empty("symbols") shouldBe Seq.empty
   }
 
+  test("Lake.info symbols: a NULL symbol lists first, as distinct().orderBy puts it; " +
+    "more than 50 distinct symbols cut to the first 50 plus '...'") {
+    val lake = Lake(spark, java.nio.file.Files.createTempDirectory("lake").toString)
+    lake.write(Seq[(String, Double)](("MSFT", 1.0), (null, 2.0), ("AAPL", 3.0), (null, 4.0))
+      .toDF("symbol", "close"), "bronze", "nullsym_stock_20240101")
+    lake.info("bronze", "nullsym_stock_20240101")("symbols") shouldBe Seq(null, "AAPL", "MSFT")
+    val many = (0 until 120).map(i => (f"S$i%03d", i.toDouble)).reverse
+    lake.write(many.toDF("symbol", "close"), "bronze", "many_stock_20240101")
+    lake.info("bronze", "many_stock_20240101")("symbols") shouldBe
+      ((0 until 50).map(i => f"S$i%03d") :+ "...")
+    // with a NULL, the cut keeps it first and 49 named symbols
+    lake.write((many :+ ((null: String) -> 0.5)).toDF("symbol", "close"),
+      "bronze", "manynull_stock_20240101")
+    lake.info("bronze", "manynull_stock_20240101")("symbols") shouldBe
+      ((null +: (0 until 49).map(i => f"S$i%03d")) :+ "...")
+  }
+
   test("generateFilename follows {source}_{type}_{YYYYMMDD} (helpers.py:23-28)") {
     val lake = Lake(spark, "/tmp/x")
     lake.generateFilename("alphavantage", "stock", java.time.LocalDate.of(2024, 1, 2)) shouldBe

@@ -411,4 +411,25 @@ class StreamingSpec extends SparkSpec {
     // until later data advances the watermark past its end.
     spark.read.parquet(out).count() shouldBe 2
   }
+
+  test("toLake is exactly-once: a batch replayed after its commit entry is lost " +
+    "lands no candle twice") {
+    val dir = java.nio.file.Files.createTempDirectory("ticks4").toString
+    val out = java.nio.file.Files.createTempDirectory("gold").toString + "/candles"
+    val ckpt = java.nio.file.Files.createTempDirectory("ckpt").toString
+    tickDf.write.mode("overwrite").parquet(dir)
+    def drain(): Unit = Streaming.toLake(
+      Streaming.candles(spark.readStream.schema(tickDf.schema).parquet(dir), watermark = "0 seconds"),
+      out, ckpt).awaitTermination()
+    drain()
+    val landed = spark.read.parquet(out).count()
+    landed shouldBe 2
+    // the crash window: the batch's output is written, its commit entry is not
+    val commits = new java.io.File(ckpt, "commits")
+    val last = commits.list().filter(_.forall(_.isDigit)).maxBy(_.toLong)
+    new java.io.File(commits, last).delete() shouldBe true
+    new java.io.File(commits, s".$last.crc").delete()
+    drain()
+    spark.read.parquet(out).count() shouldBe landed
+  }
 }

@@ -334,6 +334,36 @@ class WebSpec extends SparkSpec {
     val m = Seq(gz("alpha"), gzNamed("beta"), gz("gamma"))
     Web.gzipMemberIterator(m.flatten.toArray).toSeq shouldBe
       Seq("alpha", "beta", "gamma")
+    // FHCRC (FLG bit 2): the low 16 bits of the header's CRC32, checked as
+    // GZIPInputStream checks it — a wrong one garbles that member's header
+    def gzHcrc(s: String, good: Boolean): Array[Byte] = {
+      val plain = gz(s) // FLG = 0: the header is the first 10 octets
+      val hdr = plain.take(10).clone()
+      hdr(3) = (2 | 8).toByte // FHCRC + FNAME
+      val named = hdr ++ "hc.txt".getBytes("US-ASCII") :+ 0.toByte
+      val c = new java.util.zip.CRC32(); c.update(named)
+      val v = c.getValue ^ (if (good) 0 else 1)
+      named ++ Array(v.toByte, (v >> 8).toByte) ++ plain.drop(10)
+    }
+    def jdkStrict(b: Array[Byte]): Option[String] =
+      try {
+        val in = new java.util.zip.GZIPInputStream(new java.io.ByteArrayInputStream(b))
+        try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
+      } catch { case _: java.io.IOException => None }
+    val hcrcOk = Seq(gz("alpha"), gzHcrc("beta", good = true), gz("gamma")).flatten.toArray
+    Web.gzipMemberIterator(hcrcOk).toSeq shouldBe Seq("alpha", "beta", "gamma")
+    Web.gunzipStrict(hcrcOk).map(new String(_, "UTF-8")) shouldBe jdkStrict(hcrcOk)
+    jdkStrict(hcrcOk) shouldBe Some("alphabetagamma")
+    // wrong FHCRC on a later member ends the stream after the members
+    // before it; on the first member nothing decodes
+    val hcrcBad = Seq(gz("alpha"), gzHcrc("beta", good = false), gz("gamma")).flatten.toArray
+    Web.gzipMemberIterator(hcrcBad).toSeq shouldBe Seq("alpha")
+    Web.gunzipStrict(hcrcBad).map(new String(_, "UTF-8")) shouldBe jdkStrict(hcrcBad)
+    jdkStrict(hcrcBad) shouldBe Some("alpha")
+    val hcrcBadFirst = gzHcrc("beta", good = false) ++ gz("gamma")
+    Web.gzipMemberIterator(hcrcBadFirst).toSeq shouldBe Seq.empty
+    Web.gunzipStrict(hcrcBadFirst) shouldBe None
+    jdkStrict(hcrcBadFirst) shouldBe None
     // CRC lie on member 2: its own bytes are kept, members behind it drop
     val lied = m.map(_.clone())
     lied(1)(lied(1).length - 6) = (lied(1)(lied(1).length - 6) ^ 0x7f).toByte
