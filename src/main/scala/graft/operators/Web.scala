@@ -1033,55 +1033,55 @@ object Web {
       when(col("doc_id") % 13 === 3, corrupt).otherwise(body))
   }
 
-  /** Decode one HTTP/1.1 chunked-encoded body: hex size (chunk extensions
-    * after the digits are skipped per RFC 9112), CRLF, exactly `size`
-    * OCTETS, CRLF — until the terminal 0-size chunk (trailers ignored).
-    * Returns None on any framing violation (non-hex size, truncated chunk,
-    * missing CRLF): a malformed body must quarantine, not emit a garbage
-    * prefix as if it were content.
-    */
-  private[graft] def dechunkBytes(bytes: Array[Byte]): Option[(String, Int)] =
-    dechunkBytesRaw(bytes).map { case (b, k) => (new String(b, "UTF-8"), k) }
-
-  /** The byte-level core of [[dechunkBytes]] (r17): chunked framing wraps
-    * ARBITRARY octets — when Transfer-Encoding composes with
-    * Content-Encoding the chunks carry gzip bytes, and a UTF-8 round-trip
-    * here would corrupt them before the entity decode ever ran.
+  /** Decode one HTTP/1.1 chunked-encoded body to its octets and chunk count:
+    * hex size (chunk extensions after the digits are skipped per RFC 9112),
+    * CRLF, exactly `size` OCTETS, CRLF — until the terminal 0-size chunk
+    * (trailers ignored). Returns None on any framing violation (non-hex
+    * size, truncated chunk, missing CRLF): a malformed body must
+    * quarantine, not emit a garbage prefix as if it were content. Octets,
+    * not text: when Transfer-Encoding composes with Content-Encoding the
+    * chunks carry gzip bytes, and a UTF-8 round-trip here would corrupt
+    * them before the entity decode ever ran.
     */
   private[graft] def dechunkBytesRaw(bytes: Array[Byte]): Option[(Array[Byte], Int)] = {
-    val out = new java.io.ByteArrayOutputStream()
-    var i = 0
-    var nChunks = 0
-    while (true) {
+    val crlf = CRLF.getBytes("US-ASCII")
+    def hexVal(b: Byte): Int = b match {
+      case d if d >= '0' && d <= '9' => d - '0'
+      case a if a >= 'a' && a <= 'f' => a - 'a' + 10
+      case a if a >= 'A' && a <= 'F' => a - 'A' + 10
+      case _ => -1
+    }
+    // one size line from `from`: (size, offset past its CRLF), size -1 on a
+    // framing violation
+    def sizeLine(from: Int): (Long, Int) = {
+      var i = from
       var n = 0L
-      var digits = 0
-      def hexVal(b: Byte): Int = b match {
-        case d if d >= '0' && d <= '9' => d - '0'
-        case a if a >= 'a' && a <= 'f' => a - 'a' + 10
-        case a if a >= 'A' && a <= 'F' => a - 'A' + 10
-        case _ => -1
+      while (i < bytes.length && hexVal(bytes(i)) >= 0 && i - from <= 8) {
+        n = n * 16 + hexVal(bytes(i)); i += 1
       }
-      while (i < bytes.length && hexVal(bytes(i)) >= 0 && digits <= 8) {
-        n = n * 16 + hexVal(bytes(i)); i += 1; digits += 1
-      }
-      if (digits == 0 || digits > 8) return None
       // RFC 9112 §7.1.1: anything after the size digits must be a chunk
       // extension, and extensions BEGIN with ';' — a junk byte right after
       // the digits (`5junk\r\n`) is a framing violation, not an extension
       // (r17 advisor fix; previously any byte run to CR was skipped)
-      if (i >= bytes.length || (bytes(i) != ';' && bytes(i) != '\r')) return None
-      while (i < bytes.length && bytes(i) != '\r') i += 1 // chunk extensions
-      if (i + 2 > bytes.length || bytes(i) != '\r' || bytes(i + 1) != '\n') return None
-      i += 2
-      if (n == 0) return Some((out.toByteArray, nChunks))
-      if (i + n + 2 > bytes.length) return None // truncated chunk
-      out.write(bytes, i, n.toInt)
-      i += n.toInt
-      if (bytes(i) != '\r' || bytes(i + 1) != '\n') return None
-      i += 2
-      nChunks += 1
+      if (i == from || i - from > 8 || i >= bytes.length ||
+        (bytes(i) != ';' && bytes(i) != '\r')) (-1L, i)
+      else {
+        while (i < bytes.length && bytes(i) != '\r') i += 1 // chunk extensions
+        if (matchesAt(bytes, crlf, i)) (n, i + 2) else (-1L, i)
+      }
     }
-    None // unreachable
+    val out = new java.io.ByteArrayOutputStream()
+    var nChunks = 0
+    var (n, i) = sizeLine(0)
+    // a data chunk: exactly n octets, then CRLF (n < 2^32, so the Long
+    // bound check keeps n.toInt exact)
+    while (n > 0 && i + n + 2 <= bytes.length && matchesAt(bytes, crlf, i + n.toInt)) {
+      out.write(bytes, i, n.toInt)
+      nChunks += 1
+      val next = sizeLine(i + n.toInt + 2)
+      n = next._1; i = next._2
+    }
+    if (n == 0) Some((out.toByteArray, nChunks)) else None
   }
 
   /** Chunked-transfer decode over a body column (r16): the step between
@@ -1099,9 +1099,9 @@ object Web {
       .mapPartitions(_.map { case (id, body) =>
         // NULL body quarantines like a malformed one (r17 advisor fix —
         // one null row must not NPE the task)
-        val dec = if (body == null) None else dechunkBytes(body.getBytes("UTF-8"))
+        val dec = if (body == null) None else dechunkBytesRaw(body.getBytes("UTF-8"))
         dec match {
-          case Some((txt, k)) => (id, txt, k, true)
+          case Some((b, k)) => (id, new String(b, "UTF-8"), k, true)
           case None => (id, null.asInstanceOf[String], -1, false)
         }
       }).toDF(idCol, "decoded", "__k", "ok")
@@ -1145,13 +1145,6 @@ object Web {
     run(false).orElse(run(true))
   }
 
-  /** Decode one HTTP entity body to its content octets, per the message's
-    * framing headers — Transfer-Encoding is OUTERMOST (RFC 9112: chunked
-    * frames the wire; Content-Encoding describes the entity inside), so
-    * the order is dechunk first, then content-decode. `identity` and
-    * absent pass through; unknown codings quarantine (emitting the encoded
-    * octets as if they were content is the one forbidden outcome).
-    */
   /** Remove ONE coding from the entity octets; None = unknown or corrupt. */
   private def removeCoding(b: Array[Byte], coding: String): Option[Array[Byte]] =
     coding match {
@@ -1161,6 +1154,13 @@ object Web {
       case _ => None
     }
 
+  /** Decode one HTTP entity body to its content octets, per the message's
+    * framing headers — Transfer-Encoding is OUTERMOST (RFC 9112: chunked
+    * frames the wire; Content-Encoding describes the entity inside), so
+    * the order is dechunk first, then content-decode. `identity` and
+    * absent pass through; unknown codings quarantine (emitting the encoded
+    * octets as if they were content is the one forbidden outcome).
+    */
   private[graft] def decodeHttpBodyBytes(body: Array[Byte], te: String,
       ce: String): Option[Array[Byte]] = {
     if (body == null) return None
@@ -1183,15 +1183,19 @@ object Web {
 
   /** HTTP entity decode over a BINARY body column (r17, verdict ask #1):
     * the step between [[warcRecordsBin]]' payload extraction and
-    * [[htmlToText]] — most real crawl responses are `Content-Encoding:
+    * [[decodeCharset]] — most real crawl responses are `Content-Encoding:
     * gzip` (often inside `Transfer-Encoding: chunked`), and without this
     * step those octets reach text extraction as binary garbage. Emits
-    * (id, decoded UTF-8 text, ok); any framing or codec violation
-    * quarantines to NULL/false. Charset-aware decoding of the CONTENT
-    * octets is [[decodeCharset]]'s job — this operator undoes the
-    * transport codings only. Same narrow typed-mapPartitions codec class
-    * as [[dechunk]]/[[gunzipWarc]]: zero shuffle, scan speed, decode
-    * parallelism = task parallelism at 100 TB.
+    * (id, decoded_bin, ok): the content octets stay BINARY, so a
+    * cp1252/Shift_JIS page is not mojibaked before the charset step runs
+    * (a caller that knows its pages are UTF-8 hashes or decodes
+    * `decoded_bin` itself). A NULL body, an unknown coding or any framing
+    * or codec violation quarantines to NULL/false. This operator undoes
+    * the transport codings only. Same narrow typed-mapPartitions codec
+    * class as [[dechunk]]/[[gunzipWarc]]: zero shuffle, scan speed, decode
+    * parallelism = task parallelism. The `te`/`ce` columns are
+    * [[warcRecordsBin]]'s framing headers, NULL on a record whose block
+    * takes no HTTP head split, so such a payload passes through as is.
     */
   def decodeHttpBody(df: DataFrame, idCol: String, bodyCol: String,
       teCol: String, ceCol: String): DataFrame = {
@@ -1200,29 +1204,8 @@ object Web {
         col(teCol).cast(StringType), col(ceCol).cast(StringType))
       .as[(Long, Array[Byte], String, String)]
       .mapPartitions(_.map { case (id, body, te, ce) =>
-        decodeHttpBodyBytes(body, te, ce) match {
-          case Some(b) => (id, new String(b, "UTF-8"), true)
-          case None => (id, null.asInstanceOf[String], false)
-        }
-      }).toDF(idCol, "decoded", "ok")
-  }
-
-  /** [[decodeHttpBody]] keeping the content octets BINARY (r17): the form
-    * that composes with [[decodeCharset]] — transport decode first (this),
-    * charset decode second; stringifying here would bake in UTF-8 and
-    * mojibake every cp1252/Shift_JIS page before the charset step ran.
-    */
-  def decodeHttpBodyBin(df: DataFrame, idCol: String, bodyCol: String,
-      teCol: String, ceCol: String): DataFrame = {
-    import df.sparkSession.implicits._
-    df.select(col(idCol).cast(LongType), col(bodyCol).cast(BinaryType),
-        col(teCol).cast(StringType), col(ceCol).cast(StringType))
-      .as[(Long, Array[Byte], String, String)]
-      .mapPartitions(_.map { case (id, body, te, ce) =>
-        decodeHttpBodyBytes(body, te, ce) match {
-          case Some(b) => (id, b, true)
-          case None => (id, null.asInstanceOf[Array[Byte]], false)
-        }
+        val dec = decodeHttpBodyBytes(body, te, ce)
+        (id, dec.orNull, dec.isDefined)
       }).toDF(idCol, "decoded_bin", "ok")
   }
 
@@ -1524,26 +1507,23 @@ object Web {
   }
 
   /** One length-framed record cut: the record's byte offset in the segment
-    * (marker start), its WARC header text, and its content block text —
-    * the block cut at EXACTLY `Content-Length` octets, never by marker
-    * scan, so payloads containing the literal `WARC/1.0` marker bytes
-    * survive intact.
-    */
-  private[graft] final case class WarcCut(start: Int, hdr: String, block: String)
-
-  /** The byte-offset form of [[WarcCut]] (r17): headers are ASCII and ride
-    * as String; the content block stays [blockStart, blockEnd) offsets so
-    * BINARY payloads (gzip/deflate entity bodies) can be sliced without a
-    * UTF-8 round-trip corrupting them. [[warcCuts]] is a thin view over
-    * this — ONE framing implementation, so the text and binary paths can
-    * never diverge.
+    * (marker start), its WARC header text (ASCII, so it rides as String),
+    * and its content block as [blockStart, blockEnd) offsets — cut at
+    * EXACTLY `Content-Length` octets, never by marker scan, so payloads
+    * containing the literal `WARC/1.0` marker bytes survive intact, and
+    * BINARY payloads (gzip/deflate entity bodies) slice without a UTF-8
+    * round-trip corrupting them.
     */
   private[graft] final case class WarcCutB(start: Int, hdr: String,
       blockStart: Int, blockEnd: Int)
 
-  private def indexOfBytes(hay: Array[Byte], needle: Array[Byte], from: Int): Int = {
+  /** First index of `needle` in `hay` at or after `from` that ends by
+    * `until`, or -1.
+    */
+  private def indexOfBytes(hay: Array[Byte], needle: Array[Byte], from: Int,
+      until: Int): Int = {
     var i = math.max(from, 0)
-    val last = hay.length - needle.length
+    val last = until - needle.length
     while (i <= last) {
       var j = 0
       while (j < needle.length && hay(i + j) == needle(j)) j += 1
@@ -1586,10 +1566,10 @@ object Web {
     // same way, so claim and cut can never diverge)
     val clRe = "(?m)^Content-Length: ([0-9]+)".r
     val out = scala.collection.mutable.ArrayBuffer.empty[WarcCutB]
-    var cur = indexOfBytes(bytes, marker, 0)
+    var cur = indexOfBytes(bytes, marker, 0, bytes.length)
     while (cur >= 0) {
       val hdrStart = cur + marker.length
-      val hdrEnd = indexOfBytes(bytes, sep, hdrStart)
+      val hdrEnd = indexOfBytes(bytes, sep, hdrStart, bytes.length)
       if (hdrEnd < 0) cur = -1 // headerless tail: nothing parseable remains
       else {
         val hdr = new String(bytes, hdrStart, hdrEnd - hdrStart, "UTF-8")
@@ -1609,10 +1589,10 @@ object Web {
             val after = if (matchesAt(bytes, sep, blockEnd))
               blockEnd + sep.length else blockEnd
             cur = if (matchesAt(bytes, marker, after)) after
-              else indexOfBytes(bytes, marker, after)
+              else indexOfBytes(bytes, marker, after, bytes.length)
           case Some(_) => cur = -1 // truncated claim: quarantine, stop
           case None => // no Content-Length: marker-framed fallback
-            val next = indexOfBytes(bytes, marker, blockStart)
+            val next = indexOfBytes(bytes, marker, blockStart, bytes.length)
             val rawEnd = if (next < 0) bytes.length else next
             val blockEnd = if (rawEnd - sep.length >= blockStart &&
               matchesAt(bytes, sep, rawEnd - sep.length))
@@ -1625,10 +1605,6 @@ object Web {
     out.toSeq
   }
 
-  private[graft] def warcCuts(bytes: Array[Byte]): Seq[WarcCut] =
-    warcCutsB(bytes).map(c => WarcCut(c.start, c.hdr,
-      new String(bytes, c.blockStart, c.blockEnd - c.blockStart, "UTF-8")))
-
   /** First `key([^\r\n]+)`-style header-field extraction over a WARC header
     * — the exact indexOf twin of `regexp_extract(hdr, key + "([^\r\n]+)", 1)`
     * (first occurrence of the literal key followed by at least one
@@ -1637,17 +1613,89 @@ object Web {
     * block (r19 optimization; guide §1.2 per-task work).
     */
   private[graft] def hdrField(hdr: String, key: String): String = {
-    var from = 0
-    while (true) {
-      val m = hdr.indexOf(key, from)
-      if (m < 0) return ""
+    var m = hdr.indexOf(key)
+    var value = ""
+    while (m >= 0 && value.isEmpty) {
       val s = m + key.length
       var e = s
       while (e < hdr.length && hdr.charAt(e) != '\r' && hdr.charAt(e) != '\n') e += 1
-      if (e > s) return hdr.substring(s, e)
-      from = m + 1 // key followed immediately by CRLF: regex keeps searching
+      if (e > s) value = hdr.substring(s, e)
+      else m = hdr.indexOf(key, m + 1) // key followed by CRLF: keep searching
     }
-    "" // unreachable
+    value
+  }
+
+  /** One record of [[warcWalk]]: its 1-based ordinal among the segment's
+    * cuts, WARC header, `WARC-Type`, HTTP head ("" when the block takes no
+    * split), the payload's [from, until) octets in the segment, and the
+    * whole block's octet length.
+    */
+  private final case class WarcRec(pos: Int, hdr: String, recType: String,
+      head: String, from: Int, until: Int, blockOctets: Long)
+
+  /** The one record walk behind [[warcRecords]] and [[warcRecordsBin]]:
+    * [[warcCutsB]]'s cuts, minus records without a `WARC-Type` header
+    * (corrupt/undecodable members quarantine), each with its HTTP head split
+    * off by ONE rule — a block that starts `HTTP/1.` and holds a CRLF CRLF
+    * splits at the first one into head and payload; any other block (a
+    * Heritrix `dns:` response, a head-only revisit, a WET conversion) is
+    * all payload with an empty head. The split is found on the octets the
+    * cut already holds, so each payload byte is walked once (r19
+    * optimization). A NULL segment is zero records.
+    */
+  private def warcWalk(seg: Array[Byte]): Iterator[WarcRec] = {
+    val httpMagic = "HTTP/1.".getBytes("US-ASCII")
+    val sep = "\r\n\r\n".getBytes("US-ASCII")
+    if (seg == null) Iterator.empty
+    else warcCutsB(seg).iterator.zipWithIndex.flatMap { case (c, i) =>
+      val recType = hdrField(c.hdr, "WARC-Type: ")
+      if (recType.isEmpty) None
+      else {
+        // the magic holds no CR, so a separator found inside the block
+        // lies past it: the whole head is inside the block
+        val at = if (matchesAt(seg, httpMagic, c.blockStart))
+          indexOfBytes(seg, sep, c.blockStart, c.blockEnd) else -1
+        val head = if (at < 0) ""
+          else new String(seg, c.blockStart, at - c.blockStart, "UTF-8")
+        Some(WarcRec(i + 1, c.hdr, recType, head,
+          if (at < 0) c.blockStart else at + sep.length, c.blockEnd,
+          (c.blockEnd - c.blockStart).toLong))
+      }
+    }
+  }
+
+  /** The header columns both record readers share, from the walk's WARC
+    * header (`__hdr`) and HTTP head (`__http`). Every field is NULL or ""
+    * when absent, never an error: `content_length` only when the claim is
+    * 1–18 digits, `http_status` only when the head's status line parses
+    * (`HTTP/1.0` or `HTTP/1.1`, a space, three digits), and the HTTP fields
+    * only on a record with a head.
+    */
+  private def warcFields(recs: DataFrame, idCol: String, payloadCol: String): DataFrame = {
+    def hdr(re: String) = regexp_extract(col("__hdr"), re, 1)
+    def head(re: String) = regexp_extract(col("__http"), re, 1)
+    def headField(re: String) = nullif(head(re), lit(""))
+    val claim = hdr("(?m)^Content-Length: ([0-9]+)")
+    val status = head("^HTTP/1\\.[01] ([0-9]{3})")
+    recs.select(col(idCol), col("rec_pos"), col("rec_type"),
+      hdr("WARC-Target-URI: ([^\r\n]+)").as("target_uri"),
+      hdr("WARC-Date: ([^\r\n]+)").as("warc_date"),
+      when(length(claim).between(1, 18), claim.cast(LongType)).as("content_length"),
+      col("block_octets"),
+      when(status =!= "", status.cast(IntegerType)).as("http_status"),
+      when(col("__http") =!= "", head("Content-Type: ([^;\r\n]+)")).as("mime"),
+      // the FULL header value (parameters kept) — [[decodeCharset]] keys
+      // on the charset parameter `mime` deliberately drops
+      headField("(?m)^Content-Type: ([^\r\n]+)").as("content_type_full"),
+      // the redirect edge the chain resolver follows
+      headField("Location: ([^\r\n]+)").as("http_location"),
+      headField("(?m)^Transfer-Encoding: ([^\r\n]+)").as("transfer_encoding"),
+      headField("(?m)^Content-Encoding: ([^\r\n]+)").as("content_encoding"),
+      // revisit records: the refers-to edge and payload digest are the
+      // container-level exact-dup signal
+      nullif(hdr("WARC-Refers-To: <([^>]+)>"), lit("")).as("refers_to"),
+      nullif(hdr("WARC-Payload-Digest: ([^\r\n]+)"), lit("")).as("payload_digest"),
+      col(payloadCol))
   }
 
   /** Member byte bounds for `.warc.gz` serialization: the segment's UTF-8
@@ -1952,125 +2000,70 @@ object Web {
   }
 
   /** Parse WARC segments into one row per record, LENGTH-FRAMED (r16): the
-    * byte walk ([[warcCuts]]) frames each record by its header's
-    * `Content-Length` octet claim — the WARC contract — with the marker
-    * scan demoted to the resync path, so a response payload that QUOTES
-    * the `WARC/1.0` marker bytes (a crawled mirror of a WARC file, a page
-    * citing WARC text — guaranteed at Common Crawl scale) rides through as
-    * payload instead of shattering into phantom records. Per record the
-    * named WARC headers extract, and `response` records additionally split
-    * the HTTP head from the payload body (status from the status line,
-    * mime from the HTTP Content-Type with its parameters dropped). Records
-    * without a `WARC-Type` header (corrupt/undecodable members) are
-    * dropped — a crawl dump's broken member must quarantine, not emit
-    * garbage rows.
+    * record walk ([[warcWalk]] over [[warcCutsB]]) frames each record by
+    * its header's `Content-Length` octet claim — the WARC contract — with
+    * the marker scan demoted to the resync path, so a response payload that
+    * QUOTES the `WARC/1.0` marker bytes (a crawled mirror of a WARC file, a
+    * page citing WARC text — guaranteed at Common Crawl scale) rides
+    * through as payload instead of shattering into phantom records.
     *
-    * Spark shape: a narrow typed mapPartitions walk (byte-exact codec
-    * work, the [[gunzipWarc]] class) emits (id, rec_pos, header, block);
+    * The text view of [[warcRecordsBin]]: the same walk over the segment's
+    * UTF-8 octets, the payload decoded as UTF-8 in the same typed pass, and
+    * the same header columns. One head-split rule for every record type: a
+    * block that starts `HTTP/1.` and holds a CRLF CRLF splits into HTTP
+    * head and payload; any other block is all payload and gets NULL status,
+    * mime and HTTP fields (so a head-only or non-HTTP block drops out of
+    * every `http_status === 200` filter). Hostile input never fails the
+    * query: a NULL segment and records without a `WARC-Type` header
+    * (corrupt/undecodable members) yield zero rows, and a status line that
+    * does not parse gives a NULL `http_status`.
+    *
+    * Spark shape: a narrow typed mapPartitions walk (byte-exact codec work,
+    * the [[gunzipWarc]] class) emits (id, rec_pos, header, head, payload);
     * every field extraction after it is a PER-ROW codegen'd string
-    * expression. At 100 TB this rides `binaryFile`/text scans at input
-    * speed: one segment per task row, no shuffle anywhere — record
-    * extraction is embarrassingly parallel and the downstream pipeline
+    * expression, and fields a consumer does not select are pruned. One
+    * segment per task row, no shuffle anywhere — record extraction is
+    * embarrassingly parallel and the downstream pipeline
     * (HTML→text→quality→dedup) decides what shuffles.
     *
-    * Emits: rec_pos (1-based record ordinal within the segment), rec_type,
-    * target_uri, warc_date, content_length (the header's claim),
+    * Emits: doc_id, rec_pos (1-based record ordinal within the segment),
+    * rec_type, target_uri, warc_date, content_length (the header's claim),
     * block_octets (the PARSED block's actual octet length — equal by
     * construction whenever the claim framed the cut; they diverge only on
-    * the claim-less fallback path), http_status, mime, payload.
+    * the claim-less fallback path), http_status, mime (parameters dropped),
+    * content_type_full, http_location, transfer_encoding, content_encoding,
+    * refers_to, payload_digest, payload.
     */
   def warcRecords(df: DataFrame, segCol: String): DataFrame = {
     import df.sparkSession.implicits._
-    val sep = "\r\n\r\n".getBytes("US-ASCII")
-    df.select(col("doc_id").cast(LongType), col(segCol).cast(StringType))
+    warcFields(df.select(col("doc_id").cast(LongType), col(segCol).cast(StringType))
       .as[(Long, String)]
       .mapPartitions(_.flatMap { case (id, seg) =>
-        // r19 optimization (guide §1.2, the engine's hottest per-byte loop):
-        // the head/body split and the WARC-Type extraction happen INSIDE
-        // the walk, on the byte offsets warcCutsB already holds — the old
-        // shape decoded the whole block to a String and re-scanned it with
-        // substring_index + substr (≈2 extra passes over payload bytes per
-        // record). Equivalence: the delimiter and every escape trigger are
-        // ASCII, UTF-8 multi-byte bytes are ≥ 0x80, so a byte-level first
-        // \r\n\r\n is the decoded string's first occurrence; slicing at it
-        // and decoding the halves equals decoding then splitting.
-        //   head  = substring_index(block, CRLFCRLF, 1)   for responses
-        //   body  = chars after head + 4 (empty when no delimiter)
-        //   non-response rows keep block whole in `payload`, head = ""
-        val bytes = seg.getBytes("UTF-8")
-        warcCutsB(bytes).iterator.zipWithIndex.map { case (c, i) =>
-          val recType = hdrField(c.hdr, "WARC-Type: ")
-          val blockLen = c.blockEnd - c.blockStart
-          if (recType == "response") {
-            val at0 = indexOfBytes(bytes, sep, c.blockStart)
-            val at = if (at0 >= 0 && at0 + sep.length <= c.blockEnd) at0 else -1
-            val head =
-              if (at >= 0) new String(bytes, c.blockStart, at - c.blockStart, "UTF-8")
-              else new String(bytes, c.blockStart, blockLen, "UTF-8")
-            val body =
-              if (at >= 0) new String(bytes, at + sep.length, c.blockEnd - at - sep.length, "UTF-8")
-              else ""
-            (id, i + 1, c.hdr, recType, head, body, blockLen.toLong)
-          } else {
-            val block = new String(bytes, c.blockStart, blockLen, "UTF-8")
-            (id, i + 1, c.hdr, recType, "", block, blockLen.toLong)
-          }
-        }
-      }).toDF("doc_id", "rec_pos", "__hdr", "rec_type", "__httpHdr", "payload",
-        "block_octets")
-      .filter(col("rec_type") =!= "")
-      .withColumn("target_uri",
-        regexp_extract(col("__hdr"), "WARC-Target-URI: ([^\r\n]+)", 1))
-      .withColumn("warc_date",
-        regexp_extract(col("__hdr"), "WARC-Date: ([^\r\n]+)", 1))
-      .withColumn("__clg",
-        regexp_extract(col("__hdr"), "(?m)^Content-Length: ([0-9]+)", 1))
-      // length-bounded like warcCuts' claim parse (r17): a claim-less
-      // fallback record extracts "" and an absurd ≥19-digit claim can't
-      // reach here framed anyway — both land NULL instead of an ANSI
-      // cast failure
-      .withColumn("content_length",
-        when(length(col("__clg")).between(1, 18), col("__clg").cast(LongType)))
-      .drop("__clg")
-      .withColumn("http_status",
-        when(col("rec_type") === "response",
-          regexp_extract(col("__httpHdr"), "^HTTP/1\\.[01] ([0-9]{3})", 1)
-            .cast(IntegerType))
-          .otherwise(lit(null).cast(IntegerType)))
-      .withColumn("mime",
-        when(col("rec_type") === "response",
-          regexp_extract(col("__httpHdr"), "Content-Type: ([^;\r\n]+)", 1))
-          .otherwise(lit(null).cast(StringType)))
-      // redirect consumption (r16, verdict ask #2): the HTTP Location
-      // header becomes an edge the chain resolver follows
-      .withColumn("http_location",
-        when(col("rec_type") === "response",
-          nullif(regexp_extract(col("__httpHdr"), "Location: ([^\r\n]+)", 1),
-            lit(""))).otherwise(lit(null).cast(StringType)))
-      // revisit consumption (r16, verdict ask #8): the refers-to edge and
-      // payload digest are the container-level exact-dup signal
-      .withColumn("refers_to",
-        nullif(regexp_extract(col("__hdr"), "WARC-Refers-To: <([^>]+)>", 1),
-          lit("")))
-      .withColumn("payload_digest",
-        nullif(regexp_extract(col("__hdr"), "WARC-Payload-Digest: ([^\r\n]+)", 1),
-          lit("")))
-      .select(col("doc_id"), col("rec_pos"), col("rec_type"), col("target_uri"),
-        col("warc_date"), col("content_length"), col("block_octets"),
-        col("http_status"), col("mime"), col("http_location"),
-        col("refers_to"), col("payload_digest"), col("payload"))
+        val bytes = if (seg == null) null else seg.getBytes("UTF-8")
+        warcWalk(bytes).map(r => (id, r.pos, r.hdr, r.recType, r.head,
+          new String(bytes, r.from, r.until - r.from, "UTF-8"), r.blockOctets))
+      }).toDF("doc_id", "rec_pos", "__hdr", "rec_type", "__http", "payload",
+        "block_octets"), "doc_id", "payload")
   }
 
-  /** Serialize (doc_id, url, html) as a BINARY WARC response record whose
-    * HTTP entity body carries the transport codings real crawls store
-    * (r17, verdict ask #1): e = doc_id % 5 keys identity / gzip /
-    * chunked∘gzip / deflate / chunked arms (the [[withEncodedHttp]]
-    * family), `doc_id % 23 == 9` plants a corrupt gzip body under a `gzip`
-    * header. Content-Length counts the WIRE octets (head + encoded body) —
-    * the real container contract a text-typed fixture cannot express,
-    * since gzip octets are not valid UTF-8. Narrow mapPartitions; binary
-    * column born distributed.
+  /** [[warcRecords]] over a BINARY segment column (r17): the same record
+    * walk, head-split rule, header columns and quarantines, but the HTTP
+    * entity body stays BYTES end to end (`payload_bin`) — a gzip payload
+    * sliced through a String would corrupt before [[decodeHttpBody]] could
+    * run on the `transfer_encoding` / `content_encoding` headers it keys
+    * on.
     */
+  def warcRecordsBin(df: DataFrame, idCol: String, segCol: String): DataFrame = {
+    import df.sparkSession.implicits._
+    warcFields(df.select(col(idCol).cast(LongType), col(segCol).cast(BinaryType))
+      .as[(Long, Array[Byte])]
+      .mapPartitions(_.flatMap { case (id, seg) =>
+        warcWalk(seg).map(r => (id, r.pos, r.hdr, r.recType, r.head,
+          java.util.Arrays.copyOfRange(seg, r.from, r.until), r.blockOctets))
+      }).toDF(idCol, "rec_pos", "__hdr", "rec_type", "__http", "payload_bin",
+        "block_octets"), idCol, "payload_bin")
+  }
+
   /** The cp1252-only paragraph the charset arm appends — en dash (0x96),
     * é/Ü (latin range), € (0x80, absent from Latin-1): bytes a
     * UTF-8-assuming reader cannot decode, so the arm is vacuous-proof.
@@ -2095,6 +2088,16 @@ object Web {
     out
   }
 
+  /** Serialize (doc_id, url, html) as a BINARY WARC response record whose
+    * HTTP entity body carries the transport codings real crawls store
+    * (r17, verdict ask #1): e = doc_id % 5 keys identity / gzip /
+    * chunked∘gzip / deflate / chunked arms (the [[withEncodedHttp]]
+    * family), `doc_id % 23 == 9` plants a corrupt gzip body under a `gzip`
+    * header. Content-Length counts the WIRE octets (head + encoded body) —
+    * the real container contract a text-typed fixture cannot express,
+    * since gzip octets are not valid UTF-8. Narrow mapPartitions; binary
+    * column born distributed.
+    */
   def withWarcBin(docsWithHtml: DataFrame): DataFrame = {
     import docsWithHtml.sparkSession.implicits._
     docsWithHtml.select(col("doc_id").cast(LongType), col("url"), col("html"))
@@ -2139,77 +2142,6 @@ object Web {
         bos.write((CRLF + CRLF).getBytes("US-ASCII"))
         (id, bos.toByteArray)
       }).toDF("doc_id", "warc_bin")
-  }
-
-  /** [[warcRecords]] over a BINARY segment column (r17): the same
-    * length-framed walk ([[warcCutsB]] — literally the same function, so
-    * the text and binary framings can never diverge), but the HTTP entity
-    * body stays BYTES end to end — a gzip payload sliced through a String
-    * would corrupt before [[decodeHttpBody]] could run. The HTTP head is
-    * ASCII by spec and splits inside the walk (block starting `HTTP/1.`,
-    * cut at the first CRLF CRLF); header-field extraction stays per-row
-    * codegen'd string expressions over the head. Emits the
-    * [[warcRecords]] field set with `payload_bin` (binary) in place of
-    * `payload`, plus the `transfer_encoding` / `content_encoding` framing
-    * headers the entity decode keys on.
-    */
-  def warcRecordsBin(df: DataFrame, idCol: String, segCol: String): DataFrame = {
-    import df.sparkSession.implicits._
-    val httpMagic = "HTTP/1.".getBytes("US-ASCII")
-    val sep = "\r\n\r\n".getBytes("US-ASCII")
-    df.select(col(idCol).cast(LongType), col(segCol).cast(BinaryType))
-      .as[(Long, Array[Byte])]
-      .mapPartitions(_.flatMap { case (id, seg0) =>
-        // NULL segment = zero records (one null row must not kill the task)
-        val seg = if (seg0 == null) Array.emptyByteArray else seg0
-        warcCutsB(seg).iterator.zipWithIndex.map { case (c, i) =>
-          val isHttp = matchesAt(seg, httpMagic, c.blockStart) &&
-            c.blockStart + httpMagic.length <= c.blockEnd
-          val sepAt = if (isHttp) {
-            val at = indexOfBytes(seg, sep, c.blockStart)
-            if (at >= 0 && at + sep.length <= c.blockEnd) at else -1
-          } else -1
-          val head = if (sepAt >= 0)
-            new String(seg, c.blockStart, sepAt - c.blockStart, "UTF-8") else ""
-          val bodyStart = if (sepAt >= 0) sepAt + sep.length else c.blockStart
-          (id, i + 1, c.hdr, head,
-            java.util.Arrays.copyOfRange(seg, bodyStart, c.blockEnd),
-            (c.blockEnd - c.blockStart).toLong)
-        }
-      }).toDF(idCol, "rec_pos", "__hdr", "__http", "payload_bin", "block_octets")
-      .withColumn("rec_type",
-        regexp_extract(col("__hdr"), "WARC-Type: ([^\r\n]+)", 1))
-      .filter(col("rec_type") =!= "")
-      .withColumn("target_uri",
-        regexp_extract(col("__hdr"), "WARC-Target-URI: ([^\r\n]+)", 1))
-      .withColumn("warc_date",
-        regexp_extract(col("__hdr"), "WARC-Date: ([^\r\n]+)", 1))
-      .withColumn("__clg",
-        regexp_extract(col("__hdr"), "(?m)^Content-Length: ([0-9]+)", 1))
-      .withColumn("content_length",
-        when(length(col("__clg")).between(1, 18), col("__clg").cast(LongType)))
-      .withColumn("http_status",
-        when(col("__http") =!= "",
-          regexp_extract(col("__http"), "^HTTP/1\\.[01] ([0-9]{3})", 1)
-            .cast(IntegerType)))
-      .withColumn("mime",
-        when(col("__http") =!= "",
-          regexp_extract(col("__http"), "Content-Type: ([^;\r\n]+)", 1)))
-      // the FULL header value (parameters kept) — [[decodeCharset]] keys
-      // on the charset parameter `mime` deliberately drops
-      .withColumn("content_type_full",
-        when(col("__http") =!= "",
-          nullif(regexp_extract(col("__http"),
-            "(?m)^Content-Type: ([^\r\n]+)", 1), lit(""))))
-      .withColumn("transfer_encoding",
-        when(col("__http") =!= "",
-          nullif(regexp_extract(col("__http"),
-            "(?m)^Transfer-Encoding: ([^\r\n]+)", 1), lit(""))))
-      .withColumn("content_encoding",
-        when(col("__http") =!= "",
-          nullif(regexp_extract(col("__http"),
-            "(?m)^Content-Encoding: ([^\r\n]+)", 1), lit(""))))
-      .drop("__hdr", "__http", "__clg")
   }
 
   // ------------------------------------------------------------------

@@ -928,7 +928,7 @@ object StreamingQueries {
           val dec = W.decodeHttpBody(w, "doc_id", "body",
               "transfer_encoding", "content_encoding")
             .select(col("doc_id"), col("ok"),
-              md5(col("decoded")).as("decoded_md5"))
+              md5(col("decoded_bin")).as("decoded_md5"))
           graft.streaming.Streaming.runToMemory(s, dec, "stream_httpdec",
             org.apache.spark.sql.streaming.OutputMode.Append())
         }

@@ -1404,7 +1404,7 @@ object WebQueries {
             .when(col("doc_id") % 5 === 3, lit("deflate"))
             .otherwise(lit("chunked")))
         .select(col("doc_id"), col("enc"), col("ok"),
-          md5(col("decoded")).as("decoded_md5"))
+          md5(col("decoded_bin")).as("decoded_md5"))
         .orderBy("doc_id")
     },
       // HTTP entity decode: arm labels + ok from the fixture formulas;
@@ -1445,7 +1445,7 @@ object WebQueries {
           col("transfer_encoding"), col("content_encoding"),
           col("content_type_full"))
         .localCheckpoint(false)
-      val trans = W.decodeHttpBodyBin(recs, "doc_id", "payload_bin",
+      val trans = W.decodeHttpBody(recs, "doc_id", "payload_bin",
           "transfer_encoding", "content_encoding")
         .filter(col("ok")).drop("ok")
       val chars = W.decodeCharset(

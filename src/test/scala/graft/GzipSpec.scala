@@ -55,6 +55,15 @@ object GzipSpec {
       }
     }
   }
+
+  /** Each mutation in a third of the cases: a cut, 1-3 bit flips, a junk tail. */
+  val mutationGen: Gen[Mutation] = for {
+    cut <- Gen.frequency(2 -> Gen.const(None), 1 -> Gen.choose(0.0, 1.0).map(Some(_)))
+    nFlips <- Gen.frequency(2 -> Gen.const(0), 1 -> Gen.choose(1, 3))
+    flips <- Gen.listOfN(nFlips, Gen.zip(Gen.choose(0.0, 1.0), Gen.choose(0, 7)))
+    junk <- Gen.frequency(2 -> Gen.const(None),
+      1 -> Gen.zip(Gen.choose(1, 40), Gen.long).map(Some(_)))
+  } yield Mutation(cut, flips, junk)
 }
 
 /** The gzip member walk behind every gzip reader in [[Web]]: a property spec
@@ -125,14 +134,6 @@ class GzipSpec extends SparkSpec {
     comment <- fieldGen
     hcrc <- Gen.oneOf(false, true)
   } yield Member(data, level, extra, name, comment, hcrc)
-
-  private val mutationGen: Gen[Mutation] = for {
-    cut <- Gen.frequency(2 -> Gen.const(None), 1 -> Gen.choose(0.0, 1.0).map(Some(_)))
-    nFlips <- Gen.frequency(2 -> Gen.const(0), 1 -> Gen.choose(1, 3))
-    flips <- Gen.listOfN(nFlips, Gen.zip(Gen.choose(0.0, 1.0), Gen.choose(0, 7)))
-    junk <- Gen.frequency(2 -> Gen.const(None),
-      1 -> Gen.zip(Gen.choose(1, 40), Gen.long).map(Some(_)))
-  } yield Mutation(cut, flips, junk)
 
   private val caseGen: Gen[(List[Member], Mutation)] = for {
     n <- Gen.choose(0, 4)

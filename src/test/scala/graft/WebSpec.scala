@@ -297,7 +297,8 @@ class WebSpec extends SparkSpec {
       "doc_id", "warc_gz"))
     val text = out.head.getString(1)
     // records 1-2 quarantine-survive; the corrupted member loses only itself
-    Web.warcCuts(text.getBytes("UTF-8")).map(_.block) shouldBe Seq("ok_1", "ok_2")
+    val blocks = Seq("ok_1", "ok_2").map(t => (text.indexOf(t), text.indexOf(t) + t.length))
+    Web.warcCutsB(text.getBytes("UTF-8")).map(c => (c.blockStart, c.blockEnd)) shouldBe blocks
   }
 
   test("gzipMemberIterator (r17): per-member walk with FNAME/FEXTRA/FHCRC " +
@@ -392,6 +393,8 @@ class WebSpec extends SparkSpec {
     Web.gzipMemberIterator(null).toSeq shouldBe Seq.empty
     val nullSeg = Seq((1L, null.asInstanceOf[Array[Byte]])).toDF("doc_id", "seg")
     rows(Web.warcRecordsBin(nullSeg, "doc_id", "seg")) shouldBe empty
+    val nullText = Seq((1L, null.asInstanceOf[String])).toDF("doc_id", "seg")
+    rows(Web.warcRecords(nullText, "seg")) shouldBe empty
   }
 
   test("gunzipStr + withSitemapGz (r17): string-keyed gzip round-trip; " +
@@ -607,10 +610,11 @@ class WebSpec extends SparkSpec {
     val seg = "WARC/1.0\r\nWARC-Type: response\r\nContent-Length: 99999999999999999999\r\n\r\nbody\r\n\r\n" +
       "WARC/1.0\r\nWARC-Type: request\r\nContent-Length: 2\r\n\r\nok\r\n\r\n"
     // the absurd claim poisons everything behind it (truncated-claim arm)
-    Web.warcCuts(seg.getBytes("UTF-8")) shouldBe Seq.empty
+    Web.warcCutsB(seg.getBytes("UTF-8")) shouldBe Seq.empty
     // a clean record BEFORE the poisoned one still parses
     val seg2 = "WARC/1.0\r\nWARC-Type: request\r\nContent-Length: 2\r\n\r\nok\r\n\r\n" + seg
-    Web.warcCuts(seg2.getBytes("UTF-8")).map(_.block) shouldBe Seq("ok")
+    Web.warcCutsB(seg2.getBytes("UTF-8")).map(c => (c.blockStart, c.blockEnd)) shouldBe
+      Seq((seg2.indexOf("ok"), seg2.indexOf("ok") + 2))
   }
 
   test("decodeHttpBody (r17): TE-outermost composition, raw-deflate fallback, " +
@@ -651,13 +655,15 @@ class WebSpec extends SparkSpec {
       (8L, midCorrupt, null, "gzip")) // mid-member DEFLATE corruption quarantines
       .toDF("doc_id", "body", "te", "ce")
     val out = rows(Web.decodeHttpBody(rowsIn, "doc_id", "body", "te", "ce")
-      .select("doc_id", "ok", "decoded").orderBy("doc_id"))
+      .select("doc_id", "ok", "decoded_bin").orderBy("doc_id"))
     out.map(r => (r.getLong(0), r.getBoolean(1))) shouldBe
       Seq((1L, true), (2L, true), (3L, true), (4L, true), (5L, false),
         (6L, true), (7L, true), (8L, false))
-    out.take(4).foreach(_.getString(2) shouldBe text)
-    out(5).getString(2) shouldBe text
-    out(6).getString(2) shouldBe text
+    def decoded(r: org.apache.spark.sql.Row) = new String(r.getAs[Array[Byte]](2), "UTF-8")
+    out.take(4).foreach(decoded(_) shouldBe text)
+    decoded(out(5)) shouldBe text
+    decoded(out(6)) shouldBe text
+    assert(out(4).isNullAt(2) && out(7).isNullAt(2))
   }
 
   test("warcRecordsBin (r17): binary parse shares the text walk's framing; " +
@@ -800,10 +806,11 @@ class WebSpec extends SparkSpec {
       (4L, raw, "br, chunked", null)) // unknown member: quarantine
       .toDF("doc_id", "body", "te", "ce")
     val out = rows(Web.decodeHttpBody(rowsIn, "doc_id", "body", "te", "ce")
-      .select("doc_id", "ok", "decoded").orderBy("doc_id"))
+      .select("doc_id", "ok", "decoded_bin").orderBy("doc_id"))
     out.map(r => (r.getLong(0), r.getBoolean(1))) shouldBe
       Seq((1L, true), (2L, true), (3L, true), (4L, false))
-    out.take(3).foreach(_.getString(2) shouldBe "listed codings body")
+    out.take(3).foreach(r =>
+      new String(r.getAs[Array[Byte]](2), "UTF-8") shouldBe "listed codings body")
   }
 
   test("decodeCharset (r17): header beats meta, prescan is bounded to 1 KiB, " +
@@ -1215,9 +1222,9 @@ class WebSpec extends SparkSpec {
     hdrs.map(Web.hdrField(_, "WARC-Type: ")) shouldBe viaRe
   }
 
-  test("warcRecords fused head/body split (r19): response without CRLFCRLF " +
-    "keeps the whole block as head and an EMPTY payload (substring_index " +
-    "semantics); non-response blocks ride whole; multibyte UTF-8 splits exact") {
+  test("warcRecords fused head/body split (r19): only a block that starts " +
+    "HTTP/1. and holds CRLFCRLF splits; a head-only response and non-HTTP " +
+    "blocks ride whole with NULL status; multibyte UTF-8 splits exact") {
     def rec(typ: String, block: String): String =
       "WARC/1.0\r\n" + s"WARC-Type: $typ\r\n" +
         "WARC-Target-URI: http://e.com/x\r\n" +
@@ -1238,8 +1245,9 @@ class WebSpec extends SparkSpec {
     recs(0).getLong(5) shouldBe
       "HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n<p>日本語 ✓</p>"
         .getBytes("UTF-8").length.toLong
-    recs(1).getString(4) shouldBe "" // no CRLFCRLF in block: payload empty
-    recs(1).getInt(2) shouldBe 200   // ...but the head still parses (whole block)
+    // no CRLFCRLF in the block: no split, so no head to take a status from
+    recs(1).getString(4) shouldBe "HTTP/1.1 200 OK\r\nContent-Type: text/html"
+    assert(recs(1).isNullAt(2) && recs(1).isNullAt(3))
     recs(2).getString(4) shouldBe "GET /x HTTP/1.1\r\n\r\nbody-ignored" // whole block
     assert(recs(2).isNullAt(2))
     recs(3).getString(4) shouldBe "quotes WARC/1.0\r\n marker bytes"
