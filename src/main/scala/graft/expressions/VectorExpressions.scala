@@ -204,6 +204,11 @@ object GraftFunctions {
     (new FunctionIdentifier("nfc_normalize"),
       new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
       (args: Seq[Expression]) => NfcNormalize(args(0))),
+    // `SELECT url_canon(url).url_canon, url_canon(url).domain`: the canonical
+    // keys over the committed public-suffix list
+    (new FunctionIdentifier("url_canon"),
+      new ExpressionInfo(classOf[UrlCanon].getName, "url_canon"),
+      (args: Seq[Expression]) => UrlCanon(args(0), graft.operators.Web.pslSuffixes)),
     // `SELECT ewm_fold(collect_list(struct(x)) OVER (... ROWS BETWEEN 2 PRECEDING
     // AND CURRENT ROW), array(1.0D, 0.5D, 0.25D))`
     (new FunctionIdentifier("ewm_fold"),
@@ -268,6 +273,14 @@ object GraftFunctions {
     */
   def nfcNormalize(text: Column): Column =
     GraftColumnBridge.column(NfcNormalize(GraftColumnBridge.expression(text)))
+
+  /** The [[UrlCanon]] struct of a URL over an exact-rule public-suffix list. */
+  def urlCanon(url: Column, pslSuffixes: Seq[String]): Column =
+    GraftColumnBridge.column(UrlCanon(GraftColumnBridge.expression(url), pslSuffixes))
+
+  /** Registrable domain of a lowercased host ([[RegistrableDomain]]). */
+  def registrableDomain(host: Column, pslSuffixes: Seq[String]): Column =
+    GraftColumnBridge.column(RegistrableDomain(GraftColumnBridge.expression(host), pslSuffixes))
 
   /** Greedy longest-match subword segmentation stats `[n_tokens, n_fallback]`
     * for one word against a plan-time vocabulary (the tokenizer APPLY kernel,

@@ -766,28 +766,6 @@ object Queries {
       .limit(k)
   }
 
-  /** [[coPurchasePairs]] as a basket-keyed SELF-JOIN over the distinct
-    * (basket, item) frame — the formulation every SQL engine writes. Same
-    * output; different cost model: one extra exchange (distinct + join +
-    * pair agg vs basket agg + pair agg), but all three stages stay in
-    * whole-stage codegen where the array variant's `collect_set` runs as a
-    * non-codegen ObjectHashAggregate. Which wins is a measured question —
-    * see the copurchase A/B in SCALE.md / BASELINE — and the answer flips
-    * with basket-size distribution: the join's per-basket fan-out is the
-    * same C(size,2), but its shuffle carries every wedge row while the array
-    * variant's carries one row per basket.
-    */
-  def coPurchasePairsJoin(df: DataFrame, basketCol: String, itemCol: String,
-      k: Int): DataFrame = {
-    val items = df.select(col(basketCol).as("__b"), col(itemCol).as("__i")).distinct()
-    items.join(items.select(col("__b"), col("__i").as("__j")), Seq("__b"))
-      .filter(col("__i") < col("__j"))
-      .groupBy(col("__i").as("item_a"), col("__j").as("item_b"))
-      .agg(count(lit(1)).as("n_baskets"))
-      .orderBy(col("n_baskets").desc, col("item_a").asc, col("item_b").asc)
-      .limit(k)
-  }
-
   /** Grouped simple OLS regression y = slope·x + intercept per group — the
     * market-beta query (per-series slope/alpha/R² against a benchmark
     * series), same exact-decimal power-sum machinery as

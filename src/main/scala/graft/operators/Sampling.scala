@@ -52,13 +52,6 @@ object Sampling {
       splits: Seq[(String, Double)] = Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1)): DataFrame =
     df.withColumn(outCol, splitAssign(col(idCol), splits))
 
-  /** Approximate deterministic sample: keep rows whose hash bucket falls
-    * under `fraction`. Narrow; exact-in-expectation per stratum because the
-    * hash is independent of every column.
-    */
-  def hashSample(df: DataFrame, idCol: String, fraction: Double, buckets: Int = 1000): DataFrame =
-    df.filter(hashBucket(col(idCol), buckets) < math.round(fraction * buckets))
-
   /** Deterministic source-mixture resampling: each row is repeated
     * `floor(w) + [u < frac(w)]` times, where `w` is its source's mixture
     * weight and `u = idHash / 2^60` is the row's uniform deviate. Sources

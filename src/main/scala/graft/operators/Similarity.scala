@@ -33,19 +33,6 @@ object Similarity {
   /** Cosine similarity between two float vectors, computed in double. */
   def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
-  /** Random-hyperplane sign signature packed into a long (Charikar 2002):
-    * bit p = sign(v · plane_p), each projection computed by the codegen'd
-    * [[graft.expressions.VectorDot]] kernel against a LITERAL ±1 plane vector
-    * ([[Dedup.hyperplanes]] — deterministic, reproducible cluster-wide and in
-    * the DuckDB oracle). The round-2 version computed this with interpreted
-    * `zip_with`+`aggregate` lambdas per plane — ~6 allocating interpreted
-    * passes per vector; this is one fused primitive loop per plane.
-    */
-  def hyperplaneSignature(v: Column, planes: Int, dim: Int, seed: Long = 42L): Column =
-    Dedup.hyperplanes(planes, dim, seed).zipWithIndex.map { case (p, i) =>
-      when(dot(v, typedLit(p)) >= 0, lit(1L << i)).otherwise(lit(0L))
-    }.reduce(_ + _)
-
   /** Per-group mean-pooled embedding centroids (class prototypes / label
     * centroids): `posexplode` the vector to (group, dim, x) and average per
     * cell with fixed-point-decimal sums — summation-order-independent, so the

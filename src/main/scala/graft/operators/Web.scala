@@ -26,24 +26,21 @@ import org.apache.spark.sql.types._
   *     tokens) — the table a mixture designer reads before setting
   *     per-domain caps.
   *
-  * Scale: [[canonicalize]] is pure codegen'd string expressions — a narrow
-  * projection, zero shuffle, runs at scan speed over 100 TB. The dedup and
-  * the report each add exactly one hash-shuffle on their group key. At the
-  * 100 TB design point the dedup group key would ride as `xxhash64(surt)`
-  * (8 bytes instead of the full string — same clusters, ~n²/2⁶⁴ collision
-  * risk); the gated queries group on the string itself so the DuckDB dual
-  * is exact, and the swap is a one-line projection.
+  * Scale: [[canonicalize]] is one codegen'd kernel call per row
+  * ([[graft.expressions.UrlCanon]]: one parse, no regex or CASE trees in the
+  * plan) — a narrow projection, zero shuffle, runs at scan speed over
+  * 100 TB. The dedup and the report each add exactly one hash-shuffle on
+  * their group key. At the 100 TB design point the dedup group key would
+  * ride as `xxhash64(surt)` (8 bytes instead of the full string — same
+  * clusters, ~n²/2⁶⁴ collision risk); the gated queries group on the string
+  * itself so the DuckDB dual is exact, and the swap is a one-line
+  * projection.
   *
   * No counterpart in the reference (it ingests ticker APIs, not crawls);
   * this is the LLM-pipeline extension surface, same family as Dedup /
   * TextAnalysis.
   */
 object Web {
-
-  /** Query-param keys dropped by canonicalization: the ad/analytics
-    * attribution params that vary per click without changing the page.
-    */
-  val trackingParamRe = "^(utm_[A-Za-z0-9_]*|gclid|fbclid|msclkid)="
 
   /** Multi-label public suffixes recognized by [[registrableDomain]],
     * loaded from the COMMITTED DATA FILE
@@ -65,38 +62,26 @@ object Web {
     * `edu.au` exactly as the PSL algorithm specifies.
     */
   lazy val pslSuffixesLongestFirst: Seq[String] =
-    pslSuffixes.sortBy(s => (-s.count(_ == '.'), s))
+    graft.expressions.UrlCanon.longestFirst(pslSuffixes)
 
   /** Registrable domain of an already-lowercased host: suffix labels + 1
     * for the longest matching listed suffix, else last two labels; hosts of
-    * ≤2 labels pass through unchanged. The list compiles to a generated
-    * longest-first `CASE` chain of codegen'd `EndsWith` tests — still a
-    * pure narrow expression, zero shuffle, scan speed (a broadcast join
-    * would work too but would force the suffix count into the plan's join
-    * cardinality; ~50 string suffix tests per row is cheaper than a
-    * per-label explode at every corpus size). For the FULL ~9,000-rule PSL
-    * (where a CASE chain blows codegen limits) and for wildcard/exception
-    * rule forms, use [[withRegistrableDomain]] — it dispatches to the
-    * broadcast longest-suffix-match join past [[caseChainMaxRules]].
+    * ≤2 labels pass through unchanged. One codegen'd kernel call
+    * ([[graft.expressions.RegistrableDomain]]) scans the committed list in
+    * [[pslSuffixesLongestFirst]] order — the same step that fills
+    * [[canonicalize]]'s `domain`. For the FULL ~9,000-rule PSL and for
+    * wildcard/exception rule forms, use [[withRegistrableDomain]] — it
+    * dispatches to the broadcast longest-suffix-match join past
+    * [[caseChainMaxRules]].
     */
   def registrableDomain(host: Column): Column =
     registrableDomainCase(host, pslSuffixes)
 
-  /** The generated-CASE strategy over an arbitrary EXACT-rule suffix list
-    * (sorted longest-first internally). Right up to ~100 rules; beyond that
-    * the chain exceeds codegen method limits and falls back interpreted —
-    * the join strategy takes over ([[withRegistrableDomain]]).
+  /** The per-row scan strategy over an arbitrary EXACT-rule suffix list
+    * (tried longest-first).
     */
-  def registrableDomainCase(host: Column, suffixes: Seq[String]): Column = {
-    val ordered = suffixes.sortBy(s => (-s.count(_ == '.'), s))
-    val labels = split(host, "\\.")
-    val chain = ordered.foldLeft(when(size(labels) <= 2, host)) {
-      (acc, s) =>
-        val keep = s.count(_ == '.') + 2 // suffix labels + 1 registrable label
-        acc.when(host.endsWith("." + s), array_join(slice(labels, -keep, keep), "."))
-    }
-    chain.otherwise(array_join(slice(labels, -2, 2), "."))
-  }
+  def registrableDomainCase(host: Column, suffixes: Seq[String]): Column =
+    graft.expressions.GraftFunctions.registrableDomain(host, suffixes)
 
   /** One parsed PSL rule. `key` is the literal label suffix the candidate
     * join matches on (a wildcard rule joins on its tail — the labels right
@@ -121,11 +106,11 @@ object Web {
         if (exc) kl - 1 else if (wild) kl + 1 else kl, exc, wild)
     }
 
-  /** The CASE chain is right up to this many rules; beyond it (or whenever
-    * wildcard/exception forms appear, which CASE cannot express) the
-    * broadcast join strategy runs. ~9,000 PSL rules as an EndsWith chain
-    * would blow past the codegen method-size limit and fall back to an
-    * interpreted 9,000-branch CaseWhen per row — the join is one broadcast
+  /** The per-row scan ([[registrableDomainCase]]) takes lists up to this
+    * many rules; beyond it (or whenever wildcard/exception forms appear,
+    * which the scan does not express) the broadcast join strategy runs.
+    * The scan tests every rule against every host, so ~9,000 PSL rules
+    * would cost ~9,000 suffix tests per row — the join is one broadcast
     * hash probe per host label instead.
     */
   val caseChainMaxRules: Int = 100
@@ -139,7 +124,7 @@ object Web {
     * Handles all three PSL rule forms (exact, `*.` wildcard — which
     * requires one extra host label — and `!` exception). Unmatched hosts
     * take the implicit `*` default (last two labels); hosts of ≤2 labels
-    * pass through unchanged, exactly the CASE strategy's contract, so on an
+    * pass through unchanged, exactly the scan strategy's contract, so on an
     * exact-only rule list the two strategies are output-identical (gated:
     * q_psl_join_parity).
     *
@@ -159,8 +144,8 @@ object Web {
         explode(sequence(lit(1), col("__hl"))).as("__keep"))
       .withColumn("__cand",
         array_join(slice(col("__labels"), col("__keep") * -1, col("__keep")), "."))
-    // EXACT rules match only PROPER suffixes (r15 self-review): the CASE
-    // strategy's EndsWith(".suffix") can never match the host itself, so a
+    // EXACT rules match only PROPER suffixes (r15 self-review): the scan
+    // strategy's endsWith(".suffix") can never match the host itself, so a
     // host EQUAL to a listed multi-label rule whose parent suffix is
     // unlisted must fall to the last-2 default under BOTH strategies, or
     // growing a list past caseChainMaxRules would silently change outputs.
@@ -188,7 +173,7 @@ object Web {
   }
 
   /** Strategy dispatch (r15): small exact-only lists (the committed subset)
-    * compile to the codegen'd CASE chain; large lists or lists carrying
+    * take the per-row scan; large lists or lists carrying
     * wildcard/exception rules run the broadcast join. Both strategies are
     * gated output-equal on exact-only lists.
     */
@@ -212,49 +197,31 @@ object Web {
     (0 until 166).flatMap(i => Seq(s"t$i", s"co.t$i", s"org.t$i")) ++
       Seq("*.ck", "!www.ck")
 
-  /** Canonicalization pass: adds `url_canon`, `domain`, `surt` beside the
-    * raw `urlCol`. All columns are built from codegen'd string expressions
-    * (regexp_extract/replace, split, array_sort, higher-order filter) —
-    * no UDF, no shuffle.
+  /** The [[graft.expressions.UrlCanon]] struct of a URL over the committed
+    * PSL: `url_canon`, `domain`, `surt`, and the unguarded `host` and `path`.
     */
-  def canonicalize(df: DataFrame, urlCol: String): DataFrame = {
-    // structural parse (fragment already stripped): scheme://host[:port]path[?query].
-    // r14 advisor hardening: userinfo (`user:pass@host`) strips before
-    // host/port extraction (greedy `^.*@` — RFC 3986: the LAST `@` of the
-    // authority ends userinfo), and URLs whose scheme or host extraction
-    // comes back empty (relative hrefs, mailto:, garbage) canonicalize to
-    // NULL keys instead of collapsing onto one `://…` bucket downstream.
-    val noFrag = regexp_replace(col(urlCol), "#.*", "")
-    val scheme = lower(regexp_extract(noFrag, "^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
-    val hostPort = rawHostPort(noFrag)
-    df.withColumn("__scheme", scheme)
-      .withColumn("__host", normalizedHost(noFrag))
-      .withColumn("__port", regexp_extract(hostPort, ":([0-9]+)$", 1))
-      .withColumn("__path", collapsedPath(noFrag))
-      .withColumn("__qs", sortedQuery(noFrag))
-      .withColumn("__portSfx", {
-        val default = (col("__scheme") === "http" && col("__port") === "80") ||
-          (col("__scheme") === "https" && col("__port") === "443")
-        when(col("__port") =!= "" && !default, concat(lit(":"), col("__port"))).otherwise(lit(""))
-      })
-      .withColumn("__qSfx",
-        when(col("__qs") =!= "", concat(lit("?"), col("__qs"))).otherwise(lit("")))
-      // malformed-URL guard: every canonical key NULLs together, so a
-      // groupBy on any of them sends malformed rows to the null bucket
-      // (inspectable) instead of a shared '://…' collision cluster
-      .withColumn("__bad", col("__scheme") === "" || col("__host") === "")
-      .withColumn("url_canon", when(col("__bad"), lit(null).cast(StringType))
-        .otherwise(concat(col("__scheme"), lit("://"), col("__host"), col("__portSfx"),
-          col("__path"), col("__qSfx"))))
-      .withColumn("domain", when(col("__bad"), lit(null).cast(StringType))
-        .otherwise(registrableDomain(col("__host"))))
+  private def urlParts(url: Column): Column =
+    graft.expressions.GraftFunctions.urlCanon(url, pslSuffixes)
+
+  /** Canonicalization pass: adds `url_canon`, `domain`, `surt` beside the
+    * raw `urlCol`, all three from ONE kernel call per row
+    * ([[graft.expressions.UrlCanon]] documents the rules): lowercase
+    * scheme+host, userinfo (up to the last `@`) and `www.` stripped, default
+    * ports and fragments dropped, tracking params dropped and the rest
+    * sorted, trailing slashes collapsed. A URL whose scheme or host comes
+    * back empty (relative hrefs, `mailto:`, garbage) gets NULL in all three
+    * keys, so a groupBy on any of them sends it to the NULL bucket instead
+    * of a shared `://…` collision cluster. No UDF, no shuffle, and no regex
+    * or CASE tree in the plan.
+    */
+  def canonicalize(df: DataFrame, urlCol: String): DataFrame =
+    df.withColumn("__canon", urlParts(col(urlCol)))
+      .withColumn("url_canon", col("__canon.url_canon"))
+      .withColumn("domain", col("__canon.domain"))
       // SURT: scheme-less, host labels reversed + comma-joined — range
       // partitioning on this key co-locates a domain (and its subdomains)
-      .withColumn("surt", when(col("__bad"), lit(null).cast(StringType))
-        .otherwise(concat(array_join(reverse(split(col("__host"), "\\.")), ","),
-          col("__portSfx"), lit(")"), col("__path"), col("__qSfx"))))
-      .drop("__scheme", "__host", "__port", "__path", "__qs", "__portSfx", "__qSfx", "__bad")
-  }
+      .withColumn("surt", col("__canon.surt"))
+      .drop("__canon")
 
   /** URL-keyed exact dedup on the SURT key: one hash-shuffle on the key,
     * survivor = min id (the Dedup.exact rule). `n_distinct_canon` separates
@@ -1605,22 +1572,25 @@ object Web {
     out.toSeq
   }
 
-  /** First `key([^\r\n]+)`-style header-field extraction over a WARC header
-    * — the exact indexOf twin of `regexp_extract(hdr, key + "([^\r\n]+)", 1)`
-    * (first occurrence of the literal key followed by at least one
-    * non-CRLF char; "" when absent), hoisted into the byte walk so the
-    * record parse can branch on `WARC-Type` without a second pass over the
-    * block (r19 optimization; guide §1.2 per-task work).
+  /** First `(?m)^key([^\r\n]+)`-style header-field extraction over a WARC
+    * header — the exact indexOf twin of
+    * `regexp_extract(hdr, "(?m)^" + key + "([^\r\n]+)", 1)` (first
+    * occurrence of the literal key at the start of a line followed by at
+    * least one non-CRLF char; "" when absent), hoisted into the byte walk so
+    * the record parse can branch on `WARC-Type` without a second pass over
+    * the block (r19 optimization; guide §1.2 per-task work). The line anchor
+    * keeps `X-WARC-Type: ` from answering for `WARC-Type: `.
     */
   private[graft] def hdrField(hdr: String, key: String): String = {
+    def lineStart(i: Int) = i == 0 || "\n\r\u0085\u2028\u2029".indexOf(hdr.charAt(i - 1)) >= 0
     var m = hdr.indexOf(key)
     var value = ""
     while (m >= 0 && value.isEmpty) {
       val s = m + key.length
       var e = s
       while (e < hdr.length && hdr.charAt(e) != '\r' && hdr.charAt(e) != '\n') e += 1
-      if (e > s) value = hdr.substring(s, e)
-      else m = hdr.indexOf(key, m + 1) // key followed by CRLF: keep searching
+      if (e > s && lineStart(m)) value = hdr.substring(s, e)
+      else m = hdr.indexOf(key, m + 1) // no value or mid-line: keep searching
     }
     value
   }
@@ -1669,14 +1639,15 @@ object Web {
     * when absent, never an error: `content_length` only when the claim is
     * 1–18 digits, `http_status` only when the head's status line parses
     * (`HTTP/1.0` or `HTTP/1.1`, a space, three digits), and the HTTP fields
-    * only on a record with a head.
+    * only on a record with a head. Every field name is anchored to the start
+    * of a line, so `Content-Location:` never answers for `Location:`.
     */
   private def warcFields(recs: DataFrame, idCol: String, payloadCol: String): DataFrame = {
-    def hdr(re: String) = regexp_extract(col("__hdr"), re, 1)
-    def head(re: String) = regexp_extract(col("__http"), re, 1)
-    def headField(re: String) = nullif(head(re), lit(""))
-    val claim = hdr("(?m)^Content-Length: ([0-9]+)")
-    val status = head("^HTTP/1\\.[01] ([0-9]{3})")
+    def hdr(field: String) = regexp_extract(col("__hdr"), "(?m)^" + field, 1)
+    def head(field: String) = regexp_extract(col("__http"), "(?m)^" + field, 1)
+    def headField(field: String) = nullif(head(field), lit(""))
+    val claim = hdr("Content-Length: ([0-9]+)")
+    val status = regexp_extract(col("__http"), "^HTTP/1\\.[01] ([0-9]{3})", 1)
     recs.select(col(idCol), col("rec_pos"), col("rec_type"),
       hdr("WARC-Target-URI: ([^\r\n]+)").as("target_uri"),
       hdr("WARC-Date: ([^\r\n]+)").as("warc_date"),
@@ -1686,11 +1657,11 @@ object Web {
       when(col("__http") =!= "", head("Content-Type: ([^;\r\n]+)")).as("mime"),
       // the FULL header value (parameters kept) — [[decodeCharset]] keys
       // on the charset parameter `mime` deliberately drops
-      headField("(?m)^Content-Type: ([^\r\n]+)").as("content_type_full"),
+      headField("Content-Type: ([^\r\n]+)").as("content_type_full"),
       // the redirect edge the chain resolver follows
       headField("Location: ([^\r\n]+)").as("http_location"),
-      headField("(?m)^Transfer-Encoding: ([^\r\n]+)").as("transfer_encoding"),
-      headField("(?m)^Content-Encoding: ([^\r\n]+)").as("content_encoding"),
+      headField("Transfer-Encoding: ([^\r\n]+)").as("transfer_encoding"),
+      headField("Content-Encoding: ([^\r\n]+)").as("content_encoding"),
       // revisit records: the refers-to edge and payload digest are the
       // container-level exact-dup signal
       nullif(hdr("WARC-Refers-To: <([^>]+)>"), lit("")).as("refers_to"),
@@ -2149,74 +2120,22 @@ object Web {
   // ------------------------------------------------------------------
 
   /** Lowercased host of a URL (userinfo and port stripped, `www.` folded)
-    * — the robots-scope key, the SAME chain [[canonicalize]] uses (both
-    * call [[normalizedHost]], so a hardening applied to one can never
-    * silently diverge the robots scope from the canonical-URL host).
+    * — the robots-scope key: the `host` [[canonicalize]] keys on, without
+    * its malformed-URL guard ("" when the URL does not parse).
     */
-  def hostOf(url: Column): Column =
-    normalizedHost(regexp_replace(url, "#.*", ""))
+  def hostOf(url: Column): Column = urlParts(url).getField("host")
 
   /** Path of a URL with trailing slashes collapsed, empty → `/` — the
-    * robots match subject, shared with [[canonicalize]] via
-    * [[collapsedPath]].
+    * robots match subject, the same path [[canonicalize]] keys on.
     */
-  def pathOf(url: Column): Column =
-    collapsedPath(regexp_replace(url, "#.*", ""))
+  def pathOf(url: Column): Column = urlParts(url).getField("path")
 
-  /** userinfo-stripped, lowercased `host[:port]` of a fragment-free URL —
-    * the single definition both [[canonicalize]] and [[hostOf]] build on
-    * (greedy `^.*@`: RFC 3986, the LAST `@` of the authority ends
-    * userinfo).
+  /** The canonical-URL key as a single column EXPRESSION (r16) — the
+    * `url_canon` [[canonicalize]] lands, NULL on a malformed URL, for call
+    * sites that need a canonical key over a second URL column in the same
+    * frame (redirect edges canonicalize BOTH endpoints).
     */
-  private def rawHostPort(noFrag: Column): Column = regexp_replace(
-    lower(regexp_extract(noFrag, "^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)", 1)),
-    "^.*@", "")
-
-  /** Port and `www.` stripped from [[rawHostPort]]. */
-  private def normalizedHost(noFrag: Column): Column =
-    regexp_replace(regexp_replace(rawHostPort(noFrag), ":[0-9]+$", ""),
-      "^www\\.", "")
-
-  /** Path of a fragment-free URL, trailing slashes collapsed, empty → `/`. */
-  private def collapsedPath(noFrag: Column): Column = {
-    val rawPath =
-      regexp_extract(noFrag, "^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]+([^?#]*)", 1)
-    val p1 = regexp_replace(rawPath, "/+$", "")
-    when(p1 === "", lit("/")).otherwise(p1)
-  }
-
-  /** Query string with empties + tracking params dropped and the surviving
-    * `k=v` strings sorted (key-then-value order stability) — the query
-    * half of the canonical key, shared by [[canonicalize]] and
-    * [[urlCanonOf]].
-    */
-  private def sortedQuery(noFrag: Column): Column = {
-    val rawQuery = regexp_extract(noFrag, "\\?([^#]*)", 1)
-    val params = filter(split(rawQuery, "&"),
-      (p: Column) => p =!= "" && !p.rlike(trackingParamRe))
-    array_join(array_sort(params), "&")
-  }
-
-  /** The canonical-URL key as a single column EXPRESSION (r16) — the same
-    * normalization [[canonicalize]] lands in `url_canon` (same shared
-    * [[rawHostPort]]/[[normalizedHost]]/[[collapsedPath]]/[[sortedQuery]]
-    * pieces, same NULL-on-malformed guard), for call sites that need a
-    * canonical key over a second URL column in the same frame (redirect
-    * edges canonicalize BOTH endpoints).
-    */
-  def urlCanonOf(url: Column): Column = {
-    val noFrag = regexp_replace(url, "#.*", "")
-    val scheme = lower(regexp_extract(noFrag, "^([A-Za-z][A-Za-z0-9+.-]*)://", 1))
-    val host = normalizedHost(noFrag)
-    val port = regexp_extract(rawHostPort(noFrag), ":([0-9]+)$", 1)
-    val qs = sortedQuery(noFrag)
-    val default = (scheme === "http" && port === "80") ||
-      (scheme === "https" && port === "443")
-    val portSfx = when(port =!= "" && !default, concat(lit(":"), port)).otherwise(lit(""))
-    val qSfx = when(qs =!= "", concat(lit("?"), qs)).otherwise(lit(""))
-    when(scheme === "" || host === "", lit(null).cast(StringType))
-      .otherwise(concat(scheme, lit("://"), host, portSfx, collapsedPath(noFrag), qSfx))
-  }
+  def urlCanonOf(url: Column): Column = urlParts(url).getField("url_canon")
 
   /** Resolve redirect chains over a canonical-key edge set with a BOUNDED
     * iteration of joins (r16, verdict ask #2 — the pageRank BSP idiom):

@@ -146,19 +146,19 @@ object WebQueries {
     val links = h.select(col("doc_id"), col("url").as("page_url"),
       explode(W.extractLinks(col("html"))).as("href"))
     // localCheckpoint (lazy) on the RESOLVED frame too (r18 optimization):
-    // without it canonicalize re-inlines the synthesis+resolveUrl tree into
-    // each of its four derived columns and the optimizer pays per build
-    // (the q_crawl_schedule_ranked BenchOverhead finding; same fix)
+    // the synthesis+resolveUrl tree stays out of the canonicalize projection
+    // and of the union and joins after it; whether that still pays for the
+    // copy is ROADMAP direction 7's measurement
     val resolved = links.select(col("doc_id"),
       W.resolveUrl(col("page_url"), col("href")).as("url"))
       .localCheckpoint(false)
     // r19 optimization: ONE canonicalize over the UNION of the page-URL
     // rows (side 0) and the resolved-link rows (side 1), then filter the
-    // sides back out — the r18 shape canonicalized twice, and each pass
-    // paid its own optimizer run over the PSL CASE chain plus its own
-    // checkpoint (BenchOverhead: build 1.63 s vs 0.28 s exec). Same rows,
-    // same values; the single checkpointed frame keeps the CASE-chain
-    // trees out of the join keys exactly as before (janino lesson).
+    // sides back out — one kernel projection and one checkpoint instead of
+    // two. The checkpoint makes `domain` a plain column in both side
+    // filters and the edge join, so the union's lineage is computed once
+    // for both sides (ROADMAP direction 7 decides whether a planner barrier
+    // can replace it).
     val canonBoth = W.canonicalize(
         h.select(col("doc_id"), col("url")).withColumn("__side", lit(0))
           .unionByName(resolved.withColumn("__side", lit(1))), "url")
@@ -423,8 +423,7 @@ object WebQueries {
         .localCheckpoint(false)
       // r19 optimization (the domainRankFrame fix applied here too): ONE
       // canonicalize + checkpoint over the UNION of page-URL and link rows
-      // instead of one per side — halves the optimizer's PSL CASE work per
-      // build (BenchOverhead: build 2.39 s vs 0.30 s exec). Same rows.
+      // instead of one per side. Same rows.
       val canonBoth = W.canonicalize(
           wat.select(col("doc_id"), col("__wurl").as("url"))
             .withColumn("__side", lit(0))
@@ -551,9 +550,9 @@ object WebQueries {
       pslDomainsDual),
     // STRATEGY-PARITY gate (r15): the broadcast
     // longest-suffix-match JOIN over the committed subset must equal the
-    // CASE chain host-for-host — the dual is q_psl_domains' CASE semantics
+    // per-row scan host-for-host — the dual is q_psl_domains' CASE semantics
     // verbatim, so a join-variant divergence hash-fails here while
-    // q_psl_domains pins the CASE strategy unchanged
+    // q_psl_domains pins the scan strategy unchanged
     Query("q_psl_join_parity", (s, dir) =>
       graft.operators.Web.registrableDomainJoin(pslHosts(s, dir),
           "host", "doc_id", "registrable",
@@ -818,11 +817,10 @@ object WebQueries {
       // join/window stack — the un-projected canon frame carried `payload`,
       // `url` and `http_location` through the SURT window exchange (shuffle
       // bytes for columns the funnel never reads past this point; guide
-      // §2.3 "project before the exchange"); (b) lazy localCheckpoint cuts
-      // the canon/PSL expression trees (url_canon/domain/surt each inline
-      // the multi-regex canon chain; domain inlines it into all ~50 PSL
-      // CASE branches) out of the join keys, window key, and final agg key
-      // — measured 2.13 s of per-build catalyst time (BenchOverhead). In
+      // §2.3 "project before the exchange"); (b) lazy localCheckpoint: the
+      // join keys, the SURT window key and the final agg key read `domain`
+      // and `surt` as plain columns, computed once; whether the cut still
+      // pays for the copy is ROADMAP direction 7's measurement. In
       // production the canonical keys land WITH the parse artifact.
       val canon = W.canonicalize(recs, "url")
         .select(col("doc_id"), col("http_status"), col("domain"), col("surt"))
@@ -887,13 +885,9 @@ object WebQueries {
       // tree ~15x and blew the hashAgg past janino's method limit)
       val landed = recs.filter(col("http_status") === 200)
         .select(W.urlCanonOf(col("url")).as("final_url")).distinct()
-      // lineage cut before the domain agg (r17): the PSL
-      // CASE chain over hostOf(final_url) re-inlines the 5-regex host
-      // tree into all ~50 suffix branches of the hashAgg output
-      // projection — past janino's method limit at the Verify conf
-      // (CPUS=16), where it fell back interpreted. Staging the HOST
-      // through a checkpointed projection keeps every branch a column
-      // reference; the frame is redirect-scale, so the cut is ~free.
+      // lineage cut before the domain agg (r17): stages the
+      // redirect-scale host column so the agg keys on a plain column;
+      // whether to drop it is ROADMAP direction 7's call
       val arrivals = W.resolveRedirectChains(edges, maxHops = 5)
         .filter(col("status") === "settled")
         .join(landed, Seq("final_url"), "left_semi")
@@ -1108,19 +1102,16 @@ object WebQueries {
       val links = h.select(col("url").as("page_url"),
         explode(W.extractLinks(col("html"))).as("href"))
       // localCheckpoint (lazy) on the RESOLVED frame (r18 optimization):
-      // canonicalize derives FOUR columns (url_canon/domain/host/path) and
-      // CollapseProject re-inlines the synthesis+resolveUrl tree into each
-      // of them — and then into the distinct's aggregate keys. Measured
-      // build-time (catalyst analysis+optimization, BenchOverhead): 4.29 s
-      // per build with the cut only after canonicalize; the barrier here
-      // makes every canon projection reference a plain column. The frame is
-      // one narrow string column — the copy is noise next to the plan tax.
+      // the synthesis+resolveUrl tree stays out of the canonicalize kernel's
+      // input and the distinct's aggregate keys; what the cut still saves
+      // is ROADMAP direction 7's measurement. The frame is one narrow
+      // string column.
       val resolved = links.select(
         W.resolveUrl(col("page_url"), col("href")).as("url"))
         .localCheckpoint(false)
-      // localCheckpoint (lazy): the ledger anti-join, robots decision
-      // subplan, and both windows below would each re-inline the
-      // canonicalize trees without the cut (janino lesson)
+      // localCheckpoint (lazy): the ledger anti-join, the robots decision
+      // subplan and both windows below read url_canon/domain/host/path as
+      // plain columns, and the distinct runs once for all of them
       val cand = W.canonicalize(resolved, "url")
         .filter(col("url_canon").isNotNull)
         .select(col("url_canon"), col("domain")).distinct()

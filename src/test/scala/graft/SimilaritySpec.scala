@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DecimalType, DoubleType, LongType}
 import graft.operators.Similarity
@@ -15,6 +15,15 @@ class SimilaritySpec extends SparkSpec {
     (3L, Array(0.0f, 0.9f, 0.1f)),
     (4L, Array(-1.0f, 0.0f, 0.0f))
   ).toDF("vec_id", "embedding")
+
+  /** Random-hyperplane sign signature packed into a long (Charikar 2002):
+    * bit p = sign(v · plane_p) against the literal ±1 planes of
+    * [[graft.operators.Dedup.hyperplanes]].
+    */
+  private def hyperplaneSignature(v: Column, planes: Int, dim: Int): Column =
+    graft.operators.Dedup.hyperplanes(planes, dim).zipWithIndex.map { case (p, i) =>
+      when(Similarity.dot(v, typedLit(p)) >= 0, lit(1L << i)).otherwise(lit(0L))
+    }.reduce(_ + _)
 
   test("cosine kernel: orthogonal -> 0, identical -> 1, opposite -> -1") {
     val pairs = vecs.as("a").crossJoin(vecs.as("b"))
@@ -53,7 +62,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("hyperplaneSignature groups identical vectors, deterministic across evaluations") {
     val sigs = vecs.union(vecs)
-      .select(col("vec_id"), Similarity.hyperplaneSignature(col("embedding"), 8, dim = 3).as("sig"))
+      .select(col("vec_id"), hyperplaneSignature(col("embedding"), 8, dim = 3).as("sig"))
     // same vector -> same signature in both copies
     rows(sigs.groupBy("vec_id").agg(countDistinct("sig").as("n")).select("n"))
       .map(_.getLong(0)).toSet shouldBe Set(1L)

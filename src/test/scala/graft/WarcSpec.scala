@@ -60,24 +60,25 @@ object WarcSpec {
     * where `http` holds (the text reader: a `response` record; the binary
     * reader: a non-empty head). The second value is true where the ANSI
     * `cast` of the status line threw, which failed the whole query; the row
-    * then carries the NULL status the readers give now.
+    * then carries the NULL status the readers give now. Every field name
+    * matches only at the start of a line, as the readers' chain anchors it.
     */
   private def columns(c: Web.WarcCutB, pos: Int, recType: String, head: String,
       http: Boolean, payload: Seq[Byte]): (Rec, Boolean) = {
     val claim = extract(c.hdr, "(?m)^Content-Length: ([0-9]+)")
     val status = extract(head, "^HTTP/1\\.[01] ([0-9]{3})")
     def headField(re: String) = if (http) nonEmpty(extract(head, re)) else None
-    (Rec(pos, recType, extract(c.hdr, "WARC-Target-URI: ([^\r\n]+)"),
-      extract(c.hdr, "WARC-Date: ([^\r\n]+)"),
+    (Rec(pos, recType, extract(c.hdr, "(?m)^WARC-Target-URI: ([^\r\n]+)"),
+      extract(c.hdr, "(?m)^WARC-Date: ([^\r\n]+)"),
       if (claim.length >= 1 && claim.length <= 18) Some(claim.toLong) else None,
       (c.blockEnd - c.blockStart).toLong,
       if (http && status.nonEmpty) Some(status.toInt) else None,
-      if (http) Some(extract(head, "Content-Type: ([^;\r\n]+)")) else None,
-      headField("(?m)^Content-Type: ([^\r\n]+)"), headField("Location: ([^\r\n]+)"),
+      if (http) Some(extract(head, "(?m)^Content-Type: ([^;\r\n]+)")) else None,
+      headField("(?m)^Content-Type: ([^\r\n]+)"), headField("(?m)^Location: ([^\r\n]+)"),
       headField("(?m)^Transfer-Encoding: ([^\r\n]+)"),
       headField("(?m)^Content-Encoding: ([^\r\n]+)"),
-      nonEmpty(extract(c.hdr, "WARC-Refers-To: <([^>]+)>")),
-      nonEmpty(extract(c.hdr, "WARC-Payload-Digest: ([^\r\n]+)")), payload),
+      nonEmpty(extract(c.hdr, "(?m)^WARC-Refers-To: <([^>]+)>")),
+      nonEmpty(extract(c.hdr, "(?m)^WARC-Payload-Digest: ([^\r\n]+)")), payload),
       http && status.isEmpty)
   }
 
@@ -118,7 +119,7 @@ object WarcSpec {
       } else -1
       val head = if (sepAt >= 0) new String(seg, c.blockStart, sepAt - c.blockStart, UTF_8)
         else ""
-      val recType = extract(c.hdr, "WARC-Type: ([^\r\n]+)")
+      val recType = extract(c.hdr, "(?m)^WARC-Type: ([^\r\n]+)")
       if (recType.isEmpty) None
       else Some(columns(c, i + 1, recType, head, head.nonEmpty,
         payload(seg, if (sepAt >= 0) sepAt + sep.length else c.blockStart, c.blockEnd)))

@@ -193,6 +193,42 @@ class WebSpec extends SparkSpec {
     val plan = Web.canonicalize(Web.withUrls(Seq((1L, "t")).toDF("doc_id", "text")), "url")
       .queryExecution.executedPlan.toString
     plan should not include "Exchange"
+    // parquet-backed, so the projection stays in the optimized plan: one
+    // kernel call, no CASE chain and no regex or split tree
+    val dir = java.nio.file.Files.createTempDirectory("canon-plan").toString
+    Web.withUrls(Seq((1L, "t"), (2L, "u")).toDF("doc_id", "text"))
+      .write.mode("overwrite").parquet(dir)
+    val urls = spark.read.parquet(dir)
+    Seq(Web.canonicalize(urls, "url"),
+      urls.select(Web.registrableDomain(Web.hostOf(col("url"))).as("d"))).foreach { df =>
+      val exprs = df.queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+        case e => e.getClass.getSimpleName }))
+      exprs should contain atLeastOneOf ("UrlCanon", "RegistrableDomain")
+      exprs.toSet.intersect(Set("CaseWhen", "RegExpReplace", "RegExpExtract", "StringSplit")) shouldBe
+        empty
+    }
+  }
+
+  test("warc header fields match only at the start of a line: Content-Location " +
+    "does not answer for Location, X-WARC-Type not for WARC-Type") {
+    val block = "HTTP/1.1 301 Moved Permanently\r\nContent-Location: /old.html\r\n" +
+      "X-Content-Type: text/bogus\r\nLocation: https://e.example/new\r\n" +
+      "Content-Type: text/html\r\n\r\n"
+    val seg = "WARC/1.0\r\nX-WARC-Type: forged\r\nWARC-Type: response\r\n" +
+      "X-WARC-Target-URI: https://forged.example/\r\nWARC-Target-URI: https://e.example/old\r\n" +
+      s"Content-Length: ${block.length}\r\n\r\n" + block + "\r\n\r\n"
+    val cols = Seq("rec_type", "target_uri", "http_location", "mime")
+    val text = rows(Web.warcRecords(Seq((1L, seg)).toDF("doc_id", "warc"), "warc")
+      .select(cols.map(col): _*))
+    val bin = rows(Web.warcRecordsBin(Seq((1L, seg.getBytes("UTF-8"))).toDF("doc_id", "warc"),
+      "doc_id", "warc").select(cols.map(col): _*))
+    Seq(text, bin).foreach { rs =>
+      rs.map(r => cols.indices.map(r.getString)) shouldBe
+        Seq(Seq("response", "https://e.example/old", "https://e.example/new", "text/html"))
+    }
+    // a header whose only WARC-Type line is mid-line names no record
+    val forgedOnly = seg.replace("\r\nWARC-Type: response", "\r\nX-Y: z")
+    rows(Web.warcRecords(Seq((1L, forgedOnly)).toDF("doc_id", "warc"), "warc")) shouldBe empty
   }
 
   // --- WARC container (r15) ---
@@ -1214,11 +1250,18 @@ class WebSpec extends SparkSpec {
     Web.hdrField("WARC-Type: \r\n", "WARC-Type: ") shouldBe ""
     // value runs to end-of-string when no CRLF follows
     Web.hdrField("WARC-Type: metadata", "WARC-Type: ") shouldBe "metadata"
-    // parity with the regexp the old column used, on the same inputs
+    // only at the start of a line: `X-WARC-Type: ` does not answer
+    Web.hdrField("X-WARC-Type: forged\r\nWARC-Type: request\r\n", "WARC-Type: ") shouldBe
+      "request"
+    Web.hdrField("X-WARC-Type: forged\r\n", "WARC-Type: ") shouldBe ""
+    Web.hdrField("A: b\nWARC-Type: revisit", "WARC-Type: ") shouldBe "revisit"
+    // parity with the line-anchored regexp, on the same inputs
     val hdrs = Seq("WARC-Type: response\r\nX: y", "A: b\r\n",
-      "WARC-Type: \r\nWARC-Type: request\r\n", "WARC-Type: metadata", "")
+      "WARC-Type: \r\nWARC-Type: request\r\n", "WARC-Type: metadata", "",
+      "X-WARC-Type: forged\r\nWARC-Type: request\r\n", "X-WARC-Type: forged\r\n",
+      "A: b\rWARC-Type: revisit\r\n")
     val viaRe = rows(hdrs.toDF("h").select(
-      regexp_extract(col("h"), "WARC-Type: ([^\r\n]+)", 1))).map(_.getString(0))
+      regexp_extract(col("h"), "(?m)^WARC-Type: ([^\r\n]+)", 1))).map(_.getString(0))
     hdrs.map(Web.hdrField(_, "WARC-Type: ")) shouldBe viaRe
   }
 
