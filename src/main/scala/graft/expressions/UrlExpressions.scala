@@ -113,37 +113,65 @@ object UrlCanon {
     b.append(host, 0, end).toString
   }
 
-  /** Label count descending, then lexicographic: `act.edu.au` is tried
-    * before `edu.au`, as the PSL algorithm specifies.
+  /** The registrable domain under publicsuffix.org rule lines (one rule per
+    * line, `//` comments; exact rules, `*.` wildcards and `!` exceptions),
+    * which parse once into a map from a label suffix to the rule forms
+    * keyed on it. [[domainOf]] walks the host's label suffixes shortest
+    * first, one map probe each, and stops at the first suffix that no rule
+    * ends in. The prevailing rule is an exception first, then the most rule
+    * labels (a wildcard counts its `*`). Exact and wildcard rules match only
+    * PROPER suffixes, so a host equal to a rule is not cut at it; an
+    * exception also matches the full host. The public suffix is the
+    * prevailing rule's labels (an exception's minus one), the registrable
+    * domain that plus one label, and with no rule matched the last two
+    * labels. A host of two labels or fewer passes through.
     */
-  def longestFirst(suffixes: Seq[String]): Seq[String] =
-    suffixes.sortBy(s => (-s.count(_ == '.'), s))
-
-  /** The longest-first scan over an exact-rule public-suffix list: the
-    * registrable domain is the matched rule's labels plus one, else the last
-    * two labels; a host of two labels or fewer passes through. A rule
-    * matches only as a PROPER suffix (`host` ends with `.rule`), so a host
-    * equal to a rule is not cut at it.
-    */
-  final class Psl(suffixes: Seq[String]) {
-    private val ordered = longestFirst(suffixes)
-    private val dotted = ordered.map("." + _).toArray
-    private val keep = ordered.map(_.count(_ == '.') + 2).toArray
+  final class Psl(rules: Seq[String]) {
+    private val forms: Map[String, Int] = {
+      val keyed = rules.map(_.trim).filter(l => l.nonEmpty && !l.startsWith("//")).map { r =>
+        if (r.startsWith("!")) (r.substring(1), ExceptionRule)
+        else if (r.startsWith("*.")) (r.substring(2), WildcardRule)
+        else (r, ExactRule)
+      }
+      // every label suffix of a key, with no rule form of its own: a host
+      // suffix outside the map ends the walk, since no longer one can be a key
+      val inner = for ((k, _) <- keyed; i <- k.indices if k.charAt(i) == '.')
+        yield (k.substring(i + 1), 0)
+      (inner ++ keyed).groupMapReduce(_._1)(_._2)(_ | _)
+    }
 
     def domainOf(host: String): String =
       if (host.indexOf('.') == host.lastIndexOf('.')) host
       else {
-        var labels = 2
-        var i = 0
-        while (i < dotted.length) {
-          if (host.endsWith(dotted(i))) { labels = keep(i); i = dotted.length }
-          else i += 1
+        var ruleLabels = 0 // labels of the longest exact or wildcard match
+        var exception = 0  // labels of the longest exception match
+        var labels = 0
+        var dot = host.length
+        var f = 0
+        while (f >= 0 && dot >= 0) {
+          dot = host.lastIndexOf('.', dot - 1)
+          labels += 1
+          f = forms.getOrElse(host.substring(dot + 1), -1)
+          if (f > 0) {
+            if ((f & ExceptionRule) != 0) exception = labels
+            if (dot >= 0) {
+              if ((f & WildcardRule) != 0) ruleLabels = labels + 1
+              else if ((f & ExactRule) != 0) ruleLabels = labels
+            }
+          }
         }
+        val publicSuffix = if (exception > 0) exception - 1 else math.max(ruleLabels, 1)
         var cut = host.length
-        while (labels > 0 && cut >= 0) { cut = host.lastIndexOf('.', cut - 1); labels -= 1 }
+        var keep = publicSuffix + 1
+        while (keep > 0 && cut >= 0) { cut = host.lastIndexOf('.', cut - 1); keep -= 1 }
         host.substring(cut + 1)
       }
   }
+
+  /** The rule forms as bits of one [[Psl]] map value. */
+  private final val ExactRule = 1
+  private final val WildcardRule = 2
+  private final val ExceptionRule = 4
 
   /** The five [[schema]] fields of one URL. */
   def parts(url: String, psl: Psl): (String, String, String, String, String) = {
@@ -198,13 +226,13 @@ object UrlCanon {
     }
 }
 
-/** `url_canon(url)`: the [[UrlCanon.schema]] struct of a URL over an
-  * exact-rule public-suffix list — one parse per row, no intermediate
-  * columns, NULL in → NULL out.
+/** `url_canon(url)`: the [[UrlCanon.schema]] struct of a URL over
+  * public-suffix rule lines ([[UrlCanon.Psl]]) — one parse per row, no
+  * intermediate columns, NULL in → NULL out.
   */
-case class UrlCanon(child: Expression, suffixes: Seq[String]) extends UnaryExpression {
+case class UrlCanon(child: Expression, rules: Seq[String]) extends UnaryExpression {
 
-  @transient private lazy val psl = new UrlCanon.Psl(suffixes)
+  @transient private lazy val psl = new UrlCanon.Psl(rules)
 
   override def dataType: DataType = UrlCanon.schema
   override def checkInputDataTypes(): TypeCheckResult = UrlCanon.checkString(child, prettyName)
@@ -226,13 +254,13 @@ case class UrlCanon(child: Expression, suffixes: Seq[String]) extends UnaryExpre
   override def prettyName: String = "url_canon"
 }
 
-/** Registrable domain of an already-lowercased host over an exact-rule
-  * public-suffix list ([[UrlCanon.Psl]]); the `domain` field of
-  * [[UrlCanon]] is this over the URL's host.
+/** Registrable domain of an already-lowercased host over public-suffix
+  * rule lines ([[UrlCanon.Psl]]); the `domain` field of [[UrlCanon]] is this
+  * over the URL's host.
   */
-case class RegistrableDomain(child: Expression, suffixes: Seq[String]) extends UnaryExpression {
+case class RegistrableDomain(child: Expression, rules: Seq[String]) extends UnaryExpression {
 
-  @transient private lazy val psl = new UrlCanon.Psl(suffixes)
+  @transient private lazy val psl = new UrlCanon.Psl(rules)
 
   override def dataType: DataType = StringType
   override def checkInputDataTypes(): TypeCheckResult = UrlCanon.checkString(child, prettyName)

@@ -274,13 +274,13 @@ object GraftFunctions {
   def nfcNormalize(text: Column): Column =
     GraftColumnBridge.column(NfcNormalize(GraftColumnBridge.expression(text)))
 
-  /** The [[UrlCanon]] struct of a URL over an exact-rule public-suffix list. */
-  def urlCanon(url: Column, pslSuffixes: Seq[String]): Column =
-    GraftColumnBridge.column(UrlCanon(GraftColumnBridge.expression(url), pslSuffixes))
+  /** The [[UrlCanon]] struct of a URL over public-suffix rule lines. */
+  def urlCanon(url: Column, pslRules: Seq[String]): Column =
+    GraftColumnBridge.column(UrlCanon(GraftColumnBridge.expression(url), pslRules))
 
   /** Registrable domain of a lowercased host ([[RegistrableDomain]]). */
-  def registrableDomain(host: Column, pslSuffixes: Seq[String]): Column =
-    GraftColumnBridge.column(RegistrableDomain(GraftColumnBridge.expression(host), pslSuffixes))
+  def registrableDomain(host: Column, pslRules: Seq[String]): Column =
+    GraftColumnBridge.column(RegistrableDomain(GraftColumnBridge.expression(host), pslRules))
 
   /** Greedy longest-match subword segmentation stats `[n_tokens, n_fallback]`
     * for one word against a plan-time vocabulary (the tokenizer APPLY kernel,

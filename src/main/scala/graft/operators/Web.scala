@@ -15,7 +15,7 @@ import org.apache.spark.sql.types._
   *   - [[canonicalize]]: the normalization pass (lowercase scheme+host,
   *     strip `www.`, drop default ports, drop fragments, drop tracking
   *     params, sort surviving params, collapse trailing slashes) plus the
-  *     registrable domain (longest-suffix match over a committed
+  *     registrable domain (the PSL algorithm over a committed
   *     public-suffix-list data file, else last two labels) and the SURT
   *     form (scheme-less,
   *     comma-reversed host labels — the Internet-Archive sort key that
@@ -42,12 +42,13 @@ import org.apache.spark.sql.types._
   */
 object Web {
 
-  /** Multi-label public suffixes recognized by [[registrableDomain]],
-    * loaded from the COMMITTED DATA FILE
-    * `resources/graft/public_suffix_subset.txt` (publicsuffix.org line
-    * format: one suffix per line, `//` comments) — r14: the r13 4-suffix
-    * regex stand-in replaced by the real operator shape. Swap the file for
-    * the full PSL in production; nothing else changes.
+  /** The public-suffix rules [[registrableDomain]] and [[canonicalize]]
+    * resolve against, loaded from the COMMITTED DATA FILE
+    * `resources/graft/public_suffix_subset.txt` in publicsuffix.org line
+    * format (one rule per line, `//` comments; exact, `*.` wildcard and `!`
+    * exception rules). Swap the file for the full PSL in production; nothing
+    * else changes — the kernel ([[graft.expressions.UrlCanon.Psl]]) takes
+    * every rule form and any list size, at most one map probe per host label.
     */
   lazy val pslSuffixes: Seq[String] = {
     val in = getClass.getResourceAsStream("/graft/public_suffix_subset.txt")
@@ -57,141 +58,20 @@ object Web {
     finally in.close()
   }
 
-  /** [[pslSuffixes]] ordered for LONGEST-SUFFIX-FIRST matching (label count
-    * desc, then lexicographic for determinism) — `act.edu.au` must win over
-    * `edu.au` exactly as the PSL algorithm specifies.
+  /** Registrable domain of an already-lowercased host under publicsuffix.org
+    * rule lines (default [[pslSuffixes]]) by the PSL algorithm
+    * ([[graft.expressions.UrlCanon.Psl]]): one codegen'd kernel call, the
+    * same step that fills [[canonicalize]]'s `domain`.
     */
-  lazy val pslSuffixesLongestFirst: Seq[String] =
-    graft.expressions.UrlCanon.longestFirst(pslSuffixes)
-
-  /** Registrable domain of an already-lowercased host: suffix labels + 1
-    * for the longest matching listed suffix, else last two labels; hosts of
-    * ≤2 labels pass through unchanged. One codegen'd kernel call
-    * ([[graft.expressions.RegistrableDomain]]) scans the committed list in
-    * [[pslSuffixesLongestFirst]] order — the same step that fills
-    * [[canonicalize]]'s `domain`. For the FULL ~9,000-rule PSL and for
-    * wildcard/exception rule forms, use [[withRegistrableDomain]] — it
-    * dispatches to the broadcast longest-suffix-match join past
-    * [[caseChainMaxRules]].
-    */
-  def registrableDomain(host: Column): Column =
-    registrableDomainCase(host, pslSuffixes)
-
-  /** The per-row scan strategy over an arbitrary EXACT-rule suffix list
-    * (tried longest-first).
-    */
-  def registrableDomainCase(host: Column, suffixes: Seq[String]): Column =
-    graft.expressions.GraftFunctions.registrableDomain(host, suffixes)
-
-  /** One parsed PSL rule. `key` is the literal label suffix the candidate
-    * join matches on (a wildcard rule joins on its tail — the labels right
-    * of `*.`); `ruleLabels` counts the rule's labels INCLUDING the `*` (the
-    * PSL prevailing order); `psLabels` is the public-suffix label count if
-    * this rule prevails (exact = its labels; wildcard = tail + 1; exception
-    * = its labels − 1, per the PSL algorithm's leftmost-label removal).
-    */
-  final case class PslRule(key: String, keyLabels: Int, ruleLabels: Int,
-      psLabels: Int, isException: Boolean, isWildcard: Boolean)
-
-  /** Parse publicsuffix.org line format (one rule per line, `//` comments,
-    * `*.` wildcards, `!` exceptions) into [[PslRule]]s.
-    */
-  def parsePslRules(lines: Seq[String]): Seq[PslRule] =
-    lines.map(_.trim).filter(l => l.nonEmpty && !l.startsWith("//")).map { r =>
-      val exc = r.startsWith("!")
-      val wild = !exc && r.startsWith("*.")
-      val key = if (exc) r.drop(1) else if (wild) r.drop(2) else r
-      val kl = key.count(_ == '.') + 1
-      PslRule(key, kl, if (wild) kl + 1 else kl,
-        if (exc) kl - 1 else if (wild) kl + 1 else kl, exc, wild)
-    }
-
-  /** The per-row scan ([[registrableDomainCase]]) takes lists up to this
-    * many rules; beyond it (or whenever wildcard/exception forms appear,
-    * which the scan does not express) the broadcast join strategy runs.
-    * The scan tests every rule against every host, so ~9,000 PSL rules
-    * would cost ~9,000 suffix tests per row — the join is one broadcast
-    * hash probe per host label instead.
-    */
-  val caseChainMaxRules: Int = 100
-
-  /** Registrable domain via BROADCAST LONGEST-SUFFIX-MATCH JOIN — the
-    * full-PSL strategy (r15, verdict ask #4): explode each host into its
-    * label-suffix candidates (bounded by label depth, ≤ ~6 in real hosts),
-    * equality-join the broadcast rule table, take the prevailing rule per
-    * host (exception first, then most rule labels — the PSL algorithm), and
-    * cut the registrable domain at the winner's public-suffix length.
-    * Handles all three PSL rule forms (exact, `*.` wildcard — which
-    * requires one extra host label — and `!` exception). Unmatched hosts
-    * take the implicit `*` default (last two labels); hosts of ≤2 labels
-    * pass through unchanged, exactly the scan strategy's contract, so on an
-    * exact-only rule list the two strategies are output-identical (gated:
-    * q_psl_join_parity).
-    *
-    * Scale: the rule table is ~9,000 tiny rows — broadcast; the host frame
-    * fans out ≤ label-depth× into the hash probe and one per-host window
-    * picks the winner. One narrow exchange class (the window keys on the
-    * host row id); no corpus-sized shuffle.
-    */
-  def registrableDomainJoin(df: DataFrame, hostCol: String, idCol: String,
-      outCol: String, rules: Seq[PslRule]): DataFrame = {
-    val s = df.sparkSession
-    import s.implicits._
-    val rulesDf = rules.toDF()
-    val withL = df.withColumn("__labels", split(col(hostCol), "\\."))
-      .withColumn("__hl", size(col("__labels")))
-    val cands = withL.select(col(idCol), col("__labels"), col("__hl"),
-        explode(sequence(lit(1), col("__hl"))).as("__keep"))
-      .withColumn("__cand",
-        array_join(slice(col("__labels"), col("__keep") * -1, col("__keep")), "."))
-    // EXACT rules match only PROPER suffixes (r15 self-review): the scan
-    // strategy's endsWith(".suffix") can never match the host itself, so a
-    // host EQUAL to a listed multi-label rule whose parent suffix is
-    // unlisted must fall to the last-2 default under BOTH strategies, or
-    // growing a list past caseChainMaxRules would silently change outputs.
-    // Exceptions still match the full host (`!www.ck` matches www.ck — the
-    // PSL algorithm's own example); wildcards already require an extra
-    // label, which implies a proper-suffix candidate.
-    val matched = cands.join(broadcast(rulesDf),
-      col("__cand") === col("key") &&
-        (!col("isWildcard") || col("__hl") >= col("keyLabels") + 1) &&
-        (col("isException") || col("isWildcard") || col("__keep") < col("__hl")))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col(idCol))
-      .orderBy(col("isException").desc, col("ruleLabels").desc, col("key"))
-    val winner = matched.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .select(col(idCol), col("psLabels").as("__ps"))
-    withL.join(winner, Seq(idCol), "left")
-      .withColumn(outCol,
-        when(col("__hl") <= 2, col(hostCol))
-          .when(col("__ps").isNull, array_join(slice(col("__labels"), -2, 2), "."))
-          .when(col("__hl") > col("__ps"),
-            array_join(slice(col("__labels"),
-              (col("__ps") + 1) * -1, col("__ps") + 1), "."))
-          .otherwise(col(hostCol)))
-      .drop("__labels", "__hl", "__ps")
-  }
-
-  /** Strategy dispatch (r15): small exact-only lists (the committed subset)
-    * take the per-row scan; large lists or lists carrying
-    * wildcard/exception rules run the broadcast join. Both strategies are
-    * gated output-equal on exact-only lists.
-    */
-  def withRegistrableDomain(df: DataFrame, hostCol: String, idCol: String,
-      outCol: String, lines: Seq[String]): DataFrame = {
-    val rules = parsePslRules(lines)
-    val exactOnly = rules.forall(r => !r.isException && !r.isWildcard)
-    if (exactOnly && rules.size <= caseChainMaxRules)
-      df.withColumn(outCol, registrableDomainCase(col(hostCol), rules.map(_.key)))
-    else registrableDomainJoin(df, hostCol, idCol, outCol, rules)
-  }
+  def registrableDomain(host: Column, rules: Seq[String] = pslSuffixes): Column =
+    graft.expressions.GraftFunctions.registrableDomain(host, rules)
 
   /** Deterministic ≥500-rule PSL fixture (r15): 166 synthetic TLD families
     * each contributing `t$i`, `co.t$i`, `org.t$i` (498 exact rules — the
     * shape of the real PSL's country sections), plus the two rule FORMS the
     * committed subset lacks: wildcard `*.ck` and exception `!www.ck` (the
-    * PSL's own canonical pair). 500 rules total — past [[caseChainMaxRules]],
-    * so [[withRegistrableDomain]] provably takes the join strategy.
+    * PSL's own canonical pair). 500 rules total, resolved by the same
+    * [[registrableDomain]] kernel as the committed subset.
     */
   lazy val pslScaledRules: Seq[String] =
     (0 until 166).flatMap(i => Seq(s"t$i", s"co.t$i", s"org.t$i")) ++
@@ -2260,7 +2140,7 @@ object Web {
     *
     * Scale: robots bodies are KBs per host; the window partitions by host
     * (bounded partitions, no skew possible) and the output is a few rows
-    * per host — the canonical broadcast side of [[robotsDecisions]].
+    * per host — the canonical broadcast side of [[robotsDecisionsFor]].
     */
   def robotsRules(df: DataFrame, hostCol: String, robotsCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -2286,68 +2166,35 @@ object Web {
       .select("host", "agent", "directive", "prefix", "ln")
   }
 
-  /** Crawl-allowance decisions for `agent` over pages (doc_id, host, path):
-    * REP group selection first (a host that names the agent uses ONLY that
-    * group; otherwise the `*` group), empty rule patterns dropped (match
-    * nothing), then prefix match against the path with Google-REP
-    * precedence — longest matched pattern wins, Allow wins length ties —
-    * and no matching rule means allowed.
-    *
-    * Spark shape: the rules side is tiny (a few rows per host) and rides
-    * BROADCAST joins; the per-page fan-out is bounded by that host's rule
-    * count, and the winner window partitions by doc_id (bounded rows per
-    * page). At 100 TB: millions of hosts × ~10 rules still broadcasts at
-    * ~100 MB, else the same plan shuffle-joins on host — page rows never
-    * fan out beyond their own host's rules either way.
-    */
-  def robotsDecisions(pages: DataFrame, rules: DataFrame, agent: String,
-      groups: Option[DataFrame] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    // r16 (advisor): group PRESENCE comes from the declared UA lines
-    // (robotsAgentGroups) when supplied — a declared group whose lines are
-    // all unknown directives yields zero rule rows, and RFC 9309 says a
-    // matched group with no rules means allow-all, not `*` fallback. The
-    // rules-derived fallback remains for callers without a groups frame
-    // (identical whenever every declared group carries at least one rule).
-    val hasSpec = groups.getOrElse(rules).filter(col("agent") === agent)
-      .select("host").distinct().withColumn("has_spec", lit(true))
-    val chosen = rules.join(broadcast(hasSpec), Seq("host"), "left")
-      .withColumn("has_spec", coalesce(col("has_spec"), lit(false)))
-      .filter((col("has_spec") && col("agent") === agent) ||
-        (!col("has_spec") && col("agent") === "*"))
-      .filter(col("prefix") =!= "")
-      .select("host", "directive", "prefix", "ln")
-    val win = Window.partitionBy("doc_id")
-      .orderBy(length(col("prefix")).desc, col("directive").asc, col("ln").asc)
-    val winner = pages.join(broadcast(chosen), Seq("host"))
-      .filter(robotsPathMatches(col("path"), col("prefix")))
-      .withColumn("rn", row_number().over(win))
-      .filter(col("rn") === 1)
-      .select(col("doc_id"), col("directive").as("matched_directive"),
-        col("prefix").as("matched_prefix"))
-    pages.join(winner, Seq("doc_id"), "left")
-      .withColumn("allowed",
-        coalesce(col("matched_directive") === "allow", lit(true)))
-  }
-
   /** Rule-table size above which [[robotsDecisionsForAuto]] flips from the
-    * broadcast strategy to host-keyed shuffle joins (r16, verdict ask #6 —
-    * the PSL caseChainMaxRules treatment): ~10 rules/host × millions of
-    * hosts ≈ hundreds of MB, past any sane broadcast threshold; below it
-    * the rule table rides the driver like every other host-granularity
-    * artifact.
+    * broadcast strategy to host-keyed shuffle joins (r16, verdict ask #6):
+    * ~10 rules/host × millions of hosts ≈ hundreds of MB, past any sane
+    * broadcast threshold; below it the rule table rides the driver like
+    * every other host-granularity artifact.
     */
   val robotsBroadcastMaxRules: Long = 1000000L
 
-  /** [[robotsDecisions]] for SEVERAL agents in ONE pass: pages explode per
-    * agent, group selection rides a per-host agent-set frame
-    * (`array_contains` instead of a per-agent semi-join), and one winner
-    * window partitions by (doc_id, agent). Identical decisions to the
-    * per-agent form; k agents cost one plan instead of k — the per-agent
-    * form rebuilds its broadcasts per call, which at local job-dispatch
-    * prices dominates the (tiny) actual work. Group presence from the UA
-    * lines when `groups` is supplied (r16 advisor — see
-    * [[robotsDecisions]]).
+  /** Crawl-allowance decisions for each of `agents` over pages (doc_id,
+    * host, path), one row per (page, agent): REP group selection first (a
+    * host that names the agent uses ONLY that group; otherwise the `*`
+    * group), empty rule patterns dropped (match nothing), then prefix match
+    * against the path with Google-REP precedence — longest matched pattern
+    * wins, Allow wins length ties — and no matching rule means allowed.
+    * Group PRESENCE comes from the declared UA lines ([[robotsAgentGroups]])
+    * when `groups` is supplied (r16 advisor): a declared group whose lines
+    * are all unknown directives yields zero rule rows, and RFC 9309 says a
+    * matched group with no rules means allow-all, not `*` fallback. Without
+    * a groups frame presence comes from the rules (identical whenever every
+    * declared group carries at least one rule).
+    *
+    * Spark shape: pages explode per agent, group selection rides a per-host
+    * agent-set frame (`array_contains` instead of a per-agent semi-join),
+    * and one winner window partitions by (doc_id, agent), so k agents cost
+    * one plan. The rules side is tiny (a few rows per host) and rides
+    * BROADCAST joins; the per-page fan-out is bounded by that host's rule
+    * count. At 100 TB, millions of hosts × ~10 rules still broadcast at
+    * ~100 MB; past that, [[robotsDecisionsForShuffled]] shuffle-joins on
+    * host.
     */
   def robotsDecisionsFor(pages: DataFrame, rules: DataFrame,
       agents: Seq[String], groups: Option[DataFrame] = None): DataFrame =
@@ -2702,13 +2549,11 @@ object Web {
     pmod(h60(concat_ws(":", lit(i.toString), key)), lit(m.toLong))
   }
 
-  /** The ledger's set-bit frame — the bloom filter AS AN ARTIFACT: built
-    * once per crawl wave (one explode + distinct over the ledger) and
-    * amortized across every frontier wave that probes it, exactly as a
-    * production ledger maintains its membership sketch incrementally.
-    * ≤ min(k·|ledger|, m) rows of one long.
+  /** The ledger's set-bit frame — the bloom filter as a row set (one
+    * explode + distinct over the ledger): ≤ min(k·|ledger|, m) rows of one
+    * long. [[bloomNovelty]] checkpoints it, so its k probes read it once.
     */
-  def bloomBits(ledger: DataFrame, ledgerKey: String, m: Int, k: Int): DataFrame =
+  private def bloomBits(ledger: DataFrame, ledgerKey: String, m: Int, k: Int): DataFrame =
     ledger.select(explode(array(
       (0 until k).map(i => bloomPosition(col(ledgerKey), i, m)): _*)).as("pos"))
       .distinct()
@@ -2733,15 +2578,8 @@ object Web {
     * anti-join's on every row (gated: q_frontier_bloom).
     */
   def bloomNovelty(cands: DataFrame, candKey: String, ledger: DataFrame,
-      ledgerKey: String, m: Int = 16384, k: Int = 3): DataFrame =
-    bloomNoveltyWith(cands, candKey, ledger, ledgerKey,
-      bloomBits(ledger, ledgerKey, m, k).localCheckpoint(false), m, k)
-
-  /** [[bloomNovelty]] over a PREBUILT bits artifact (the amortized shape —
-    * the probe times the wave without re-billing the filter build).
-    */
-  def bloomNoveltyWith(cands: DataFrame, candKey: String, ledger: DataFrame,
-      ledgerKey: String, bits: DataFrame, m: Int, k: Int): DataFrame = {
+      ledgerKey: String, m: Int = 16384, k: Int = 3): DataFrame = {
+    val bits = bloomBits(ledger, ledgerKey, m, k).localCheckpoint(false)
     val probed = (0 until k).foldLeft(cands) { (df, i) =>
       df.join(broadcast(bits.select(col("pos").as(s"__p$i"))),
         bloomPosition(col(candKey), i, m) === col(s"__p$i"), "left")
@@ -2796,23 +2634,11 @@ object Web {
     * against the exact anti-join in WebSpec.
     */
   def bloomNoveltySketch(cands: DataFrame, candKey: String, ledger: DataFrame,
-      ledgerKey: String, expectedItems: Long, fpp: Double): DataFrame =
-    bloomNoveltySketchWith(cands, candKey, ledger, ledgerKey,
-      bloomSketchOf(ledger, ledgerKey, expectedItems, fpp))
-
-  /** Build the ledger's bitset sketch — the amortized per-wave artifact
-    * (`DataFrameStatFunctions.bloomFilter`: treeAggregate of partial
-    * bitsets OR-merged; the shuffle cost is the BUILD's, paid once per
-    * ledger update, not per frontier wave).
-    */
-  def bloomSketchOf(ledger: DataFrame, ledgerKey: String, expectedItems: Long,
-      fpp: Double): org.apache.spark.util.sketch.BloomFilter =
-    ledger.stat.bloomFilter(ledgerKey, expectedItems, fpp)
-
-  /** [[bloomNoveltySketch]] over a prebuilt sketch. */
-  def bloomNoveltySketchWith(cands: DataFrame, candKey: String,
-      ledger: DataFrame, ledgerKey: String,
-      filter: org.apache.spark.util.sketch.BloomFilter): DataFrame = {
+      ledgerKey: String, expectedItems: Long, fpp: Double): DataFrame = {
+    // the ledger's sketch (`DataFrameStatFunctions.bloomFilter`: treeAggregate
+    // of partial bitsets OR-merged) — the build's shuffle is paid once per
+    // ledger update, not per frontier wave
+    val filter = ledger.stat.bloomFilter(ledgerKey, expectedItems, fpp)
     val flagged = cands.withColumn("bloom_pass",
       graft.expressions.GraftFunctions.bloomMightContain(col(candKey), filter))
     noveltyBySuspects(flagged, candKey, ledger, ledgerKey)

@@ -541,32 +541,32 @@ object WebQueries {
     // registrable-domain resolution against the COMMITTED PSL data file
     // (r14): a host fixture sweeping every listed
     // multi-label suffix (plus sub.-prefixed and 3-label-suffix variants,
-    // so longest-suffix-wins is itself under the hash gate); the oracle
-    // regenerates the same longest-first CASE from the same file
+    // so longest-suffix-wins is itself under the hash gate) through the
+    // host kernel; the oracle regenerates the same longest-first CASE from
+    // the same file
     Query("q_psl_domains", (s, dir) =>
       pslHosts(s, dir)
         .withColumn("registrable", graft.operators.Web.registrableDomain(col("host")))
         .orderBy("doc_id"),
       pslDomainsDual),
-    // STRATEGY-PARITY gate (r15): the broadcast
-    // longest-suffix-match JOIN over the committed subset must equal the
-    // per-row scan host-for-host — the dual is q_psl_domains' CASE semantics
-    // verbatim, so a join-variant divergence hash-fails here while
-    // q_psl_domains pins the scan strategy unchanged
+    // VIEW PARITY gate: the same hosts as `https://<host>/` URLs through
+    // canonicalize, whose `domain` field is the URL kernel's PSL step, must
+    // equal the host kernel's answers host-for-host — the dual is
+    // q_psl_domains' CASE semantics verbatim. (The name predates the one
+    // kernel: it pinned a broadcast-join strategy to the scan.)
     Query("q_psl_join_parity", (s, dir) =>
-      graft.operators.Web.registrableDomainJoin(pslHosts(s, dir),
-          "host", "doc_id", "registrable",
-          graft.operators.Web.parsePslRules(graft.operators.Web.pslSuffixes))
+      graft.operators.Web.canonicalize(
+          pslHosts(s, dir).withColumn("url", concat(lit("https://"), col("host"), lit("/"))),
+          "url")
+        .select(col("doc_id"), col("host"), col("domain").as("registrable"))
         .orderBy("doc_id"),
-      // strategy parity: the SAME CASE-semantics dual as q_psl_domains — the
-      // join variant must reproduce it host-for-host on the exact-only subset
       pslDomainsDual),
-    // PSL AT REAL SCALE (r15): a 500-rule list — past caseChainMaxRules, so
-    // withRegistrableDomain provably dispatches to the join — including the
-    // wildcard (*.ck) and exception (!www.ck) rule forms the subset file
-    // lacks. Hosts exercise all ten shapes: exact suffixes at every depth,
-    // wildcard hosts at and above the registrable boundary, the exception
-    // host and its subdomain, unlisted fallbacks, and a single-label host.
+    // PSL AT REAL SCALE (r15): a 500-rule list including the wildcard
+    // (*.ck) and exception (!www.ck) rule forms the subset file lacks,
+    // through the same kernel as the subset. Hosts exercise all ten shapes:
+    // exact suffixes at every depth, wildcard hosts at and above the
+    // registrable boundary, the exception host and its subdomain, unlisted
+    // fallbacks, and a single-label host.
     Query("q_psl_scaled", (s, dir) => {
       val c = (col("doc_id") % 100).cast(StringType)
       val i = (col("doc_id") % 166).cast(StringType)
@@ -581,16 +581,16 @@ object WebQueries {
         .when(m === 7, lit("bare.example"))
         .when(m === 8, concat(lit("deep.x.y.unlisted"), c, lit(".zz")))
         .otherwise(lit("ck"))
-      graft.operators.Web.withRegistrableDomain(
-          documents(s, dir).select(col("doc_id"), host.as("host")),
-          "host", "doc_id", "registrable", graft.operators.Web.pslScaledRules)
+      documents(s, dir).select(col("doc_id"), host.as("host"))
+        .withColumn("registrable", graft.operators.Web.registrableDomain(col("host"),
+          graft.operators.Web.pslScaledRules))
         .orderBy("doc_id")
     },
       // the 500-rule PSL fixture: rule table restated relationally (exact /
       // wildcard / exception with their prevailing order and public-suffix
       // lengths), candidate label-suffix explode, argmax by (exception,
       // rule labels), registrable cut at the winner's ps length — the same
-      // algorithm the broadcast join runs
+      // PSL algorithm the kernel runs by label lookup
       s"""WITH rl AS (
          |   SELECT 't' || i AS key, 1 AS klab, 1 AS rlab, 1 AS pslab,
          |     false AS exc, false AS wild FROM range(0, 166) t(i)
@@ -2294,12 +2294,13 @@ object WebQueries {
   }
 
   /** The PSL longest-suffix-match CASE, generated from the SAME committed
-    * data file [[graft.operators.Web.pslSuffixes]] the Spark expression
-    * chain compiles from (the hyperplanes/mixtureWeights single-constant
+    * data file [[graft.operators.Web.pslSuffixes]] the Spark kernel
+    * resolves against (the hyperplanes/mixtureWeights single-constant
     * precedent) — label-count-desc order so `act.edu.au` beats `edu.au`.
     */
   private def pslDomainCaseSql(host: String, labels: String): String = {
-    val branches = graft.operators.Web.pslSuffixesLongestFirst.map { sfx =>
+    val longestFirst = graft.operators.Web.pslSuffixes.sortBy(s => (-s.count(_ == '.'), s))
+    val branches = longestFirst.map { sfx =>
       val keep = sfx.count(_ == '.') + 2
       s"WHEN ends_with($host, '.$sfx') THEN array_to_string($labels[-$keep:], '.')"
     }

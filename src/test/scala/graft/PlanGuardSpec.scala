@@ -72,14 +72,17 @@ class PlanGuardSpec extends SparkSpec {
     "ObjectHashAggregate".r.findAllIn(plan).size shouldBe 2
   }
 
-  test("registrableDomainJoin broadcasts the rule table (host side stays narrow)") {
-    import spark.implicits._
-    val hosts = Seq((1L, "a.co.t1"), (2L, "www.ck")).toDF("doc_id", "host")
-    val plan = graft.operators.Web.registrableDomainJoin(hosts, "host", "doc_id", "d",
-        graft.operators.Web.parsePslRules(graft.operators.Web.pslScaledRules))
-      .queryExecution.executedPlan.toString
-    plan should include("BroadcastHashJoin")
-    plan should not include "SortMergeJoin"
+  test("q_psl_scaled resolves its 500 rules in the registrable-domain kernel: " +
+       "no Join, Window or Generate in the optimized plan") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join, Window}
+    // the query reads only documents.doc_id
+    val dir = java.nio.file.Files.createTempDirectory("psl-plan").toString
+    spark.range(0, 20).withColumnRenamed("id", "doc_id")
+      .write.parquet(s"$dir/documents.parquet")
+    val plan = SparkEntry.queries("q_psl_scaled")(spark, dir).queryExecution.optimizedPlan
+    plan.exists(_.expressions.exists(_.exists(
+      _.isInstanceOf[graft.expressions.RegistrableDomain]))) shouldBe true
+    plan.collect { case j: Join => j; case w: Window => w; case g: Generate => g } shouldBe empty
   }
 
   test("containmentPairs keeps the docFreq semi-join skew guard") {

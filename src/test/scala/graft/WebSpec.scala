@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.{DataFrame, functions}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.operators.Web
 
@@ -62,12 +64,10 @@ class WebSpec extends SparkSpec {
     // unlisted multi-label host: last two labels
     canonOf("https://a.b.example.dev/x")._2 shouldBe "example.dev"
   }
-  test("registrableDomainJoin (r15): strategy parity holds even when a host EQUALS a " +
-       "listed multi-label rule whose parent suffix is unlisted; PSL rule forms resolve") {
-    // the r15 self-review discontinuity: exact rules must match only PROPER
-    // suffixes (EndsWith('.rule') semantics) or growing a list past
-    // caseChainMaxRules silently changes outputs for host == rule
-    val rules = Web.parsePslRules(Seq("act.edu.au", "*.ck", "!www.ck"))
+  test("registrableDomain: a host EQUAL to a listed multi-label rule whose parent " +
+       "suffix is unlisted is not cut at it; PSL wildcard and exception rules resolve") {
+    // exact rules match only PROPER suffixes (EndsWith('.rule') semantics),
+    // so the exact-only answers are the old CASE chain's
     val hosts = Seq(
       (1L, "act.edu.au"),        // == the exact rule, parent edu.au UNLISTED
       (2L, "x.act.edu.au"),      // proper suffix match
@@ -76,14 +76,12 @@ class WebSpec extends SparkSpec {
       (5L, "a.b.ck"),            // wildcard: ps = b.ck
       (6L, "plain.org")          // unlisted fallback
     ).toDF("doc_id", "host")
-    val join = rows(Web.registrableDomainJoin(hosts, "host", "doc_id", "d", rules)
-      .orderBy("doc_id").select("d")).map(_.getString(0))
-    join shouldBe Seq("edu.au", "x.act.edu.au", "www.ck", "www.ck", "a.b.ck", "plain.org")
-    // CASE parity on the exact-only slice (wildcard/exception are join-only)
-    val caseOut = rows(hosts.filter(col("doc_id") <= 2)
-      .select(Web.registrableDomainCase(col("host"), Seq("act.edu.au")).as("d"))
-      .orderBy("d")).map(_.getString(0))
-    caseOut.sorted shouldBe join.take(2).sorted
+    def domains(rules: Seq[String]) = rows(hosts
+      .select(Web.registrableDomain(col("host"), rules).as("d")).orderBy("doc_id"))
+      .map(_.getString(0))
+    domains(Seq("act.edu.au", "*.ck", "!www.ck")) shouldBe
+      Seq("edu.au", "x.act.edu.au", "www.ck", "www.ck", "a.b.ck", "plain.org")
+    domains(Seq("act.edu.au")).take(2) shouldBe Seq("edu.au", "x.act.edu.au")
   }
 
   test("canonicalize (r14): userinfo strips before host/port extraction") {
@@ -460,6 +458,33 @@ class WebSpec extends SparkSpec {
     hosts.toDF("host").withColumn("robots", Web.robotsTxt(col("host"))),
     "host", "robots")
 
+  /** The per-agent REP decision (the form the one-pass multi-agent
+    * `robotsDecisionsFor` replaced): presence semi-join, chosen rules
+    * broadcast, one winner window per page.
+    */
+  private def robotsDecisionsPerAgent(pages: DataFrame, rules: DataFrame,
+      agent: String): DataFrame = {
+    val hasSpec = rules.filter(col("agent") === agent)
+      .select("host").distinct().withColumn("has_spec", lit(true))
+    val chosen = rules.join(broadcast(hasSpec), Seq("host"), "left")
+      .withColumn("has_spec", coalesce(col("has_spec"), lit(false)))
+      .filter((col("has_spec") && col("agent") === agent) ||
+        (!col("has_spec") && col("agent") === "*"))
+      .filter(col("prefix") =!= "")
+      .select("host", "directive", "prefix", "ln")
+    val win = Window.partitionBy("doc_id")
+      .orderBy(functions.length(col("prefix")).desc, col("directive").asc, col("ln").asc)
+    val winner = pages.join(broadcast(chosen), Seq("host"))
+      .filter(Web.robotsPathMatches(col("path"), col("prefix")))
+      .withColumn("rn", row_number().over(win))
+      .filter(col("rn") === 1)
+      .select(col("doc_id"), col("directive").as("matched_directive"),
+        col("prefix").as("matched_prefix"))
+    pages.join(winner, Seq("doc_id"), "left")
+      .withColumn("allowed",
+        coalesce(col("matched_directive") === "allow", lit(true)))
+  }
+
   test("robots parse: unknown directives drop, stacked UA group fans to both agents") {
     val r = rows(robotsRulesOf("site3.example-3.com")
       .select("agent", "directive", "prefix").orderBy("agent", "prefix"))
@@ -475,7 +500,7 @@ class WebSpec extends SparkSpec {
       (50L, "/articles/55"), (77L, "/private/ok/x"), (78L, "/private/x"))
       .map { case (id, p) => (id, "news.example.co.uk", p) }
       .toDF("doc_id", "host", "path")
-    val d = rows(Web.robotsDecisions(pages, robotsRulesOf("news.example.co.uk"), "otherbot")
+    val d = rows(Web.robotsDecisionsFor(pages, robotsRulesOf("news.example.co.uk"), Seq("otherbot"))
       .select("doc_id", "allowed").orderBy("doc_id"))
     d.map(r => r.getLong(0) -> r.getBoolean(1)).toMap shouldBe Map(
       10L -> false, // Disallow /articles/1
@@ -490,12 +515,12 @@ class WebSpec extends SparkSpec {
     val pages = Seq((1L, "site2.example-2.com", "/articles/15"),
       (2L, "site2.example-2.com", "/other/x")).toDF("doc_id", "host", "path")
     val rules = robotsRulesOf("site2.example-2.com")
-    val g = rows(Web.robotsDecisions(pages, rules, "graftbot")
+    val g = rows(Web.robotsDecisionsFor(pages, rules, Seq("graftbot"))
       .select("doc_id", "allowed").orderBy("doc_id"))
     // graftbot group: Disallow / overridden by Allow /articles/ — the *
     // group's /articles/1 disallow must NOT leak in
     g.map(r => r.getLong(0) -> r.getBoolean(1)).toMap shouldBe Map(1L -> true, 2L -> false)
-    val o = rows(Web.robotsDecisions(pages, rules, "otherbot")
+    val o = rows(Web.robotsDecisionsFor(pages, rules, Seq("otherbot"))
       .select("doc_id", "allowed").orderBy("doc_id"))
     o.map(r => r.getLong(0) -> r.getBoolean(1)).toMap shouldBe Map(1L -> false, 2L -> true)
   }
@@ -505,7 +530,7 @@ class WebSpec extends SparkSpec {
       (4L, "/articles/70"), (5L, "/articles/34"))
       .map { case (id, p) => (id, "news.example.co.uk", p) }
       .toDF("doc_id", "host", "path")
-    val d = rows(Web.robotsDecisions(pages, robotsRulesOf("news.example.co.uk"), "otherbot")
+    val d = rows(Web.robotsDecisionsFor(pages, robotsRulesOf("news.example.co.uk"), Seq("otherbot"))
       .select("doc_id", "allowed").orderBy("doc_id"))
     d.map(r => r.getLong(0) -> r.getBoolean(1)).toMap shouldBe Map(
       1L -> false, // Disallow /articles/*4 (wildcard)
@@ -545,7 +570,7 @@ class WebSpec extends SparkSpec {
       .select("doc_id", "agent", "matched_prefix", "matched_directive", "allowed")
       .orderBy("doc_id", "agent"))
     val perAgent = agents.map(a =>
-      Web.robotsDecisions(pages, rules, a).withColumn("agent", lit(a)))
+      robotsDecisionsPerAgent(pages, rules, a).withColumn("agent", lit(a)))
       .reduce(_ unionByName _)
     rows(perAgent.select("doc_id", "agent", "matched_prefix", "matched_directive",
       "allowed").orderBy("doc_id", "agent")) shouldBe fused
@@ -1047,7 +1072,7 @@ class WebSpec extends SparkSpec {
   test("robots empty Disallow matches nothing: emptybot gets full access") {
     val pages = Seq((1L, "site5.example-5.com", "/articles/15"))
       .toDF("doc_id", "host", "path")
-    rows(Web.robotsDecisions(pages, robotsRulesOf("site5.example-5.com"), "emptybot")
+    rows(Web.robotsDecisionsFor(pages, robotsRulesOf("site5.example-5.com"), Seq("emptybot"))
       .select("allowed")).head.getBoolean(0) shouldBe true
   }
 
